@@ -2,8 +2,9 @@
 
 Mirrors the reference's driver ``convertPdfToSearchable``
 (``src/lib/ocr/index.ts:27-173``) as a *pure function* ``bytes -> result
-dict`` so it can run identically in unit tests and inside Arrow-batched
-pandas UDFs (``operators/extract.py``).  All failure modes are
+dict`` so it can run identically in unit tests and inside the Arrow-batched
+operators (``operators/extract.py``, ``operators/assemble.py`` — the PDF
+page core :func:`_pdf_pages` is shared by both).  All failure modes are
 **errors-as-values** (status/error fields, never exceptions) — the
 reference's envelope semantics (``index.ts:158-164``): one bad document must
 never fail a 10^12-document batch.
@@ -122,9 +123,25 @@ def sniff_document(html: bytes | None, lang: str | None,
     return {"kind": kind, "status": "ok", "error": None, "n_bytes": n_bytes}
 
 
-def _extract_pdf(html: bytes, options: ExtractOptions,
-                 hyphen_exceptions: frozenset[str] | None = None,
-                 recognizer=None) -> dict[str, Any]:
+class PageCoreFailure(Exception):
+    """A document-level failure raised by :func:`_pdf_pages`; ``row`` holds
+    the ``status`` / ``error`` / ``n_pages`` fields every caller emits."""
+
+    def __init__(self, status: str, error: str, n_pages: int = 0) -> None:
+        super().__init__(error)
+        self.row = {"status": status, "error": error, "n_pages": n_pages}
+
+
+def _pdf_pages(html: bytes, options: ExtractOptions, recognizer=None):
+    """The per-document PDF page core shared by extraction and searchable
+    assembly: decode → metadata guards → per-page word boxes.
+
+    Returns ``(doc, pages)``: the decoded document and a lazy iterator of
+    ``(page, texts, coords)`` in page order.  A real-flavor page without a
+    text layer gets the recognizer's words in place of its (empty) text
+    layer.  Every failure — undecodable or encrypted payload, a metadata
+    guard, the ``max_doc_ms`` deadline, a bad page image — raises
+    :class:`PageCoreFailure` (from this call or from the iterator)."""
     from .pdfcrypt import EncryptedPdfError
 
     try:
@@ -132,111 +149,116 @@ def _extract_pdf(html: bytes, options: ExtractOptions,
     except EncryptedPdfError as exc:
         # distinct from corrupt: a crawl can count/route password-protected
         # documents (empty-user-password docs decrypt and never land here)
-        return {"status": "encrypted", "error": str(exc),
-                "n_pages": 0, "n_words": 0, "text": None}
+        raise PageCoreFailure("encrypted", str(exc)) from exc
     except ValueError as exc:
-        return {"status": "decode_error", "error": str(exc),
-                "n_pages": 0, "n_words": 0, "text": None}
-
-    # corpus-quality lineage (real-PDF parser counts every silent
-    # substitution it makes — MediaBox defaults, unresolvable encodings —
-    # so drift is observable in the metrics table, not shipped as
-    # confident status='ok'; VERDICT round-2 nit)
-    n_fallbacks = sum((doc.get("counters") or {}).values())
+        raise PageCoreFailure("decode_error", str(exc)) from exc
 
     page_count = int(doc["page_count"])
     pages = doc["pages"]
 
     # guards from metadata, before any per-page work (index.ts:44-53)
     if page_count == 0:
-        return {"status": "no_pages", "error": "PDF has no pages",
-                "n_pages": 0, "n_words": 0, "text": None}
+        raise PageCoreFailure("no_pages", "PDF has no pages")
     if options.max_pages and page_count > options.max_pages:
-        return {"status": "too_many_pages",
-                "error": f"PDF has {page_count} pages, which exceeds the "
-                         f"maximum allowed {options.max_pages} pages",
-                "n_pages": page_count, "n_words": 0, "text": None}
+        raise PageCoreFailure(
+            "too_many_pages",
+            f"PDF has {page_count} pages, which exceeds the maximum allowed "
+            f"{options.max_pages} pages", page_count)
     if len(pages) != page_count:
         # streamed-pages vs declared-count invariant (index.ts:109-113)
-        return {"status": "page_mismatch",
-                "error": f"Page extraction mismatch: OCR received "
-                         f"{len(pages)} of {page_count} page(s)",
-                "n_pages": page_count, "n_words": 0, "text": None}
+        raise PageCoreFailure(
+            "page_mismatch",
+            f"Page extraction mismatch: OCR received {len(pages)} of "
+            f"{page_count} page(s)", page_count)
 
     # L3 wall-clock budget (reference maxDuration=300s per request,
     # route.ts:5): checked between pages so a pathological document yields
     # status='timeout' instead of stalling its whole task at 10^12-row scale.
     deadline = (time.perf_counter() + options.max_doc_ms / 1000.0
                 if options.max_doc_ms is not None else None)
-
-    page_texts: list[str] = []
-    n_words = 0
-    spans: list[tuple] | None = [] if options.emit_spans else None
-    # WBOX containers model OCR input: a has_text page means "existing text
-    # layer wins, skip OCR" (index.ts:94-97).  Real PDFs are the text layer
-    # itself: has_text pages are exactly the ones we extract (the
-    # deterministic getTextContent analog), textless pages would need the
-    # absent rasterize+OCR tier and fall through to an empty segment.
-    skip_has_text = doc.get("flavor", "wbox") != "real"
     # image-only tier (the reference's core use case, README.md:13-29):
     # a real-flavor page WITHOUT a text layer is exactly what the reference
-    # rasterizes (extractor.ts:12-37) and recognizes (ocr.ts:50-110).  The
-    # page images are pulled lazily, once per document, only when a
-    # recognizer is present AND some page actually needs it.
-    page_images: list | None = None
-    for page_idx, page in enumerate(pages):
-        if deadline is not None and time.perf_counter() > deadline:
-            return {"status": "timeout",
-                    "error": f"document exceeded {options.max_doc_ms} ms "
-                             f"budget after {len(page_texts)} page(s)",
-                    "n_pages": page_count, "n_words": 0, "text": None}
-        if page.get("has_text") and skip_has_text:
-            # OCR-skip predicate (index.ts:94-97): existing text layer wins,
-            # page contributes no extracted text.
-            page_texts.append("")
-            continue
-        page_texts_in, page_coords_in = page["texts"], page["coords"]
-        if (recognizer is not None and not page.get("has_text")
-                and doc.get("flavor") == "real"):
+    # rasterizes (extractor.ts:12-37) and recognizes (ocr.ts:50-110).
+    ocr = recognizer is not None and doc.get("flavor") == "real"
+
+    def walk():
+        # page images are pulled lazily, once per document, only when some
+        # page actually needs the recognizer
+        page_images: list | None = None
+        for page_idx, page in enumerate(pages):
+            if deadline is not None and time.perf_counter() > deadline:
+                raise PageCoreFailure(
+                    "timeout", f"document exceeded {options.max_doc_ms} ms "
+                    f"budget after {page_idx} page(s)", page_count)
+            if not ocr or page.get("has_text"):
+                yield page, page["texts"], page["coords"]
+                continue
             if page_images is None:
                 from .pdfreal import extract_page_images
                 try:
                     page_images = extract_page_images(html)
                 except ValueError as exc:
-                    return {"status": "decode_error", "error": str(exc),
-                            "n_pages": page_count, "n_words": 0,
-                            "text": None}
+                    raise PageCoreFailure(
+                        "decode_error", str(exc), page_count) from exc
             imgs = (page_images[page_idx]["images"]
                     if page_idx < len(page_images) else [])
-            rec_words: list[tuple] = []
+            words: list[tuple] = []
             for img in imgs:
                 try:
-                    rec_words.extend(recognizer(img))
+                    words.extend(recognizer(img))
                 except ValueError as exc:
-                    return {"status": "decode_error",
-                            "error": f"recognizer: {exc}",
-                            "n_pages": page_count, "n_words": 0,
-                            "text": None}
+                    raise PageCoreFailure(
+                        "decode_error", f"recognizer: {exc}",
+                        page_count) from exc
             from .pdfscan import words_to_arrays
-            page_texts_in, page_coords_in = words_to_arrays(rec_words)
-        # vectorized byte-identical kernel (layout_fast; fuzz-checked against
-        # the reference-port in layout.py)
-        text, n_page_words, page_spans = page_layout_fast(
-            page_texts_in, page_coords_in, want_spans=options.emit_spans)
-        n_words += n_page_words
-        if options.fix_hyphenation:
-            text = repair_hyphenation(text, hyphen_exceptions)
-        page_texts.append(text)
-        if options.emit_spans:
-            pno = int(page["page_no"])
-            spans.extend(
-                (pno, idx, raw, x0, y0, x1, y1)
-                for idx, (raw, x0, y0, x1, y1) in enumerate(page_spans))
+            yield (page, *words_to_arrays(words))
+
+    return doc, walk()
+
+
+def _extract_pdf(html: bytes, options: ExtractOptions,
+                 hyphen_exceptions: frozenset[str] | None = None,
+                 recognizer=None) -> dict[str, Any]:
+    page_texts: list[str] = []
+    n_words = 0
+    spans: list[tuple] | None = [] if options.emit_spans else None
+    try:
+        doc, pages = _pdf_pages(html, options, recognizer)
+        # WBOX containers model OCR input: a has_text page means "existing
+        # text layer wins, skip OCR" (index.ts:94-97) and contributes an
+        # empty segment.  Real PDFs are the text layer itself: has_text
+        # pages are exactly the ones we extract (the deterministic
+        # getTextContent analog).
+        skip_has_text = doc.get("flavor", "wbox") != "real"
+        for page, texts, coords in pages:
+            if page.get("has_text") and skip_has_text:
+                page_texts.append("")
+                continue
+            # vectorized byte-identical kernel (layout_fast; fuzz-checked
+            # against the reference-port in layout.py)
+            text, n_page_words, page_spans = page_layout_fast(
+                texts, coords, want_spans=options.emit_spans)
+            n_words += n_page_words
+            if options.fix_hyphenation:
+                text = repair_hyphenation(text, hyphen_exceptions)
+            page_texts.append(text)
+            if options.emit_spans:
+                pno = int(page["page_no"])
+                spans.extend(
+                    (pno, idx, raw, x0, y0, x1, y1)
+                    for idx, (raw, x0, y0, x1, y1) in enumerate(page_spans))
+    except PageCoreFailure as fail:
+        return {**fail.row, "n_words": 0, "text": None}
 
     text = PAGE_SEP.join(page_texts)
     status = "ok" if any(page_texts) else "empty"
-    out = {"status": status, "error": None, "n_pages": page_count,
-           "n_words": n_words, "text": text, "n_fallbacks": n_fallbacks}
+    # corpus-quality lineage (real-PDF parser counts every silent
+    # substitution it makes — MediaBox defaults, unresolvable encodings —
+    # so drift is observable in the metrics table, not shipped as
+    # confident status='ok'; VERDICT round-2 nit)
+    out = {"status": status, "error": None, "n_pages": int(doc["page_count"]),
+           "n_words": n_words, "text": text,
+           "n_fallbacks": sum((doc.get("counters") or {}).values())}
     if options.emit_spans:
         out["spans"] = spans
     return out

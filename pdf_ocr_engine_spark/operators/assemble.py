@@ -6,16 +6,17 @@ Arrow-batched transformation.
 invisible positioned text layer (``core/pdfwrite.py``), the analog of the
 reference's ``buildSearchablePdf`` (``src/lib/ocr/builder.ts:124-204``)
 driven per document instead of per request.  Same plan shape as extraction:
-no shuffle, per-task init point, error-as-value statuses.
+one ``mapInArrow``, no shuffle, per-task init point, error-as-value
+statuses.  The per-document work is the extractor's own PDF page core
+(``core.extract_doc._pdf_pages``: decode, guards, deadline, recognizer), so
+both operators report the same status and error for the same document;
+this module adds only spans and the writer.
 
 At 100 TB the output PDFs dominate storage; write them to their own table
 partitioned like the input so the text table stays scan-friendly.
 """
 
 from __future__ import annotations
-
-from collections.abc import Iterator
-from typing import TYPE_CHECKING
 
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
@@ -26,14 +27,15 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from ..core.extract_doc import DEFAULT_OPTIONS, ExtractOptions, sniff_document
+from ..core.extract_doc import (
+    DEFAULT_OPTIONS,
+    ExtractOptions,
+    PageCoreFailure,
+    _pdf_pages,
+    sniff_document,
+)
 from ..core.layout_fast import page_layout_fast
-from ..core.pdfbin import decode_pdf_arrays
-from ..core.pdfcrypt import EncryptedPdfError
 from ..core.pdfwrite import build_searchable_pdf
-
-if TYPE_CHECKING:  # pragma: no cover
-    import pandas as pd
 
 ASSEMBLED_SCHEMA = StructType([
     StructField("url", StringType(), False),
@@ -48,93 +50,59 @@ ASSEMBLED_SCHEMA = StructType([
 def _assemble_one(payload: bytes | None, lang: str | None,
                   opts: ExtractOptions, preserve_images: bool = False,
                   recognizer=None) -> dict:
+    """``preserve_images`` (reference default, ``route.ts:73-77``) overlays
+    the invisible layer onto the ORIGINAL bytes via incremental update
+    (``core/pdfoverlay``) — images/vector art survive verbatim; otherwise
+    a fresh PDF is written from the word boxes.  Pages with an existing
+    text layer get no new layer (``builder.ts:146-147``); in overlay mode
+    image-only pages get the recognizer's words (None → no layer)."""
     sniff = sniff_document(payload, lang, opts)
     if sniff["status"] != "ok" or sniff["kind"] != "pdf":
         status = sniff["status"] if sniff["status"] != "ok" else "unsupported"
         err = sniff["error"] or "searchable assembly needs a PDF payload"
         return {"status": status, "error": err,
                 "n_pages": 0, "n_words": 0, "pdf": None}
+    payload = bytes(payload)
     try:
-        doc = decode_pdf_arrays(payload)
-        pages = doc["pages"]
-        if doc["page_count"] == 0:
-            return {"status": "no_pages", "error": "PDF has no pages",
+        # only the overlay OCRs: a fresh PDF is written from the decoded
+        # word boxes
+        rec = recognizer if preserve_images else None
+        doc, pages = _pdf_pages(payload, opts, rec)
+        if preserve_images and doc.get("flavor") != "real":
+            return {"status": "unsupported",
+                    "error": "preserveImages needs a genuine PDF original "
+                             "(word-box containers carry no original pages)",
                     "n_pages": 0, "n_words": 0, "pdf": None}
-        if opts.max_pages and doc["page_count"] > opts.max_pages:
-            return {"status": "too_many_pages",
-                    "error": f"PDF has {doc['page_count']} pages",
-                    "n_pages": doc["page_count"], "n_words": 0, "pdf": None}
-        if preserve_images:
-            return _overlay_one(payload, doc, recognizer)
         out_pages = []
         n_words = 0
-        for p in pages:
-            if p.get("has_text"):
-                # page already searchable: copied with no new text layer
-                # (builder.ts:146-147 left-join semantics)
-                spans = []
-            else:
-                _text, nw, spans = page_layout_fast(
-                    p["texts"], p["coords"], want_spans=True)
+        for p, texts, coords in pages:
+            spans = []
+            if not p.get("has_text") and (rec is not None
+                                         or not preserve_images):
+                _text, nw, spans = page_layout_fast(texts, coords,
+                                                    want_spans=True)
                 n_words += nw
             out_pages.append({"width": p["width"], "height": p["height"],
                               "spans": spans})
-        pdf = build_searchable_pdf(out_pages)
+        if not preserve_images:
+            return {"status": "ok", "error": None,
+                    "n_pages": len(out_pages), "n_words": n_words,
+                    "pdf": build_searchable_pdf(out_pages)}
+        from ..core.pdfoverlay import overlay_text_layer
+        try:
+            pdf = overlay_text_layer(payload,
+                                     [p["spans"] for p in out_pages])
+        except ValueError as exc:
+            return {"status": "overlay_unsupported", "error": str(exc),
+                    "n_pages": len(out_pages), "n_words": 0, "pdf": None}
         return {"status": "ok", "error": None, "n_pages": len(out_pages),
                 "n_words": n_words, "pdf": pdf}
-    except EncryptedPdfError as exc:
-        # same taxonomy as the extract path: password-protected documents
-        # must count as 'encrypted' on EVERY route, or crawl stats diverge
-        return {"status": "encrypted", "error": str(exc),
-                "n_pages": 0, "n_words": 0, "pdf": None}
+    except PageCoreFailure as fail:
+        return {**fail.row, "n_words": 0, "pdf": None}
     except Exception as exc:  # noqa: BLE001 - per-doc error isolation
         return {"status": "decode_error",
                 "error": f"{type(exc).__name__}: {exc}",
                 "n_pages": 0, "n_words": 0, "pdf": None}
-
-
-def _overlay_one(payload: bytes, doc: dict, recognizer) -> dict:
-    """preserveImages mode (reference default, ``route.ts:73-77``): overlay
-    the invisible layer onto the ORIGINAL bytes via incremental update
-    (``core/pdfoverlay``) — images/vector art survive verbatim.  Pages with
-    an existing text layer get no overlay (``builder.ts:146-147``); image-
-    only pages get the recognizer's words (None → no layer)."""
-    if doc.get("flavor") != "real":
-        return {"status": "unsupported",
-                "error": "preserveImages needs a genuine PDF original "
-                         "(word-box containers carry no original pages)",
-                "n_pages": 0, "n_words": 0, "pdf": None}
-    from ..core.pdfoverlay import overlay_text_layer
-    from ..core.pdfreal import extract_page_images
-
-    pages = doc["pages"]
-    page_spans: list[list] = []
-    page_images = None
-    n_words = 0
-    for idx, p in enumerate(pages):
-        if p.get("has_text") or recognizer is None:
-            page_spans.append([])
-            continue
-        if page_images is None:
-            page_images = extract_page_images(payload)
-        from ..core.pdfscan import words_to_arrays
-
-        words: list[tuple] = []
-        imgs = (page_images[idx]["images"]
-                if idx < len(page_images) else [])
-        for img in imgs:
-            words.extend(recognizer(img))
-        texts, coords = words_to_arrays(words)
-        _text, nw, spans = page_layout_fast(texts, coords, want_spans=True)
-        n_words += nw
-        page_spans.append(spans)
-    try:
-        pdf = overlay_text_layer(payload, page_spans)
-    except ValueError as exc:
-        return {"status": "overlay_unsupported", "error": str(exc),
-                "n_pages": len(pages), "n_words": 0, "pdf": None}
-    return {"status": "ok", "error": None, "n_pages": len(pages),
-            "n_words": n_words, "pdf": pdf}
 
 
 def assemble_searchable(df: DataFrame,
@@ -147,29 +115,27 @@ def assemble_searchable(df: DataFrame,
     initialized once per task (same contract as ``extract_pages``)."""
     opts = options or DEFAULT_OPTIONS
 
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
+    def run(batches):
+        import pyarrow as pa
 
         # per-task init point: the recognizer (model) builds once here
         recognizer = recognizer_factory() if recognizer_factory else None
-        for batch in batches:
-            n = len(batch)
+        for b in batches:
+            n = b.num_rows
             if n == 0:
                 continue
-            langs = batch["lang"].tolist() if "lang" in batch else [None] * n
-            rows = [_assemble_one(bytes(p) if p is not None else None, lg,
-                                  opts, preserve_images, recognizer)
-                    for p, lg in zip(batch["html"].tolist(), langs)]
-            yield pd.DataFrame({
-                "url": batch["url"].tolist(),
-                "status": [r["status"] for r in rows],
-                "error": [r["error"] for r in rows],
-                "n_pages": pd.Series([r["n_pages"] for r in rows],
-                                     dtype="int32"),
-                "n_words": pd.Series([r["n_words"] for r in rows],
-                                     dtype="int32"),
-                "pdf": [r["pdf"] for r in rows],
-            })
+            langs = b.column("lang").to_pylist() if "lang" in b.schema.names \
+                else [None] * n
+            rows = [_assemble_one(p, lg, opts, preserve_images, recognizer)
+                    for p, lg in zip(b.column("html").to_pylist(), langs)]
+            yield pa.record_batch([
+                b.column("url"),
+                pa.array([r["status"] for r in rows], pa.string()),
+                pa.array([r["error"] for r in rows], pa.string()),
+                pa.array([r["n_pages"] for r in rows], pa.int32()),
+                pa.array([r["n_words"] for r in rows], pa.int32()),
+                pa.array([r["pdf"] for r in rows], pa.binary()),
+            ], names=[f.name for f in ASSEMBLED_SCHEMA.fields])
 
     wanted = [c for c in ("url", "html", "lang") if c in df.columns]
-    return df.select(*wanted).mapInPandas(run, ASSEMBLED_SCHEMA)
+    return df.select(*wanted).mapInArrow(run, ASSEMBLED_SCHEMA)

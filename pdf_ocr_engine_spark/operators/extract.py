@@ -2,7 +2,7 @@
 
 ``extract_pages(df)`` maps the Common-Crawl-style pages DataFrame
 ``(url, warc_ts, html, text, lang, ...)`` to the extracted-output DataFrame
-with one ``mapInPandas`` in **iterator form**: per-task init happens once and
+with one ``mapInArrow`` in **iterator form**: per-task init happens once and
 is amortized over all Arrow batches — the Spark analog of the reference's
 singleton OCR worker reused across pages (``src/lib/ocr/index.ts:99-103``,
 the "64x faster" design note in its README).
@@ -25,11 +25,10 @@ from __future__ import annotations
 
 import os
 import time
-from collections.abc import Iterator
-from typing import TYPE_CHECKING
 
 from pyspark import TaskContext
 from pyspark.sql import DataFrame
+from pyspark.sql.pandas.types import to_arrow_type
 from pyspark.sql.types import (
     ArrayType,
     DoubleType,
@@ -42,9 +41,6 @@ from pyspark.sql.types import (
 )
 
 from ..core.extract_doc import DEFAULT_OPTIONS, ExtractOptions, extract_document
-
-if TYPE_CHECKING:  # pragma: no cover
-    import pandas as pd
 
 #: Output schema — explicit, never inferred (SURVEY.md §1.3).
 EXTRACTED_SCHEMA = StructType([
@@ -99,13 +95,12 @@ def extract_pages(df: DataFrame, options: ExtractOptions | None = None,
                   recognizer_factory=None) -> DataFrame:
     """Sniff → guard → route → extract, one Arrow-batched pass, no shuffle.
 
-    The text path runs ``mapInArrow`` (pyarrow RecordBatch in/out — measured
-    ~30% faster than ``mapInPandas`` on binary-heavy rows: no pandas Series
+    Runs as one ``mapInArrow`` (pyarrow RecordBatch in/out — measured ~30%
+    faster than ``mapInPandas`` on binary-heavy rows: no pandas Series
     materialization, and the ``warc_ts`` column passes through as the same
     Arrow array untouched).  With ``options.emit_spans`` the output gains a
     ``spans`` array column (:data:`SPAN_SCHEMA`) carrying the positioned
-    word sequence per document; that opt-in path stays on ``mapInPandas``
-    for the nested-struct column assembly.
+    word sequence per document, built as an Arrow ``list<struct>`` array.
 
     ``recognizer_factory`` (zero-arg callable returning an ``image_bytes →
     words`` recognizer) turns on the OCR tier for image-only real-PDF
@@ -114,14 +109,9 @@ def extract_pages(df: DataFrame, options: ExtractOptions | None = None,
     factory, not a recognizer: model handles don't pickle; the closure
     ships the recipe and the executor builds the instance."""
     opts = options or DEFAULT_OPTIONS
-    if not opts.emit_spans:
-        return _extract_pages_arrow(df, opts, recognizer_factory)
-    return _extract_pages_pandas(df, opts, emit_spans=True,
-                                 recognizer_factory=recognizer_factory)
-
-
-def _extract_pages_arrow(df: DataFrame, opts: ExtractOptions,
-                         recognizer_factory=None) -> DataFrame:
+    schema = EXTRACTED_SCHEMA_SPANS if opts.emit_spans else EXTRACTED_SCHEMA
+    spans_type = (to_arrow_type(schema["spans"].dataType)
+                  if opts.emit_spans else None)
     # captured driver-side: pre-forked python workers don't see driver env
     audit = os.environ.get("SPARK_GRAFT_ASSET_AUDIT")
 
@@ -147,16 +137,21 @@ def _extract_pages_arrow(df: DataFrame, opts: ExtractOptions,
                                       "n_pages", "n_words", "text",
                                       "n_fallbacks")}
             walls: list[int] = []
+            spans: list[list] = []
             for payload, lang in zip(payloads, langs):
                 t0 = time.perf_counter_ns()
+                # no bytes() here: extract_document type-guards the payload
+                # itself (errors-as-values even for mis-typed columns)
                 r = extract_document(payload, lang, opts, hyphen_ex,
                                      recognizer)
                 walls.append((time.perf_counter_ns() - t0) // 1000)
                 for k in cols:
                     cols[k].append(r[k])
+                if opts.emit_spans:
+                    spans.append(r.get("spans") or [])
             ts = (b.column("warc_ts") if "warc_ts" in b.schema.names
                   else pa.nulls(n, pa.timestamp("us")))
-            yield pa.record_batch([
+            arrays = [
                 b.column("url"), ts,
                 pa.array(langs, pa.string()),
                 pa.array(cols["kind"], pa.string()),
@@ -169,80 +164,12 @@ def _extract_pages_arrow(df: DataFrame, opts: ExtractOptions,
                 pa.array(cols["n_fallbacks"], pa.int32()),
                 pa.array([pid] * n, pa.int32()),
                 pa.array(walls, pa.int64()),
-            ], names=[f.name for f in EXTRACTED_SCHEMA.fields])
-
-    wanted = [c for c in ("url", "warc_ts", "html", "lang") if c in df.columns]
-    return df.select(*wanted).mapInArrow(run, EXTRACTED_SCHEMA)
-
-
-def _extract_pages_pandas(df: DataFrame, opts: ExtractOptions,
-                          emit_spans: bool,
-                          recognizer_factory=None) -> DataFrame:
-    audit = os.environ.get("SPARK_GRAFT_ASSET_AUDIT")
-
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd  # executor-side import
-
-        ctx = TaskContext.get()
-        pid = ctx.partitionId() if ctx is not None else -1
-        # per-task init point (mirrors the reference's singleton worker);
-        # executor assets (S6) load here, and model-backed decoders
-        # (the OCR recognizer included) initialize here.
-        hyphen_ex = _load_hyphen_asset(opts, audit)
-        recognizer = recognizer_factory() if recognizer_factory else None
-        for batch in batches:
-            n = len(batch)
-            if n == 0:
-                continue
-            urls = batch["url"].tolist()
-            langs = batch["lang"].tolist() if "lang" in batch else [None] * n
-            payloads = batch["html"].tolist()
-            ts = (batch["warc_ts"] if "warc_ts" in batch
-                  else pd.Series([pd.NaT] * n))
-
-            cols: dict[str, list] = {k: [] for k in
-                                     ("kind", "status", "error", "n_bytes",
-                                      "n_pages", "n_words", "text",
-                                      "n_fallbacks", "wall_us", "spans")}
-            for payload, lang in zip(payloads, langs):
-                t0 = time.perf_counter_ns()
-                # no bytes() here: extract_document type-guards the payload
-                # itself (errors-as-values even for mis-typed columns)
-                r = extract_document(payload, lang, opts, hyphen_ex,
-                                     recognizer)
-                wall = (time.perf_counter_ns() - t0) // 1000
-                cols["kind"].append(r["kind"])
-                cols["status"].append(r["status"])
-                cols["error"].append(r["error"])
-                cols["n_bytes"].append(r["n_bytes"])
-                cols["n_pages"].append(r["n_pages"])
-                cols["n_words"].append(r["n_words"])
-                cols["text"].append(r["text"])
-                cols["n_fallbacks"].append(r["n_fallbacks"])
-                cols["wall_us"].append(wall)
-                if emit_spans:
-                    cols["spans"].append(r.get("spans") or [])
-
-            spans_col = {"spans": cols["spans"]} if emit_spans else {}
-            yield pd.DataFrame({
-                "url": urls,
-                "warc_ts": ts.reset_index(drop=True),
-                "lang": langs,
-                "kind": cols["kind"],
-                "status": cols["status"],
-                "error": cols["error"],
-                "n_bytes": pd.Series(cols["n_bytes"], dtype="int64"),
-                "n_pages": pd.Series(cols["n_pages"], dtype="int32"),
-                "n_words": pd.Series(cols["n_words"], dtype="int32"),
-                "text": cols["text"],
-                "n_fallbacks": pd.Series(cols["n_fallbacks"], dtype="int32"),
-                "partition_id": pd.Series([pid] * n, dtype="int32"),
-                "wall_us": pd.Series(cols["wall_us"], dtype="int64"),
-                **spans_col,
-            })
+            ]
+            if opts.emit_spans:
+                arrays.append(pa.array(spans, spans_type))
+            yield pa.record_batch(arrays, names=schema.fieldNames())
 
     # column pruning: request only what the stage reads, so the scan's
     # ReadSchema shrinks to 4 columns even on wide input tables.
     wanted = [c for c in ("url", "warc_ts", "html", "lang") if c in df.columns]
-    schema = EXTRACTED_SCHEMA_SPANS if emit_spans else EXTRACTED_SCHEMA
-    return df.select(*wanted).mapInPandas(run, schema)
+    return df.select(*wanted).mapInArrow(run, schema)

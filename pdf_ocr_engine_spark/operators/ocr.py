@@ -76,32 +76,24 @@ def deterministic_recognizer():
     * ``FAKERAST`` header → the struct-packed word-record container
       (``core/pdfscan.decode_page_raster``) — the "pixels" of this repo's
       own scanned fixtures;
-    * **DCTDecode** image XObjects (``filter == 'DCTDecode'`` from
-      ``decoded_image``, or raw JPEG magic) → baseline JPEG decode via
-      the pure-stdlib codec (``core/jpegcodec``), luma plane into the
-      same pixel OCR — the dominant raster format real scanners embed;
-    * **CCITTFaxDecode** image XObjects → Group 4 decode via the
-      pure-stdlib T.6 codec (``core/ccittcodec``; /K, /Columns, /Rows,
-      /EncodedByteAlign honoured from the DecodeParms carried on the
-      image dict) — the dominant 1-bit fax/TIFF-style scan encoding;
-    * **JPXDecode** image XObjects → JPEG 2000 decode via the
-      pure-stdlib T.800 codec (``core/jpxcodec``: JP2 box wrapper or raw
-      codestream, reversible 5/3 or lossy 9/7 wavelet with scalar
-      quantization, tiled images, EBCOT Tier-1 over the shared MQ
-      coder; RCT/ICT color decodes to BT.601 luma) — the archive/ebook
-      scanner format;
-    * **JBIG2Decode** image XObjects → embedded-stream decode via the
-      pure-stdlib T.88 codec (``core/jbig2codec``: MQ arithmetic coder,
-      generic regions, symbol-dictionary + text regions — the
-      dictionary-coded arrangement real scanner output uses — with the
-      ``/JBIG2Globals`` prefix stream resolved from the DecodeParms) —
-      the modern scanner/optimizer codec;
-    * 8-bit ``/DeviceGray`` raster of declared size → real pixel OCR
-      (``core/rasterfont.recognize_gray``: projection segmentation +
-      5×7 template classification) — genuine grayscale page images, as a
-      foreign scanner would embed;
+    * an image codec from the filter table — **DCTDecode** (or raw JPEG
+      magic; ``core/jpegcodec``, the dominant raster format real scanners
+      embed), **CCITTFaxDecode** (G3/G4, ``core/ccittcodec``; /K,
+      /Columns, /Rows, /EncodedByteAlign, /BlackIs1 honoured from the
+      DecodeParms), **JPXDecode** (JPEG 2000, ``core/jpxcodec`` — the
+      archive/ebook scanner format) and **JBIG2Decode** (``core/
+      jbig2codec``, ``/JBIG2Globals`` resolved from the DecodeParms) —
+      each decoding to an 8-bit luma plane;
+    * raw samples of declared size — 8-bit ``/DeviceRGB`` (BT.601 luma),
+      8-bit ``/DeviceGray`` or packed 1-bit gray;
     * anything else → ``ValueError`` (undecodable pixels).
+
+    Every decoded plane then takes one tail: the /Decode inversion, and
+    real pixel OCR (``core/rasterfont.recognize_gray``: projection
+    segmentation + 5×7 template classification).
     """
+    import numpy as np
+
     from ..core.ccittcodec import CcittError, decode_g3, decode_g4
     from ..core.jbig2codec import Jbig2Error, decode_jbig2_embedded
     from ..core.jpegcodec import JpegError, decode_jpeg_gray
@@ -109,121 +101,95 @@ def deterministic_recognizer():
     from ..core.pdfscan import RASTER_MAGIC, decode_page_raster
     from ..core.rasterfont import recognize_gray
 
+    def ccitt(data: bytes, image: dict):
+        parms = image.get("decode_parms") or {}
+        k = parms.get("K", 0)
+        if not isinstance(k, (int, float)):
+            raise ValueError(f"unsupported CCITT K={k!r}")
+        cols = int(parms.get("Columns", 1728))
+        rows = parms.get("Rows", image.get("height"))
+        rows = int(rows) if rows is not None else None
+        align = bool(parms.get("EncodedByteAlign", False))
+        if k < 0:  # G4 / pure MMR
+            return decode_g4(data, cols, rows, encoded_byte_align=align)
+        # G3: K=0 pure 1-D, K>0 mixed (T.4)
+        return decode_g3(data, cols, rows, k=int(k),
+                         encoded_byte_align=align)
+
+    def jbig2(data: bytes, image: dict):
+        glob = (image.get("decode_parms") or {}).get("JBIG2Globals")
+        return decode_jbig2_embedded(
+            data, globals_data=glob if isinstance(glob, bytes) else None,
+            width=image.get("width"), height=image.get("height"))
+
+    # filter → (decode to a luma plane, codec error, label, honours
+    # /Decode).  ISO 32000 has JPXDecode images ignore /Decode (pdf.js
+    # does too): the codestream carries its own sample interpretation.
+    by_filter = {
+        "DCTDecode": (lambda data, _image: decode_jpeg_gray(data),
+                      JpegError, "JPEG", True),
+        "CCITTFaxDecode": (ccitt, CcittError, "CCITT", True),
+        "JPXDecode": (lambda data, _image: decode_jpx_gray(data),
+                      JpxError, "JPEG 2000", False),
+        "JBIG2Decode": (jbig2, Jbig2Error, "JBIG2", True),
+    }
+
+    def raw_gray(data: bytes, image: dict):
+        w, h = image.get("width"), image.get("height")
+        cs, bpc = image.get("colorspace"), image.get("bpc")
+        if cs == "DeviceRGB" and bpc == 8 and w and h \
+                and len(data) == w * h * 3:
+            # color page scan: ITU-R BT.601 integer luma (color carries no
+            # extra text information)
+            rgb = np.frombuffer(data, np.uint8).reshape(h, w, 3) \
+                .astype(np.uint32)
+            return ((77 * rgb[..., 0] + 150 * rgb[..., 1]
+                     + 29 * rgb[..., 2] + 128) >> 8).astype(np.uint8)
+        if cs == "DeviceGray" and bpc == 8 and w and h \
+                and len(data) == w * h:
+            return np.frombuffer(data, np.uint8).reshape(h, w)
+        if bpc == 1 and cs in ("DeviceGray", None) and w and h \
+                and len(data) == ((w + 7) // 8) * h:
+            # raw packed 1-bit rows (simple B/W scans with no image codec;
+            # PDF DeviceGray: sample 0 = black, 1 = white, rows padded to
+            # byte boundaries per ISO 32000 8.9.3)
+            bits = np.unpackbits(
+                np.frombuffer(data, np.uint8).reshape(h, (w + 7) // 8),
+                axis=1)[:, :w]
+            return np.where(bits, 255, 0).astype(np.uint8)
+        raise ValueError(
+            f"undecodable page image ({cs}, {bpc} bpc, {len(data)} bytes "
+            f"for {w}x{h})")
+
     def recognize(image: dict):
         data = image["data"]
         if data[:8] == RASTER_MAGIC:
             _w, _h, words = decode_page_raster(data)
             return words
+        filt = "DCTDecode" if data[:2] == b"\xFF\xD8" else image.get("filter")
         # /Decode [1 0] (per component) remaps samples to the inverted
-        # range (inverted B/W scans carry it); default is identity.
-        # Computed up front so EVERY codec branch honours it.
-        inverted = _decode_inverts(image.get("decode"))
-        if image.get("filter") == "DCTDecode" or data[:2] == b"\xFF\xD8":
+        # range (inverted B/W scans carry it); default is identity
+        invert = _decode_inverts(image.get("decode"))
+        codec = by_filter.get(filt)
+        if codec is not None:
+            decode, error, label, honours_decode = codec
             try:
-                gray = decode_jpeg_gray(data)
-            except JpegError as exc:
+                gray = decode(data, image)
+            except error as exc:
                 raise ValueError(
-                    f"undecodable JPEG page image: {exc}") from exc
-            if inverted:
-                gray = 255 - gray
-            gh, gw = gray.shape
-            return recognize_gray(gw, gh, gray.tobytes())
-        if image.get("filter") == "CCITTFaxDecode":
-            parms = image.get("decode_parms") or {}
-            k = parms.get("K", 0)
-            if not isinstance(k, (int, float)):
-                raise ValueError(f"unsupported CCITT K={k!r}")
-            cols = parms.get("Columns", 1728)
-            rows = parms.get("Rows", image.get("height"))
-            try:
-                if k < 0:  # G4 / pure MMR
-                    gray = decode_g4(
-                        data, int(cols),
-                        int(rows) if rows is not None else None,
-                        encoded_byte_align=bool(
-                            parms.get("EncodedByteAlign", False)))
-                else:      # G3: K=0 pure 1-D, K>0 mixed (T.4)
-                    gray = decode_g3(
-                        data, int(cols),
-                        int(rows) if rows is not None else None,
-                        k=int(k),
-                        encoded_byte_align=bool(
-                            parms.get("EncodedByteAlign", False)))
-            except CcittError as exc:
-                raise ValueError(
-                    f"undecodable CCITT page image: {exc}") from exc
-            # /BlackIs1 and /Decode [1 0] each flip black/white; both
-            # together cancel (a renderer composes them) — XOR.
-            if bool(parms.get("BlackIs1")) != inverted:
-                gray = 255 - gray  # 1 bits are black: inverted semantics
-            gh, gw = gray.shape
-            return recognize_gray(gw, gh, gray.tobytes())
-        if image.get("filter") == "JPXDecode":
-            try:
-                gray = decode_jpx_gray(data)
-            except JpxError as exc:
-                raise ValueError(
-                    f"undecodable JPEG 2000 page image: {exc}") from exc
-            if inverted:
-                gray = 255 - gray
-            gh, gw = gray.shape
-            return recognize_gray(gw, gh, gray.tobytes())
-        if image.get("filter") == "JBIG2Decode":
-            parms = image.get("decode_parms") or {}
-            glob = parms.get("JBIG2Globals")
-            try:
-                gray = decode_jbig2_embedded(
-                    data,
-                    globals_data=glob if isinstance(glob, bytes) else None,
-                    width=image.get("width"),
-                    height=image.get("height"))
-            except Jbig2Error as exc:
-                raise ValueError(
-                    f"undecodable JBIG2 page image: {exc}") from exc
-            if inverted:
-                gray = 255 - gray
-            gh, gw = gray.shape
-            return recognize_gray(gw, gh, gray.tobytes())
-        w, h = image.get("width"), image.get("height")
-        if (image.get("colorspace") == "DeviceRGB"
-                and image.get("bpc") == 8
-                and w and h and len(data) == w * h * 3):
-            # color page scan: ITU-R BT.601 integer luma, then the same
-            # grayscale OCR (color carries no extra text information)
-            import numpy as np
-
-            rgb = np.frombuffer(data, np.uint8).reshape(h, w, 3) \
-                .astype(np.uint32)
-            gray = ((77 * rgb[..., 0] + 150 * rgb[..., 1]
-                     + 29 * rgb[..., 2] + 128) >> 8).astype(np.uint8)
-            if inverted:
-                gray = 255 - gray
-            return recognize_gray(w, h, gray.tobytes())
-        if (image.get("colorspace") == "DeviceGray"
-                and image.get("bpc") == 8
-                and w and h and len(data) == w * h):
-            if inverted:
-                data = bytes(255 - b for b in data)
-            return recognize_gray(w, h, data)
-        if (image.get("bpc") == 1
-                and image.get("colorspace") in ("DeviceGray", None)
-                and w and h and len(data) == ((w + 7) // 8) * h):
-            # raw packed 1-bit rows (simple B/W scans with no image
-            # codec; PDF DeviceGray: sample 0 = black, 1 = white, rows
-            # padded to byte boundaries per ISO 32000 8.9.3)
-            import numpy as np
-
-            bits = np.unpackbits(
-                np.frombuffer(data, np.uint8)
-                .reshape(h, (w + 7) // 8), axis=1)[:, :w]
-            if inverted:
-                bits = 1 - bits
-            gray = np.where(bits, 255, 0).astype(np.uint8)
-            return recognize_gray(w, h, gray.tobytes())
-        raise ValueError(
-            f"undecodable page image ({image.get('colorspace')}, "
-            f"{image.get('bpc')} bpc, {len(data)} bytes for "
-            f"{w}x{h})")
+                    f"undecodable {label} page image: {exc}") from exc
+            invert = invert and honours_decode
+            if filt == "CCITTFaxDecode":
+                # /BlackIs1 and /Decode [1 0] each flip black/white; both
+                # together cancel (a renderer composes them) — XOR
+                invert ^= bool(
+                    (image.get("decode_parms") or {}).get("BlackIs1"))
+        else:
+            gray = raw_gray(data, image)
+        if invert:
+            gray = 255 - gray
+        gh, gw = gray.shape
+        return recognize_gray(gw, gh, gray.tobytes())
 
     return recognize
 

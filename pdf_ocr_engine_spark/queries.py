@@ -230,7 +230,8 @@ def q_assemble_overlay(spark: SparkSession, sf_dir: str) -> DataFrame:
     the overlay text extracts to the exact token stream AND the original
     page image objects survive byte-identically (md5 of the recovered
     raster equals a recomputation from the source text).  Narrow chain —
-    assemble and verify are back-to-back mapInPandas stages, no shuffle."""
+    assemble (mapInArrow) and verify (mapInPandas) run back to back, no
+    shuffle."""
     from pyspark.sql.types import (
         LongType,
         StringType,

@@ -43,8 +43,8 @@ SHOWCASE = {
     "extract_encrypted": ("transparent decryption stays inside the narrow "
                           "MapInArrow — no plan difference vs plain "
                           "extraction"),
-    "assemble_overlay": ("assemble(preserveImages) → verify as back-to-back "
-                         "mapInPandas, zero Exchange"),
+    "assemble_overlay": ("assemble(preserveImages, MapInArrow) → verify "
+                         "(MapInPandas) back to back, zero Exchange"),
     "ann_ivf": ("query embedding never leaves the plan: centroid ranking "
                 "as expressions over the broadcast single-row query, "
                 "probe-list pruning join, TakeOrderedAndProject"),

@@ -484,9 +484,10 @@ class TestGray1Raster:
 
 
 class TestInvertedDecodeAllCodecs:
-    """/Decode [1 0] must be honoured in EVERY codec branch, not only
-    the raw-raster paths, and it must XOR with CCITT /BlackIs1 (the two
-    inversions cancel, as a renderer composes them)."""
+    """/Decode [1 0] must be honoured in every codec branch that defines
+    it, not only the raw-raster paths, and it must XOR with CCITT
+    /BlackIs1 (the two inversions cancel, as a renderer composes them).
+    JPXDecode is the exception: ISO 32000 has it ignore /Decode."""
 
     @staticmethod
     def _render(w=64, h=20):
@@ -547,6 +548,41 @@ class TestInvertedDecodeAllCodecs:
              "width": w, "height": h,
              "colorspace": "DeviceGray", "bpc": 1})
         assert [x[0] for x in words] == ["ok"]
+
+    def test_jpx_decode_array_ignored(self):
+        # ISO 32000 8.9.5.2 (and pdf.js): JPXDecode images ignore /Decode,
+        # so a plain JPX carrying [1 0] recognizes as if it had none
+        import numpy as np
+
+        from pdf_ocr_engine_spark.core.jpxcodec import encode_jp2_gray
+        from pdf_ocr_engine_spark.operators.ocr import (
+            deterministic_recognizer,
+        )
+
+        w, h, gray = self._render()
+        words = deterministic_recognizer()(
+            {"data": encode_jp2_gray(np.ascontiguousarray(gray), bpc=1),
+             "filter": "JPXDecode", "decode_parms": None,
+             "decode": (1.0, 0.0), "width": w, "height": h,
+             "colorspace": "DeviceGray", "bpc": 1})
+        assert [x[0] for x in words] == ["ok"]
+
+    def test_gray8_decode_array_inverts(self):
+        # an inverted raw 8-bit DeviceGray raster with /Decode [1 0]
+        # recognizes exactly like its plain twin
+        from pdf_ocr_engine_spark.operators.ocr import (
+            deterministic_recognizer,
+        )
+
+        w, h, gray = self._render()
+        rec = deterministic_recognizer()
+        image = {"filter": None, "decode_parms": None, "width": w,
+                 "height": h, "colorspace": "DeviceGray", "bpc": 8}
+        plain = rec({**image, "data": gray.tobytes()})
+        inverted = rec({**image, "data": (255 - gray).tobytes(),
+                        "decode": (1.0, 0.0)})
+        assert [x[0] for x in plain] == ["ok"]
+        assert inverted == plain
 
     def test_dct_decode_array_inverts(self):
         from pdf_ocr_engine_spark.core.jpegcodec import encode_jpeg_gray

@@ -214,6 +214,35 @@ class TestAssembleStatusTaxonomy:
                               recognizer=deterministic_recognizer())
             assert r["status"] == "encrypted", preserve
 
+    def test_guard_parity_with_extract(self):
+        """Assembly and extraction share one PDF page core, so every
+        guard and decode failure reports the same status AND error text
+        on both routes, in both assembly modes."""
+        from pdf_ocr_engine_spark.sources.fixtures import make_pages_rows
+
+        # url = https://<host>/<path>
+        docs = {r["url"].split("/", 3)[-1]: r["html"]
+                for r in make_pages_rows(n_docs=12)}
+        enc = text_to_encrypted_pdf_payload(TEXT, "rc4-128")
+        docs["encrypted"] = enc.replace(b"/V 2 /R 3", b"/V 5 /R 6")
+        want_status = {"edge/zero_pages.pdf": "no_pages",
+                       "edge/too_many.pdf": "too_many_pages",
+                       "edge/mismatch.pdf": "page_mismatch",
+                       "edge/corrupt.pdf": "decode_error",
+                       "encrypted": "encrypted"}
+        for name, status in want_status.items():
+            payload = docs[name]
+            x = extract_document(payload, "eng")
+            assert x["status"] == status, name
+            for preserve in (False, True):
+                r = _assemble_one(payload, "eng", DEFAULT_OPTIONS,
+                                  preserve_images=preserve,
+                                  recognizer=deterministic_recognizer())
+                assert (r["status"], r["error"]) == \
+                    (x["status"], x["error"]), (name, preserve)
+                assert r["n_pages"] == x["n_pages"], (name, preserve)
+                assert r["pdf"] is None
+
 
 class TestViewportRoundTrip:
     """Overlay writes display-frame spans through the INVERSE viewport;

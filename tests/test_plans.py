@@ -33,8 +33,23 @@ def test_extract_scan_prunes_columns(spark, fixture_pages_path):
     assert "text" not in line
 
 
+def test_extract_and_assemble_are_arrow_only(spark, fixture_pages_path):
+    """One Arrow path: extraction (with and without ``emit_spans``) and
+    searchable assembly each plan a MapInArrow and no MapInPandas."""
+    from pdf_ocr_engine_spark.core.extract_doc import ExtractOptions
+    from pdf_ocr_engine_spark.operators.assemble import assemble_searchable
+
+    pages = spark.read.parquet(fixture_pages_path)
+    for df in (extract_pages(pages),
+               extract_pages(pages, ExtractOptions(emit_spans=True)),
+               assemble_searchable(pages)):
+        plan = plan_str(df, "simple")
+        assert "MapInArrow" in plan, plan
+        assert "MapInPandas" not in plan, plan
+
+
 def test_extract_is_narrow_no_shuffle(spark, fixture_pages_path):
-    """scan → mapInPandas with zero Exchange; the ONLY shuffle in the DAG is
+    """scan → mapInArrow with zero Exchange; the ONLY shuffle in the DAG is
     the explicit salted repartition when requested."""
     pages = spark.read.parquet(fixture_pages_path)
     assert "Exchange" not in plan_str(extract_pages(pages))
@@ -150,8 +165,8 @@ def test_ivf_probe_broadcasts_query(spark):
 
 
 def test_assemble_overlay_chain_is_narrow(spark):
-    """assemble(preserve_images) → verify is a back-to-back mapInPandas
-    chain with zero Exchange (the scanned corpus synthesis + overlay +
+    """assemble(preserve_images, mapInArrow) → verify (mapInPandas) is a
+    back-to-back chain with zero Exchange (the scanned corpus synthesis + overlay +
     re-extract all ride the same partitioning)."""
     from pdf_ocr_engine_spark.queries import q_assemble_overlay
 

@@ -160,3 +160,41 @@ def test_large_document_stress(spark):
     assert row.n_pages == 150
     assert row.n_words == expected["n_words"] == 150 * 400
     assert row.text == expected["text"]
+
+
+def test_emit_spans_match_extract_document(spark, fixture_pages_path):
+    """With ``emit_spans`` the Arrow operator's ``spans`` column carries,
+    per url, exactly the span tuples ``extract_document`` returns — for the
+    fixture corpus (WBOX, HTML and edge docs) plus genuine PDFs."""
+    from pdf_ocr_engine_spark.core.extract_doc import (
+        ExtractOptions,
+        extract_document,
+    )
+    from pdf_ocr_engine_spark.operators.extract import extract_pages
+    from pdf_ocr_engine_spark.sources.fixtures import (
+        text_to_real_pdf_payload,
+        text_to_truetype_pdf_payload,
+    )
+
+    opts = ExtractOptions(emit_spans=True)
+    pages = spark.read.parquet(fixture_pages_path).select("url", "html",
+                                                           "lang")
+    text = "genuine pdf words flow through the spans column " * 12
+    real = spark.createDataFrame(
+        [("https://real.example/a.pdf", text_to_real_pdf_payload(text), "eng"),
+         ("https://real.example/b.pdf",
+          text_to_truetype_pdf_payload(text), "eng")],
+        pages.schema)
+    rows = extract_pages(pages.unionByName(real), opts) \
+        .select("url", "spans").collect()
+    payloads = {r.url: (r.html, r.lang)
+                for r in pages.unionByName(real).collect()}
+    assert len(rows) == len(payloads) == 122
+    n_spans = 0
+    for row in rows:
+        html, lang = payloads[row.url]
+        want = extract_document(html, lang, opts).get("spans") or []
+        assert [tuple(s) for s in row.spans] == [tuple(s) for s in want], \
+            row.url
+        n_spans += len(want)
+    assert n_spans > 1000
