@@ -105,7 +105,11 @@ def main() -> int:
 
     from pyspark.sql import functions as F
 
-    from pdf_ocr_engine_spark.plans.pipeline import build_session, run_extraction
+    from pdf_ocr_engine_spark.operators.extract import extract_pages
+    from pdf_ocr_engine_spark.plans.pipeline import (
+        build_session,
+        salted_repartition,
+    )
     from pdf_ocr_engine_spark.queries import EXTRA_QUERIES, QUERIES
 
     spark = build_session(f"bench-{cpus}", master=f"local[{cpus}]",
@@ -152,18 +156,16 @@ def main() -> int:
         # aggregation — sums every output column's work without shipping
         # texts to the driver)
         def run_extract():
-            res = run_extraction(pages, num_partitions=cpus * 2,
-                                 run_id="bench")
-            res.extracted.agg(F.sum("n_words"), F.sum(F.length("text")),
-                              F.count("*")).collect()
+            extract_pages(salted_repartition(pages, cpus * 2)).agg(
+                F.sum("n_words"), F.sum(F.length("text")),
+                F.count("*")).collect()
 
         timed("extract", run_extract)
 
         def run_extract_html():
-            res = run_extraction(html_pages, num_partitions=cpus * 2,
-                                 run_id="bench-html")
-            res.extracted.agg(F.sum("n_words"), F.sum(F.length("text")),
-                              F.count("*")).collect()
+            extract_pages(salted_repartition(html_pages, cpus * 2)).agg(
+                F.sum("n_words"), F.sum(F.length("text")),
+                F.count("*")).collect()
 
         timed("extract_html", run_extract_html)
 

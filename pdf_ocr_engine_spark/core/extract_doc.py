@@ -59,28 +59,21 @@ class ExtractOptions:
     """Knobs mirroring ``OcrOptions`` + route guards.  Plain attributes so the
     object pickles cheaply into UDF closures."""
 
-    __slots__ = ("max_bytes", "max_pages", "validate_lang", "fix_hyphenation",
-                 "min_words", "max_link_density", "emit_spans", "max_doc_ms",
-                 "hyphen_asset")
+    __slots__ = ("max_bytes", "max_pages", "fix_hyphenation", "emit_spans",
+                 "max_doc_ms", "hyphen_asset")
 
     def __init__(
         self,
         max_bytes: int = 50 * 1024 * 1024,   # MAX_PDF_BYTES, route.ts:6
         max_pages: int = 200,                # MAX_PDF_PAGES, route.ts:7
-        validate_lang: bool = True,
         fix_hyphenation: bool = False,       # OFF for byte-identity core
-        min_words: int = 5,
-        max_link_density: float = 1.0 / 3.0,
         emit_spans: bool = False,            # positioned spans (C1-C3 path)
         max_doc_ms: int | None = None,       # L3 wall-clock budget per doc
         hyphen_asset: str | None = None,     # S6 executor asset (--files name)
     ) -> None:
         self.max_bytes = max_bytes
         self.max_pages = max_pages
-        self.validate_lang = validate_lang
         self.fix_hyphenation = fix_hyphenation
-        self.min_words = min_words
-        self.max_link_density = max_link_density
         self.emit_spans = emit_spans
         self.max_doc_ms = max_doc_ms
         self.hyphen_asset = hyphen_asset
@@ -114,7 +107,7 @@ def sniff_document(html: bytes | None, lang: str | None,
         return {"kind": kind, "status": "too_large",
                 "error": f"payload is {n_bytes} bytes, exceeds the maximum "
                          f"allowed {options.max_bytes} bytes", "n_bytes": n_bytes}
-    if options.validate_lang and lang is not None and not LANG_RE.match(lang):
+    if lang is not None and not LANG_RE.match(lang):
         return {"kind": kind, "status": "invalid_lang",
                 "error": f"invalid language code: {lang}", "n_bytes": n_bytes}
     if kind == "other":
@@ -308,17 +301,13 @@ def detect_html_charset(html: bytes) -> str:
     return "utf-8"
 
 
-def _extract_html(html: bytes, options: ExtractOptions) -> dict[str, Any]:
+def _extract_html(html: bytes) -> dict[str, Any]:
     try:
         markup = html.decode(detect_html_charset(html), errors="replace")
     except Exception as exc:  # pragma: no cover - replace can't raise
         return {"status": "decode_error", "error": str(exc),
                 "n_pages": 0, "n_words": 0, "text": None}
-    text = extract_main_text(
-        markup,
-        max_link_density=options.max_link_density,
-        min_words=options.min_words,
-    )
+    text = extract_main_text(markup)
     status = "ok" if text else "empty"
     return {"status": status, "error": None, "n_pages": 1,
             "n_words": len(text.split()), "text": text}
@@ -358,7 +347,7 @@ def extract_document(html: bytes | None, lang: str | None,
     html = bytes(html)
     try:
         body = _extract_pdf(html, options, hyphen_exceptions, recognizer) \
-            if sniff["kind"] == "pdf" else _extract_html(html, options)
+            if sniff["kind"] == "pdf" else _extract_html(html)
     except Exception as exc:  # noqa: BLE001 - error isolation per document
         body = {"status": "decode_error", "error": f"{type(exc).__name__}: {exc}",
                 "n_pages": 0, "n_words": 0, "text": None}

@@ -1,4 +1,4 @@
-"""Resumable batch execution via per-bucket completion manifests.
+"""Resumable batch execution via per-unit completion manifests.
 
 north_rule: "resumable from checkpoint by skipping completed partition
 manifests".  Spark has no batch-resume primitive, so the driver loop
@@ -7,17 +7,23 @@ implements it (SURVEY.md §4):
 * every document belongs to a deterministic bucket
   ``pmod(xxhash64(url), n_buckets)`` — identical across runs and cluster
   sizes;
-* buckets are processed in chunks; each chunk's output is appended under
-  ``<out>/data/bucket=<i>/`` and, only after the write commits, a manifest
-  JSON is written to ``<out>/_manifests/bucket_<i>.json`` (manifest-LAST
-  ordering: a crash between data-write and manifest leaves the bucket
-  unmanifested, so the re-run reprocesses it after clearing the orphan
-  partition dir — never lost, never silently partial);
-* a re-run lists manifests and skips completed buckets entirely (the filter
-  prunes them at the scan).
+* pending buckets are processed in chunks; each chunk is one unit written
+  by ``pipeline._commit`` (overwrite) to ``<out>/data/unit=<b0>/`` (``b0``
+  = its first bucket).  Only after the write commits, a manifest
+  ``<out>/_manifests/unit_<b0>.json`` records the chunk's buckets,
+  ``n_buckets``, ``run_id`` and the write's counters (manifest-LAST: a
+  crash before it leaves an orphan unit dir, which the re-run deletes
+  before reprocessing those buckets — never lost, never silently partial);
+* a re-run skips the buckets its manifests list.  The bucket predicate is
+  a hash of ``url``, so it cannot prune the parquet scan: every chunk still
+  reads the whole input and drops other buckets' rows after the scan, and
+  only the extract stage is saved;
+* bucket ids only mean something under the ``n_buckets`` that wrote them,
+  so a re-run with another value is refused before any Spark work.
 
-At 10^12 documents the manifest table is ``n_buckets`` tiny JSON files — list
-it on the driver in O(n_buckets); data-file listing is never needed.
+At 10^12 documents the manifest table is ``n_buckets / chunk_buckets`` tiny
+JSON files — list it on the driver in O(n_buckets); data-file listing is
+never needed.
 """
 
 from __future__ import annotations
@@ -33,28 +39,39 @@ from pyspark.sql import functions as F
 
 from ..core.extract_doc import ExtractOptions
 from ..operators.extract import extract_pages
-
-BUCKET_COL = "bucket"
-
-
-def with_bucket(df: DataFrame, n_buckets: int) -> DataFrame:
-    return df.withColumn(
-        BUCKET_COL, F.pmod(F.xxhash64(F.col("url")), F.lit(n_buckets)).cast("int"))
+from .pipeline import _commit
 
 
 def _manifest_dir(output_dir: str) -> str:
     return os.path.join(output_dir, "_manifests")
 
 
-def completed_buckets(output_dir: str) -> set[int]:
+def write_manifest(output_dir: str, unit: int, fields: dict) -> None:
+    """Commit point of one unit: ``_manifests/unit_<unit>.json``, written
+    to a temp name and renamed so a kill never leaves half a manifest."""
+    path = os.path.join(_manifest_dir(output_dir), f"unit_{unit}.json")
+    os.makedirs(os.path.dirname(path), exist_ok=True)
+    with open(path + ".tmp", "w") as f:
+        json.dump({**fields, "committed_at": time.time()}, f)
+    os.replace(path + ".tmp", path)
+
+
+def read_manifests(output_dir: str) -> dict[int, dict]:
+    """``unit → manifest`` for every committed unit under ``output_dir``."""
     mdir = _manifest_dir(output_dir)
     if not os.path.isdir(mdir):
-        return set()
-    done = set()
+        return {}
+    out = {}
     for name in os.listdir(mdir):
-        if name.startswith("bucket_") and name.endswith(".json"):
-            done.add(int(name[len("bucket_"):-len(".json")]))
-    return done
+        if name.startswith("unit_") and name.endswith(".json"):
+            with open(os.path.join(mdir, name)) as f:
+                out[int(name[len("unit_"):-len(".json")])] = json.load(f)
+    return out
+
+
+def completed_buckets(output_dir: str) -> set[int]:
+    return {b for m in read_manifests(output_dir).values()
+            for b in m["buckets"]}
 
 
 @dataclass
@@ -76,54 +93,40 @@ def run_resumable(
     max_chunks: int | None = None,
     recognizer_factory=None,
 ) -> ResumeReport:
-    """Process pending buckets in chunks; each chunk = write data, then
-    manifests.  ``max_chunks`` exists for tests (simulated interruption)."""
-    os.makedirs(_manifest_dir(output_dir), exist_ok=True)
-    data_dir = os.path.join(output_dir, "data")
-
-    done = completed_buckets(output_dir)
+    """Process pending buckets in chunks; each chunk = one unit write, then
+    its manifest.  ``max_chunks`` exists for tests (simulated
+    interruption).  Raises ``ValueError`` when ``output_dir`` holds
+    manifests of another ``n_buckets``."""
+    manifests = read_manifests(output_dir)
+    other = sorted({m["n_buckets"] for m in manifests.values()} - {n_buckets})
+    if other:
+        raise ValueError(f"{output_dir} was written with n_buckets={other}; "
+                         f"cannot resume it with n_buckets={n_buckets}")
+    done = {b for m in manifests.values() for b in m["buckets"]}
     pending = [b for b in range(n_buckets) if b not in done]
 
-    # crash hygiene: a bucket dir without a manifest is an orphan from a
-    # killed run — drop it so the append can't duplicate rows.
+    # crash hygiene: a unit dir without a manifest is an orphan from a
+    # killed run — drop it so its rows can't show up twice.
+    data_dir = os.path.join(output_dir, "data")
     if os.path.isdir(data_dir):
         for name in os.listdir(data_dir):
-            if name.startswith(f"{BUCKET_COL}="):
-                b = int(name.split("=", 1)[1])
-                if b not in done:
-                    shutil.rmtree(os.path.join(data_dir, name))
+            unit = name.removeprefix("unit=")
+            if unit != name and int(unit) not in manifests:
+                shutil.rmtree(os.path.join(data_dir, name))
 
-    bucketed = with_bucket(pages, n_buckets)
+    bucket = F.pmod(F.xxhash64(F.col("url")), F.lit(n_buckets))
     processed: list[int] = []
     docs_written = 0
-
-    for start in range(0, len(pending), chunk_buckets):
-        if max_chunks is not None and start // chunk_buckets >= max_chunks:
-            break
-        chunk = pending[start:start + chunk_buckets]
-        chunk_df = bucketed.where(F.col(BUCKET_COL).isin(chunk))
-        extracted = extract_pages(chunk_df.drop(BUCKET_COL), options,
-                                  recognizer_factory=recognizer_factory)
-        out = with_bucket(extracted, n_buckets)
-        out.write.mode("append").partitionBy(BUCKET_COL).parquet(data_dir)
-
-        # commit point: manifests AFTER the data write succeeded.  Counts
-        # come from a read-back of the written files (partition pruning keeps
-        # the scan to this chunk) — never recompute the extract stage.  The
-        # explicit schema keeps the read alive when a chunk wrote zero rows
-        # for every bucket (only _SUCCESS on disk → inference would fail).
-        counts = {r[BUCKET_COL]: r["n"] for r in
-                  spark.read.schema(out.schema).parquet(data_dir)
-                       .where(F.col(BUCKET_COL).isin(chunk))
-                       .groupBy(BUCKET_COL).agg(F.count("*").alias("n"))
-                       .collect()}
-        for b in chunk:
-            with open(os.path.join(_manifest_dir(output_dir),
-                                   f"bucket_{b}.json"), "w") as f:
-                json.dump({"bucket": b, "run_id": run_id,
-                           "docs": counts.get(b, 0),
-                           "committed_at": time.time()}, f)
+    chunks = [pending[i:i + chunk_buckets]
+              for i in range(0, len(pending), chunk_buckets)]
+    for chunk in chunks[:max_chunks]:
+        counters = _commit(
+            extract_pages(pages.where(bucket.isin(chunk)), options,
+                          recognizer_factory=recognizer_factory),
+            f"{data_dir}/unit={chunk[0]}", run_id)
+        write_manifest(output_dir, chunk[0],
+                       {"buckets": chunk, "n_buckets": n_buckets, **counters})
         processed.extend(chunk)
-        docs_written += sum(counts.values())
+        docs_written += counters["docs_in"]
 
     return ResumeReport(processed, sorted(done), docs_written)

@@ -5,13 +5,18 @@ orchestrating driver ``convertPdfToSearchable`` (``src/lib/ocr/index.ts:27-173``
 but expressed as DataFrame stages:
 
     pages ──salted repartition──▶ extract (mapInArrow, narrow)
-          ──▶ output table  +  per-partition metrics table
+          ──_commit──▶ <out>/data  +  observed.json (df.observe counters)
+          ──read-back──▶ <out>/metrics (per-partition metrics table)
+
+``_commit`` is the one observed unit write of all three drivers: batch (one
+unit), resume (``plans/checkpoint.py``, one ``data/unit=<id>`` per bucket
+chunk) and stream (``streaming/extract_stream.py``, one per micro-batch).
 
 Shuffle inventory (what the 100 TB plan pays for):
   1. the explicit salted ``repartition`` — ONE shuffle, deliberately bought to
      break host-prefix skew before the expensive stage (AQE only rebalances
      shuffle *reads*; compute skew inside a UDF stage needs the explicit salt);
-     skip it (``salt_partitions=0``) when the source is already well-bucketed.
+     skip it (omit ``num_partitions``) when the source is already well-bucketed.
   2. the metrics aggregation — a partial+final hash agg over ~P rows of
      counters; negligible (map-side combine reduces each partition to 1 row).
 The extract stage itself is narrow: no shuffle at any scale.
@@ -19,9 +24,10 @@ The extract stage itself is narrow: no shuffle at any scale.
 
 from __future__ import annotations
 
-from dataclasses import dataclass
+import json
+import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..core.extract_doc import ExtractOptions
@@ -62,12 +68,6 @@ def salted_repartition(df: DataFrame, num_partitions: int,
     )
 
 
-@dataclass
-class ExtractionResult:
-    extracted: DataFrame   # one row per input document
-    metrics: DataFrame     # one row per executor partition (lineage)
-
-
 def partition_metrics(extracted: DataFrame, run_id: str) -> DataFrame:
     """Per-partition lineage + metrics (north_rule).  Aggregates the
     lineage columns every output row carries; map-side combine collapses
@@ -90,24 +90,25 @@ def partition_metrics(extracted: DataFrame, run_id: str) -> DataFrame:
     )
 
 
-def run_extraction(
-    pages: DataFrame,
-    *,
-    options: ExtractOptions | None = None,
-    num_partitions: int | None = None,
-    salt_buckets: int | None = None,
-    run_id: str = "adhoc",
-    recognizer_factory=None,
-) -> ExtractionResult:
-    """The full DAG: salt+repartition → extract → (output, metrics).
-    ``recognizer_factory`` enables the OCR tier for image-only real-PDF
-    pages (same init-once contract as ``extract_pages``)."""
-    df = pages
-    if num_partitions:
-        df = salted_repartition(df, num_partitions, salt_buckets)
-    extracted = extract_pages(df, options,
-                              recognizer_factory=recognizer_factory)
-    return ExtractionResult(extracted, partition_metrics(extracted, run_id))
+def _commit(df: DataFrame, path: str, run_id: str) -> dict:
+    """The one data write every driver (batch, resume, stream) goes
+    through: overwrite ``path`` with ``df`` as parquet and return the
+    job-level counters, which ride the write action itself via
+    ``df.observe`` (zero extra passes)."""
+    obs = Observation(f"commit-{run_id}")
+    df.observe(
+        obs,
+        F.count(F.lit(1)).alias("docs_in"),
+        F.sum(F.when(F.col("status") == "ok", 1).otherwise(0)).alias("docs_ok"),
+        F.sum("n_words").alias("words"),
+        F.sum("n_bytes").alias("bytes_in"),
+        F.sum(F.length("text")).alias("bytes_out"),
+        # decoder silent-substitution total — job-level twin of the
+        # per-partition `fallbacks` metric (corpus-quality drift signal)
+        F.sum("n_fallbacks").alias("fallbacks"),
+    ).write.mode("overwrite").parquet(path)
+    return {"run_id": run_id,
+            **{k: (int(v) if v is not None else 0) for k, v in obs.get.items()}}
 
 
 def write_extraction(
@@ -121,40 +122,23 @@ def write_extraction(
     run_id: str = "adhoc",
     recognizer_factory=None,
 ) -> DataFrame:
-    """Materialize the DAG once: extract → write data → derive the metrics
-    table from a **read-back** of the written parquet (lineage columns are in
-    every row), so the expensive extract stage is never recomputed for
-    metrics.  Returns the read-back extracted DataFrame.
-
-    Job-level counters ride the write action itself via ``df.observe``
-    (the reference's progress/timing spans, SURVEY.md S9) — zero extra
-    passes — and land in ``<output>/observed.json``."""
-    import json
-    import os
-
-    from pyspark.sql import Observation
-
-    res = run_extraction(pages, options=options, num_partitions=num_partitions,
-                         salt_buckets=salt_buckets, run_id=run_id,
-                         recognizer_factory=recognizer_factory)
-    obs = Observation(f"extract-{run_id}")
-    observed = res.extracted.observe(
-        obs,
-        F.count(F.lit(1)).alias("docs_in"),
-        F.sum(F.when(F.col("status") == "ok", 1).otherwise(0)).alias("docs_ok"),
-        F.sum("n_words").alias("words"),
-        F.sum("n_bytes").alias("bytes_in"),
-        F.sum(F.length("text")).alias("bytes_out"),
-        # decoder silent-substitution total — job-level twin of the
-        # per-partition `fallbacks` metric (corpus-quality drift signal)
-        F.sum("n_fallbacks").alias("fallbacks"),
-    )
-    observed.write.mode("overwrite").parquet(f"{output_dir}/data")
+    """The full DAG, materialized once: salted repartition (when
+    ``num_partitions``) → extract → write ``<output>/data`` with its
+    counters in ``<output>/observed.json`` → derive the metrics table from a
+    **read-back** of the written parquet (lineage columns are in every row),
+    so the expensive extract stage is never recomputed for metrics.  Returns
+    the read-back extracted DataFrame.  ``recognizer_factory`` enables the
+    OCR tier for image-only real-PDF pages (same init-once contract as
+    ``extract_pages``)."""
+    df = pages
+    if num_partitions:
+        df = salted_repartition(df, num_partitions, salt_buckets)
+    observed = _commit(extract_pages(df, options,
+                                     recognizer_factory=recognizer_factory),
+                       f"{output_dir}/data", run_id)
     if "://" not in output_dir:  # local fs only; object stores skip the json
         with open(os.path.join(output_dir, "observed.json"), "w") as f:
-            json.dump({"run_id": run_id,
-                       **{k: (int(v) if v is not None else 0)
-                          for k, v in obs.get.items()}}, f)
+            json.dump(observed, f)
     written = spark.read.parquet(f"{output_dir}/data")
     partition_metrics(written, run_id).write.mode("overwrite") \
         .parquet(f"{output_dir}/metrics")

@@ -4,16 +4,15 @@ The batch job satisfies the north_rule's resumability with partition
 manifests (``plans/checkpoint.py``); this module is the *continuous-ingest*
 variant for a landing zone that keeps receiving WARC-derived page files:
 
-    pages files → readStream → extract (same Arrow-batched operator)
-                → writeStream parquet sink, exactly-once via checkpoint
+    pages files → readStream → foreachBatch: extract → _commit
+                → <out>/data/unit=<batchId> + _manifests/unit_<batchId>.json
 
 Design notes (Spark-first):
 
-* the extraction operator is IDENTICAL to the batch one (``mapInArrow`` is
-  streaming-compatible) — one code path, two drivers;
-* exactly-once: the file source records consumed files and the parquet sink
-  commits atomically per micro-batch into the checkpoint's write-ahead log —
-  a killed job resumes without reprocessing or duplicating documents;
+* the extraction operator and the unit write are IDENTICAL to the batch and
+  resume drivers (``extract_pages`` + ``plans.pipeline._commit``);
+* exactly-once: see :func:`extract_stream`; ``spark.read.parquet(<out>)``
+  reads every unit (``_manifests`` is a hidden path);
 * ``Trigger.AvailableNow`` drains the backlog in bounded micro-batches and
   stops — the streaming analog of a resumable batch catch-up run;
 * ``maxFilesPerTrigger`` bounds micro-batch size so executor memory holds
@@ -30,6 +29,8 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..core.extract_doc import ExtractOptions
 from ..operators.extract import extract_pages
+from ..plans.checkpoint import write_manifest
+from ..plans.pipeline import _commit
 from ..sources.schemas import PAGES_SCHEMA
 
 __all__ = ["PAGES_SCHEMA", "read_pages_stream", "extract_stream"]
@@ -61,15 +62,23 @@ def extract_stream(
     for image-only real-PDF pages — same per-task init contract as the
     batch operator (the model builds once per task, never per microbatch
     row).
+
+    Exactly-once comes from the ``batchId``-keyed overwrite: the file
+    source's offset log fixes each micro-batch's files before it runs, and a
+    failed batch replays under the same ``batchId``, rewriting its own
+    ``<output_dir>/data/unit=<batchId>`` instead of appending a copy.
     """
-    pages = read_pages_stream(spark, input_dir, max_files_per_trigger)
-    extracted = extract_pages(pages, options,
-                              recognizer_factory=recognizer_factory)
-    writer = (extracted.writeStream
-              .format("parquet")
-              .option("path", output_dir)
-              .option("checkpointLocation", checkpoint_dir)
-              .outputMode("append"))
+    def commit(batch: DataFrame, batch_id: int) -> None:
+        counters = _commit(extract_pages(batch, options,
+                                         recognizer_factory=recognizer_factory),
+                           f"{output_dir}/data/unit={batch_id}", "stream")
+        if "://" not in output_dir:  # local fs only, like observed.json
+            write_manifest(output_dir, batch_id, counters)
+
+    writer = (read_pages_stream(spark, input_dir, max_files_per_trigger)
+              .writeStream
+              .foreachBatch(commit)
+              .option("checkpointLocation", checkpoint_dir))
     if available_now:
         writer = writer.trigger(availableNow=True)
     return writer.start()

@@ -43,7 +43,7 @@ def main(argv: list[str]) -> int:
                         "the deterministic recognizer (the sandbox "
                         "stand-in); a real deployment passes its own "
                         "factory via the library API "
-                        "(run_extraction(recognizer_factory=...)).")
+                        "(write_extraction(recognizer_factory=...)).")
     args = p.parse_args(argv)
 
     from pdf_ocr_engine_spark.core.extract_doc import ExtractOptions

@@ -399,6 +399,97 @@ class TestCheckpointResume:
                    extract_pages(pages).select("url", "text").collect()}
         assert resumed == oneshot
 
+    def test_rerun_with_other_n_buckets_is_refused(self, spark,
+                                                   fixture_pages_path,
+                                                   build_dir):
+        """Bucket ids only mean something under the n_buckets that wrote
+        them: a rerun with another value must fail before any work instead
+        of skipping the wrong documents."""
+        from pdf_ocr_engine_spark.plans.checkpoint import run_resumable
+
+        pages = spark.read.parquet(fixture_pages_path)
+        out = os.path.join(build_dir, "ckpt_out3")
+        shutil.rmtree(out, ignore_errors=True)
+        run_resumable(spark, pages, out, n_buckets=16, chunk_buckets=4,
+                      max_chunks=2)
+        with pytest.raises(ValueError, match="n_buckets"):
+            run_resumable(spark, pages, out, n_buckets=8, chunk_buckets=4)
+
+        # the refused rerun left the checkpoint intact
+        r = run_resumable(spark, pages, out, n_buckets=16, chunk_buckets=4)
+        assert len(r.skipped_buckets) == 8 and len(r.processed_buckets) == 8
+        resumed = spark.read.parquet(f"{out}/data")
+        assert resumed.count() == 120
+        assert resumed.select("url").distinct().count() == 120
+
+    def test_killed_submit_resumes_to_clean_output(self, spark,
+                                                   fixture_pages_path,
+                                                   build_dir):
+        """``spark-submit scripts/run_extract.py --resume`` is SIGKILLed
+        after its first unit manifest and before its last; the rerun skips
+        exactly the committed buckets and its rows equal a clean run's."""
+        import contextlib
+        import signal
+        import subprocess
+        import sys
+        import time
+
+        from pdf_ocr_engine_spark.plans.checkpoint import (
+            completed_buckets,
+            read_manifests,
+            run_resumable,
+        )
+
+        repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+        out = os.path.join(build_dir, "ckpt_kill")
+        clean = os.path.join(build_dir, "ckpt_kill_clean")
+        for d in (out, clean):
+            shutil.rmtree(d, ignore_errors=True)
+        # 64 buckets at the CLI's 16 per chunk: 4 units, so a kill window
+        cmd = ["spark-submit", "--master", "local[2]",
+               os.path.join(repo, "scripts", "run_extract.py"),
+               "--input", fixture_pages_path, "--output", out,
+               "--resume", "--buckets", "64"]
+        env = {**os.environ, "PYSPARK_PYTHON": sys.executable,
+               "PYTHONPATH": os.pathsep.join(
+                   p for p in (repo, os.environ.get("PYTHONPATH")) if p)}
+
+        proc = subprocess.Popen(cmd, env=env, start_new_session=True,
+                                stdout=subprocess.DEVNULL,
+                                stderr=subprocess.DEVNULL)
+        try:
+            deadline = time.monotonic() + 300
+            while (not read_manifests(out) and proc.poll() is None
+                   and time.monotonic() < deadline):
+                time.sleep(0.01)
+        finally:
+            with contextlib.suppress(ProcessLookupError):
+                os.killpg(proc.pid, signal.SIGKILL)
+            proc.wait()
+        committed = read_manifests(out)
+        n_done = len(completed_buckets(out))
+        assert 0 < len(committed) < 4, "kill missed the window between units"
+
+        rerun = subprocess.run(cmd, env=env, capture_output=True, text=True,
+                               timeout=600)
+        assert rerun.returncode == 0, rerun.stderr[-2000:]
+        assert f"processed={64 - n_done} skipped={n_done} " in rerun.stdout
+        after = read_manifests(out)
+        assert len(completed_buckets(out)) == 64
+        assert all(after[u] == m for u, m in committed.items())
+        assert sum(m["docs_in"] for m in after.values()) == 120
+
+        run_resumable(spark, spark.read.parquet(fixture_pages_path), clean,
+                      n_buckets=64)
+
+        def rows(path):
+            return sorted(spark.read.parquet(f"{path}/data")
+                          .select("url", "status", "text").collect(),
+                          key=lambda r: r.url)
+
+        assert rows(out) == rows(clean)
+        assert len(rows(out)) == 120
+
 
 class TestAnnQuality:
     @pytest.fixture(scope="class")

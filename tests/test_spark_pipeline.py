@@ -4,10 +4,10 @@ url against goldens, status routing, metrics/lineage, salting determinism."""
 import pytest
 from pyspark.sql import functions as F
 
+from pdf_ocr_engine_spark.operators.extract import extract_pages
 from pdf_ocr_engine_spark.plans.pipeline import (
     host_col,
     partition_metrics,
-    run_extraction,
     salted_repartition,
 )
 
@@ -17,8 +17,7 @@ pytestmark = pytest.mark.spark
 @pytest.fixture(scope="module")
 def extracted(spark, fixture_pages_path):
     pages = spark.read.parquet(fixture_pages_path)
-    res = run_extraction(pages, num_partitions=8, run_id="test")
-    out = res.extracted.cache()
+    out = extract_pages(salted_repartition(pages, 8)).cache()
     out.count()
     return out
 
@@ -88,7 +87,7 @@ def test_salting_deterministic(spark, fixture_pages_path):
 def test_column_pruning_reaches_scan(spark, fixture_pages_path, extracted):
     """The scan must NOT read the `text` input column (output-only)."""
     pages = spark.read.parquet(fixture_pages_path)
-    plan = run_extraction(pages).extracted._jdf.queryExecution().executedPlan().toString()
+    plan = extract_pages(pages)._jdf.queryExecution().executedPlan().toString()
     assert "text" not in plan.split("ReadSchema:")[-1].splitlines()[0]
 
 
@@ -99,7 +98,7 @@ def test_documents_roundtrip_oracle(spark):
     from pdf_ocr_engine_spark.sources.testdata import pages_from_documents
 
     pages = pages_from_documents(spark, "/root/testdata/sf0.001")
-    out = run_extraction(pages).extracted
+    out = extract_pages(pages)
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet") \
         .select("doc_id", F.col("text").alias("src"))
     rows = (out.withColumn("doc_id",
@@ -135,7 +134,6 @@ def test_large_document_stress(spark):
 
     from pdf_ocr_engine_spark.core.extract_doc import extract_document
     from pdf_ocr_engine_spark.core.pdfbin import encode_pdf
-    from pdf_ocr_engine_spark.operators.extract import extract_pages
     from pdf_ocr_engine_spark.sources.fixtures import layout_words
 
     toks = [f"w{i}" for i in range(400)]
@@ -170,7 +168,6 @@ def test_emit_spans_match_extract_document(spark, fixture_pages_path):
         ExtractOptions,
         extract_document,
     )
-    from pdf_ocr_engine_spark.operators.extract import extract_pages
     from pdf_ocr_engine_spark.sources.fixtures import (
         text_to_real_pdf_payload,
         text_to_truetype_pdf_payload,

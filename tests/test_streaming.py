@@ -1,5 +1,6 @@
 """Structured Streaming extraction: byte-identity through the streaming
-path, and exactly-once incremental resume via the sink checkpoint."""
+path, and exactly-once incremental resume via the source checkpoint and
+the batchId-keyed unit overwrite."""
 
 import os
 import shutil
@@ -7,6 +8,7 @@ import shutil
 import pytest
 from pyspark.sql import functions as F
 
+from pdf_ocr_engine_spark.plans.checkpoint import read_manifests
 from pdf_ocr_engine_spark.sources.fixtures import write_pages_parquet
 from pdf_ocr_engine_spark.streaming.extract_stream import extract_stream
 
@@ -54,6 +56,10 @@ def test_streaming_matches_golden_and_resumes(spark, stream_dirs):
     out = spark.read.parquet(stream_dirs["out"])
     assert out.count() == 110
     assert out.select("url").distinct().count() == 110
+    # one unit per micro-batch, each with its observed counters
+    units = read_manifests(stream_dirs["out"])
+    assert sorted(units) == [0, 1]
+    assert [units[u]["docs_in"] for u in (0, 1)] == [40, 70]
 
     # byte-identity through the streaming path (same operator as batch)
     golden = spark.read.parquet(corpus.replace(".parquet", "_golden.parquet"))
