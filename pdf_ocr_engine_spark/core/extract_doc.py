@@ -132,8 +132,10 @@ def _pdf_pages(html: bytes, options: ExtractOptions, recognizer=None):
     Returns ``(doc, pages)``: the decoded document and a lazy iterator of
     ``(page, texts, coords)`` in page order.  A real-flavor page without a
     text layer gets the recognizer's words in place of its (empty) text
-    layer.  Every failure — undecodable or encrypted payload, a metadata
-    guard, the ``max_doc_ms`` deadline, a bad page image — raises
+    layer, read from the images the one document parse recorded for that
+    page (``page["images"]``; no second parse).  Every failure —
+    undecodable or encrypted payload, a metadata guard, the
+    ``max_doc_ms`` deadline, a bad page image — raises
     :class:`PageCoreFailure` (from this call or from the iterator)."""
     from .pdfcrypt import EncryptedPdfError
 
@@ -175,9 +177,6 @@ def _pdf_pages(html: bytes, options: ExtractOptions, recognizer=None):
     ocr = recognizer is not None and doc.get("flavor") == "real"
 
     def walk():
-        # page images are pulled lazily, once per document, only when some
-        # page actually needs the recognizer
-        page_images: list | None = None
         for page_idx, page in enumerate(pages):
             if deadline is not None and time.perf_counter() > deadline:
                 raise PageCoreFailure(
@@ -186,15 +185,13 @@ def _pdf_pages(html: bytes, options: ExtractOptions, recognizer=None):
             if not ocr or page.get("has_text"):
                 yield page, page["texts"], page["coords"]
                 continue
-            if page_images is None:
-                from .pdfreal import extract_page_images
-                try:
-                    page_images = extract_page_images(html)
-                except ValueError as exc:
-                    raise PageCoreFailure(
-                        "decode_error", str(exc), page_count) from exc
-            imgs = (page_images[page_idx]["images"]
-                    if page_idx < len(page_images) else [])
+            # the images this page paints, recorded by the text-layer
+            # parse; their streams are decoded here, on first read
+            try:
+                imgs = page["images"]()
+            except ValueError as exc:
+                raise PageCoreFailure(
+                    "decode_error", str(exc), page_count) from exc
             words: list[tuple] = []
             for img in imgs:
                 try:

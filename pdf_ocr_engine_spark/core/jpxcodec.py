@@ -1337,6 +1337,10 @@ def _parse_markers(cs: bytes) -> tuple[dict, list[bytearray]]:
         seg_ = cs[pos + 4:pos + 2 + ln]
         if len(seg_) != ln - 2:
             raise JpxError("truncated marker segment")
+        if bodies and marker in (0xFF51, 0xFF52, 0xFF5C, 0xFF5D):
+            # T.800 A.3: SIZ/COD/QCD/QCC belong to the main header; one
+            # between tile-parts would rewrite every tile's parameters
+            raise JpxError(f"main-header marker 0x{marker:04X} after SOT")
         if marker == 0xFF51:
             siz = seg_
             pos += 2 + ln

@@ -39,6 +39,7 @@ write → re-extract → layout must reproduce the document token stream
 
 from __future__ import annotations
 
+import functools
 import re
 import struct
 import zlib
@@ -1084,11 +1085,13 @@ def _tokenize_content(d: bytes):
 
 
 class _WordSink:
-    """Accumulates glyph runs into whitespace-delimited words with boxes."""
+    """Accumulates glyph runs into whitespace-delimited words with boxes,
+    and the Image XObjects the page paints (undecoded, in paint order)."""
 
     def __init__(self, page_h: float) -> None:
         self.page_h = page_h
         self.words: list[tuple[str, float, float, float, float]] = []
+        self.images: list[_Stream] = []
         self.any_text = False
         self._chars: list[str] = []
         self._x0 = self._x = self._y = self._size = 0.0
@@ -1162,11 +1165,13 @@ def _run_page(doc: _Doc, content: bytes, fonts: dict[str, _Font],
 
     def do_form(name: str, resources: dict | None, fonts: dict,
                 depth: int) -> None:
-        """Execute a /Subtype /Form XObject (text inside forms is real
-        page text — pdf.js getTextContent descends into them too).  Per
-        ISO 32000 §8.10.1, Do brackets the form in an implicit q..Q and
-        premultiplies the form /Matrix into the CTM; the form's own
-        /Resources scope its content, falling back to the caller's."""
+        """Paint the XObject ``name``.  An Image is recorded on the sink
+        (the OCR tier's input; an image painted twice is recorded twice).
+        A Form is executed (text inside forms is real page text — pdf.js
+        getTextContent descends into them too).  Per ISO 32000 §8.10.1,
+        Do brackets the form in an implicit q..Q and premultiplies the
+        form /Matrix into the CTM; the form's own /Resources scope its
+        content, falling back to the caller's."""
         nonlocal ctm, font, size, tc, tw, tz, tl, ts, gs_floor
         if depth >= _MAX_FORM_DEPTH or not isinstance(resources, dict):
             return
@@ -1174,10 +1179,13 @@ def _run_page(doc: _Doc, content: bytes, fonts: dict[str, _Font],
         if not isinstance(xobjs, dict) or name not in xobjs:
             return
         obj = doc.resolve(xobjs[name])
-        if not isinstance(obj, _Stream) or \
-                str(doc.resolve(obj.dict.get("Subtype", ""))) != "Form":
+        if not isinstance(obj, _Stream):
             return
-        if id(obj) in form_seen:  # self-referential form: cycle guard
+        subtype = str(doc.resolve(obj.dict.get("Subtype", "")))
+        if subtype == "Image":
+            sink.images.append(obj)
+            return
+        if subtype != "Form" or id(obj) in form_seen:  # cycle guard
             return
         form_seen.add(id(obj))
         save = (ctm, font, size, tc, tw, tz, tl, ts)
@@ -1303,8 +1311,8 @@ def _run_page(doc: _Doc, content: bytes, fonts: dict[str, _Font],
                             tm = _mat_mul((1, 0, 0, 1, adv, 0.0), tm)
                 elif op == "Do" and stack:
                     # XObject paint: Form XObjects carry real page text
-                    # (pdf.js getTextContent descends); images are the
-                    # OCR tier's concern (extract_page_images)
+                    # (pdf.js getTextContent descends); Image XObjects are
+                    # recorded for the OCR tier and decoded only if read
                     sink.flush()
                     do_form(str(stack[-1]), resources, fonts, depth)
             except (TypeError, ValueError, IndexError):
@@ -1374,8 +1382,28 @@ def effective_page_box(doc: _Doc, pd: dict,
             abs(mx1 - mx0), abs(my1 - my0), rot)
 
 
+def _page_contents(doc: _Doc, pd: dict) -> bytes:
+    """The page's /Contents: one stream or an array of streams, decoded
+    and joined with newlines."""
+    contents = doc.resolve(pd.get("Contents"))
+    if isinstance(contents, _Stream):
+        return contents.decoded(doc)
+    chunks: list[bytes] = []
+    if isinstance(contents, list):
+        for c in contents:
+            cs = doc.resolve(c)
+            if isinstance(cs, _Stream):
+                chunks.append(cs.decoded(doc))
+    return b"\n".join(chunks)
+
+
 def parse_real_pdf(data: bytes) -> dict[str, Any]:
     """Real PDF → the ``decode_pdf_arrays`` page shape (+ ``flavor='real'``).
+
+    Each page also carries ``images``: a zero-argument callable returning
+    the image dicts (see :func:`extract_page_images`) of the Image
+    XObjects the page paints.  Image streams are decoded only when it is
+    called, so a document whose pages all have text decodes no image.
 
     Raises ``ValueError`` on documents whose object graph or content
     streams can't be parsed (mapped to ``status='decode_error'`` upstream).
@@ -1429,18 +1457,7 @@ def parse_real_pdf(data: bytes) -> dict[str, Any]:
             for fname, fref in font_res.items():
                 fonts[fname] = _load_font(doc, fref, counters)
 
-        contents = doc.resolve(pd.get("Contents"))
-        chunks: list[bytes] = []
-        if isinstance(contents, _Stream):
-            chunks.append(contents.decoded(doc))
-        elif isinstance(contents, list):
-            for c in contents:
-                cs = doc.resolve(c)
-                if isinstance(cs, _Stream):
-                    chunks.append(cs.decoded(doc))
-        content = b"\n".join(chunks)
-
-        sink = _run_page(doc, content, fonts, height,
+        sink = _run_page(doc, _page_contents(doc, pd), fonts, height,
                          resources if isinstance(resources, dict) else None,
                          counters, base_ctm)
         words = sink.words
@@ -1456,90 +1473,14 @@ def parse_real_pdf(data: bytes) -> dict[str, Any]:
             texts.append(txt)
         pages.append({"page_no": i + 1, "width": width, "height": height,
                       "has_text": sink.any_text, "texts": texts,
-                      "coords": coords})
+                      "coords": coords,
+                      "images": functools.partial(_image_dicts, doc,
+                                                  sink.images)})
     return {"page_count": len(pages), "pages": pages, "flavor": "real",
             "counters": counters}
 
 
-def _walk_xobjects(doc: _Doc, resources: Any,
-                   _depth: int = 0, _seen: set | None = None):
-    """Yield every Image/Form XObject STREAM reachable from ``resources``,
-    descending into Form XObjects' own resources (depth-capped, cycle-
-    guarded) — scanned-page images are often wrapped in a form, and form
-    content streams carry real text the cheap probe must see."""
-    if _depth >= _MAX_FORM_DEPTH or not isinstance(resources, dict):
-        return
-    seen = _seen if _seen is not None else set()
-    xobjs = doc.resolve(resources.get("XObject"))
-    if not isinstance(xobjs, dict):
-        return
-    for _name, ref in xobjs.items():
-        try:
-            obj = doc.resolve(ref)
-        except ValueError:
-            continue
-        if not isinstance(obj, _Stream) or id(obj) in seen:
-            continue
-        seen.add(id(obj))
-        subtype = str(doc.resolve(obj.dict.get("Subtype", "")))
-        yield subtype, obj
-        if subtype == "Form":
-            yield from _walk_xobjects(
-                doc, doc.resolve(obj.dict.get("Resources")),
-                _depth + 1, seen)
-
-
-def extract_page_images(data: bytes) -> list[dict[str, Any]]:
-    """Per-page image XObjects of a real PDF — the rasterizer-side input for
-    the scanned/image-only tier (reference ``extractor.ts:12-37`` renders
-    pages to PNG via pdf.js canvas; here the page of a *scanned* PDF IS its
-    embedded image, so "rasterizing" = pulling that image's decoded bytes).
-
-    Returns one dict per page: ``{"page_no", "width", "height", "images":
-    [{"data": bytes, "width": int|None, "height": int|None}]}`` in page
-    order.  Pages without image XObjects get an empty list (a blank or
-    vector-only page — nothing for a recognizer to read).  Raises
-    ``ValueError`` on unparseable documents, same contract as
-    :func:`parse_real_pdf`.
-    """
-    off = _header_offset(data)
-    if off > 0:
-        data = data[off:]
-    doc = _Doc(data)
-    out: list[dict[str, Any]] = []
-    for i, pd in enumerate(_find_pages(doc)):
-        media = doc.resolve(pd.get("MediaBox"))
-        try:
-            mx0, my0, mx1, my1 = (float(doc.resolve(v)) for v in media)
-        except (TypeError, ValueError):
-            mx0, my0, mx1, my1 = 0.0, 0.0, 612.0, 792.0
-        images: list[dict[str, Any]] = []
-        resources = doc.resolve(pd.get("Resources")) or {}
-        # Walk only the images this page actually PAINTS (Do operands in
-        # its content streams, descending into drawn forms) — never every
-        # XObject merely *reachable* from Resources: pages routinely
-        # inherit one shared /Resources dict from the Pages node, and the
-        # reachable-set walk would attribute every sibling page's raster
-        # to every page (the OCR tier would then recognize the whole
-        # document's pixels once per page — duplicated text).
-        contents = doc.resolve(pd.get("Contents"))
-        chunks: list[bytes] = []
-        if isinstance(contents, _Stream):
-            chunks.append(contents.decoded(doc))
-        elif isinstance(contents, list):
-            for c in contents:
-                cs = doc.resolve(c)
-                if isinstance(cs, _Stream):
-                    chunks.append(cs.decoded(doc))
-        _collect_drawn_images(doc, b"\n".join(chunks), resources,
-                              0, set(), images)
-        out.append({"page_no": i + 1,
-                    "width": abs(mx1 - mx0), "height": abs(my1 - my0),
-                    "images": images})
-    return out
-
-
-def _parm_value(doc: "_Doc", v: Any) -> Any:
+def _parm_value(doc: _Doc, v: Any) -> Any:
     """Resolve a DecodeParms value for the cross-boundary image dict; a
     stream value (``/JBIG2Globals``) becomes its decoded bytes (None if
     undecodable — the codec then treats it as absent)."""
@@ -1552,94 +1493,69 @@ def _parm_value(doc: "_Doc", v: Any) -> Any:
     return rv
 
 
-def _collect_drawn_images(doc: "_Doc", content: bytes, resources: Any,
-                          depth: int, seen: set[int],
-                          images: list[dict[str, Any]]) -> None:
-    """Append (in paint order) every Image XObject the ``content`` stream
-    draws via ``Do``, recursing into drawn Form XObjects — the image-side
-    twin of ``detect_pages_text``'s drawn-forms-only discipline.  ``seen``
-    guards the current Do chain against form cycles; an image drawn twice
-    on one page is yielded twice (it is painted twice)."""
-    if depth >= _MAX_FORM_DEPTH or not isinstance(resources, dict):
-        return
-    pending: list = []
-    for kind, val in _tokenize_content(content):
-        if kind == "val":
-            pending.append(val)
-            if len(pending) > 8:
-                del pending[0]
+def _image_dicts(doc: _Doc, streams: list[_Stream]) -> list[dict[str, Any]]:
+    """The recognizer's image dicts for a page's painted Image XObjects, in
+    paint order; an image whose stream filters cannot be undone is dropped
+    (a bad image is not a bad page).  May raise ``ValueError`` on a broken
+    object graph (e.g. a reference cycle in /Width)."""
+    out: list[dict[str, Any]] = []
+    for obj in streams:
+        try:
+            blob, img_filter, img_parms = obj.decoded_image(doc)
+        except Exception:  # noqa: BLE001 - bad image ≠ bad page
             continue
-        if val == "Do" and pending:
-            name = pending[-1]
-            xobjs = doc.resolve(resources.get("XObject"))
-            if isinstance(name, _Name) and isinstance(xobjs, dict) \
-                    and str(name) in xobjs:
-                try:
-                    obj = doc.resolve(xobjs[str(name)])
-                except ValueError:
-                    obj = None
-                if isinstance(obj, _Stream):
-                    subtype = str(doc.resolve(obj.dict.get("Subtype", "")))
-                    if subtype == "Image":
-                        try:
-                            blob, img_filter, img_parms = \
-                                obj.decoded_image(doc)
-                        except Exception:  # noqa: BLE001 - bad image ≠ bad page
-                            blob, img_filter, img_parms = None, None, None
-                        if blob is not None:
-                            w = doc.resolve(obj.dict.get("Width"))
-                            h = doc.resolve(obj.dict.get("Height"))
-                            cs = doc.resolve(obj.dict.get("ColorSpace"))
-                            bpc = doc.resolve(
-                                obj.dict.get("BitsPerComponent"))
-                            if isinstance(img_parms, dict):
-                                # stream-valued parms (e.g. /JBIG2Globals)
-                                # cross the boundary as their decoded bytes
-                                img_parms = {
-                                    str(k): _parm_value(doc, v)
-                                    for k, v in img_parms.items()}
-                            dec = doc.resolve(obj.dict.get("Decode"))
-                            try:
-                                dec = (tuple(float(doc.resolve(v))
-                                             for v in dec)
-                                       if isinstance(dec, list) else None)
-                            except (TypeError, ValueError):
-                                dec = None  # malformed ≠ bad image
-                            images.append({
-                                "data": blob,
-                                # trailing image-codec filter (DCTDecode …)
-                                # whose bytes `data` still are, or None when
-                                # fully decoded to raw samples
-                                "filter": img_filter,
-                                # /Decode array (sample-value remap; an
-                                # inverted B/W scan carries [1 0])
-                                "decode": dec,
-                                # its DecodeParms (CCITT needs /K /Columns
-                                # /Rows /EncodedByteAlign to interpret data)
-                                "decode_parms": img_parms,
-                                "width": int(w)
-                                if isinstance(w, (int, float)) else None,
-                                "height": int(h)
-                                if isinstance(h, (int, float)) else None,
-                                "colorspace": str(cs)
-                                if isinstance(cs, _Name) else None,
-                                "bpc": int(bpc)
-                                if isinstance(bpc, (int, float)) else None,
-                            })
-                    elif subtype == "Form" and id(obj) not in seen:
-                        seen.add(id(obj))
-                        sub_res = doc.resolve(obj.dict.get("Resources"))
-                        if not isinstance(sub_res, dict):
-                            sub_res = resources
-                        try:
-                            body = obj.decoded(doc)
-                        except Exception:  # noqa: BLE001 - bad form
-                            body = b""
-                        if body:
-                            _collect_drawn_images(doc, body, sub_res,
-                                                  depth + 1, seen, images)
-                        seen.discard(id(obj))
-        pending.clear()
+        w = doc.resolve(obj.dict.get("Width"))
+        h = doc.resolve(obj.dict.get("Height"))
+        cs = doc.resolve(obj.dict.get("ColorSpace"))
+        bpc = doc.resolve(obj.dict.get("BitsPerComponent"))
+        if isinstance(img_parms, dict):
+            # stream-valued parms (e.g. /JBIG2Globals) cross the boundary
+            # as their decoded bytes
+            img_parms = {str(k): _parm_value(doc, v)
+                         for k, v in img_parms.items()}
+        dec = doc.resolve(obj.dict.get("Decode"))
+        try:
+            dec = (tuple(float(doc.resolve(v)) for v in dec)
+                   if isinstance(dec, list) else None)
+        except (TypeError, ValueError):
+            dec = None  # malformed ≠ bad image
+        out.append({
+            "data": blob,
+            # trailing image-codec filter (DCTDecode …) whose bytes `data`
+            # still are, or None when fully decoded to raw samples
+            "filter": img_filter,
+            # /Decode array (sample-value remap; an inverted B/W scan
+            # carries [1 0])
+            "decode": dec,
+            # its DecodeParms (CCITT needs /K /Columns /Rows
+            # /EncodedByteAlign to interpret data)
+            "decode_parms": img_parms,
+            "width": int(w) if isinstance(w, (int, float)) else None,
+            "height": int(h) if isinstance(h, (int, float)) else None,
+            "colorspace": str(cs) if isinstance(cs, _Name) else None,
+            "bpc": int(bpc) if isinstance(bpc, (int, float)) else None,
+        })
+    return out
+
+
+def extract_page_images(data: bytes) -> list[dict[str, Any]]:
+    """Per-page image dicts of a real PDF — the rasterizer-side input for
+    the scanned/image-only tier (reference ``extractor.ts:12-37`` renders
+    pages to PNG via pdf.js canvas; here the page of a *scanned* PDF IS its
+    embedded image, so "rasterizing" = pulling that image's decoded bytes).
+
+    A thin wrapper over :func:`parse_real_pdf`, whose page interpreter
+    records the images each page paints (``Do`` operands of its content
+    streams, descending into drawn forms — never every XObject merely
+    reachable from a shared /Resources dict).  Returns one dict per page:
+    ``{"page_no", "width", "height", "images": [image dict, …]}`` in page
+    order, with the displayed page size of :func:`parse_real_pdf`.  Pages
+    that paint no image get an empty list.  Raises ``ValueError`` on
+    unparseable documents, same contract as :func:`parse_real_pdf`.
+    """
+    return [{"page_no": p["page_no"], "width": p["width"],
+             "height": p["height"], "images": p["images"]()}
+            for p in parse_real_pdf(data)["pages"]]
 
 
 def detect_pages_text(data: bytes) -> list[bool]:
@@ -1666,11 +1582,12 @@ def detect_pages_text(data: bytes) -> list[bool]:
     def scan(content: bytes, resources: Any, depth: int,
              seen: set[int]) -> bool:
         """True on the first non-blank show string, descending ONLY into
-        forms this stream actually draws via Do.  Counting every form
-        merely *reachable* from (often inherited, shared) resources would
-        flip needs_ocr False for a scanned page whose sibling uses the
-        form — the one direction the router cannot tolerate (text loss,
-        not just routing cost)."""
+        forms this stream actually draws via Do — the same drawn-only
+        discipline ``_run_page`` applies when it records a page's images.
+        Counting every form merely *reachable* from (often inherited,
+        shared) resources would flip needs_ocr False for a scanned page
+        whose sibling uses the form — the one direction the router cannot
+        tolerate (text loss, not just routing cost)."""
         pending: list = []
         for kind, val in _tokenize_content(content):
             if kind == "val":
@@ -1717,17 +1634,5 @@ def detect_pages_text(data: bytes) -> list[bool]:
             pending.clear()
         return False
 
-    out: list[bool] = []
-    for pd in _find_pages(doc):
-        contents = doc.resolve(pd.get("Contents"))
-        chunks: list[bytes] = []
-        if isinstance(contents, _Stream):
-            chunks.append(contents.decoded(doc))
-        elif isinstance(contents, list):
-            for c in contents:
-                cs = doc.resolve(c)
-                if isinstance(cs, _Stream):
-                    chunks.append(cs.decoded(doc))
-        out.append(scan(b"\n".join(chunks),
-                        doc.resolve(pd.get("Resources")), 0, set()))
-    return out
+    return [scan(_page_contents(doc, pd), doc.resolve(pd.get("Resources")),
+                 0, set()) for pd in _find_pages(doc)]

@@ -18,8 +18,9 @@ deterministic substitute with the *Spark-side plumbing kept fully real*:
 * ``build_scanned_pdf`` — a *genuine* PDF whose pages contain no text
   operators, only an embedded image XObject (FlateDecode-compressed
   raster painted by ``cm /Im0 Do``).  ``parse_real_pdf`` reports
-  ``has_text=False`` for every page (the F6 routing predicate), and
-  ``extract_page_images`` recovers the exact raster bytes — so the
+  ``has_text=False`` for every page (the F6 routing predicate) and
+  records the painted image in the page's ``images``, which recovers the
+  exact raster bytes (``extract_page_images`` lists them) — so the
   writer and the image-extraction path oracle each other the same way
   ``pdfwrite`` ⊣ ``pdfreal`` do for the text layer.
 """

@@ -154,7 +154,7 @@ def _cmap_subtable(sub: bytes) -> dict[int, int]:
             at = 16 + 12 * g
             start, end, start_gid = (_u32(sub, at), _u32(sub, at + 4),
                                      _u32(sub, at + 8))
-            if start > end or end - start > 0xFFFF or end > 0x10FFFF:
+            if start > end or end > 0x10FFFF:
                 raise SfntError("bad format-12 group")
             budget -= end - start + 1
             if budget < 0:

@@ -66,10 +66,14 @@ def deterministic_recognizer():
     real model adapter implements: ``image dict → [(text, x0, y0, x1,
     y1)]`` in top-origin image coords, raising ``ValueError`` on
     undecodable pixels (mapped to ``status='decode_error'``).  The image
-    dict is one entry of :func:`core.pdfreal.extract_page_images` —
-    ``data`` (decoded stream bytes) plus the XObject's declared ``width``
-    / ``height`` / ``colorspace`` / ``bpc``, everything needed to
-    interpret raw samples (a real OCR model needs exactly the same).
+    dict is one image a textless page paints, read by the page core from
+    the parsed page (``page["images"]`` of
+    :func:`core.pdfreal.parse_real_pdf`, which
+    :func:`core.pdfreal.extract_page_images` lists per page) — ``data``
+    (stream bytes, an image codec's input when ``filter`` names one) plus
+    ``decode`` / ``decode_parms`` and the XObject's declared ``width`` /
+    ``height`` / ``colorspace`` / ``bpc``, everything needed to interpret
+    raw samples (a real OCR model needs exactly the same).
 
     Dispatches on the pixel container:
 

@@ -321,27 +321,23 @@ FROM t
 """.replace("__WPP__", str(REAL_PDF_WORDS_PER_PAGE))
 
 
-def q_warc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """WARC source round-trip (S1 on raw archives): documents → real WARC
-    archives (half gzipped) written once to ``_build`` → streamed reader
-    (``sources/warc.warc_pages``: pyarrow.fs input streams, bounded-memory
-    incremental parse, HTTP envelope strip) → per-record byte content.
-    The oracle recomputes every record's exact body bytes from the source
-    text (md5 + length), so framing, de-chunking, and payload slicing are
-    value-checked — not just row counts."""
+def _warc_fixture_roundtrip(spark: SparkSession, sf_dir: str, cache: str,
+                            host: str, write_shard) -> DataFrame:
+    """Write the documents once as four WARC shards under
+    ``_build/<cache>_<sf>`` (record urls ``https://<host><doc_id % 4>
+    .example/doc/<doc_id>``; ``write_shard(records, odd_shard)`` frames one
+    shard, odd shards being the gzipped ``.warc.gz`` ones), stream them
+    back through ``sources/warc.warc_pages`` and select each record's
+    ``doc_id``, body length and body md5."""
     import os
 
-    from .sources.warc import warc_pages, write_warc
+    from .sources.warc import warc_pages
 
     sf_tag = os.path.basename(sf_dir.rstrip("/"))
-    # v-token in the cache name: a framing/layout change to write_warc or
-    # the shard scheme must invalidate old archives, or the gate would
-    # silently keep passing against stale fixtures
     out_dir = os.path.join(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "_build", f"warc_oracle_v1_{sf_tag}")
-    marker = os.path.join(out_dir, "_DONE")
-    if not os.path.exists(marker):
+        "_build", f"{cache}_{sf_tag}")
+    if not os.path.exists(os.path.join(out_dir, "_DONE")):
         # atomic publish: stage into a pid-suffixed dir, rename into place
         # — a concurrent runner either wins the rename or reads the
         # winner's complete fixture, never a half-written archive
@@ -354,7 +350,7 @@ def q_warc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         shards: dict[int, list] = {i: [] for i in range(4)}
         for r in rows:
             shards[r.doc_id % 4].append({
-                "url": f"https://warc{r.doc_id % 4}.example/doc/{r.doc_id}",
+                "url": f"https://{host}{r.doc_id % 4}.example/doc/{r.doc_id}",
                 "date": "2025-01-01T00:00:00Z",
                 "body": (r.text or "").encode("utf-8"),
             })
@@ -362,7 +358,7 @@ def q_warc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             gz = i % 2 == 1
             name = f"part{i}.warc.gz" if gz else f"part{i}.warc"
             with open(os.path.join(tmp_dir, name), "wb") as f:
-                f.write(write_warc(recs, compress=gz))
+                f.write(write_shard(recs, gz))
         with open(os.path.join(tmp_dir, "_DONE"), "w") as f:
             f.write("ok")
         try:
@@ -375,6 +371,24 @@ def q_warc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.length("html").cast("long").alias("n_bytes"),
         F.md5("html").alias("body_md5"),
     )
+
+
+def q_warc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """WARC source round-trip (S1 on raw archives): documents → real WARC
+    archives (half gzipped) written once to ``_build`` → streamed reader
+    (``sources/warc.warc_pages``: pyarrow.fs input streams, bounded-memory
+    incremental parse, HTTP envelope strip) → per-record byte content.
+    The oracle recomputes every record's exact body bytes from the source
+    text (md5 + length), so framing, de-chunking, and payload slicing are
+    value-checked — not just row counts."""
+    from .sources.warc import write_warc
+
+    # v-token in the cache name: a framing/layout change to write_warc or
+    # the shard scheme must invalidate old archives, or the gate would
+    # silently keep passing against stale fixtures
+    return _warc_fixture_roundtrip(
+        spark, sf_dir, "warc_oracle_v1", "warc",
+        lambda recs, gz: write_warc(recs, compress=gz))
 
 
 _SQL_WARC_ROUNDTRIP = """
@@ -393,46 +407,11 @@ def q_warc_cc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     variety, and (half the shards) one-gzip-member-PER-RECORD framing.
     A reader that fails to skip non-response records, de-chunk, gunzip,
     or read past the first gzip member hash-mismatches or loses rows."""
-    import os
+    from .sources.warc import write_cc_warc
 
-    from .sources.warc import warc_pages, write_cc_warc
-
-    sf_tag = os.path.basename(sf_dir.rstrip("/"))
-    out_dir = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "_build", f"warc_cc_oracle_v1_{sf_tag}")
-    marker = os.path.join(out_dir, "_DONE")
-    if not os.path.exists(marker):
-        import shutil
-
-        tmp_dir = f"{out_dir}.tmp.{os.getpid()}"
-        os.makedirs(tmp_dir, exist_ok=True)
-        rows = (_docs(spark, sf_dir).select("doc_id", "text")
-                .orderBy("doc_id").collect())
-        shards: dict[int, list] = {i: [] for i in range(4)}
-        for r in rows:
-            shards[r.doc_id % 4].append({
-                "url": f"https://cc{r.doc_id % 4}.example/doc/{r.doc_id}",
-                "date": "2025-01-01T00:00:00Z",
-                "body": (r.text or "").encode("utf-8"),
-            })
-        for i, recs in shards.items():
-            gz = i % 2 == 1  # per-record gzip members (the CC framing)
-            name = f"part{i}.warc.gz" if gz else f"part{i}.warc"
-            with open(os.path.join(tmp_dir, name), "wb") as f:
-                f.write(write_cc_warc(recs, per_record_gzip=gz))
-        with open(os.path.join(tmp_dir, "_DONE"), "w") as f:
-            f.write("ok")
-        try:
-            os.rename(tmp_dir, out_dir)
-        except OSError:  # another runner published first — use theirs
-            shutil.rmtree(tmp_dir, ignore_errors=True)
-    pages = warc_pages(spark, out_dir)
-    return pages.select(
-        F.element_at(F.split("url", "/"), -1).cast("long").alias("doc_id"),
-        F.length("html").cast("long").alias("n_bytes"),
-        F.md5("html").alias("body_md5"),
-    )
+    return _warc_fixture_roundtrip(
+        spark, sf_dir, "warc_cc_oracle_v1", "cc",
+        lambda recs, gz: write_cc_warc(recs, per_record_gzip=gz))
 
 
 def q_pipeline_train(spark, sf_dir):

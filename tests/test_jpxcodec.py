@@ -303,6 +303,29 @@ class TestErrors:
         with pytest.raises(JpxError):
             decode_jpx_gray(bytes(raw))
 
+    @pytest.mark.parametrize("marker", [b"\xffQ", b"\xff\x52",
+                                        b"\xff\x5c", b"\xff\x5d"],
+                             ids=["SIZ", "COD", "QCD", "QCC"])
+    def test_main_header_marker_after_sot_rejected(self, marker):
+        # SIZ/COD/QCD/QCC between tile-parts (illegal per T.800 A.3) must
+        # not silently replace the parameters every tile decodes with
+        img = _rng(43).integers(0, 256, (16, 16), dtype=np.uint8)
+        raw = bytearray(encode_jp2_gray(img, levels=1, tile=8,
+                                        wrap_jp2=False))
+        if marker == b"\xff\x5d":   # QCC: component 0 + the QCD payload
+            at = raw.index(b"\xff\x5c")
+            (ln,) = struct.unpack_from(">H", raw, at + 2)
+            seg = (marker + struct.pack(">H", ln + 1) + b"\x00"
+                   + raw[at + 4:at + 2 + ln])
+        else:
+            at = raw.index(marker)
+            (ln,) = struct.unpack_from(">H", raw, at + 2)
+            seg = raw[at:at + 2 + ln]
+        second_sot = raw.index(b"\xff\x90", raw.index(b"\xff\x90") + 2)
+        raw[second_sot:second_sot] = seg
+        with pytest.raises(JpxError, match="after SOT"):
+            decode_jpx_gray(bytes(raw))
+
     def test_signed_component_unsupported(self):
         raw = self._raw()
         siz = raw.index(b"\xffQ")

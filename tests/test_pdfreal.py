@@ -972,6 +972,92 @@ class TestFormXObjects:
         assert pages[0]["images"] == []
 
 
+class TestSingleParse:
+    """A real PDF is parsed once on the extraction path: the text-layer
+    interpreter records the images each page paints, and image streams are
+    decoded only for pages that reach the recognizer."""
+
+    @staticmethod
+    def _count_docs(monkeypatch) -> list[int]:
+        from pdf_ocr_engine_spark.core import pdfreal
+
+        built = [0]
+        init = pdfreal._Doc.__init__
+
+        def counting_init(self, data):
+            built[0] += 1
+            init(self, data)
+
+        monkeypatch.setattr(pdfreal._Doc, "__init__", counting_init)
+        return built
+
+    def test_scanned_extract_builds_one_doc(self, monkeypatch):
+        from pdf_ocr_engine_spark.operators.ocr import deterministic_recognizer
+        from pdf_ocr_engine_spark.sources.fixtures import (
+            text_to_scanned_pdf_payload,
+        )
+
+        pdf = text_to_scanned_pdf_payload("scanned words here")
+        built = self._count_docs(monkeypatch)
+        r = extract_document(pdf, "eng",
+                             recognizer=deterministic_recognizer())
+        assert (r["status"], r["text"]) == ("ok", "scanned words here")
+        assert built[0] == 1
+
+    def test_overlay_assemble_builds_two_docs(self, monkeypatch):
+        # one parse for the page core, one inside overlay_text_layer
+        from pdf_ocr_engine_spark.core.extract_doc import DEFAULT_OPTIONS
+        from pdf_ocr_engine_spark.operators.assemble import _assemble_one
+        from pdf_ocr_engine_spark.operators.ocr import deterministic_recognizer
+        from pdf_ocr_engine_spark.sources.fixtures import (
+            text_to_scanned_pdf_payload,
+        )
+
+        pdf = text_to_scanned_pdf_payload("scanned words here")
+        built = self._count_docs(monkeypatch)
+        r = _assemble_one(pdf, "eng", DEFAULT_OPTIONS, preserve_images=True,
+                          recognizer=deterministic_recognizer())
+        assert r["status"] == "ok" and r["n_words"] == 3
+        assert built[0] == 2
+
+    def test_text_page_decodes_no_image(self, monkeypatch):
+        # a born-digital page that also paints an image never reaches the
+        # recognizer, so its image stream must stay undecoded
+        from pdf_ocr_engine_spark.core import pdfreal
+        from pdf_ocr_engine_spark.core.pdfscan import encode_page_raster
+
+        img = zlib.compress(encode_page_raster(
+            612.0, 792.0, [("logo", 1.0, 1.0, 40.0, 13.0)]))
+        content = (b"q 100 0 0 50 0 700 cm /Im0 Do Q "
+                   b"BT /F1 12 Tf 72 600 Td (born digital) Tj ET")
+        objs = [
+            b"<< /Type /Catalog /Pages 2 0 R >>",
+            (b"<< /Type /Pages /Kids [4 0 R] /Count 1 "
+             b"/MediaBox [0 0 612 792] >>"),
+            (b"<< /Type /XObject /Subtype /Image /Width 612 /Height 792 "
+             b"/Filter /FlateDecode /Length " + str(len(img)).encode()
+             + b" >>\nstream\n" + img + b"\nendstream"),
+            (b"<< /Type /Page /Parent 2 0 R /Contents 5 0 R /Resources "
+             b"<< /XObject << /Im0 3 0 R >> /Font << /F1 6 0 R >> >> >>"),
+            (b"<< /Length " + str(len(content)).encode() + b" >>\nstream\n"
+             + content + b"\nendstream"),
+            b"<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica >>",
+        ]
+        pdf = _assemble(objs)
+        decoded = []
+        monkeypatch.setattr(pdfreal._Stream, "decoded_image",
+                            lambda s, doc: decoded.append(s) or (b"", None,
+                                                                 None))
+        calls = []
+        r = extract_document(pdf, "eng",
+                             recognizer=lambda img: calls.append(img) or [])
+        assert (r["status"], r["text"]) == ("ok", "born digital")
+        assert calls == [] and decoded == []
+        # the image was recorded all the same, and decodes when read
+        assert len(parse_real_pdf(pdf)["pages"][0]["images"]()) == 1
+        assert len(decoded) == 1
+
+
 class TestPageRotation:
     """/Rotate is routine on scans; word boxes must land in the DISPLAYED
     page's top-origin coords (pdf.js folds rotation into the viewport)."""

@@ -70,6 +70,22 @@ class TestSfntTables:
             + struct.pack(">III", 0x61, 0x63, 9)
         assert sfnt._cmap_subtable(sub) == {0x61: 9, 0x62: 10, 0x63: 11}
 
+    def test_cmap_format12_group_wider_than_16_bits(self):
+        # one contiguous group of 70,000 codes (a full-repertoire font) is
+        # within the per-subtable code budget and must map whole
+        sub = struct.pack(">HHIII", 12, 0, 16 + 12, 0, 1) \
+            + struct.pack(">III", 0x4E00, 0x4E00 + 69_999, 5)
+        out = sfnt._cmap_subtable(sub)
+        assert len(out) == 70_000
+        assert out[0x4E00] == 5 and out[0x4E00 + 69_999] == 70_004
+
+    def test_cmap_format12_group_over_budget_raises(self):
+        n = sfnt._MAX_CMAP_CODES + 1
+        sub = struct.pack(">HHIII", 12, 0, 16 + 12, 0, 1) \
+            + struct.pack(">III", 0x10000, 0x10000 + n - 1, 1)
+        with pytest.raises(sfnt.SfntError, match="budget"):
+            sfnt._cmap_subtable(sub)
+
     def test_garbage_raises_cleanly(self):
         for bad in (b"", b"OTTO" + b"\x00" * 64, b"\x00\x01\x00\x00",
                     b"\x00\x01\x00\x00" + b"\xff" * 200):
