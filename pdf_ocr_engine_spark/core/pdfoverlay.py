@@ -13,6 +13,9 @@ to the previous one via ``/Prev``.  Byte-level preservation is therefore
 *structural*: every original object survives verbatim at its original
 offset.
 
+The update is written from the caller's ``parse_real_pdf`` of the
+original, so overlay assembly parses each document once.
+
 Limits (honest, checked): encrypted originals are refused (new streams
 would need encrypting with the document key — not wired), and pages
 reachable only as inline dicts (no object number) cannot be redefined.
@@ -21,14 +24,7 @@ Both raise ``ValueError`` → ``status='overlay_unsupported'`` upstream.
 
 from __future__ import annotations
 
-from .pdfreal import (
-    _Doc,
-    _find_pages,
-    _Name,
-    _Ref,
-    _Stream,
-    effective_page_box,
-)
+from .pdfreal import _Doc, _Name, _Ref, _Stream
 from .pdfwrite import _fmt, _page_content
 
 __all__ = ["overlay_text_layer"]
@@ -73,20 +69,22 @@ def _ser(v, doc: _Doc) -> str:
     raise ValueError(f"unserializable PDF value: {type(v).__name__}")
 
 
-def overlay_text_layer(original: bytes,
+def overlay_text_layer(original: bytes, parsed: dict,
                        page_spans: list[list[tuple]]) -> bytes:
     """Append an invisible text layer to ``original`` via incremental
-    update.  ``page_spans[i]`` is the span list for page i (reading order,
-    image coords — what the layout kernel emits); an empty list leaves that
-    page untouched (the reference's "page already searchable" left-join,
+    update, written from ``parsed = parse_real_pdf(original)`` (its
+    document, page dicts and displayed boxes; no second parse).
+    ``page_spans[i]`` is the span list for page i (reading order, image
+    coords — what the layout kernel emits); an empty list leaves that page
+    untouched (the reference's "page already searchable" left-join,
     ``builder.ts:146-147``).  Returns the full new document bytes (original
     prefix preserved verbatim).  Raises ``ValueError`` on encrypted
     originals or non-redefinable pages."""
-    doc = _Doc(original)
+    doc: _Doc = parsed["doc"]
     if doc.decryptor is not None:
         raise ValueError(
             "preserveImages overlay on encrypted originals not supported")
-    pages = _find_pages(doc)
+    pages = parsed["pages"]
     if not pages:
         raise ValueError("original has no pages")
     if len(page_spans) != len(pages):
@@ -105,18 +103,19 @@ def overlay_text_layer(original: bytes,
                      b"/BaseFont /Helvetica >>"))
 
     touched = 0
-    for page, spans in zip(pages, page_spans):
+    for parsed_page, spans in zip(pages, page_spans):
         if not spans:
             continue
+        page = parsed_page["dict"]
         if page.get("__num__") is None:
             raise ValueError("page has no object number (inline page dict) "
                              "— cannot redefine via incremental update")
         # spans arrive in the DISPLAYED frame (parse_real_pdf's viewport:
         # CropBox-relative, rotation applied) — the overlay must invert
         # exactly that viewport or the invisible words drift off the
-        # original glyphs on cropped/rotated pages.  effective_page_box is
-        # shared with the parser so the two sides cannot diverge.
-        bx0, by0, bw, bh, rot = effective_page_box(doc, page)
+        # original glyphs on cropped/rotated pages.  The box is the one
+        # the parser laid the words out in, so the two sides cannot diverge.
+        bx0, by0, bw, bh, rot = parsed_page["box"]
         dw, dh = (bh, bw) if rot in (90, 270) else (bw, bh)
         content = _page_content(spans, dw, dh, None, None,
                                 font_res=FONT_RES)
@@ -181,16 +180,8 @@ def overlay_text_layer(original: bytes,
             prev_xref = int(tail[sx + 9:].split(b"%%EOF")[0].strip())
         except ValueError:
             prev_xref = 0
-    # root ref for the new trailer
-    root_num = None
-    for num in doc.all_object_numbers():
-        try:
-            obj = doc.get(num)
-        except ValueError:
-            continue
-        if isinstance(obj, dict) and str(obj.get("Type", "")) == "Catalog":
-            root_num = num
-            break
+    # root ref for the new trailer (looked up by the parse's page walk)
+    root_num = doc.catalog_num
     if root_num is None:
         raise ValueError("original has no catalog")
 

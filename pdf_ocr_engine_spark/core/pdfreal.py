@@ -513,6 +513,20 @@ class _Doc:
                     if onum not in self._cache:
                         self._cache[onum] = val
 
+    @functools.cached_property
+    def catalog_num(self) -> int | None:
+        """Object number of the first ``/Type /Catalog`` in object order
+        (None if there is none), scanned for once per document."""
+        for num in self.all_object_numbers():
+            try:
+                obj = self.get(num)
+            except ValueError:
+                continue
+            if isinstance(obj, dict) and \
+                    str(obj.get("Type", "")) == "Catalog":
+                return num
+        return None
+
     def all_object_numbers(self) -> list[int]:
         """Every reachable object number — top-level definitions plus the
         contents of compressed object streams — in ascending order."""
@@ -640,15 +654,8 @@ _INHERITABLE = ("Resources", "MediaBox", "Rotate", "CropBox")
 
 def _find_pages(doc: _Doc) -> list[dict]:
     """Ordered page dicts with inherited attributes folded in."""
-    root_pages = None
-    for num in doc.all_object_numbers():
-        try:
-            obj = doc.get(num)
-        except ValueError:
-            continue
-        if isinstance(obj, dict) and str(obj.get("Type", "")) == "Catalog":
-            root_pages = obj.get("Pages")
-            break
+    root = doc.catalog_num
+    root_pages = doc.get(root).get("Pages") if root is not None else None
     pages: list[dict] = []
 
     def walk(node_ref: Any, inherited: dict, depth: int,
@@ -1108,7 +1115,6 @@ class _WordSink:
     def glyph(self, ch: str, x: float, y: float, x_next: float,
               size: float) -> None:
         if ch.strip() == "":
-            self.any_text = self.any_text or False
             self.flush()
             return
         self.any_text = True
@@ -1405,6 +1411,11 @@ def parse_real_pdf(data: bytes) -> dict[str, Any]:
     XObjects the page paints.  Image streams are decoded only when it is
     called, so a document whose pages all have text decodes no image.
 
+    For the preserveImages overlay (``core/pdfoverlay``), which writes
+    from this parse, the result also carries ``doc`` (the :class:`_Doc`)
+    and each page its ``dict`` (inherited attributes folded in, object
+    number under ``__num__``) and ``box`` (its :func:`effective_page_box`).
+
     Raises ``ValueError`` on documents whose object graph or content
     streams can't be parsed (mapped to ``status='decode_error'`` upstream).
     """
@@ -1422,8 +1433,8 @@ def parse_real_pdf(data: bytes) -> dict[str, Any]:
     counters = {"mediabox_fallback": 0, "cropbox_fallback": 0,
                 "encoding_fallback": 0}
     for i, pd in enumerate(page_dicts):
-        box_x0, box_y0, width, height, rot = effective_page_box(
-            doc, pd, counters)
+        box = effective_page_box(doc, pd, counters)
+        box_x0, box_y0, width, height, rot = box
 
         # /Rotate viewport: scanned pages routinely carry 90/180/270 —
         # pdf.js folds it into the viewport transform; here the rotation
@@ -1475,9 +1486,10 @@ def parse_real_pdf(data: bytes) -> dict[str, Any]:
                       "has_text": sink.any_text, "texts": texts,
                       "coords": coords,
                       "images": functools.partial(_image_dicts, doc,
-                                                  sink.images)})
+                                                  sink.images),
+                      "dict": pd, "box": box})
     return {"page_count": len(pages), "pages": pages, "flavor": "real",
-            "counters": counters}
+            "counters": counters, "doc": doc}
 
 
 def _parm_value(doc: _Doc, v: Any) -> Any:

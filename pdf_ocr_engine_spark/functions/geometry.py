@@ -5,8 +5,8 @@ The reference draws each OCR word back onto the PDF page
 (SURVEY.md §2.7) expressed as pure Catalyst column arithmetic over exploded
 span rows — whole-stage codegen, no Python:
 
-* C1 scale factors: ``scaleX = pdf_w/img_w``, ``scaleY = pdf_h/img_h``
-  (``builder.ts:155-156``);
+* C1 scale factors ``scaleX = pdf_w/img_w``, ``scaleY = pdf_h/img_h``
+  (``builder.ts:155-156``) are the ``sx``/``sy`` column arguments;
 * C2 y-axis flip + baseline offset: image coords are top-origin, PDF
   bottom-origin, and ``drawText`` anchors at the baseline ≈ 20% above the
   bbox bottom: ``y = pdf_h - y1*scaleY + 0.2*wordH`` (``builder.ts:165-168``;
@@ -17,9 +17,7 @@ span rows — whole-stage codegen, no Python:
   (builder.ts:193) — clamp strictly after the gate, the reference order.
   The 12pt text width uses the real Helvetica AFM advance table
   (:func:`helvetica_width_at_12`, metrics in ``functions/afm.py``),
-  matching ``font.widthOfTextAtSize`` (builder.ts:171);
-  :func:`approx_text_width_at_12` remains as the round-1 flat-advance
-  stand-in for callers that want a font-free metric.
+  matching ``font.widthOfTextAtSize`` (builder.ts:171).
 """
 
 from __future__ import annotations
@@ -30,31 +28,10 @@ from pyspark.sql import functions as F
 from .afm import FALLBACK_UNITS, HELVETICA_WIDTHS
 
 
-def scale_x(pdf_w: Column, img_w: Column) -> Column:
-    """C1: horizontal image→PDF scale (``builder.ts:155``)."""
-    return pdf_w / img_w
-
-
-def scale_y(pdf_h: Column, img_h: Column) -> Column:
-    """C1: vertical image→PDF scale (``builder.ts:156``)."""
-    return pdf_h / img_h
-
-
-def pdf_x(x0: Column, sx: Column) -> Column:
-    """PDF x of a span (``builder.ts:164``)."""
-    return x0 * sx
-
-
 def pdf_y(y0: Column, y1: Column, sy: Column, pdf_h: Column) -> Column:
     """C2: y-flip + 20% baseline offset (``builder.ts:165-168``)."""
     word_h = (y1 - y0) * sy
     return pdf_h - (y1 * sy) + word_h * 0.2
-
-
-def approx_text_width_at_12(raw: Column) -> Column:
-    """Round-1 stand-in font metric: flat 0.6 em advance at 12 pt.  Kept for
-    font-free callers; the extraction path uses the real AFM metric below."""
-    return F.length(raw) * (0.6 * 12.0)
 
 
 # 12-pt advance lookup, one literal per Latin-1 code point (see afm.py).
@@ -108,25 +85,3 @@ def drawable(font_size: Column, raw: Column) -> Column:
     """F9: draw iff the *unclamped* fitted size ``> 1`` and the raw text is
     non-blank (``builder.ts:189``)."""
     return font_size.isNotNull() & (font_size > 1.0) & (F.trim(raw) != "")
-
-
-def positioned_spans(spans_df, pdf_w=612.0, pdf_h=792.0,
-                     img_w: Column | None = None,
-                     img_h: Column | None = None):
-    """Convenience: add (x, y, font_size, drawable) to an exploded span
-    DataFrame with columns ``raw, x0, y0, x1, y1`` (+ optional image dims).
-    Defaults assume image coords already in PDF points (scale 1)."""
-    sx = scale_x(F.lit(float(pdf_w)), img_w) if img_w is not None else F.lit(1.0)
-    sy = scale_y(F.lit(float(pdf_h)), img_h) if img_h is not None else F.lit(1.0)
-    tw = helvetica_width_at_12(F.col("raw"))
-    fs = font_size_fit(F.col("x0"), F.col("x1"), F.col("y0"), F.col("y1"),
-                       sx, sy, tw)
-    can_draw = drawable(fs, F.col("raw"))
-    return (spans_df
-            .withColumn("x", pdf_x(F.col("x0"), sx))
-            .withColumn("y", pdf_y(F.col("y0"), F.col("y1"), sy,
-                                   F.lit(float(pdf_h))))
-            .withColumn("font_size", fs)
-            .withColumn("drawable", can_draw)
-            .withColumn("render_size",
-                        F.when(can_draw, render_font_size(fs))))

@@ -1,18 +1,20 @@
 """Similarity search over embedding columns (``array<float>``).
 
-Two tiers:
+Every tier takes its query vector as a (single-row) DataFrame, joined
+in-plan by broadcast, so a lookup is one lazy Spark job with no
+driver-side ``.first()``:
 
-* :func:`cosine_topk` — brute-force exact top-k, pure JVM column expressions
-  (``zip_with`` dot product + ``aggregate`` fold — whole-stage codegen, no
-  Python).  The baseline and the verifier for the approximate tier.
-  Scale shape: narrow map + a single ``LIMIT k`` ordering (Spark executes
-  it as per-partition top-k + driver merge — TakeOrderedAndProject — not a
-  global sort).
-* :func:`lsh_bucket_ann` — random-hyperplane LSH: 16-bit sign signature per
-  vector (fixed seed), candidates = query's bucket ∪ 1-bit-flip probes,
-  exact cosine re-rank inside the candidate set.  At 100 TB the bucketed
-  table is written bucketed-by-signature so a probe reads a few buckets
-  instead of the corpus.
+* :func:`cosine_topk_df` — brute-force exact top-k, pure JVM column
+  expressions (``zip_with`` dot product + ``aggregate`` fold — whole-stage
+  codegen, no Python).  The baseline and the verifier for the approximate
+  tiers.  Scale shape: narrow map + a single ``LIMIT k`` ordering (Spark
+  executes it as per-partition top-k + driver merge —
+  TakeOrderedAndProject — not a global sort).
+* :func:`lsh_bucket_ann_df` — random-hyperplane LSH: sign signature per
+  vector (fixed seed), candidates = the Hamming ball around the query's
+  signature, exact cosine re-rank inside the candidate set.
+* :func:`ivf_topk_df` — IVF: k-means inverted lists
+  (:func:`ivf_assign`), exact re-rank inside the ``nprobe`` nearest lists.
 """
 
 from __future__ import annotations
@@ -35,18 +37,6 @@ def cosine_sim(a: Column, b: Column) -> Column:
     da = F.transform(a, lambda x: x.cast("double"))
     db = F.transform(b, lambda x: x.cast("double"))
     return _dot(da, db) / (_norm2(da) * _norm2(db))
-
-
-def cosine_topk(df: DataFrame, query_vec: list[float], k: int = 10,
-                vec_col: str = "embedding", id_col: str = "vec_id",
-                ) -> DataFrame:
-    """Exact brute-force top-k by cosine; deterministic tie-break on id."""
-    q = F.array(*[F.lit(float(v)) for v in query_vec])
-    scored = df.select(
-        F.col(id_col),
-        cosine_sim(F.col(vec_col), q).alias("cosine"),
-    )
-    return scored.orderBy(F.desc("cosine"), F.asc(id_col)).limit(k)
 
 
 def cosine_topk_df(df: DataFrame, query_df: DataFrame, k: int = 10,
@@ -99,45 +89,6 @@ def rp_signature_udf(dim: int, n_bits: int = 16, seed: int = 42):
     return F.pandas_udf(fn, LongType())
 
 
-def lsh_bucket_ann(df: DataFrame, query_vec: list[float], k: int = 10,
-                   vec_col: str = "embedding", id_col: str = "vec_id",
-                   n_bits: int = 16, seed: int = 42,
-                   multiprobe_bits: int = 1) -> DataFrame:
-    """Approximate top-k: restrict the exact re-rank to vectors whose
-    signature is within Hamming distance ``multiprobe_bits`` of the query's
-    (multiprobe: the query bucket plus every ≤-k-bit-flip neighbour —
-    2^n_bits buckets total, so keep n_bits*multiprobe combinatorics sane)."""
-    import itertools
-
-    import numpy as np
-
-    dim = len(query_vec)
-    planes = _hyperplanes(dim, n_bits, seed)
-    qv = np.asarray(query_vec, dtype=np.float64)
-    qsig = 0
-    proj = planes @ qv
-    for b in range(n_bits):
-        if proj[b] > 0:
-            qsig |= 1 << b
-    probes = {qsig}
-    for n_flips in range(1, multiprobe_bits + 1):
-        for flips in itertools.combinations(range(n_bits), n_flips):
-            mask = 0
-            for b in flips:
-                mask |= 1 << b
-            probes.add(qsig ^ mask)
-
-    sig_udf = rp_signature_udf(dim, n_bits, seed)
-    signed = df.withColumn("sig", sig_udf(F.col(vec_col)))
-    # the sig column stores the UNSIGNED signature wrapped into int64
-    # (bit 63 in the sign) — probe literals must wrap the same way or
-    # bit-63 buckets silently never match
-    wrapped = [int(p) - (1 << 64) if p >= (1 << 63) else int(p)
-               for p in probes]
-    cand = signed.where(F.col("sig").isin(*wrapped))
-    return cosine_topk(cand, query_vec, k, vec_col, id_col)
-
-
 def lsh_bucket_ann_df(df: DataFrame, query_df: DataFrame, k: int = 10,
                       vec_col: str = "embedding", id_col: str = "vec_id",
                       n_bits: int = 16, seed: int = 42, dim: int = 64,
@@ -147,12 +98,11 @@ def lsh_bucket_ann_df(df: DataFrame, query_df: DataFrame, k: int = 10,
     multiprobe becomes a ``bit_count(sig ^ qsig) <= max_hamming`` predicate
     on the broadcast-joined row — one Spark job, no driver ``.first()``.
 
-    Trade-off vs :func:`lsh_bucket_ann`: the literal-probe form can prune a
-    signature-bucketed table statically (the right call when the table
-    layout exists); this form scans signatures but keeps the whole lookup
-    lazy/composable.  Candidates = Hamming ball of radius ``max_hamming``
-    around the query signature (identical to multiprobe with that flip
-    budget), exact cosine re-rank inside."""
+    The predicate scans every signature (it cannot prune a
+    signature-bucketed table statically, which literal probe values
+    could) but keeps the whole lookup lazy/composable.  Candidates =
+    Hamming ball of radius ``max_hamming`` around the query signature
+    (multiprobe with that flip budget), exact cosine re-rank inside."""
     sig_udf = rp_signature_udf(dim, n_bits, seed)
     q = F.broadcast(
         query_df.select(F.col(vec_col).alias("__q_vec"))
@@ -199,24 +149,6 @@ def ivf_assign(df: DataFrame, n_lists: int = 16, seed: int = 42,
     ]
     assigned = model.transform(dfv).drop("__vec")
     return centroids, assigned
-
-
-def ivf_topk(assigned: DataFrame, centroids: list[list[float]],
-             query_vec: list[float], k: int = 10, nprobe: int = 4,
-             vec_col: str = "embedding", id_col: str = "vec_id",
-             ) -> DataFrame:
-    """IVF probe: rank centroids by distance to the query (tiny driver-side
-    math over ``n_lists`` rows — index metadata, not data), restrict the
-    exact cosine re-rank to the ``nprobe`` nearest inverted lists.  With a
-    ``list_id``-bucketed table the `isin` filter prunes to those buckets."""
-    import numpy as np
-
-    q = np.asarray(query_vec, dtype=np.float64)
-    cents = np.asarray(centroids, dtype=np.float64)
-    order = np.argsort(((cents - q) ** 2).sum(axis=1))
-    probes = [int(i) for i in order[:nprobe]]
-    cand = assigned.where(F.col("list_id").isin(probes))
-    return cosine_topk(cand, query_vec, k, vec_col, id_col)
 
 
 def ivf_topk_df(assigned: DataFrame, centroids: list[list[float]],

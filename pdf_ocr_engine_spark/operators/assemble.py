@@ -2,15 +2,19 @@
 Arrow-batched transformation.
 
 ``assemble_searchable(df)`` maps the pages table ``(url, html, lang)`` to
-``(url, status, n_pages, n_words, pdf)`` where ``pdf`` is a real PDF with an
-invisible positioned text layer (``core/pdfwrite.py``), the analog of the
-reference's ``buildSearchablePdf`` (``src/lib/ocr/builder.ts:124-204``)
-driven per document instead of per request.  Same plan shape as extraction:
-one ``mapInArrow``, no shuffle, per-task init point, error-as-value
-statuses.  The per-document work is the extractor's own PDF page core
+``(url, status, error, n_pages, n_words, pdf, partition_id, wall_us)``
+where ``pdf`` is a real PDF with an invisible positioned text layer
+(``core/pdfwrite.py``), the analog of the reference's
+``buildSearchablePdf`` (``src/lib/ocr/builder.ts:124-204``) driven per
+document instead of per request.  It runs through the
+extractor's own document operator (``operators.extract._document_operator``:
+one ``mapInArrow``, no shuffle, per-task init point), so its rows carry the
+same ``partition_id`` / ``wall_us`` lineage as extraction.  The
+per-document work is the extractor's own PDF page core
 (``core.extract_doc._pdf_pages``: decode, guards, deadline, recognizer), so
 both operators report the same status and error for the same document;
-this module adds only spans and the writer.
+this module adds only spans and the writer.  The preserveImages overlay
+writes from that same parse (``core/pdfoverlay``): one parse per PDF.
 
 At 100 TB the output PDFs dominate storage; write them to their own table
 partitioned like the input so the text table stays scan-friendly.
@@ -22,6 +26,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql.types import (
     BinaryType,
     IntegerType,
+    LongType,
     StringType,
     StructField,
     StructType,
@@ -36,6 +41,7 @@ from ..core.extract_doc import (
 )
 from ..core.layout_fast import page_layout_fast
 from ..core.pdfwrite import build_searchable_pdf
+from .extract import _document_operator
 
 ASSEMBLED_SCHEMA = StructType([
     StructField("url", StringType(), False),
@@ -44,7 +50,16 @@ ASSEMBLED_SCHEMA = StructType([
     StructField("n_pages", IntegerType(), False),
     StructField("n_words", IntegerType(), False),
     StructField("pdf", BinaryType(), True),
+    # lineage, same meaning as extraction's columns
+    StructField("partition_id", IntegerType(), False),
+    StructField("wall_us", LongType(), False),
 ])
+
+
+def _row(status: str, error: str | None, n_pages: int = 0,
+         n_words: int = 0, pdf: bytes | None = None) -> dict:
+    return {"status": status, "error": error, "n_pages": n_pages,
+            "n_words": n_words, "pdf": pdf}
 
 
 def _assemble_one(payload: bytes | None, lang: str | None,
@@ -60,8 +75,7 @@ def _assemble_one(payload: bytes | None, lang: str | None,
     if sniff["status"] != "ok" or sniff["kind"] != "pdf":
         status = sniff["status"] if sniff["status"] != "ok" else "unsupported"
         err = sniff["error"] or "searchable assembly needs a PDF payload"
-        return {"status": status, "error": err,
-                "n_pages": 0, "n_words": 0, "pdf": None}
+        return _row(status, err)
     payload = bytes(payload)
     try:
         # only the overlay OCRs: a fresh PDF is written from the decoded
@@ -69,10 +83,9 @@ def _assemble_one(payload: bytes | None, lang: str | None,
         rec = recognizer if preserve_images else None
         doc, pages = _pdf_pages(payload, opts, rec)
         if preserve_images and doc.get("flavor") != "real":
-            return {"status": "unsupported",
-                    "error": "preserveImages needs a genuine PDF original "
-                             "(word-box containers carry no original pages)",
-                    "n_pages": 0, "n_words": 0, "pdf": None}
+            return _row("unsupported",
+                        "preserveImages needs a genuine PDF original "
+                        "(word-box containers carry no original pages)")
         out_pages = []
         n_words = 0
         for p, texts, coords in pages:
@@ -85,24 +98,19 @@ def _assemble_one(payload: bytes | None, lang: str | None,
             out_pages.append({"width": p["width"], "height": p["height"],
                               "spans": spans})
         if not preserve_images:
-            return {"status": "ok", "error": None,
-                    "n_pages": len(out_pages), "n_words": n_words,
-                    "pdf": build_searchable_pdf(out_pages)}
+            return _row("ok", None, len(out_pages), n_words,
+                        build_searchable_pdf(out_pages))
         from ..core.pdfoverlay import overlay_text_layer
         try:
-            pdf = overlay_text_layer(payload,
+            pdf = overlay_text_layer(payload, doc,
                                      [p["spans"] for p in out_pages])
         except ValueError as exc:
-            return {"status": "overlay_unsupported", "error": str(exc),
-                    "n_pages": len(out_pages), "n_words": 0, "pdf": None}
-        return {"status": "ok", "error": None, "n_pages": len(out_pages),
-                "n_words": n_words, "pdf": pdf}
+            return _row("overlay_unsupported", str(exc), len(out_pages))
+        return _row("ok", None, len(out_pages), n_words, pdf)
     except PageCoreFailure as fail:
-        return {**fail.row, "n_words": 0, "pdf": None}
+        return _row(**fail.row)
     except Exception as exc:  # noqa: BLE001 - per-doc error isolation
-        return {"status": "decode_error",
-                "error": f"{type(exc).__name__}: {exc}",
-                "n_pages": 0, "n_words": 0, "pdf": None}
+        return _row("decode_error", f"{type(exc).__name__}: {exc}")
 
 
 def assemble_searchable(df: DataFrame,
@@ -115,27 +123,10 @@ def assemble_searchable(df: DataFrame,
     initialized once per task (same contract as ``extract_pages``)."""
     opts = options or DEFAULT_OPTIONS
 
-    def run(batches):
-        import pyarrow as pa
-
+    def init():
         # per-task init point: the recognizer (model) builds once here
         recognizer = recognizer_factory() if recognizer_factory else None
-        for b in batches:
-            n = b.num_rows
-            if n == 0:
-                continue
-            langs = b.column("lang").to_pylist() if "lang" in b.schema.names \
-                else [None] * n
-            rows = [_assemble_one(p, lg, opts, preserve_images, recognizer)
-                    for p, lg in zip(b.column("html").to_pylist(), langs)]
-            yield pa.record_batch([
-                b.column("url"),
-                pa.array([r["status"] for r in rows], pa.string()),
-                pa.array([r["error"] for r in rows], pa.string()),
-                pa.array([r["n_pages"] for r in rows], pa.int32()),
-                pa.array([r["n_words"] for r in rows], pa.int32()),
-                pa.array([r["pdf"] for r in rows], pa.binary()),
-            ], names=[f.name for f in ASSEMBLED_SCHEMA.fields])
+        return lambda payload, lang: _assemble_one(
+            payload, lang, opts, preserve_images, recognizer)
 
-    wanted = [c for c in ("url", "html", "lang") if c in df.columns]
-    return df.select(*wanted).mapInArrow(run, ASSEMBLED_SCHEMA)
+    return _document_operator(df, ASSEMBLED_SCHEMA, init)

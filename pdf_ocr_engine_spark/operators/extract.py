@@ -7,6 +7,12 @@ is amortized over all Arrow batches — the Spark analog of the reference's
 singleton OCR worker reused across pages (``src/lib/ocr/index.ts:99-103``,
 the "64x faster" design note in its README).
 
+That ``mapInArrow`` body is the one document operator of the package
+(:func:`_document_operator`): searchable assembly
+(``operators/assemble.py``) runs through it too, supplying only its
+per-document function and output schema, so both stages share the task
+init point, the batch loop and the lineage columns.
+
 Scale notes (100 TB / 1000-executor design):
 * This is a **narrow** transformation — zero shuffle.  Parallelism is the
   input partitioning (see ``plans.pipeline.salted_repartition`` for skew).
@@ -91,6 +97,63 @@ def _load_hyphen_asset(opts: ExtractOptions, audit_path: str | None = None):
     return load_asset_words(opts.hyphen_asset, audit_path)
 
 
+def _document_operator(df: DataFrame, schema: StructType,
+                       init) -> DataFrame:
+    """One ``schema`` row per ``html`` payload of ``df``, in one
+    ``mapInArrow`` (iterator form) — the body of :func:`extract_pages` and
+    ``operators.assemble.assemble_searchable``.
+
+    ``init`` is a zero-argument factory called ONCE per task (the
+    reference's singleton worker: assets, recognizer models load there)
+    that returns the per-document callable ``(payload, lang) → dict``.
+    Fields are filled by name: ``url`` / ``warc_ts`` / ``lang`` pass
+    through as the input Arrow arrays (nulls when absent), ``partition_id``
+    and ``wall_us`` are the task's partition and the callable's per-document
+    wall clock, and every other field is that key of the callable's dict,
+    typed from the Spark field."""
+    names = schema.fieldNames()
+    types = [to_arrow_type(f.dataType) for f in schema.fields]
+    passthrough = ("url", "warc_ts", "lang")
+
+    def run(batches):
+        import pyarrow as pa
+
+        ctx = TaskContext.get()
+        pid = ctx.partitionId() if ctx is not None else -1
+        one = init()
+        for b in batches:
+            n = b.num_rows
+            if n == 0:
+                continue
+            have = b.schema.names
+            langs = b.column("lang").to_pylist() if "lang" in have \
+                else [None] * n
+            rows: list[dict] = []
+            walls: list[int] = []
+            for payload, lang in zip(b.column("html").to_pylist(), langs):
+                t0 = time.perf_counter_ns()
+                rows.append(one(payload, lang))
+                walls.append((time.perf_counter_ns() - t0) // 1000)
+            arrays = []
+            for name, typ in zip(names, types):
+                if name in passthrough:
+                    arrays.append(b.column(name) if name in have
+                                  else pa.nulls(n, typ))
+                elif name == "partition_id":
+                    arrays.append(pa.array([pid] * n, typ))
+                elif name == "wall_us":
+                    arrays.append(pa.array(walls, typ))
+                else:
+                    arrays.append(pa.array([r[name] for r in rows], typ))
+            yield pa.record_batch(arrays, names=names)
+
+    # column pruning: request only what the stage reads, so the scan's
+    # ReadSchema stays narrow even on wide input tables.
+    wanted = [c for c in ("url", "warc_ts", "html", "lang")
+              if c in df.columns and (c in ("html", "lang") or c in names)]
+    return df.select(*wanted).mapInArrow(run, schema)
+
+
 def extract_pages(df: DataFrame, options: ExtractOptions | None = None,
                   recognizer_factory=None) -> DataFrame:
     """Sniff → guard → route → extract, one Arrow-batched pass, no shuffle.
@@ -109,67 +172,25 @@ def extract_pages(df: DataFrame, options: ExtractOptions | None = None,
     factory, not a recognizer: model handles don't pickle; the closure
     ships the recipe and the executor builds the instance."""
     opts = options or DEFAULT_OPTIONS
-    schema = EXTRACTED_SCHEMA_SPANS if opts.emit_spans else EXTRACTED_SCHEMA
-    spans_type = (to_arrow_type(schema["spans"].dataType)
-                  if opts.emit_spans else None)
     # captured driver-side: pre-forked python workers don't see driver env
     audit = os.environ.get("SPARK_GRAFT_ASSET_AUDIT")
 
-    def run(batches):
-        import pyarrow as pa
-
-        ctx = TaskContext.get()
-        pid = ctx.partitionId() if ctx is not None else -1
-        # per-task init point (mirrors the reference's singleton worker):
-        # executor assets (S6) load here, once, never in the batch loop —
-        # and the OCR model (when enabled) initializes here too
+    def init():
+        # executor assets (S6) load here, once per task, never in the
+        # batch loop — and the OCR model (when enabled) initializes here too
         hyphen_ex = _load_hyphen_asset(opts, audit)
         recognizer = recognizer_factory() if recognizer_factory else None
-        for b in batches:
-            n = b.num_rows
-            if n == 0:
-                continue
-            langs = b.column("lang").to_pylist() if "lang" in b.schema.names \
-                else [None] * n
-            payloads = b.column("html").to_pylist()
-            cols: dict[str, list] = {k: [] for k in
-                                     ("kind", "status", "error", "n_bytes",
-                                      "n_pages", "n_words", "text",
-                                      "n_fallbacks")}
-            walls: list[int] = []
-            spans: list[list] = []
-            for payload, lang in zip(payloads, langs):
-                t0 = time.perf_counter_ns()
-                # no bytes() here: extract_document type-guards the payload
-                # itself (errors-as-values even for mis-typed columns)
-                r = extract_document(payload, lang, opts, hyphen_ex,
-                                     recognizer)
-                walls.append((time.perf_counter_ns() - t0) // 1000)
-                for k in cols:
-                    cols[k].append(r[k])
-                if opts.emit_spans:
-                    spans.append(r.get("spans") or [])
-            ts = (b.column("warc_ts") if "warc_ts" in b.schema.names
-                  else pa.nulls(n, pa.timestamp("us")))
-            arrays = [
-                b.column("url"), ts,
-                pa.array(langs, pa.string()),
-                pa.array(cols["kind"], pa.string()),
-                pa.array(cols["status"], pa.string()),
-                pa.array(cols["error"], pa.string()),
-                pa.array(cols["n_bytes"], pa.int64()),
-                pa.array(cols["n_pages"], pa.int32()),
-                pa.array(cols["n_words"], pa.int32()),
-                pa.array(cols["text"], pa.string()),
-                pa.array(cols["n_fallbacks"], pa.int32()),
-                pa.array([pid] * n, pa.int32()),
-                pa.array(walls, pa.int64()),
-            ]
-            if opts.emit_spans:
-                arrays.append(pa.array(spans, spans_type))
-            yield pa.record_batch(arrays, names=schema.fieldNames())
 
-    # column pruning: request only what the stage reads, so the scan's
-    # ReadSchema shrinks to 4 columns even on wide input tables.
-    wanted = [c for c in ("url", "warc_ts", "html", "lang") if c in df.columns]
-    return df.select(*wanted).mapInArrow(run, schema)
+        def one(payload, lang):
+            # no bytes() here: extract_document type-guards the payload
+            # itself (errors-as-values even for mis-typed columns)
+            r = extract_document(payload, lang, opts, hyphen_ex, recognizer)
+            if opts.emit_spans:
+                r.setdefault("spans", [])  # non-PDF and failed rows: []
+            return r
+
+        return one
+
+    return _document_operator(
+        df, EXTRACTED_SCHEMA_SPANS if opts.emit_spans else EXTRACTED_SCHEMA,
+        init)

@@ -8,6 +8,9 @@ but expressed as DataFrame stages:
           ──_commit──▶ <out>/data  +  observed.json (df.observe counters)
           ──read-back──▶ <out>/metrics (per-partition metrics table)
 
+    pages ──▶ assemble (extract's mapInArrow document operator, narrow)
+          ──▶ searchable PDFs + extract's partition_id / wall_us lineage
+
 ``_commit`` is the one observed unit write of all three drivers: batch (one
 unit), resume (``plans/checkpoint.py``, one ``data/unit=<id>`` per bucket
 chunk) and stream (``streaming/extract_stream.py``, one per micro-batch).

@@ -17,7 +17,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .functions import text_funcs as T
-from .operators.ann import cosine_topk, lsh_bucket_ann
 from .operators.dedup import (
     embedding_neardup_lsh,
     embedding_neardup_pairs,

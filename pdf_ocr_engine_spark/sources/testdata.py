@@ -10,7 +10,7 @@ line) — giving the flagship extraction query a real DuckDB correctness check
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import BinaryType
 
@@ -47,15 +47,6 @@ REAL_PDF_WORDS_PER_PAGE = 36
 
 
 @F.pandas_udf(BinaryType())
-def _text_to_real_payload(text):
-    """Vectorized text → genuine PDF 1.4 payload (real content streams,
-    paginated)."""
-    return text.map(
-        lambda t: text_to_real_pdf_payload(t or "", WORDS_PER_LINE,
-                                           REAL_PDF_WORDS_PER_PAGE))
-
-
-@F.pandas_udf(BinaryType())
 def _text_to_real_routed_payload(text, doc_id):
     """Real-PDF corpus with EMBEDDED-FONT slices: doc_id % 8 == 3 →
     Type0/Identity-H CIDFontType2 with FontFile2 and no ToUnicode (CIDs
@@ -88,18 +79,25 @@ def documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/documents.parquet")
 
 
-def pages_from_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _pages(spark: SparkSession, sf_dir: str, payload: Column) -> DataFrame:
     """documents → input_hint-shaped pages table
-    ``(url, warc_ts, html, text, lang)``; url embeds source + doc_id."""
+    ``(url, warc_ts, html, text, lang, doc_id)`` with ``payload`` (a
+    column expression over ``text``/``doc_id``) as ``html``; url embeds
+    source + doc_id."""
     return documents(spark, sf_dir).select(
         F.concat(F.lit("https://"), F.col("source"), F.lit(".example/doc/"),
                  F.col("doc_id").cast("string")).alias("url"),
         F.to_timestamp(F.lit("2025-01-01 00:00:00")).alias("warc_ts"),
-        _text_to_payload(F.col("text")).alias("html"),
+        payload.alias("html"),
         F.lit("").alias("text"),
         lang3_col().alias("lang"),
         F.col("doc_id"),
     )
+
+
+def pages_from_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Word-box PDF corpus (WBOX2 containers on the fixture grid)."""
+    return _pages(spark, sf_dir, _text_to_payload(F.col("text")))
 
 
 @F.pandas_udf(BinaryType())
@@ -115,15 +113,7 @@ def scanned_pages_from_documents(spark: SparkSession,
                                  sf_dir: str) -> DataFrame:
     """All-scanned corpus: every document is a genuine image-only PDF —
     the input for the preserveImages overlay round-trip query."""
-    return documents(spark, sf_dir).select(
-        F.concat(F.lit("https://"), F.col("source"), F.lit(".example/doc/"),
-                 F.col("doc_id").cast("string")).alias("url"),
-        F.to_timestamp(F.lit("2025-01-01 00:00:00")).alias("warc_ts"),
-        _text_to_scanned_payload(F.col("text")).alias("html"),
-        F.lit("").alias("text"),
-        lang3_col().alias("lang"),
-        F.col("doc_id"),
-    )
+    return _pages(spark, sf_dir, _text_to_scanned_payload(F.col("text")))
 
 
 @F.pandas_udf(BinaryType())
@@ -216,16 +206,8 @@ def encrypted_pages_from_documents(spark: SparkSession,
     """Encrypted-PDF corpus: every document is a genuine PDF encrypted with
     an empty user password under a rotating scheme — input for the
     transparent-decryption round-trip query."""
-    return documents(spark, sf_dir).select(
-        F.concat(F.lit("https://"), F.col("source"), F.lit(".example/doc/"),
-                 F.col("doc_id").cast("string")).alias("url"),
-        F.to_timestamp(F.lit("2025-01-01 00:00:00")).alias("warc_ts"),
-        _text_to_encrypted_payload(F.col("text"),
-                                   F.col("doc_id")).alias("html"),
-        F.lit("").alias("text"),
-        lang3_col().alias("lang"),
-        F.col("doc_id"),
-    )
+    return _pages(spark, sf_dir, _text_to_encrypted_payload(
+        F.col("text"), F.col("doc_id")))
 
 
 def mixed_scan_pages_from_documents(spark: SparkSession,
@@ -233,15 +215,8 @@ def mixed_scan_pages_from_documents(spark: SparkSession,
     """Mixed born-digital / scanned corpus — the OCR router's input: half
     the documents (odd doc_id) are genuine image-only PDFs whose text is
     only reachable through the rasterize→recognize tier."""
-    return documents(spark, sf_dir).select(
-        F.concat(F.lit("https://"), F.col("source"), F.lit(".example/doc/"),
-                 F.col("doc_id").cast("string")).alias("url"),
-        F.to_timestamp(F.lit("2025-01-01 00:00:00")).alias("warc_ts"),
-        _text_to_mixed_payload(F.col("text"), F.col("doc_id")).alias("html"),
-        F.lit("").alias("text"),
-        lang3_col().alias("lang"),
-        F.col("doc_id"),
-    )
+    return _pages(spark, sf_dir, _text_to_mixed_payload(
+        F.col("text"), F.col("doc_id")))
 
 
 def real_pages_from_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -251,13 +226,5 @@ def real_pages_from_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     four documents embeds a subsetted TrueType with no ToUnicode (see
     ``_text_to_real_routed_payload``), so glyph-id recovery sits in the
     checked path."""
-    return documents(spark, sf_dir).select(
-        F.concat(F.lit("https://"), F.col("source"), F.lit(".example/doc/"),
-                 F.col("doc_id").cast("string")).alias("url"),
-        F.to_timestamp(F.lit("2025-01-01 00:00:00")).alias("warc_ts"),
-        _text_to_real_routed_payload(F.col("text"),
-                                     F.col("doc_id")).alias("html"),
-        F.lit("").alias("text"),
-        lang3_col().alias("lang"),
-        F.col("doc_id"),
-    )
+    return _pages(spark, sf_dir, _text_to_real_routed_payload(
+        F.col("text"), F.col("doc_id")))

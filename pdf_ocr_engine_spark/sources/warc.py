@@ -495,7 +495,9 @@ def warc_scan_report(spark: SparkSession, path: str) -> DataFrame:
 
 def write_warc(records: list[dict[str, Any]], compress: bool = False) -> bytes:
     """Serialize records (``{"url", "date", "body"}``) into WARC bytes —
-    fixture/writer twin of :func:`parse_warc` for tests and round-trips."""
+    fixture/writer twin of :func:`parse_warc` for tests and round-trips.
+    ``compress`` writes a gzip member with a zero header mtime, so the
+    same records always give the same bytes."""
     out = io.BytesIO()
     for r in records:
         http = (b"HTTP/1.1 200 OK\r\nContent-Type: text/html\r\n\r\n"
@@ -507,7 +509,7 @@ def write_warc(records: list[dict[str, Any]], compress: bool = False) -> bytes:
                 f"Content-Length: {len(http)}").encode("latin-1")
         out.write(head + _CRLF2 + http + _CRLF2)
     data = out.getvalue()
-    return gzip.compress(data) if compress else data
+    return gzip.compress(data, mtime=0) if compress else data
 
 
 def write_cc_warc(records: list[dict[str, Any]],

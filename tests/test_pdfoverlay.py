@@ -47,13 +47,15 @@ def _spans_for(tokens):
 class TestOverlayCore:
     def test_original_bytes_preserved_verbatim(self):
         orig = text_to_scanned_pdf_payload(TEXT)
-        out = overlay_text_layer(orig, [_spans_for(TEXT.split())])
+        out = overlay_text_layer(orig, parse_real_pdf(orig),
+                                 [_spans_for(TEXT.split())])
         assert out[:len(orig)] == orig
         assert len(out) > len(orig)
 
     def test_text_extractable_and_images_intact(self):
         orig = text_to_scanned_pdf_payload(TEXT)
-        out = overlay_text_layer(orig, [_spans_for(TEXT.split())])
+        out = overlay_text_layer(orig, parse_real_pdf(orig),
+                                 [_spans_for(TEXT.split())])
         r = extract_document(out, "eng")
         assert r["status"] == "ok"
         assert r["text"].split() == TEXT.split()
@@ -69,24 +71,25 @@ class TestOverlayCore:
         assert n >= 2
         spans = [[] for _ in range(n)]
         spans[1] = _spans_for(toks[:36])  # only page 2 gets a layer
-        out = overlay_text_layer(orig, spans)
+        out = overlay_text_layer(orig, parse_real_pdf(orig), spans)
         doc = parse_real_pdf(out)
         assert doc["pages"][0]["has_text"] is False
         assert doc["pages"][1]["has_text"] is True
 
     def test_no_spans_returns_original(self):
         orig = text_to_scanned_pdf_payload(TEXT)
-        assert overlay_text_layer(orig, [[]]) == orig
+        assert overlay_text_layer(orig, parse_real_pdf(orig), [[]]) == orig
 
     def test_encrypted_original_refused(self):
         enc = text_to_encrypted_pdf_payload(TEXT, "rc4-128")
+        parsed = parse_real_pdf(enc)  # empty user password: decrypts
         with pytest.raises(ValueError, match="encrypted"):
-            overlay_text_layer(enc, [_spans_for(TEXT.split())])
+            overlay_text_layer(enc, parsed, [_spans_for(TEXT.split())])
 
     def test_page_count_mismatch_raises(self):
         orig = text_to_scanned_pdf_payload(TEXT)
         with pytest.raises(ValueError, match="pages"):
-            overlay_text_layer(orig, [[], []])
+            overlay_text_layer(orig, parse_real_pdf(orig), [[], []])
 
     def test_contents_indirect_ref_to_array_preserved(self):
         # ADVICE r3: /Contents may be an indirect ref TO AN ARRAY of
@@ -124,7 +127,8 @@ class TestOverlayCore:
         orig = _assemble(objs)
         before = parse_real_pdf(orig)
         assert before["pages"][0]["texts"] == ["legacy", "prose"]
-        out = overlay_text_layer(orig, [_spans_for(["overlaid"])])
+        out = overlay_text_layer(orig, parse_real_pdf(orig),
+                                 [_spans_for(["overlaid"])])
         assert out[:len(orig)] == orig
         after = parse_real_pdf(out)
         # original streams survive in order, overlay appended
@@ -133,7 +137,8 @@ class TestOverlayCore:
 
     def test_overlay_parses_with_incremental_trailer(self):
         orig = text_to_scanned_pdf_payload(TEXT)
-        out = overlay_text_layer(orig, [_spans_for(TEXT.split())])
+        out = overlay_text_layer(orig, parse_real_pdf(orig),
+                                 [_spans_for(TEXT.split())])
         assert out.count(b"%%EOF") == 2  # original EOF + update EOF
         assert b"/Prev" in out[len(orig):]
 
@@ -190,7 +195,8 @@ class TestGenerationNumbers:
         bumped = orig.replace(b"3 0 obj", b"3 1 obj") \
                      .replace(b"/Kids [3 0 R]", b"/Kids [3 1 R]")
         assert bumped != orig
-        out = overlay_text_layer(bumped, [_spans_for(TEXT.split())])
+        out = overlay_text_layer(bumped, parse_real_pdf(bumped),
+                                 [_spans_for(TEXT.split())])
         tail = out[len(bumped):]
         assert b"3 1 obj" in tail          # same gen, not gen 0
         assert b"\n3 0 obj" not in tail
@@ -253,7 +259,7 @@ class TestViewportRoundTrip:
     def _roundtrip(self, orig: bytes, tol: float = 0.5) -> None:
         toks = ["alpha", "beta", "gamma"]
         spans = _spans_for(toks)
-        out = overlay_text_layer(orig, [spans])
+        out = overlay_text_layer(orig, parse_real_pdf(orig), [spans])
         doc = parse_real_pdf(out)
         got = {t: c for t, c in zip(doc["pages"][0]["texts"],
                                     doc["pages"][0]["coords"])}

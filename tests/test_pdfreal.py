@@ -1004,8 +1004,8 @@ class TestSingleParse:
         assert (r["status"], r["text"]) == ("ok", "scanned words here")
         assert built[0] == 1
 
-    def test_overlay_assemble_builds_two_docs(self, monkeypatch):
-        # one parse for the page core, one inside overlay_text_layer
+    def test_overlay_assemble_builds_one_doc(self, monkeypatch):
+        # the overlay writes from the page core's parse
         from pdf_ocr_engine_spark.core.extract_doc import DEFAULT_OPTIONS
         from pdf_ocr_engine_spark.operators.assemble import _assemble_one
         from pdf_ocr_engine_spark.operators.ocr import deterministic_recognizer
@@ -1018,7 +1018,7 @@ class TestSingleParse:
         r = _assemble_one(pdf, "eng", DEFAULT_OPTIONS, preserve_images=True,
                           recognizer=deterministic_recognizer())
         assert r["status"] == "ok" and r["n_words"] == 3
-        assert built[0] == 2
+        assert built[0] == 1
 
     def test_text_page_decodes_no_image(self, monkeypatch):
         # a born-digital page that also paints an image never reaches the

@@ -62,6 +62,28 @@ def test_metrics_lineage(extracted):
     assert sum(r.words for r in m) > 0
 
 
+def test_assemble_rows_carry_extract_lineage(spark, fixture_pages_path):
+    """Assembly runs through extraction's document operator, so its rows
+    carry the same lineage: ``partition_id`` is the partition that ran
+    the document and ``wall_us`` its non-negative wall clock."""
+    from pdf_ocr_engine_spark.operators.assemble import (
+        ASSEMBLED_SCHEMA,
+        assemble_searchable,
+    )
+
+    assert ASSEMBLED_SCHEMA.fieldNames() == [
+        "url", "status", "error", "n_pages", "n_words", "pdf",
+        "partition_id", "wall_us"]
+    pages = salted_repartition(spark.read.parquet(fixture_pages_path), 4)
+    for df in (extract_pages(pages), assemble_searchable(pages)):
+        rows = df.select("partition_id", "wall_us",
+                         F.spark_partition_id().alias("pid")).collect()
+        assert len(rows) == 120
+        assert all(r.partition_id == r.pid for r in rows)
+        assert all(r.wall_us >= 0 for r in rows)
+        assert len({r.pid for r in rows}) > 1
+
+
 def test_salting_spreads_hot_host(spark, fixture_pages_path):
     """Zipf host000 dominates; salted repartition must spread it over >1
     partition while plain host-partitioning would hot-spot it."""

@@ -31,6 +31,14 @@ class TestParser:
             assert [http_body(r["payload"]) for r in recs] == \
                    [r["body"] for r in RECS]
 
+    def test_compressed_write_is_byte_reproducible(self, monkeypatch):
+        import time
+
+        first = write_warc(RECS, compress=True)
+        # a later clock must not reach the gzip header
+        monkeypatch.setattr(time, "time", lambda: 2_000_000_000.0)
+        assert write_warc(RECS, compress=True) == first
+
     def test_http_envelope_stripped_only_when_present(self):
         assert http_body(b"HTTP/1.1 200 OK\r\nA: b\r\n\r\nBODY") == b"BODY"
         assert http_body(b"raw bytes no envelope") == b"raw bytes no envelope"
