@@ -18,4 +18,19 @@ Layout:
               resumability model per SURVEY.md §1.4)
 """
 
+import sys
+
 __version__ = "0.1.0"
+
+
+def _in_spark_task() -> bool:
+    # a worker sets the TaskContext before unpickling the task's function;
+    # on the driver it is None, and the package root imports no pyspark
+    taskcontext = sys.modules.get("pyspark.taskcontext")
+    return taskcontext is not None and taskcontext.TaskContext.get() is not None
+
+
+if _in_spark_task():
+    from ._worker import install_zip_cache_guard
+
+    install_zip_cache_guard()

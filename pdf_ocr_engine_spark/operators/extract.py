@@ -13,6 +13,15 @@ That ``mapInArrow`` body is the one document operator of the package
 per-document function and output schema, so both stages share the task
 init point, the batch loop and the lineage columns.
 
+Per-task init versus the per-worker fixed cost: ``init`` (hyphen asset,
+recognizer) runs once per task, inside the function.  Before the function
+runs, PySpark's ``setup_spark_files`` calls ``importlib.invalidate_caches()``,
+which on Python 3.11 re-reads every zipimporter's archive (~150 ms per task on
+``pyspark.zip`` alone).  Unpickling this function imports the package, whose
+root installs ``_worker.install_zip_cache_guard`` inside a Spark worker; from
+then on a reused worker's tasks skip re-reading unchanged archives, so only
+the first task of each Python worker process pays it.
+
 Scale notes (100 TB / 1000-executor design):
 * This is a **narrow** transformation — zero shuffle.  Parallelism is the
   input partitioning (see ``plans.pipeline.salted_repartition`` for skew).

@@ -19,7 +19,10 @@ def extracted(spark, fixture_pages_path):
     pages = spark.read.parquet(fixture_pages_path)
     out = extract_pages(salted_repartition(pages, 8)).cache()
     out.count()
-    return out
+    yield out
+    # a cached plan left behind turns later modules' plans into
+    # InMemoryTableScan (tests/test_plans.py counts their Exchange nodes)
+    out.unpersist(blocking=True)
 
 
 def test_byte_identical_text_per_url(spark, fixture_pages_path, extracted):
