@@ -250,14 +250,15 @@ def decode_g4_planes(data: bytes, columns: int, rows: int,
 def _g4_lines(look: list[int], nbits: int, bitpos: int, columns: int,
               rows: int | None, encoded_byte_align: bool,
               ) -> tuple[list[np.ndarray], int]:
-    """The T.6 2-D line loop from ``bitpos`` → (decoded lines, cursor
-    after the final line / consumed EOFB)."""
+    """The T.6 line loop from ``bitpos`` → (decoded lines, cursor after
+    the final line / consumed EOFB).  Only the line-start checks live
+    here (byte align, trailing pad, EOL → EOFB); every line body is
+    :func:`_decode_2d_line`, the same decoder G3's 2-D lines run."""
     w = columns
     out: list[np.ndarray] = []
     # reference line = imaginary all-white line above the first:
     # no transitions; sentinels give b1/b2 = columns at any parity
     ref: list[int] = [w, w, w, w]
-    eofb = False
     while rows is None or len(out) < rows:
         if encoded_byte_align:
             bitpos = (bitpos + 7) & ~7
@@ -268,72 +269,13 @@ def _g4_lines(look: list[int], nbits: int, bitpos: int, columns: int,
                                            - (nbits - bitpos))) \
                 & ((1 << (nbits - bitpos)) - 1) == 0:
             break  # trailing byte-pad zeros
-        line = np.full(w, 255, np.uint8)
-        cur: list[int] = []
-        a0 = -1
-        color = 0  # 0 = white
-        ptr = 0    # monotone cursor into ref
-        while a0 < w:
-            v7 = (look[bitpos >> 3] >> (25 - (bitpos & 7))) & 0x7F
-            e = _MODE_LUT[v7]
-            mode = e & 15
-            if mode == _M_EXT:
-                v12 = (look[bitpos >> 3] >> (20 - (bitpos & 7))) & 0xFFF
-                if v12 == 1 and a0 == -1:  # EOL at line start → EOFB
-                    bitpos += 12
-                    v12b = (look[bitpos >> 3]
-                            >> (20 - (bitpos & 7))) & 0xFFF
-                    if v12b == 1:
-                        bitpos += 12
-                    eofb = True
-                    break
-                raise CcittError(
-                    "invalid 2-D mode code" if bitpos + 7 <= nbits
-                    else "truncated G4 data")
-            bitpos += e >> 4
-            # b1: first ref transition > a0 whose parity matches the
-            # color being coded (even index = white→black transition)
-            while ptr < len(ref) and ref[ptr] <= a0:
-                ptr += 1
-            bi = ptr if (ptr & 1) == color else ptr + 1
-            b1 = ref[bi] if bi < len(ref) else w
-            if mode == _M_PASS:
-                b2 = ref[bi + 1] if bi + 1 < len(ref) else w
-                start = a0 if a0 > 0 else 0
-                if color:
-                    line[start:b2] = 0
-                a0 = b2
-            elif mode == _M_HORIZ:
-                start = a0 if a0 > 0 else 0
-                r1 = _read_run(look, nbits, bitpos, color)
-                bitpos = r1[1]
-                r2 = _read_run(look, nbits, bitpos, color ^ 1)
-                bitpos = r2[1]
-                a1 = start + r1[0]
-                a2 = a1 + r2[0]
-                if a2 > w:
-                    raise CcittError("horizontal run past line end")
-                if color:
-                    line[start:a1] = 0
-                else:
-                    line[a1:a2] = 0
-                cur.append(a1)
-                cur.append(a2)
-                a0 = a2
-            else:  # vertical
-                a1 = b1 + _VERT_DELTA[mode]
-                start = a0 if a0 > 0 else 0
-                if a1 < start or a1 > w or (a0 >= 0 and a1 == a0):
-                    raise CcittError("vertical mode outside line")
-                if color:
-                    line[start:a1] = 0
-                cur.append(a1)
-                a0 = a1
-                color ^= 1
-            if bitpos > nbits:
-                raise CcittError("truncated G4 data")
-        if eofb:
+        if (look[bitpos >> 3] >> (20 - (bitpos & 7))) & 0xFFF == 1:
+            bitpos += 12  # EOL at line start → EOFB
+            if (look[bitpos >> 3] >> (20 - (bitpos & 7))) & 0xFFF == 1:
+                bitpos += 12
             break
+        line, cur, bitpos = _decode_2d_line(look, nbits, bitpos, ref, w,
+                                            "G4")
         out.append(line)
         ref = cur + [w, w, w, w]
     return out, bitpos
@@ -406,16 +348,17 @@ def _decode_1d_line(look: list[int], nbits: int, bitpos: int,
 
 
 def _decode_2d_line(look: list[int], nbits: int, bitpos: int,
-                    ref: list[int], w: int,
+                    ref: list[int], w: int, codec: str,
                     ) -> tuple[np.ndarray, list[int], int]:
     """One 2-D coding line against ``ref`` → (pixels, transitions,
-    bitpos).  Same mode semantics as the G4 inner loop; an EOL prefix
-    mid-line is malformed here (G3 callers consume EOLs up front)."""
+    bitpos): the mode loop of every G4 line and every G3 2-D line.  An
+    EOL prefix is malformed here (callers consume EOL / EOFB at the
+    line start); ``codec`` names the stream in truncation errors."""
     line = np.full(w, 255, np.uint8)
     cur: list[int] = []
     a0 = -1
-    color = 0
-    ptr = 0
+    color = 0  # 0 = white
+    ptr = 0    # monotone cursor into ref
     while a0 < w:
         v7 = (look[bitpos >> 3] >> (25 - (bitpos & 7))) & 0x7F
         e = _MODE_LUT[v7]
@@ -423,8 +366,10 @@ def _decode_2d_line(look: list[int], nbits: int, bitpos: int,
         if mode == _M_EXT:
             raise CcittError(
                 "invalid 2-D mode code" if bitpos + 7 <= nbits
-                else "truncated G3 data")
+                else f"truncated {codec} data")
         bitpos += e >> 4
+        # b1: first ref transition > a0 whose parity matches the
+        # color being coded (even index = white→black transition)
         while ptr < len(ref) and ref[ptr] <= a0:
             ptr += 1
         bi = ptr if (ptr & 1) == color else ptr + 1
@@ -452,7 +397,7 @@ def _decode_2d_line(look: list[int], nbits: int, bitpos: int,
             cur.append(a1)
             cur.append(a2)
             a0 = a2
-        else:
+        else:  # vertical
             a1 = b1 + _VERT_DELTA[mode]
             start = a0 if a0 > 0 else 0
             if a1 < start or a1 > w or (a0 >= 0 and a1 == a0):
@@ -463,7 +408,7 @@ def _decode_2d_line(look: list[int], nbits: int, bitpos: int,
             a0 = a1
             color ^= 1
         if bitpos > nbits:
-            raise CcittError("truncated G3 data")
+            raise CcittError(f"truncated {codec} data")
     return line, cur, bitpos
 
 
@@ -543,7 +488,7 @@ def decode_g3(data: bytes, columns: int, rows: int | None = None,
             cur = _line_transitions(line)
         else:
             line, cur, bitpos = _decode_2d_line(look, nbits, bitpos,
-                                                ref, w)
+                                                ref, w, "G3")
         out.append(line)
         ref = cur + [w, w, w, w]
     if rows is not None and len(out) < rows:

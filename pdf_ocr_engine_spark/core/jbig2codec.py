@@ -69,6 +69,8 @@ JBIG2-capable tool decodes.
 from __future__ import annotations
 
 import struct
+from collections.abc import Callable
+from functools import partial
 
 import numpy as np
 
@@ -328,6 +330,29 @@ def _at_is_nominal(template: int, at: tuple) -> bool:
 def _fresh_contexts(template: int) -> tuple[list, list]:
     n = 1 << _CTX_BITS[template]
     return [0] * n, [0] * n
+
+
+def _at_pixels(data: bytes, pos: int, n: int, what: str,
+               ) -> tuple[tuple, int]:
+    """``n`` signed-byte (x, y) adaptive-template pixels at ``pos`` →
+    (pairs, position after them); ``what`` names the truncated part."""
+    if pos + 2 * n > len(data):
+        raise Jbig2Error(f"truncated {what}")
+    v = [struct.unpack_from("b", data, pos + k)[0] for k in range(2 * n)]
+    return tuple(zip(v[::2], v[1::2])), pos + 2 * n
+
+
+def _mmr_bitmap(data: bytes, width: int, height: int,
+                what: str) -> np.ndarray:
+    """MMR-coded (T.6) bitmap → (height, width) uint8 0/1 (1 = black);
+    ``what`` names the bitmap in the error a bad stream raises."""
+    from .ccittcodec import CcittError, decode_g4
+
+    try:
+        gray = decode_g4(data, width, height)
+    except CcittError as exc:
+        raise Jbig2Error(f"bad MMR {what}: {exc}") from exc
+    return (gray == 0).astype(np.uint8)
 
 
 def _decode_generic(mq: _MQDecoder, width: int, height: int, template: int,
@@ -783,7 +808,9 @@ def _encode_refinement(enc: _MQEncoder, bm: np.ndarray,
 
 
 # --------------------------------------------------------------------------
-# Symbol dictionary (§6.5) and text region (§6.4) — arithmetic coding
+# Symbol dictionary (§6.5) and text region (§6.4) — one header parse, one
+# export-run tail and one strip walk for both codings; only the integer
+# reads and the symbol bitmaps differ (Huffman side further below)
 # --------------------------------------------------------------------------
 
 
@@ -799,49 +826,99 @@ def _decode_symbol_dict(seg_data: bytes,
         raise Jbig2Error("short symbol dictionary")
     flags = struct.unpack_from(">H", seg_data, 0)[0]
     pos = 2
-    if flags & 1:
-        return _decode_symbol_dict_huffman(seg_data, flags, pos,
-                                           input_syms,
-                                           list(custom_tables or ()))
-    if (flags >> 8) & 1:
-        # SDCONTEXTUSED: MQ coding contexts imported from a referred
-        # dictionary (7.4.3.1.1) — decoding with fresh contexts would
-        # produce silently garbled symbols, so reject loudly
-        raise Jbig2Unsupported("symbol dictionary imports coding contexts")
+    sdhuff = flags & 1
     refagg = (flags >> 1) & 1
     template = (flags >> 10) & 3
     rtemplate = (flags >> 12) & 1
-    n_at = 4 if template == 0 else 1
-    if pos + 2 * n_at > len(seg_data):
-        raise Jbig2Error("truncated symbol dictionary header")
-    at = tuple(
-        (struct.unpack_from("b", seg_data, pos + 2 * i)[0],
-         struct.unpack_from("b", seg_data, pos + 2 * i + 1)[0])
-        for i in range(n_at))
-    pos += 2 * n_at
-    rat = _REF_NOMINAL_AT
-    if refagg and rtemplate == 0:
-        if pos + 4 > len(seg_data):
-            raise Jbig2Error("truncated refinement AT pixels")
-        rat = tuple(
-            (struct.unpack_from("b", seg_data, pos + 2 * i)[0],
-             struct.unpack_from("b", seg_data, pos + 2 * i + 1)[0])
-            for i in range(2))
-        pos += 4
+    if sdhuff:
+        if refagg:
+            raise Jbig2Unsupported(
+                "huffman symbol dictionary with refinement/aggregation")
+        # selector value 3 (DH/DW) or 1 (BMSIZE/AGGINST) takes the next
+        # referred custom table, in §7.4.3.1.6 order DH, DW, BMSIZE,
+        # AGGINST
+        custom = list(custom_tables or ())
+        sel_dh = (flags >> 2) & 3
+        sel_dw = (flags >> 4) & 3
+        if sel_dh == 2 or sel_dw == 2:
+            raise Jbig2Error("reserved huffman table selector")
+        t_dh = _take_table(custom, "DH") if sel_dh == 3 \
+            else _std_table(4 + sel_dh)
+        t_dw = _take_table(custom, "DW") if sel_dw == 3 \
+            else _std_table(2 + sel_dw)
+        t_bm = _take_table(custom, "BMSIZE") if (flags >> 6) & 1 \
+            else _std_table(1)
+        if (flags >> 7) & 1:   # AGGINST custom table: REFAGG=0 never reads
+            _take_table(custom, "AGGINST")   # it, but it consumes its slot
+    else:
+        if (flags >> 8) & 1:
+            # SDCONTEXTUSED: MQ coding contexts imported from a referred
+            # dictionary (7.4.3.1.1) — decoding with fresh contexts would
+            # produce silently garbled symbols, so reject loudly
+            raise Jbig2Unsupported(
+                "symbol dictionary imports coding contexts")
+        at, pos = _at_pixels(seg_data, pos, 4 if template == 0 else 1,
+                             "symbol dictionary header")
+        rat = _REF_NOMINAL_AT
+        if refagg and rtemplate == 0:
+            rat, pos = _at_pixels(seg_data, pos, 2, "refinement AT pixels")
     if pos + 8 > len(seg_data):
         raise Jbig2Error("truncated symbol dictionary header")
     num_ex, num_new = struct.unpack_from(">II", seg_data, pos)
     pos += 8
     if num_new > 1 << 16 or num_ex > 1 << 16:
         raise Jbig2Error("implausible symbol counts")
-    mq = _MQDecoder(seg_data[pos:])
-    iadh, iadw, iaex = _int_ctx(), _int_ctx(), _int_ctx()
-    iaai, iardx, iardy = _int_ctx(), _int_ctx(), _int_ctx()
+    if sdhuff:
+        r = _BitReader(seg_data[pos:])
+        newsyms = _sd_huffman_symbols(r, t_dh, t_dw, t_bm, num_new)
+        read_ex = partial(_std_table(1).decode, r)
+    else:
+        mq = _MQDecoder(seg_data[pos:])
+        newsyms = _sd_arith_symbols(mq, input_syms, num_new, template, at,
+                                    refagg, rtemplate, rat)
+        read_ex = partial(_int_decode, mq, *_int_ctx())
+    # export runs (§6.5.10): alternating no-export / export, summing to
+    # exactly SDNUMINSYMS + SDNUMNEWSYMS
+    syms = list(input_syms) + newsyms
+    exported: list[np.ndarray] = []
+    i = 0
+    exflag = 0
+    zero_runs = 0
+    while i < len(syms):
+        run = read_ex()
+        if run is None or run < 0 or i + run > len(syms):
+            raise Jbig2Error("bad export run")
+        if run == 0:
+            # zero-length runs only flip the export flag; more than two
+            # in a row means a stream that will never advance
+            zero_runs += 1
+            if zero_runs > 2:
+                raise Jbig2Error("export runs make no progress")
+        else:
+            zero_runs = 0
+        if exflag:
+            exported.extend(syms[i:i + run])
+        i += run
+        exflag ^= 1
+    if len(exported) != num_ex:
+        raise Jbig2Error(
+            f"dictionary exported {len(exported)} != declared {num_ex}")
+    return exported
+
+
+def _sd_arith_symbols(mq: _MQDecoder, input_syms: list[np.ndarray],
+                      num_new: int, template: int, at: tuple, refagg: int,
+                      rtemplate: int, rat: tuple) -> list[np.ndarray]:
+    """SDHUFF=0 new symbols: height classes of MQ-coded generic bitmaps
+    over shared GB contexts, or with SDREFAGG refinements of earlier
+    symbols and multi-instance aggregates (§6.5.8.2)."""
+    iadh, iadw, iaai = _int_ctx(), _int_ctx(), _int_ctx()
+    iardx, iardy = _int_ctx(), _int_ctx()
     scl = _symcodelen(len(input_syms) + num_new)
     iaid = _iaid_ctx(scl)
     gb_ctx = _fresh_contexts(template)
     gr_ctx = _ref_ctx()
-    agg_ctxs: dict | None = None   # lazily built on first multi-instance
+    agg_reads: tuple | None = None   # built on the first multi-instance
     newsyms: list[np.ndarray] = []
     hcheight = 0
     px_budget = 1 << 26  # total decoded symbol pixels, matching regions
@@ -883,19 +960,19 @@ def _decode_symbol_dict(seg_data: bytes,
                 raise Jbig2Error(f"bad aggregate instance count "
                                  f"{n_inst}")
             if n_inst != 1:
-                if agg_ctxs is None:
+                if agg_reads is None:
                     # strip-walk integer contexts persist across the
                     # dictionary's aggregates; IAID / IARDX / IARDY and
                     # the GR bitmap contexts are the dictionary's own
                     # (§6.5.8.2.3)
-                    agg_ctxs = _text_ctxs(scl, iaid=iaid, iardx=iardx,
-                                          iardy=iardy, gr=gr_ctx)
+                    agg_reads = _arith_text_reads(
+                        mq, scl, 1, rtemplate, rat, iaid=iaid,
+                        iardx=iardx, iardy=iardy, gr=gr_ctx)
                 page = np.zeros((hcheight, symwidth), np.uint8)
                 _text_strip_walk(
-                    mq, agg_ctxs, input_syms + newsyms, page, n_inst,
+                    *agg_reads, input_syms + newsyms, page, n_inst,
                     sbstrips=1, refcorner=1, transposed=0, sbcombop=0,
-                    sbdsoffset=0, sbrefine=1, sbrtemplate=rtemplate,
-                    rat=rat)
+                    sbdsoffset=0)
                 newsyms.append(page)
                 continue
             rid = _iaid_decode(mq, *iaid, scl) if scl else 0
@@ -915,31 +992,7 @@ def _decode_symbol_dict(seg_data: bytes,
             empty_classes += 1
             if empty_classes > 64:
                 raise Jbig2Error("symbol dictionary makes no progress")
-    syms = list(input_syms) + newsyms
-    exported: list[np.ndarray] = []
-    i = 0
-    exflag = 0
-    zero_runs = 0
-    while i < len(syms):
-        run = _int_decode(mq, *iaex)
-        if run is None or run < 0 or i + run > len(syms):
-            raise Jbig2Error("bad export run")
-        if run == 0:
-            # zero-length runs only flip the export flag; more than two
-            # in a row means a stream that will never advance
-            zero_runs += 1
-            if zero_runs > 2:
-                raise Jbig2Error("export runs make no progress")
-        else:
-            zero_runs = 0
-        if exflag:
-            exported.extend(syms[i:i + run])
-        i += run
-        exflag ^= 1
-    if len(exported) != num_ex:
-        raise Jbig2Error(
-            f"dictionary exported {len(exported)} != declared {num_ex}")
-    return exported
+    return newsyms
 
 
 def _symcodelen(n_syms: int) -> int:
@@ -953,17 +1006,17 @@ def _decode_text_region(seg_data: bytes, syms: list[np.ndarray],
                         ) -> tuple[dict, np.ndarray]:
     """Text region segment data → (region info, 0/1 bitmap) with every
     symbol instance drawn per §6.4.5 (all four REFCORNERs, TRANSPOSED
-    both ways, strip T residuals).  ``custom_tables`` are the referred
-    type-53 tables for SBHUFF selectors with the custom value."""
+    both ways, strip T residuals).  Both codings parse one header and
+    run one strip walk; SBHUFF=1 reads table-coded values, a raw-bit
+    CURT residual and the runcode-built symbol ID code, and selector
+    value 3 takes the next of ``custom_tables`` (the referred type-53
+    tables, §7.4.4.1.6)."""
     info, pos = _parse_region_info(seg_data, 0)
     if pos + 6 > len(seg_data):
         raise Jbig2Error("truncated text region header")
     flags = struct.unpack_from(">H", seg_data, pos)[0]
     pos += 2
-    if flags & 1:
-        return _decode_text_region_huffman(seg_data, syms, info, pos,
-                                           flags,
-                                           list(custom_tables or ()))
+    sbhuff = flags & 1
     sbrefine = (flags >> 1) & 1
     sbstrips = 1 << ((flags >> 2) & 3)
     refcorner = (flags >> 4) & 3  # 0=BL 1=TL 2=BR 3=TR (Table 34)
@@ -974,15 +1027,33 @@ def _decode_text_region(seg_data: bytes, syms: list[np.ndarray],
     if sbdsoffset > 15:
         sbdsoffset -= 32
     sbrtemplate = (flags >> 15) & 1
+    if sbhuff:
+        if sbrefine:
+            raise Jbig2Unsupported("huffman text region with refinement")
+        if pos + 2 > len(seg_data):
+            raise Jbig2Error("truncated huffman text region flags")
+        hflags = struct.unpack_from(">H", seg_data, pos)[0]
+        pos += 2
+        custom = list(custom_tables or ())
+        sel_fs = hflags & 3
+        sel_ds = (hflags >> 2) & 3
+        sel_dt = (hflags >> 4) & 3
+        if sel_fs == 2:
+            raise Jbig2Error("reserved huffman FS table selector")
+        if (hflags >> 6) & 0xFF or (hflags >> 14) & 1:
+            # RDW/RDH/RDX/RDY/RSIZE tables are meaningful only with
+            # SBREFINE, which rejects above
+            raise Jbig2Unsupported(
+                "refinement huffman tables in text region")
+        t_fs = _take_table(custom, "FS") if sel_fs == 3 \
+            else _std_table(6 + sel_fs)
+        t_ds = _take_table(custom, "DS") if sel_ds == 3 \
+            else _std_table(8 + sel_ds)
+        t_dt = _take_table(custom, "DT") if sel_dt == 3 \
+            else _std_table(11 + sel_dt)
     rat = _REF_NOMINAL_AT
     if sbrefine and sbrtemplate == 0:
-        if pos + 4 > len(seg_data):
-            raise Jbig2Error("truncated refinement AT pixels")
-        rat = tuple(
-            (struct.unpack_from("b", seg_data, pos + 2 * i)[0],
-             struct.unpack_from("b", seg_data, pos + 2 * i + 1)[0])
-            for i in range(2))
-        pos += 4
+        rat, pos = _at_pixels(seg_data, pos, 2, "refinement AT pixels")
     if pos + 4 > len(seg_data):
         raise Jbig2Error("truncated text region header")
     num_instances = struct.unpack_from(">I", seg_data, pos)[0]
@@ -993,67 +1064,104 @@ def _decode_text_region(seg_data: bytes, syms: list[np.ndarray],
         raise Jbig2Error("implausible text region")
     if not syms:
         raise Jbig2Error("text region with no symbols")
-    mq = _MQDecoder(seg_data[pos:])
-    ctxs = _text_ctxs(_symcodelen(len(syms)))
+    if sbhuff:
+        r = _BitReader(seg_data[pos:])
+        t_sym = _huffman_symbol_ids(r, len(syms))
+        reads = (partial(t_dt.decode, r), partial(t_fs.decode, r),
+                 partial(t_ds.decode, r),
+                 partial(r.read, (sbstrips - 1).bit_length()),
+                 partial(t_sym.decode, r) if t_sym else lambda: 0)
+        refine = None
+    else:
+        reads, refine = _arith_text_reads(
+            _MQDecoder(seg_data[pos:]), _symcodelen(len(syms)), sbrefine,
+            sbrtemplate, rat)
     page = np.full((h, w), sbdefpixel, dtype=np.uint8)
-    _text_strip_walk(mq, ctxs, syms, page, num_instances,
+    _text_strip_walk(reads, refine, syms, page, num_instances,
                      sbstrips=sbstrips, refcorner=refcorner,
                      transposed=transposed, sbcombop=sbcombop,
-                     sbdsoffset=sbdsoffset, sbrefine=sbrefine,
-                     sbrtemplate=sbrtemplate, rat=rat)
+                     sbdsoffset=sbdsoffset)
     return info, page
 
 
-def _text_ctxs(scl: int, iaid: tuple | None = None,
-               iardx: tuple | None = None, iardy: tuple | None = None,
-               gr: tuple | None = None) -> dict:
-    """Arithmetic integer contexts for one text-region strip walk.  A
-    symbol dictionary's aggregates pass their own IAID / IARDX / IARDY
-    and GR bitmap contexts (§6.5.8.2.3 shares them with the
-    single-instance refinement path); text region segments leave them
-    fresh."""
-    ctxs = {name: _int_ctx() for name in
-            ("iadt", "iafs", "iads", "iait", "iari", "iardw", "iardh")}
-    ctxs["scl"] = scl
-    ctxs["iaid"] = iaid if iaid is not None else _iaid_ctx(scl)
-    ctxs["iardx"] = iardx if iardx is not None else _int_ctx()
-    ctxs["iardy"] = iardy if iardy is not None else _int_ctx()
-    ctxs["gr"] = gr if gr is not None else _ref_ctx()
+def _arith_text_reads(mq: _MQDecoder, scl: int, sbrefine: int,
+                      sbrtemplate: int, rat: tuple,
+                      iaid: tuple | None = None,
+                      iardx: tuple | None = None,
+                      iardy: tuple | None = None,
+                      gr: tuple | None = None,
+                      ) -> tuple[tuple, Callable | None]:
+    """The strip walk's arithmetic side → ((DT, FS, DS, IT, ID) reads,
+    refine step or None).  A symbol dictionary's aggregates pass their
+    own IAID / IARDX / IARDY and GR bitmap contexts (§6.5.8.2.3 shares
+    them with the single-instance refinement path); text region
+    segments leave them fresh."""
+    iaid = iaid if iaid is not None else _iaid_ctx(scl)
+    reads = (partial(_int_decode, mq, *_int_ctx()),     # IADT
+             partial(_int_decode, mq, *_int_ctx()),     # IAFS
+             partial(_int_decode, mq, *_int_ctx()),     # IADS
+             partial(_int_decode, mq, *_int_ctx()),     # IAIT
+             partial(_iaid_decode, mq, *iaid, scl))     # IAID
+    if not sbrefine:
+        return reads, None
+    read_ri, read_rdw, read_rdh = (partial(_int_decode, mq, *_int_ctx())
+                                   for _ in range(3))
+    read_rdx = partial(_int_decode, mq,
+                       *(iardx if iardx is not None else _int_ctx()))
+    read_rdy = partial(_int_decode, mq,
+                       *(iardy if iardy is not None else _int_ctx()))
+    gr = gr if gr is not None else _ref_ctx()
     # Cumulative refined-instance pixel budget: SBREFINE decodes a fresh
     # bitmap per refined instance, so per-dimension caps alone still let
     # a malformed stream request num_instances × huge decodes.  Mirror
     # the symbol dictionary's px_budget (1<<26 total decoded pixels).
-    ctxs["ref_px"] = [_REF_PX_BUDGET]
-    return ctxs
+    ref_px = _REF_PX_BUDGET
+
+    def refine(sym: np.ndarray) -> np.ndarray:
+        nonlocal ref_px
+        if not read_ri():
+            return sym
+        rdw, rdh, rdx, rdy = read_rdw(), read_rdh(), read_rdx(), read_rdy()
+        if None in (rdw, rdh, rdx, rdy):
+            raise Jbig2Error("OOB refinement deltas")
+        nw = sym.shape[1] + rdw
+        nh = sym.shape[0] + rdh
+        if not (0 < nw <= 1 << 14 and 0 < nh <= 1 << 14) \
+                or nw * nh > 1 << 26:
+            raise Jbig2Error("bad refined symbol size")
+        ref_px -= nw * nh
+        if ref_px < 0:
+            raise Jbig2Error("refinement pixel budget exhausted")
+        return _decode_refinement(
+            mq, nw, nh, sbrtemplate, sym, (rdw >> 1) + rdx,
+            (rdh >> 1) + rdy, rat, False, contexts=gr)
+
+    return reads, refine
 
 
-def _text_strip_walk(mq: _MQDecoder, ctxs: dict, syms: list[np.ndarray],
-                     page: np.ndarray, num_instances: int, *,
-                     sbstrips: int, refcorner: int, transposed: int,
-                     sbcombop: int, sbdsoffset: int, sbrefine: int,
-                     sbrtemplate: int, rat: tuple) -> None:
-    """The §6.4.5 strip walk, drawing onto ``page`` — called by text
-    region segments AND by symbol-dictionary multi-instance aggregates
-    (§6.5.8.2.2), which pass their own persistent ``ctxs``."""
-    iadt, iafs, iads, iait = (ctxs["iadt"], ctxs["iafs"], ctxs["iads"],
-                              ctxs["iait"])
-    iari, iardw, iardh = ctxs["iari"], ctxs["iardw"], ctxs["iardh"]
-    iardx, iardy = ctxs["iardx"], ctxs["iardy"]
-    iaid, scl, gr_ctx = ctxs["iaid"], ctxs["scl"], ctxs["gr"]
-    ref_px = ctxs["ref_px"]
-
-    first_dt = _int_decode(mq, *iadt)
+def _text_strip_walk(reads: tuple, refine: Callable | None,
+                     syms: list[np.ndarray], page: np.ndarray,
+                     num_instances: int, *, sbstrips: int, refcorner: int,
+                     transposed: int, sbcombop: int,
+                     sbdsoffset: int) -> None:
+    """The §6.4.5 strip walk, drawing onto ``page`` — the one walk of
+    arithmetic text regions, SBHUFF text regions and symbol-dictionary
+    multi-instance aggregates (§6.5.8.2.2).  ``reads`` are the DT, FS,
+    DS, IT and ID integer reads (None = OOB); ``refine`` is the SBREFINE
+    per-instance step."""
+    read_dt, read_fs, read_ds, read_it, read_id = reads
+    first_dt = read_dt()
     if first_dt is None:
         raise Jbig2Error("OOB strip T")
     stript = -first_dt * sbstrips
     firsts = 0
     inst = 0
     while inst < num_instances:
-        dt = _int_decode(mq, *iadt)
+        dt = read_dt()
         if dt is None:
             raise Jbig2Error("OOB strip T delta")
         stript += dt * sbstrips
-        dfs = _int_decode(mq, *iafs)
+        dfs = read_fs()
         if dfs is None:
             raise Jbig2Error("OOB first S")
         firsts += dfs
@@ -1063,38 +1171,20 @@ def _text_strip_walk(mq: _MQDecoder, ctxs: dict, syms: list[np.ndarray],
             if first:
                 first = False
             else:
-                ids = _int_decode(mq, *iads)
+                ids = read_ds()
                 if ids is None:
                     break  # end of strip
                 curs += ids + sbdsoffset
-            curt = _int_decode(mq, *iait) if sbstrips > 1 else 0
+            curt = read_it() if sbstrips > 1 else 0
             if curt is None:
                 raise Jbig2Error("OOB T residual")
             ti = stript + curt
-            sid = _iaid_decode(mq, *iaid, scl) if scl else 0
+            sid = read_id()
             if not 0 <= sid < len(syms):
                 raise Jbig2Error(f"symbol id {sid} out of range")
             sym = syms[sid]
-            if sbrefine and _int_decode(mq, *iari):
-                rdw = _int_decode(mq, *iardw)
-                rdh = _int_decode(mq, *iardh)
-                rdx = _int_decode(mq, *iardx)
-                rdy = _int_decode(mq, *iardy)
-                if None in (rdw, rdh, rdx, rdy):
-                    raise Jbig2Error("OOB refinement deltas")
-                nw = sym.shape[1] + rdw
-                nh = sym.shape[0] + rdh
-                if not (0 < nw <= 1 << 14 and 0 < nh <= 1 << 14) \
-                        or nw * nh > 1 << 26:
-                    raise Jbig2Error("bad refined symbol size")
-                ref_px[0] -= nw * nh
-                if ref_px[0] < 0:
-                    raise Jbig2Error(
-                        "refinement pixel budget exhausted")
-                sym = _decode_refinement(
-                    mq, nw, nh, sbrtemplate, sym,
-                    (rdw >> 1) + rdx, (rdh >> 1) + rdy, rat, False,
-                    contexts=gr_ctx)
+            if refine is not None:
+                sym = refine(sym)
             curs = _draw_instance(page, sym, int(curs), int(ti),
                                   refcorner, transposed, sbcombop)
             inst += 1
@@ -1103,11 +1193,16 @@ def _text_strip_walk(mq: _MQDecoder, ctxs: dict, syms: list[np.ndarray],
 # --------------------------------------------------------------------------
 # Huffman-coded arrangement (T.88 SDHUFF/SBHUFF with Annex B tables) —
 # the alternative coding some encoders emit instead of MQ arithmetic.
+# Only what the coding changes lives here: the bit reader, the tables,
+# the collective symbol bitmaps and the symbol ID code; the header
+# parse, the export runs and the strip walk are the shared ones above.
 # Table data transcribed from the public ITU-T T.88 Annex B; canonical
 # prefix-code assignment per B.3.
 # --------------------------------------------------------------------------
 
-_HUFF_OOB = object()  # out-of-band sentinel distinct from every int
+#: the out-of-band value :meth:`_HuffTable.decode` returns — None, as
+#: from the arithmetic IAx decoder, so both codings feed one strip walk
+_HUFF_OOB = None
 
 
 class _BitReader:
@@ -1420,47 +1515,19 @@ def _take_table(custom: list, what: str) -> _HuffTable:
     return custom.pop(0)
 
 
-def _decode_symbol_dict_huffman(seg_data: bytes, flags: int, pos: int,
-                                input_syms: list[np.ndarray],
-                                custom: list | None = None,
-                                ) -> list[np.ndarray]:
-    """SDHUFF=1 symbol dictionary (T.88 §6.5 with Huffman tables,
-    REFAGG=0): per height class the symbols are coded COLLECTIVELY —
-    widths via the DW table, then one bitmap holding the class side by
-    side, stored raw (BMSIZE=0) or MMR-coded.  Selector value 3 (DH/DW)
-    or 1 (BMSIZE/AGGINST) takes the next referred custom table
-    (§7.4.3.1.6 consumption order DH, DW, BMSIZE, AGGINST)."""
-    if (flags >> 1) & 1:
-        raise Jbig2Unsupported(
-            "huffman symbol dictionary with refinement/aggregation")
-    custom = custom if custom is not None else []
-    sel_dh = (flags >> 2) & 3
-    sel_dw = (flags >> 4) & 3
-    if sel_dh == 2 or sel_dw == 2:
-        raise Jbig2Error("reserved huffman table selector")
-    t_dh = _take_table(custom, "DH") if sel_dh == 3 \
-        else _std_table(4 + sel_dh)
-    t_dw = _take_table(custom, "DW") if sel_dw == 3 \
-        else _std_table(2 + sel_dw)
-    t_bm = _take_table(custom, "BMSIZE") if (flags >> 6) & 1 \
-        else _std_table(1)
-    t_ex = _std_table(1)
-    if (flags >> 7) & 1:   # AGGINST custom table: REFAGG=0 never reads
-        _take_table(custom, "AGGINST")   # it, but it consumes its slot
-    if pos + 8 > len(seg_data):
-        raise Jbig2Error("truncated symbol dictionary header")
-    num_ex, num_new = struct.unpack_from(">II", seg_data, pos)
-    pos += 8
-    if num_new > 1 << 16 or num_ex > 1 << 16:
-        raise Jbig2Error("implausible symbol counts")
-    r = _BitReader(seg_data[pos:])
+def _sd_huffman_symbols(r: _BitReader, t_dh: _HuffTable, t_dw: _HuffTable,
+                        t_bm: _HuffTable, num_new: int) -> list[np.ndarray]:
+    """SDHUFF=1 new symbols (T.88 §6.5 with Huffman tables, REFAGG=0):
+    per height class the symbols are coded COLLECTIVELY — widths via the
+    DW table, then one bitmap holding the class side by side, stored raw
+    (BMSIZE=0) or MMR-coded."""
     newsyms: list[np.ndarray] = []
     hcheight = 0
     px_budget = 1 << 26
     empty_classes = 0
     while len(newsyms) < num_new:
         dh = t_dh.decode(r)
-        if dh is _HUFF_OOB:
+        if dh is None:
             raise Jbig2Error("OOB height-class delta")
         hcheight += dh
         if hcheight <= 0 or hcheight > 1 << 14:
@@ -1470,7 +1537,7 @@ def _decode_symbol_dict_huffman(seg_data: bytes, flags: int, pos: int,
         widths: list[int] = []
         while True:
             dw = t_dw.decode(r)
-            if dw is _HUFF_OOB:
+            if dw is None:
                 break
             symwidth += dw
             if symwidth <= 0 or symwidth > 1 << 14 \
@@ -1487,7 +1554,7 @@ def _decode_symbol_dict_huffman(seg_data: bytes, flags: int, pos: int,
                 raise Jbig2Error("runaway empty height classes")
             continue
         bmsize = t_bm.decode(r)
-        if bmsize is _HUFF_OOB or bmsize < 0:
+        if bmsize is None or bmsize < 0:
             raise Jbig2Error("bad collective bitmap size")
         if bmsize == 0:
             stride = (totwidth + 7) // 8
@@ -1496,99 +1563,27 @@ def _decode_symbol_dict_huffman(seg_data: bytes, flags: int, pos: int,
                 np.frombuffer(raw, np.uint8).reshape(hcheight, stride),
                 axis=1)[:, :totwidth]
         else:
-            from .ccittcodec import CcittError, decode_g4
-
-            raw = r.read_bytes(bmsize)
-            try:
-                gray = decode_g4(raw, totwidth, hcheight)
-            except CcittError as exc:
-                raise Jbig2Error(
-                    f"bad MMR collective bitmap: {exc}") from exc
-            coll = (gray == 0).astype(np.uint8)
+            coll = _mmr_bitmap(r.read_bytes(bmsize), totwidth, hcheight,
+                               "collective bitmap")
         x = 0
         for wd in widths:
             newsyms.append(np.ascontiguousarray(coll[:, x:x + wd]))
             x += wd
-    # export runs (alternating no-export/export, Table B.1)
-    pool = input_syms + newsyms
-    exported: list[np.ndarray] = []
-    exflag = 0
-    i = 0
-    while i < len(pool) and len(exported) <= num_ex:
-        run = t_ex.decode(r)
-        if run is _HUFF_OOB or run < 0:
-            raise Jbig2Error("bad export run")
-        if exflag:
-            exported.extend(pool[i:i + run])
-        i += run
-        exflag ^= 1
-    if len(exported) != num_ex:
-        raise Jbig2Error(
-            f"dictionary exported {len(exported)} != declared {num_ex}")
-    return exported
+    return newsyms
 
 
-def _decode_text_region_huffman(seg_data: bytes, syms: list[np.ndarray],
-                                info: dict, pos: int, flags: int,
-                                custom: list | None = None,
-                                ) -> tuple[dict, np.ndarray]:
-    """SBHUFF=1 text region (T.88 §6.4 with Huffman tables): the strip
-    walk of the arithmetic decoder with table-coded values, a raw-bit
-    CURT residual, and the runcode-built symbol ID code (§7.4.3.1.7).
-    FS/DS/DT selector value 3 takes the next referred custom table
-    (§7.4.4.1.6; the refinement-table selectors stay rejected with
-    SBREFINE)."""
-    sbrefine = (flags >> 1) & 1
-    if sbrefine:
-        raise Jbig2Unsupported("huffman text region with refinement")
-    sbstrips = 1 << ((flags >> 2) & 3)
-    refcorner = (flags >> 4) & 3
-    transposed = (flags >> 6) & 1
-    sbcombop = (flags >> 7) & 3
-    sbdefpixel = (flags >> 9) & 1
-    sbdsoffset = (flags >> 10) & 0x1F
-    if sbdsoffset > 15:
-        sbdsoffset -= 32
-    if pos + 2 > len(seg_data):
-        raise Jbig2Error("truncated huffman text region flags")
-    hflags = struct.unpack_from(">H", seg_data, pos)[0]
-    pos += 2
-    custom = custom if custom is not None else []
-    sel_fs = hflags & 3
-    sel_ds = (hflags >> 2) & 3
-    sel_dt = (hflags >> 4) & 3
-    if sel_fs == 2:
-        raise Jbig2Error("reserved huffman FS table selector")
-    if (hflags >> 6) & 0xFF or (hflags >> 14) & 1:
-        # RDW/RDH/RDX/RDY/RSIZE tables are meaningful only with
-        # SBREFINE, which rejects above
-        raise Jbig2Unsupported("refinement huffman tables in text region")
-    t_fs = _take_table(custom, "FS") if sel_fs == 3 \
-        else _std_table(6 + sel_fs)
-    t_ds = _take_table(custom, "DS") if sel_ds == 3 \
-        else _std_table(8 + sel_ds)
-    t_dt = _take_table(custom, "DT") if sel_dt == 3 \
-        else _std_table(11 + sel_dt)
-    if pos + 4 > len(seg_data):
-        raise Jbig2Error("truncated text region header")
-    num_instances = struct.unpack_from(">I", seg_data, pos)[0]
-    pos += 4
-    w, h = info["w"], info["h"]
-    if w > 1 << 20 or h > 1 << 20 or w * h > 1 << 26 \
-            or num_instances > 1 << 22:
-        raise Jbig2Error("implausible text region")
-    if not syms:
-        raise Jbig2Error("text region with no symbols")
-    r = _BitReader(seg_data[pos:])
-    # symbol ID code lengths via the 35-runcode table (§7.4.3.1.7)
+def _huffman_symbol_ids(r: _BitReader, n_syms: int) -> _HuffTable | None:
+    """SBHUFF symbol ID code (§7.4.3.1.7): 35 runcode lengths, then every
+    symbol's code length run-coded through them → the ID table, or None
+    when a single symbol's ID is implicit.  Leaves ``r`` byte-aligned."""
     runlens = [r.read(4) for _ in range(35)]
     t_run = _HuffTable([("n", ln, 0, i)
                         for i, ln in enumerate(runlens) if ln])
     lens: list[int] = []
     prev = 0
-    while len(lens) < len(syms):
+    while len(lens) < n_syms:
         c = t_run.decode(r)
-        if c is _HUFF_OOB:
+        if c is None:
             raise Jbig2Error("bad symbol-length runcode")
         if c < 32:
             lens.append(c)
@@ -1599,62 +1594,19 @@ def _decode_text_region_huffman(seg_data: bytes, syms: list[np.ndarray],
             lens.extend([0] * (r.read(3) + 3))
         else:
             lens.extend([0] * (r.read(7) + 11))
-    if len(lens) != len(syms):
+    if len(lens) != n_syms:
         raise Jbig2Error("symbol-length run overshoot")
-    t_sym = _HuffTable([("n", ln, 0, i)
-                        for i, ln in enumerate(lens) if ln]) \
-        if len(syms) > 1 else None
     r.byte_align()
-    page = np.full((h, w), sbdefpixel, dtype=np.uint8)
-    log_strips = (sbstrips - 1).bit_length()
-    first_dt = t_dt.decode(r)
-    if first_dt is _HUFF_OOB:
-        raise Jbig2Error("OOB strip T")
-    stript = -first_dt * sbstrips
-    firsts = 0
-    inst = 0
-    while inst < num_instances:
-        dt = t_dt.decode(r)
-        if dt is _HUFF_OOB:
-            raise Jbig2Error("OOB strip T delta")
-        stript += dt * sbstrips
-        dfs = t_fs.decode(r)
-        if dfs is _HUFF_OOB:
-            raise Jbig2Error("OOB first S")
-        firsts += dfs
-        curs = firsts
-        first = True
-        while inst < num_instances:
-            if first:
-                first = False
-            else:
-                ids = t_ds.decode(r)
-                if ids is _HUFF_OOB:
-                    break  # end of strip
-                curs += ids + sbdsoffset
-            curt = r.read(log_strips) if sbstrips > 1 else 0
-            ti = stript + curt
-            if t_sym is None:
-                sid = 0
-            else:
-                sid = t_sym.decode(r)
-                if sid is _HUFF_OOB:
-                    raise Jbig2Error("OOB symbol id")
-            if not 0 <= sid < len(syms):
-                raise Jbig2Error(f"symbol id {sid} out of range")
-            sym = syms[sid]
-            curs = _draw_instance(page, sym, int(curs), int(ti),
-                                  refcorner, transposed, sbcombop)
-            inst += 1
-    return info, page
+    return _HuffTable([("n", ln, 0, i) for i, ln in enumerate(lens) if ln]) \
+        if n_syms > 1 else None
 
 
 def _draw_instance(page: np.ndarray, sym: np.ndarray, curs: int,
                    ti: int, refcorner: int, transposed: int,
                    sbcombop: int) -> int:
-    """Place one symbol instance per §6.4.5 (REFCORNER/TRANSPOSED
-    semantics shared by the arithmetic and huffman text decoders);
-    returns the advanced S coordinate."""
+    """Place one symbol instance of the strip walk per §6.4.5
+    (REFCORNER / TRANSPOSED semantics); returns the advanced S
+    coordinate."""
     h, w = page.shape
     hi, wi = sym.shape
 
@@ -1888,13 +1840,7 @@ def _parse_refinement_segment(seg_data: bytes,
     tpgron = bool(flags & 2)
     at = _REF_NOMINAL_AT
     if template == 0:
-        if pos + 4 > len(seg_data):
-            raise Jbig2Error("truncated refinement AT pixels")
-        at = tuple(
-            (struct.unpack_from("b", seg_data, pos + 2 * i)[0],
-             struct.unpack_from("b", seg_data, pos + 2 * i + 1)[0])
-            for i in range(2))
-        pos += 4
+        at, pos = _at_pixels(seg_data, pos, 2, "refinement AT pixels")
     w, h = info["w"], info["h"]
     if w > 1 << 20 or h > 1 << 20 or w * h > 1 << 26:
         raise Jbig2Error(f"implausible refinement region {w}x{h}")
@@ -1920,13 +1866,8 @@ def _decode_pattern_dict(seg_data: bytes) -> list[np.ndarray]:
         raise Jbig2Error("implausible pattern dictionary")
     width = (graymax + 1) * hdpw
     if flags & 1:  # HDMMR
-        from .ccittcodec import CcittError, decode_g4
-
-        try:
-            gray = decode_g4(seg_data[7:], width, hdph)
-        except CcittError as exc:
-            raise Jbig2Error(f"bad MMR pattern dictionary: {exc}") from exc
-        collective = (gray == 0).astype(np.uint8)
+        collective = _mmr_bitmap(seg_data[7:], width, hdph,
+                                 "pattern dictionary")
     else:
         at = ((-hdpw, 0),) + (((-3, -1), (2, -2), (-2, -2))
                               if template == 0 else ())
@@ -2182,21 +2123,9 @@ def _decode_generic_segment(seg_data: bytes) -> tuple[dict, np.ndarray]:
     if w > 1 << 20 or h > 1 << 20 or w * h > 1 << 26:
         raise Jbig2Error(f"implausible region {w}x{h}")
     if mmr:
-        from .ccittcodec import CcittError, decode_g4
-
-        try:
-            gray = decode_g4(seg_data[pos:], w, h)
-        except CcittError as exc:
-            raise Jbig2Error(f"bad MMR generic region: {exc}") from exc
-        return info, (gray == 0).astype(np.uint8)
-    n_at = 4 if template == 0 else 1
-    if pos + 2 * n_at > len(seg_data):
-        raise Jbig2Error("truncated AT pixels")
-    at = tuple(
-        (struct.unpack_from("b", seg_data, pos + 2 * i)[0],
-         struct.unpack_from("b", seg_data, pos + 2 * i + 1)[0])
-        for i in range(n_at))
-    pos += 2 * n_at
+        return info, _mmr_bitmap(seg_data[pos:], w, h, "generic region")
+    at, pos = _at_pixels(seg_data, pos, 4 if template == 0 else 1,
+                         "AT pixels")
     mq = _MQDecoder(seg_data[pos:])
     return info, _decode_generic(mq, w, h, template, at, tpgdon)
 

@@ -47,6 +47,7 @@ from typing import Any
 
 from ..functions.afm import FALLBACK_UNITS, HELVETICA_WIDTHS
 from .glyphs import STANDARD, base_encoding_map, glyph_to_unicode
+from .pdfbin import HEADER_SCAN, MAGIC
 
 __all__ = ["extract_page_images", "is_real_pdf", "parse_real_pdf"]
 
@@ -69,17 +70,12 @@ class _Name(str):
     __slots__ = ()
 
 
-#: pdf.js-style header recovery: real-world crawl PDFs frequently carry
-#: leading junk (HTTP garbage, BOM) before %PDF-; tolerate it within the
-#: first 1 KiB like pdf.js does instead of rejecting the document.
-_HEADER_SCAN = 1024
-
-
 def _header_offset(data: bytes) -> int:
-    """Offset of the %PDF- magic within the first 1 KiB, or -1."""
-    if data[:5] == b"%PDF-":
+    """Offset of the %PDF- magic within pdfbin's header-recovery window
+    (leading junk tolerated like pdf.js does), or -1."""
+    if data[:5] == MAGIC:
         return 0
-    return data.find(b"%PDF-", 0, _HEADER_SCAN)
+    return data.find(MAGIC, 0, HEADER_SCAN)
 
 
 def is_real_pdf(data: bytes) -> bool:

@@ -1162,6 +1162,44 @@ class TestHuffman:
         with pytest.raises(Jbig2Error):
             jb._decode_text_region(seg, sym)
 
+    def test_striped_transposed_text_region_decodes(self):
+        # hand-author an SBHUFF=1 TRANSPOSED=1 TOPLEFT region with
+        # SBSTRIPS=4: S runs down rows, T across columns, and each
+        # instance's CURT is a raw 2-bit residual added to STRIPT
+        s0 = np.array([[1, 1], [1, 0], [1, 1]], dtype=np.uint8)
+        s1 = np.array([[1, 0, 1], [0, 1, 0]], dtype=np.uint8)
+        t_fs, t_ds, t_dt = jb._std_table(6), jb._std_table(8), \
+            jb._std_table(11)
+        bw = jb._BitWriter()
+        for i in range(35):             # runcode 1 is the 1-bit code 0
+            bw.write(1 if i == 1 else 0, 4)
+        bw.write(0, 2)                  # both symbol ID codes 1 bit long
+        bw.byte_align()
+        t_dt.encode(bw, 1)              # STRIPT = -1 * 4
+        t_dt.encode(bw, 2)              # strip at T = -4 + 2 * 4 = 4
+        t_fs.encode(bw, 2)              # FIRSTS = 2: s0 at y=2, x=4+1
+        bw.write(1, 2)
+        bw.write(0, 1)
+        t_ds.encode(bw, 6)              # curs 2+3-1=4 → 10: s1 at x=4+3
+        bw.write(3, 2)
+        bw.write(1, 1)
+        t_ds.encode_oob(bw)
+        t_dt.encode(bw, 1)              # strip at T = 8
+        t_fs.encode(bw, -1)             # FIRSTS = 1: s0 at y=1, x=8+2
+        bw.write(2, 2)
+        bw.write(0, 1)
+        region_info = struct.pack(">IIIIB", 16, 16, 0, 0, 0)
+        flags = 1 | (2 << 2) | (1 << 4) | (1 << 6)  # LOGSBSTRIPS=2, TL
+        seg = (region_info + struct.pack(">H", flags)
+               + struct.pack(">H", 0)   # B.6 / B.8 / B.11
+               + struct.pack(">I", 3) + bw.flush())
+        _info, bm = jb._decode_text_region(seg, [s0, s1])
+        want = np.zeros((16, 16), np.uint8)
+        want[2:5, 5:7] |= s0
+        want[10:12, 7:10] |= s1
+        want[1:4, 10:12] |= s0
+        assert np.array_equal(bm, want)
+
     def test_ocr_extraction_through_huffman_pdf(self):
         from pdf_ocr_engine_spark.core.extract_doc import extract_document
         from pdf_ocr_engine_spark.core.pdfscan import build_pixel_scanned_pdf
