@@ -142,8 +142,9 @@ _MODE_ID = {("v", 0): _M_V0, ("v", 1): _M_VR1, ("v", 2): _M_VR2,
 
 
 def _build_mode_lut() -> list[int]:
-    """7-bit lookahead → ``(code_length << 4) | mode_id``; the all-zero
-    prefix (EOL territory) maps to ``_M_EXT`` for explicit handling."""
+    """7-bit lookahead → ``(code_length << 4) | mode_id``; the prefixes no
+    mode code covers — all-zero (EOL territory) and ``0000001`` (the T.6
+    extension code) — map to ``_M_EXT`` for explicit handling."""
     lut = [0] * 128
     for code, key in _MODE_CODES.items():
         ln = len(code)
@@ -152,10 +153,8 @@ def _build_mode_lut() -> list[int]:
             if lut[v]:
                 raise AssertionError("mode code collision")
             lut[v] = (ln << 4) | _MODE_ID[key]
-    if lut[0]:
-        raise AssertionError("EOL prefix not free")
-    lut[0] = _M_EXT  # 0000000: EOL / EOFB / corrupt
-    return lut
+    # 0000000: EOL / EOFB / corrupt; 0000001: extension / corrupt
+    return [e or _M_EXT for e in lut]
 
 
 def _build_run_lut(term: list[str], makeup: dict[int, str]) -> list[int]:
@@ -282,9 +281,10 @@ def _g4_lines(look: list[int], nbits: int, bitpos: int, columns: int,
 
 
 def _read_run(look: list[int], nbits: int, bitpos: int,
-              color: int) -> tuple[int, int]:
+              color: int, codec: str) -> tuple[int, int]:
     """One MH run length (makeup chain + terminating code) starting at
-    ``bitpos`` → ``(run, new_bitpos)``."""
+    ``bitpos`` → ``(run, new_bitpos)``; ``codec`` names the stream in
+    truncation errors."""
     lut = _BLACK_LUT if color else _WHITE_LUT
     total = 0
     while True:
@@ -293,7 +293,7 @@ def _read_run(look: list[int], nbits: int, bitpos: int,
         if e == 0:
             raise CcittError(
                 "invalid run-length code" if bitpos + 13 <= nbits
-                else "truncated G4 data")
+                else f"truncated {codec} data")
         bitpos += e >> 16
         total += e & 0xFFF
         if not e & 0x1000:  # terminating code ends the run
@@ -330,7 +330,7 @@ def _decode_1d_line(look: list[int], nbits: int, bitpos: int,
     color = 0
     n_runs = 0
     while pos < w:
-        run, bitpos = _read_run(look, nbits, bitpos, color)
+        run, bitpos = _read_run(look, nbits, bitpos, color, "G3")
         if bitpos > nbits:
             # zero-padded lookahead can alias a cut codeword to a valid
             # run — reads past the real data are truncation, not pixels
@@ -382,9 +382,9 @@ def _decode_2d_line(look: list[int], nbits: int, bitpos: int,
             a0 = b2
         elif mode == _M_HORIZ:
             start = a0 if a0 > 0 else 0
-            r1 = _read_run(look, nbits, bitpos, color)
+            r1 = _read_run(look, nbits, bitpos, color, codec)
             bitpos = r1[1]
-            r2 = _read_run(look, nbits, bitpos, color ^ 1)
+            r2 = _read_run(look, nbits, bitpos, color ^ 1, codec)
             bitpos = r2[1]
             a1 = start + r1[0]
             a2 = a1 + r2[0]

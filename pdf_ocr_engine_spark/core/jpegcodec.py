@@ -24,7 +24,15 @@ Scope (everything baseline PDF scanners actually emit):
   multimodal tier consume, and skipping chroma IDCT halves the work;
 * lossless, arithmetic-coded and 12-bit streams raise
   :class:`JpegUnsupported` — the caller's optional-PIL tier takes
-  those when PIL exists, else the row is undecodable data.
+  those when PIL exists, else the row is undecodable data; any other
+  malformed input raises :class:`JpegError`, never an ``IndexError``.
+
+Decoder shape: each SOF builds one ``_Frame`` (geometry, the luma
+coefficient grid, and the block plan of one MCU).  The sequential scan
+(``_decode_scan``) is one loop over the MCUs; each progressive scan
+(``_decode_prog_scan``) refines the same grid in one loop over its
+units; one ``_restart`` check serves every loop, and ``_Frame.finish``
+runs the one batched dequant + IDCT.
 
 The encoder (:func:`encode_jpeg_gray` / :func:`encode_jpeg_rgb`) is the
 fixture-authoring side: standard Annex K tables, quality scaling per the
@@ -132,7 +140,9 @@ def _entropy_stream(data: bytes, pos: int, any_marker: bool = False,
 
     Returns ``(look, nbits, restarts, end)`` where ``look[i]`` is the
     32-bit big-endian word of clean bytes ``i..i+3`` (zero-padded past the
-    end — every decode checks ``nbits`` at block granularity), ``nbits``
+    end by more than any one block or MCU can read — at most 64 codes of
+    ≤ 31 bits — and every decode checks ``nbits`` per block or MCU, so
+    a read past the data ends as "entropy data exhausted"), ``nbits``
     the clean bit count, ``restarts`` the ``(clean_byte_offset, rst_id)``
     of each RSTn marker removed from the stream, and ``end`` the offset in
     ``data`` of the terminating marker's 0xFF (``len(data)`` when the
@@ -175,7 +185,7 @@ def _entropy_stream(data: bytes, pos: int, any_marker: bool = False,
         clean_len += arr.size - start
     clean = (np.concatenate(segments) if segments
              else np.empty(0, np.uint8))
-    padded = np.concatenate([clean, np.zeros(4, np.uint8)])
+    padded = np.concatenate([clean, np.zeros(260, np.uint8)])
     p32 = padded.astype(np.uint32)
     look = ((p32[:-3] << 24) | (p32[1:-2] << 16)
             | (p32[2:-1] << 8) | p32[3:]).tolist()
@@ -187,93 +197,116 @@ def _entropy_stream(data: bytes, pos: int, any_marker: bool = False,
 # --------------------------------------------------------------------------
 
 
-def _luma_plane(lum_zig: np.ndarray, lum_slots: list, lum_qt: np.ndarray,
-                mcux: int, mcuy: int, lh: int, lv: int,
-                hmax: int, vmax: int, w: int, h: int) -> np.ndarray:
-    """Shared decode tail: batched dequant (zigzag order) + zigzag→natural
-    + IDCT (``C.T @ S @ C``), level shift, clip, crop/upsample to frame."""
-    n_blocks = len(lum_slots)
-    dq = lum_zig[:n_blocks] * lum_qt
-    nat = np.zeros((n_blocks, 64), dtype=np.float64)
-    nat[:, ZIGZAG] = dq
-    coefs = nat.reshape(n_blocks, 8, 8)
-    spatial = np.einsum("ux,nuv,vy->nxy", _C, coefs, _C,
-                        optimize=True) + 128.0
-    blocks = np.clip(np.rint(spatial), 0, 255).astype(np.uint8)
-    plane_h, plane_w = mcuy * lv * 8, mcux * lh * 8
-    plane = np.zeros((plane_h, plane_w), dtype=np.uint8)
-    for i, (brow, bcol) in enumerate(lum_slots):
-        plane[brow * 8:brow * 8 + 8, bcol * 8:bcol * 8 + 8] = blocks[i]
-    # luma plane resolution vs frame: ceil(w*lh/hmax) — crop, then
-    # upsample if luma itself is subsampled (unusual but legal)
-    comp_w = (w * lh + hmax - 1) // hmax
-    comp_h = (h * lv + vmax - 1) // vmax
-    plane = plane[:comp_h, :comp_w]
-    if comp_w != w or comp_h != h:
-        ys = (np.arange(h, dtype=np.int64) * comp_h) // h
-        xs = (np.arange(w, dtype=np.int64) * comp_w) // w
-        plane = plane[ys][:, xs]
-    return plane
+class _Frame:
+    """One frame (T.81 A.1-A.2) parsed from its SOF body: the geometry,
+    the luma coefficient grid every scan writes into, and ``blocks``, the
+    blocks of one MCU in coding order as ``(component index, grid
+    offset)`` — offset -1 for chroma, whose coefficients are not kept.
 
+    ``coef`` holds the MCU-padded luma grid row-major by block, in zigzag
+    order; ``finish`` runs the one batched dequant + IDCT over it."""
 
-class _ProgState:
-    """Accumulated coefficient state across a progressive frame's scans
-    (T.81 Annex G): the luma component's full MCU-padded block grid in
-    zigzag order; successive scans refine it and ``finish`` runs the one
-    batched IDCT.  Chroma scans are parsed only as far as needed to stay
-    in sync (interleaved DC) or skipped wholesale (single-component
-    scans are delimited by the next marker)."""
-
-    def __init__(self, frame) -> None:
-        h, w, comps = frame
+    def __init__(self, sof: bytes) -> None:
+        if sof and sof[0] != 8:
+            raise JpegUnsupported(f"{sof[0]}-bit samples")
+        if len(sof) < 6:
+            raise JpegError("short SOF")
+        h, w = struct.unpack(">HH", sof[1:5])
+        ncomp = sof[5]
+        if not (1 <= ncomp <= 4):
+            raise JpegError(f"bad component count {ncomp}")
+        if len(sof) < 6 + 3 * ncomp:
+            raise JpegError("short SOF")
+        comps = [(sof[6 + 3 * i], sof[7 + 3 * i] >> 4, sof[7 + 3 * i] & 15,
+                  sof[8 + 3 * i]) for i in range(ncomp)]
         if h == 0 or w == 0:
             raise JpegError(f"bad dimensions {w}x{h}")
-        self.h, self.w, self.comps = h, w, comps
-        self.hmax = max(c[1] for c in comps)
-        self.vmax = max(c[2] for c in comps)
-        if not (1 <= self.hmax <= 4 and 1 <= self.vmax <= 4):
+        if not all(1 <= c[1] <= 4 and 1 <= c[2] <= 4 for c in comps):
             raise JpegError("bad sampling factors")
-        self.mcux = (w + 8 * self.hmax - 1) // (8 * self.hmax)
-        self.mcuy = (h + 8 * self.vmax - 1) // (8 * self.vmax)
+        if len({c[0] for c in comps}) != ncomp:
+            raise JpegError("duplicate component id")
+        self.h, self.w, self.comps = h, w, comps
+        hmax = max(c[1] for c in comps)
+        vmax = max(c[2] for c in comps)
+        self.mcux = (w + 8 * hmax - 1) // (8 * hmax)
+        self.mcuy = (h + 8 * vmax - 1) // (8 * vmax)
+        # the first frame component is Y by convention
         _cid, self.lh, self.lv, self.ltq = comps[0]
         self.gw = self.mcux * self.lh          # padded luma grid
         self.gh = self.mcuy * self.lv
-        comp_w = (w * self.lh + self.hmax - 1) // self.hmax
-        comp_h = (h * self.lv + self.vmax - 1) // self.vmax
-        self.cbw = (comp_w + 7) // 8           # true luma block grid
-        self.cbh = (comp_h + 7) // 8
+        self.comp_w = (w * self.lh + hmax - 1) // hmax
+        self.comp_h = (h * self.lv + vmax - 1) // vmax
+        self.cbw = (self.comp_w + 7) // 8      # true luma block grid
+        self.cbh = (self.comp_h + 7) // 8
         self.coef = np.zeros((self.gh * self.gw, 64), dtype=np.int64)
+        self.blocks = [(ci, by * self.gw + bx if ci == 0 else -1)
+                       for ci, (_c, hs, vs, _t) in enumerate(comps)
+                       for by in range(vs) for bx in range(hs)]
         self.any_scan = False
-        #: (Ss, Al) already seen per band start — duplicate-scan guard is
-        #: NOT enforced (writers vary); kept for debuggability only
-        self.seen: list[tuple[int, int, int]] = []
 
     def finish(self, qt: dict) -> np.ndarray:
+        """Batched dequant (zigzag order) + zigzag→natural + IDCT
+        (``C.T @ S @ C``), level shift, clip; one reshape places every
+        block, then crop/upsample the luma plane to the frame."""
         lum_qt = qt.get(self.ltq)
         if lum_qt is None:
             raise JpegError(f"missing quant table {self.ltq}")
-        slots = [(r, c) for r in range(self.gh) for c in range(self.gw)]
-        return _luma_plane(self.coef, slots, lum_qt, self.mcux, self.mcuy,
-                           self.lh, self.lv, self.hmax, self.vmax,
-                           self.w, self.h)
+        nat = np.zeros((self.gh * self.gw, 64), dtype=np.float64)
+        nat[:, ZIGZAG] = self.coef * lum_qt
+        spatial = np.einsum("ux,nuv,vy->nxy", _C, nat.reshape(-1, 8, 8), _C,
+                            optimize=True) + 128.0
+        blocks = np.clip(np.rint(spatial), 0, 255).astype(np.uint8)
+        plane = blocks.reshape(self.gh, self.gw, 8, 8).transpose(0, 2, 1, 3) \
+            .reshape(self.gh * 8, self.gw * 8)
+        # luma plane resolution vs frame: ceil(w*lh/hmax) — crop, then
+        # upsample if luma itself is subsampled (unusual but legal)
+        plane = plane[:self.comp_h, :self.comp_w]
+        if self.comp_w != self.w or self.comp_h != self.h:
+            ys = (np.arange(self.h, dtype=np.int64) * self.comp_h) // self.h
+            xs = (np.arange(self.w, dtype=np.int64) * self.comp_w) // self.w
+            plane = plane[ys][:, xs]
+        return plane
 
 
-def _decode_prog_scan(data: bytes, pos: int, prog: _ProgState,
-                      sos_body: bytes, huff_dc, huff_ac, dri: int) -> int:
+def _scan_header(sos: bytes) -> tuple[list[tuple[int, int, int]], bytes]:
+    """SOS body → ``([(cid, td, ta), ...], rest)``; ``rest`` starts at
+    Ss, Se, AhAl (which only progressive scans read)."""
+    ns = sos[0] if sos else 0
+    if len(sos) < 1 + 2 * ns:
+        raise JpegError("short SOS")
+    scomps = [(sos[1 + 2 * i], sos[2 + 2 * i] >> 4, sos[2 + 2 * i] & 15)
+              for i in range(ns)]
+    return scomps, sos[1 + 2 * ns:]
+
+
+def _restart(restarts: list[tuple[int, int]], i: int, bitpos: int) -> int:
+    """Byte-align onto the ``i``-th RSTn that ``_entropy_stream`` removed
+    → the bit position after it."""
+    if i >= len(restarts):
+        raise JpegError("expected restart marker")
+    off, rid = restarts[i]
+    if rid != i & 7:
+        raise JpegError(f"restart marker out of order: 0xFFD{rid}, "
+                        f"expected 0xFFD{i & 7}")
+    if bitpos > off * 8:
+        raise JpegError("entropy data overran restart marker")
+    return off * 8
+
+
+def _decode_prog_scan(data: bytes, pos: int, fr: _Frame, sos_body: bytes,
+                      huff_dc, huff_ac, dri: int) -> int:
     """One progressive scan (T.81 G.2) → returns the offset of the marker
-    that ends it.  Updates ``prog.coef`` for luma; single-component chroma
-    scans are skipped without decoding (their entropy data is delimited by
-    the next marker, so bit-level sync is not needed)."""
-    ns = sos_body[0]
-    scomps = [(sos_body[1 + 2 * i], sos_body[2 + 2 * i] >> 4,
-               sos_body[2 + 2 * i] & 15) for i in range(ns)]
-    ss = sos_body[1 + 2 * ns]
-    se = sos_body[2 + 2 * ns]
-    ah_al = sos_body[3 + 2 * ns]
-    ah, al = ah_al >> 4, ah_al & 15
-    luma_cid = prog.comps[0][0]
-    prog.any_scan = True
-    prog.seen.append((ss, se, al))
+    that ends it.  Refines ``fr.coef`` for luma: a single-component scan
+    walks the true luma block grid, an interleaved DC scan walks the MCUs
+    through ``fr.blocks``; single-component chroma scans are skipped
+    without decoding (their entropy data is delimited by the next marker,
+    so bit-level sync is not needed)."""
+    scomps, rest = _scan_header(sos_body)
+    if len(rest) < 3:
+        raise JpegError("short SOS")
+    ss, se, ah, al = rest[0], rest[1], rest[2] >> 4, rest[2] & 15
+    ns = len(scomps)
+    fr.any_scan = True
 
     look, nbits, restarts, end = _entropy_stream(data, pos,
                                                  any_marker=True)
@@ -285,11 +318,10 @@ def _decode_prog_scan(data: bytes, pos: int, prog: _ProgState,
             raise JpegError("AC scan with more than one component")
         if not (1 <= ss <= se <= 63):
             raise JpegError(f"bad spectral band {ss}..{se}")
-    if ns == 1 and scomps[0][0] != luma_cid:
+    if ns == 1 and scomps[0][0] != fr.comps[0][0]:
         return end  # chroma-only scan: nothing to keep, nothing to sync
 
     bitpos = 0
-    rst_i = 0
 
     def huff(lut):
         nonlocal bitpos
@@ -306,70 +338,49 @@ def _decode_prog_scan(data: bytes, pos: int, prog: _ProgState,
         bitpos += nb
         return v
 
-    def restart(unit_idx):
-        nonlocal bitpos, rst_i
-        if not (dri and unit_idx and unit_idx % dri == 0):
-            return False
-        if rst_i >= len(restarts):
-            raise JpegError("expected restart marker")
-        off, rid = restarts[rst_i]
-        rst_i += 1
-        if rid != (rst_i - 1) & 7:
-            raise JpegError("restart marker out of order")
-        if bitpos > off * 8:
-            raise JpegError("entropy data overran restart marker")
-        bitpos = off * 8
-        return True
-
-    coef = prog.coef
-    gw = prog.gw
+    coef = fr.coef
+    gw = fr.gw
+    cbw = fr.cbw
+    p1 = 1 << al
 
     if ss == 0:
         # ---- DC scan (may be interleaved over all frame components) ----
         if ns != 1 and [c[0] for c in scomps] != \
-                [c[0] for c in prog.comps]:
+                [c[0] for c in fr.comps]:
             raise JpegUnsupported("partially interleaved DC scan")
-        tabs = {}
-        for cid, td, _ta in scomps:
+        tabs = []
+        for _cid, td, _ta in scomps:
             if ah == 0 and td not in huff_dc:
                 raise JpegError("missing Huffman table")
-            tabs[cid] = huff_dc.get(td)
-        preds = {cid: 0 for cid, _td, _ta in scomps}
-        p1 = 1 << al
-        if ns == 1:
-            units = prog.cbh * prog.cbw
-        else:
-            units = prog.mcux * prog.mcuy
+            tabs.append(huff_dc.get(td))
+        if ns == 1:  # one unit per block of the true luma grid
+            units, across, down, step = fr.cbh * cbw, cbw, gw, 1
+            plan = [(0, 0)]
+        else:        # one unit per MCU
+            units, across = fr.mcuy * fr.mcux, fr.mcux
+            down, step = fr.lv * gw, fr.lh
+            plan = fr.blocks
+        preds = [0] * ns
         for m in range(units):
-            if restart(m):
-                preds = {cid: 0 for cid in preds}
-            if ns == 1:
-                rows = [(luma_cid, (m // prog.cbw) * gw + (m % prog.cbw))]
-            else:
-                my, mx = divmod(m, prog.mcux)
-                rows = []
-                for cid, hs, vs, _tq in prog.comps:
-                    for by in range(vs):
-                        for bx in range(hs):
-                            idx = ((my * vs + by) * gw + mx * hs + bx) \
-                                if cid == luma_cid else -1
-                            rows.append((cid, idx))
-            for cid, idx in rows:
+            if dri and m and m % dri == 0:
+                bitpos = _restart(restarts, m // dri - 1, bitpos)
+                preds = [0] * ns
+            r, c = divmod(m, across)
+            base = r * down + c * step
+            for ci, off in plan:
                 if ah == 0:  # first DC scan: point-transformed diffs
-                    t = huff(tabs[cid])
+                    t = huff(tabs[ci])
                     if t > 15:
                         raise JpegError("bad DC magnitude")
-                    diff = 0
                     if t:
                         v = bits(t)
-                        diff = v if v >= (1 << (t - 1)) \
+                        preds[ci] += v if v >= (1 << (t - 1)) \
                             else v - (1 << t) + 1
-                    preds[cid] += diff
-                    if idx >= 0:
-                        coef[idx, 0] = preds[cid] << al
+                    if off >= 0:
+                        coef[base + off, 0] = preds[ci] << al
                 else:        # refinement: one bit per block
-                    if bits(1) and idx >= 0:
-                        coef[idx, 0] |= p1
+                    if bits(1) and off >= 0:
+                        coef[base + off, 0] |= p1
             if bitpos > nbits:
                 raise JpegError("entropy data exhausted")
         return end
@@ -379,12 +390,12 @@ def _decode_prog_scan(data: bytes, pos: int, prog: _ProgState,
     if ta not in huff_ac:
         raise JpegError("missing Huffman table")
     ac_lut = huff_ac[ta]
-    p1 = 1 << al
     eobrun = 0
-    for m in range(prog.cbh * prog.cbw):
-        if restart(m):
+    for m in range(fr.cbh * cbw):
+        if dri and m and m % dri == 0:
+            bitpos = _restart(restarts, m // dri - 1, bitpos)
             eobrun = 0
-        row = coef[(m // prog.cbw) * gw + (m % prog.cbw)]
+        row = coef[(m // cbw) * gw + (m % cbw)]
         k = ss
         if ah == 0:
             # -------- first AC scan for this band --------
@@ -456,20 +467,20 @@ def _decode_prog_scan(data: bytes, pos: int, prog: _ProgState,
 
 
 def decode_jpeg_gray(data: bytes) -> np.ndarray:
-    """Baseline JPEG → luma plane as ``uint8 ndarray (h, w)``.
+    """Baseline or progressive JPEG → luma plane as ``uint8 ndarray (h, w)``.
 
-    Decodes the full interleaved scan (all components' entropy data must
-    be walked to stay in sync) but runs IDCT only for the luma component.
-    Raises :class:`JpegUnsupported` for non-baseline coding processes and
-    :class:`JpegError` for malformed data.
+    Decodes every component's entropy data (an interleaved scan must be
+    walked to stay in sync) but keeps and transforms only the luma
+    component.  Raises :class:`JpegUnsupported` for other coding
+    processes and :class:`JpegError` for malformed data.
     """
     if len(data) < 4 or data[:2] != b"\xFF\xD8":
         raise JpegError("not a JPEG (no SOI)")
     qt: dict[int, np.ndarray] = {}
     huff_dc: dict[int, list[int]] = {}
     huff_ac: dict[int, list[int]] = {}
-    frame = None       # (h, w, [(cid, hs, vs, tq), ...])
-    prog = None        # _ProgState when SOF2
+    fr = None          # _Frame of the last SOF
+    progressive = False
     dri = 0
     pos = 2
     n = len(data)
@@ -483,8 +494,8 @@ def decode_jpeg_gray(data: bytes) -> np.ndarray:
         if marker == 0x01 or 0xD0 <= marker <= 0xD7:
             continue  # standalone
         if marker == 0xD9:  # EOI (standalone): ends a progressive frame
-            if prog is not None and prog.any_scan:
-                return prog.finish(qt)
+            if fr is not None and fr.any_scan:
+                return fr.finish(qt)
             raise JpegError("EOI before scan data")
         if pos + 2 > n:
             raise JpegError("truncated marker segment")
@@ -496,18 +507,14 @@ def decode_jpeg_gray(data: bytes) -> np.ndarray:
             p = 0
             while p < len(body):
                 pq, tq_id = body[p] >> 4, body[p] & 15
-                p += 1
-                if pq == 0:
-                    vals = np.frombuffer(
-                        body[p:p + 64], dtype=np.uint8).astype(np.int64)
-                    p += 64
-                else:
-                    vals = np.frombuffer(
-                        body[p:p + 128], dtype=">u2").astype(np.int64)
-                    p += 128
-                if vals.size != 64:
+                size = 64 if pq == 0 else 128
+                raw = body[p + 1:p + 1 + size]
+                p += 1 + size
+                if len(raw) != size:
                     raise JpegError("short DQT")
-                qt[tq_id] = vals
+                qt[tq_id] = np.frombuffer(
+                    raw, dtype=np.uint8 if pq == 0 else ">u2"
+                ).astype(np.int64)
         elif marker == 0xC4:  # DHT
             p = 0
             while p + 17 <= len(body):
@@ -519,120 +526,78 @@ def decode_jpeg_gray(data: bytes) -> np.ndarray:
                 table = _huff_lut(counts, syms)
                 (huff_dc if tc == 0 else huff_ac)[th] = table
         elif marker in (0xC0, 0xC1, 0xC2):  # SOF0/SOF1 baseline, SOF2 prog
-            prec = body[0]
-            if prec != 8:
-                raise JpegUnsupported(f"{prec}-bit samples")
-            h, w = struct.unpack(">HH", body[1:5])
-            ncomp = body[5]
-            if not (1 <= ncomp <= 4):
-                raise JpegError(f"bad component count {ncomp}")
-            comps = []
-            for i in range(ncomp):
-                cid = body[6 + 3 * i]
-                hv = body[7 + 3 * i]
-                comps.append((cid, hv >> 4, hv & 15, body[8 + 3 * i]))
-            frame = (h, w, comps)
-            if marker == 0xC2:
-                prog = _ProgState(frame)
+            frame = _Frame(body)
+            # a baseline SOF after SOF2 is checked but does not replace
+            # the progressive frame the scans refine
+            if marker == 0xC2 or not progressive:
+                fr, progressive = frame, marker == 0xC2
         elif marker in (0xC3, 0xC5, 0xC6, 0xC7,
                         0xC9, 0xCA, 0xCB, 0xCD, 0xCE, 0xCF):
             raise JpegUnsupported(
                 f"coding process SOF{marker - 0xC0} is not baseline "
                 f"or progressive")
         elif marker == 0xDD:  # DRI
+            if len(body) < 2:
+                raise JpegError("short DRI")
             (dri,) = struct.unpack(">H", body[:2])
         elif marker == 0xDA:  # SOS — entropy data follows
-            if frame is None:
+            if fr is None:
                 raise JpegError("SOS before SOF")
-            if prog is None:
-                return _decode_scan(data, pos + seg_len, frame, body,
-                                    qt, huff_dc, huff_ac, dri)
-            pos = _decode_prog_scan(data, pos + seg_len, prog, body,
+            if not progressive:
+                _decode_scan(data, pos + seg_len, fr, body,
+                             qt, huff_dc, huff_ac, dri)
+                return fr.finish(qt)
+            pos = _decode_prog_scan(data, pos + seg_len, fr, body,
                                     huff_dc, huff_ac, dri)
             continue
         # APPn / COM / others: skipped
         pos += seg_len
-    if prog is not None and prog.any_scan:
-        return prog.finish(qt)  # tolerate a missing EOI like some writers
+    if fr is not None and fr.any_scan:
+        return fr.finish(qt)  # tolerate a missing EOI like some writers
     raise JpegError("no SOS marker")
 
 
-def _decode_scan(data: bytes, pos: int, frame, sos_body: bytes,
-                 qt, huff_dc, huff_ac, dri: int) -> np.ndarray:
-    h, w, comps = frame
-    if h == 0 or w == 0:
-        raise JpegError(f"bad dimensions {w}x{h}")
-    ns = sos_body[0]
-    if ns != len(comps):
+def _decode_scan(data: bytes, pos: int, fr: _Frame, sos_body: bytes,
+                 qt, huff_dc, huff_ac, dri: int) -> None:
+    """The one scan of a sequential frame (T.81 F.2) → ``fr.coef``.
+
+    One loop over the MCUs decodes each MCU's ``fr.blocks`` with its
+    component's (DC, AC) tables; luma blocks land in the coefficient
+    grid, chroma blocks in one scratch row that is never read."""
+    if (sos_body[0] if sos_body else 0) != len(fr.comps):
         raise JpegUnsupported("non-interleaved scan")
-    scan_tables = {}
-    for i in range(ns):
-        cid = sos_body[1 + 2 * i]
-        td_ta = sos_body[2 + 2 * i]
-        scan_tables[cid] = (td_ta >> 4, td_ta & 15)
-    hmax = max(c[1] for c in comps)
-    vmax = max(c[2] for c in comps)
-    if hmax < 1 or vmax < 1 or hmax > 4 or vmax > 4:
-        raise JpegError("bad sampling factors")
-    mcux = (w + 8 * hmax - 1) // (8 * hmax)
-    mcuy = (h + 8 * vmax - 1) // (8 * vmax)
-
-    luma = comps[0]  # first frame component is Y by convention
-    lum_cid, lh, lv = luma[0], luma[1], luma[2]
-    lum_qt = qt.get(luma[3])
-    if lum_qt is None:
-        raise JpegError(f"missing quant table {luma[3]}")
-    lum_qt_nat_order = lum_qt  # stored in zigzag order, applied in zigzag
-
-    # per-component scan state
-    state = []
-    for cid, hs, vs, tq in comps:
+    scomps, _rest = _scan_header(sos_body)
+    scan_tables = {cid: (td, ta) for cid, td, ta in scomps}
+    if fr.ltq not in qt:
+        raise JpegError(f"missing quant table {fr.ltq}")
+    luts = []
+    for cid, _hs, _vs, tq in fr.comps:
         if cid not in scan_tables:
             raise JpegError(f"component {cid} missing from scan")
         td, ta = scan_tables[cid]
         if td not in huff_dc or ta not in huff_ac:
             raise JpegError("missing Huffman table")
-        state.append({
-            "cid": cid, "hs": hs, "vs": vs,
-            "dc": huff_dc[td], "ac": huff_ac[ta],
-            "qz": qt.get(tq), "pred": 0,
-            "is_luma": cid == lum_cid,
-        })
-        if state[-1]["qz"] is None:
+        if tq not in qt:
             raise JpegError(f"missing quant table {tq}")
+        luts.append((huff_dc[td], huff_ac[ta]))
+    plan = [(ci, off) + luts[ci] for ci, off in fr.blocks]
 
     look, nbits, restarts, _end = _entropy_stream(data, pos)
     bitpos = 0
-    rst_i = 0
-    # luma blocks accumulate (in zigzag order) for one batched dequant +
-    # IDCT at the end
-    lum_zig = np.zeros((mcuy * lv * mcux * lh, 64), dtype=np.int64)
-    lum_slots: list[tuple[int, int]] = []  # (block_row, block_col)
-    n_mcu = mcux * mcuy
-    if len(state) == 1 and lh == 1 and lv == 1:
-        # single-component 1×1 sampling (every grayscale scanner page):
-        # flat loop, all-local state — ~30% fewer Python ops per block
-        dc_lut = state[0]["dc"]
-        ac_lut = state[0]["ac"]
-        pred = 0
-        rst_next = 0
-        for m in range(n_mcu):
-            if dri and m and m % dri == 0:
-                if rst_next >= len(restarts):
-                    raise JpegError("expected restart marker")
-                off, rid = restarts[rst_next]
-                rst_next += 1
-                if rid != (rst_next - 1) & 7:
-                    raise JpegError(
-                        f"restart marker out of order: 0xFFD{rid}, "
-                        f"expected 0xFFD{(rst_next - 1) & 7}")
-                if bitpos > off * 8:
-                    raise JpegError("entropy data overran restart marker")
-                bitpos = off * 8
-                pred = 0
-            row = lum_zig[m]
-            e = dc_lut[(look[bitpos >> 3]
-                        >> (16 - (bitpos & 7))) & 0xFFFF]
+    coef = fr.coef
+    scratch = [0] * 64
+    mcux = fr.mcux
+    down, step = fr.lv * fr.gw, fr.lh
+    preds = [0] * len(luts)
+    for m in range(mcux * fr.mcuy):
+        if dri and m and m % dri == 0:
+            bitpos = _restart(restarts, m // dri - 1, bitpos)
+            preds = [0] * len(luts)
+        my, mx = divmod(m, mcux)
+        base = my * down + mx * step
+        for ci, off, dc_lut, ac_lut in plan:
+            row = coef[base + off] if off >= 0 else scratch
+            e = dc_lut[(look[bitpos >> 3] >> (16 - (bitpos & 7))) & 0xFFFF]
             if e == 0:
                 raise JpegError("invalid Huffman code")
             bitpos += e >> 8
@@ -645,8 +610,8 @@ def _decode_scan(data: bytes, pos: int, frame, sos_body: bytes,
                 bitpos += t
                 if v < (1 << (t - 1)):
                     v -= (1 << t) - 1
-                pred += v
-            row[0] = pred
+                preds[ci] += v
+            row[0] = preds[ci]
             k = 1
             while k < 64:
                 e = ac_lut[(look[bitpos >> 3]
@@ -673,84 +638,6 @@ def _decode_scan(data: bytes, pos: int, frame, sos_body: bytes,
                 k += 1
             if bitpos > nbits:
                 raise JpegError("entropy data exhausted")
-        lum_slots = [divmod(m, mcux) for m in range(n_mcu)]
-        n_mcu = 0  # interleaved loop below skipped
-    for m in range(n_mcu):
-        if dri and m and m % dri == 0:
-            # byte-align onto the next RSTn removed by _entropy_stream
-            if rst_i >= len(restarts):
-                raise JpegError("expected restart marker")
-            off, rid = restarts[rst_i]
-            rst_i += 1
-            if rid != (rst_i - 1) & 7:
-                raise JpegError(
-                    f"restart marker out of order: 0xFFD{rid}, "
-                    f"expected 0xFFD{(rst_i - 1) & 7}")
-            if bitpos > off * 8:
-                raise JpegError("entropy data overran restart marker")
-            bitpos = off * 8
-            for st in state:
-                st["pred"] = 0
-        my, mx = divmod(m, mcux)
-        for st in state:
-            dc_lut = st["dc"]
-            ac_lut = st["ac"]
-            is_luma = st["is_luma"]
-            for by in range(st["vs"]):
-                for bx in range(st["hs"]):
-                    if is_luma:
-                        idx = len(lum_slots)
-                        row = lum_zig[idx]
-                        lum_slots.append((my * st["vs"] + by,
-                                          mx * st["hs"] + bx))
-                    else:
-                        row = None
-                    e = dc_lut[(look[bitpos >> 3]
-                                >> (16 - (bitpos & 7))) & 0xFFFF]
-                    if e == 0:
-                        raise JpegError("invalid Huffman code")
-                    bitpos += e >> 8
-                    t = e & 0xFF
-                    if t > 15:
-                        raise JpegError("bad DC magnitude")
-                    if t:
-                        v = (look[bitpos >> 3]
-                             >> (32 - (bitpos & 7) - t)) & ((1 << t) - 1)
-                        bitpos += t
-                        if v < (1 << (t - 1)):
-                            v -= (1 << t) - 1
-                        st["pred"] += v
-                    if row is not None:
-                        row[0] = st["pred"]
-                    k = 1
-                    while k < 64:
-                        e = ac_lut[(look[bitpos >> 3]
-                                    >> (16 - (bitpos & 7))) & 0xFFFF]
-                        if e == 0:
-                            raise JpegError("invalid Huffman code")
-                        bitpos += e >> 8
-                        rs = e & 0xFF
-                        s = rs & 15
-                        if s == 0:
-                            if rs == 0xF0:  # ZRL
-                                k += 16
-                                continue
-                            break  # EOB
-                        k += rs >> 4
-                        if k > 63:
-                            raise JpegError("AC run past block end")
-                        v = (look[bitpos >> 3]
-                             >> (32 - (bitpos & 7) - s)) & ((1 << s) - 1)
-                        bitpos += s
-                        if v < (1 << (s - 1)):
-                            v -= (1 << s) - 1
-                        if row is not None:
-                            row[k] = v
-                        k += 1
-                    if bitpos > nbits:
-                        raise JpegError("entropy data exhausted")
-    return _luma_plane(lum_zig, lum_slots, lum_qt_nat_order,
-                       mcux, mcuy, lh, lv, hmax, vmax, w, h)
 
 
 # --------------------------------------------------------------------------

@@ -123,57 +123,9 @@ def _expand_key(key: bytes) -> list[bytes]:
     return [b"".join(words[4 * r:4 * r + 4]) for r in range(11)]
 
 
-def _add_round_key(state: bytearray, rk: bytes) -> None:
-    for i in range(16):
-        state[i] ^= rk[i]
-
-
-def _encrypt_block(block: bytes, round_keys: list[bytes]) -> bytes:
-    s = bytearray(block)
-    _add_round_key(s, round_keys[0])
-    for rnd in range(1, 11):
-        for i in range(16):          # SubBytes
-            s[i] = _SBOX[s[i]]
-        # ShiftRows (column-major state: byte r + 4c)
-        s[1], s[5], s[9], s[13] = s[5], s[9], s[13], s[1]
-        s[2], s[6], s[10], s[14] = s[10], s[14], s[2], s[6]
-        s[3], s[7], s[11], s[15] = s[15], s[3], s[7], s[11]
-        if rnd < 10:                 # MixColumns
-            for c in range(0, 16, 4):
-                a0, a1, a2, a3 = s[c:c + 4]
-                s[c] = _mul(a0, 2) ^ _mul(a1, 3) ^ a2 ^ a3
-                s[c + 1] = a0 ^ _mul(a1, 2) ^ _mul(a2, 3) ^ a3
-                s[c + 2] = a0 ^ a1 ^ _mul(a2, 2) ^ _mul(a3, 3)
-                s[c + 3] = _mul(a0, 3) ^ a1 ^ a2 ^ _mul(a3, 2)
-        _add_round_key(s, round_keys[rnd])
-    return bytes(s)
-
-
-def _decrypt_block(block: bytes, round_keys: list[bytes]) -> bytes:
-    s = bytearray(block)
-    _add_round_key(s, round_keys[10])
-    for rnd in range(9, -1, -1):
-        # InvShiftRows
-        s[1], s[5], s[9], s[13] = s[13], s[1], s[5], s[9]
-        s[2], s[6], s[10], s[14] = s[10], s[14], s[2], s[6]
-        s[3], s[7], s[11], s[15] = s[7], s[11], s[15], s[3]
-        for i in range(16):          # InvSubBytes
-            s[i] = _INV_SBOX[s[i]]
-        _add_round_key(s, round_keys[rnd])
-        if rnd > 0:                  # InvMixColumns
-            for c in range(0, 16, 4):
-                a0, a1, a2, a3 = s[c:c + 4]
-                s[c] = _mul(a0, 14) ^ _mul(a1, 11) ^ _mul(a2, 13) ^ _mul(a3, 9)
-                s[c + 1] = _mul(a0, 9) ^ _mul(a1, 14) ^ _mul(a2, 11) ^ _mul(a3, 13)
-                s[c + 2] = _mul(a0, 13) ^ _mul(a1, 9) ^ _mul(a2, 14) ^ _mul(a3, 11)
-                s[c + 3] = _mul(a0, 11) ^ _mul(a1, 13) ^ _mul(a2, 9) ^ _mul(a3, 14)
-    return bytes(s)
-
-
-# ---- fast paths ----------------------------------------------------------
-# The scalar cipher above is the readable spec reference (and what the
-# FIPS-197 known-answer test pins).  The paths below are the standard
-# public speed constructions over the SAME tables:
+# ---- cipher --------------------------------------------------------------
+# Both directions are the standard public speed constructions over the
+# tables above (the FIPS-197 known-answer test pins each):
 # * encryption: 32-bit T-tables (ShiftRows+SubBytes+MixColumns folded into
 #   four 256-entry word tables) — CBC encryption is inherently sequential
 #   per block, so the per-block constant is what matters;

@@ -101,6 +101,11 @@ class TestErrors:
         with pytest.raises(CcittError):
             decode_g4(enc, 10, 50)
 
+    def test_extension_mode_prefix_is_ccitt_error(self):
+        # 0000001 is the T.6 extension code, not a vertical mode
+        with pytest.raises(CcittError, match="invalid 2-D mode code"):
+            decode_g4(b"\x02\xff\xff\xff", 16, 1)
+
 
 class TestPilInterop:
     """Cross-implementation proof against libtiff's G4 codec when PIL is
@@ -265,6 +270,20 @@ class TestG3:
                         decode_g3(enc[:cut], 64, 12, k=k)
                     except CcittError:
                         pass
+
+    def test_truncation_errors_name_g3(self):
+        rng = np.random.default_rng(21)
+        bm = (rng.random((12, 64)) < 0.3).astype(np.uint8)
+        messages = set()
+        for k, eol in ((0, False), (0, True), (2, True)):
+            enc = encode_g3(bm, k=k, with_eol=eol)
+            for cut in range(1, len(enc)):
+                try:
+                    decode_g3(enc[:cut], 64, 12, k=k)
+                except CcittError as e:
+                    messages.add(str(e))
+        assert "truncated G3 data" in messages
+        assert not any("G4" in m for m in messages), messages
 
     def test_garbage_and_runaway_fill_rejected(self):
         with pytest.raises(CcittError):

@@ -142,6 +142,46 @@ class TestRejections:
             decode_jpeg_gray(bytes(out))
 
 
+class TestMalformedInput:
+    def test_mutated_streams_raise_only_jpeg_error(self):
+        # truncated, bit-flipped and spliced encoder outputs: every failure
+        # must be a JpegError (the callers' data-error contract), never an
+        # IndexError / struct.error / plain ValueError from a short read
+        from pdf_ocr_engine_spark.core.jpegcodec import (
+            encode_jpeg_gray_progressive,
+        )
+
+        rng = np.random.default_rng(15)
+        streams = []
+        for i in range(24):
+            src = rng.integers(0, 256, size=(int(rng.integers(1, 40)),
+                                             int(rng.integers(1, 40)), 3),
+                               dtype=np.uint8)
+            streams.append(encode_jpeg_gray(src[:, :, 0], quality=90,
+                                            restart_interval=i % 3))
+            streams.append(encode_jpeg_gray_progressive(src[:, :, 0]))
+            streams.append(encode_jpeg_rgb(src, subsample=i % 2 == 0))
+        failures = 0
+        for data in streams:
+            for _ in range(12):
+                b = bytearray(data)
+                op = int(rng.integers(0, 3))
+                if op == 0:
+                    b = b[:int(rng.integers(0, len(b)))]
+                elif op == 1:
+                    b[int(rng.integers(0, len(b)))] ^= 1 << int(
+                        rng.integers(0, 8))
+                else:
+                    other = streams[int(rng.integers(0, len(streams)))]
+                    b = b[:int(rng.integers(0, len(b)))] + \
+                        other[int(rng.integers(0, len(other))):]
+                try:
+                    decode_jpeg_gray(bytes(b))
+                except JpegError:
+                    failures += 1
+        assert failures > 100  # the mutations do reach the error paths
+
+
 class TestPdfDctPath:
     def test_dct_scanned_pdf_extracts_identical_text(self):
         from pdf_ocr_engine_spark.core.extract_doc import extract_document
@@ -312,3 +352,89 @@ class TestProgressive:
         pil_back = np.asarray(Image.open(io.BytesIO(buf.getvalue()))
                               .convert("L"))
         assert _err(out, pil_back) <= 1
+
+
+def _prog_dc_stream(dc: list, comps: list, h: int, w: int,
+                    units: list, restart_interval: int = 0) -> bytes:
+    """Hand-assembled SOF2 stream with one interleaved DC-first scan
+    (Al=1) and one DC refinement scan.  ``comps`` lists ``(hs, vs)`` per
+    component; ``dc[ci]`` is that component's block grid of DC values and
+    ``units`` lists the scan's units, each as the ``(ci, row, col)`` of its
+    blocks in coding order."""
+    from pdf_ocr_engine_spark.core.jpegcodec import (
+        _PROG_DC,
+        _BitWriter,
+        _dht_segment,
+        _dqt_segment,
+        _huff_encode_table,
+        _magnitude,
+    )
+
+    dc_tab = _huff_encode_table(*_PROG_DC)
+    ncomp = len(comps)
+    out = bytearray(b"\xFF\xD8")
+    out += _dqt_segment(0, np.ones(64, dtype=np.int64))
+    out += _dht_segment(0, 0, _PROG_DC)
+    sof = bytes([8]) + h.to_bytes(2, "big") + w.to_bytes(2, "big") + \
+        bytes([ncomp])
+    for ci, (hs, vs) in enumerate(comps):
+        sof += bytes([ci + 1, (hs << 4) | vs, 0])
+    out += b"\xFF\xC2" + (len(sof) + 2).to_bytes(2, "big") + sof
+    if restart_interval:
+        out += b"\xFF\xDD\x00\x04" + restart_interval.to_bytes(2, "big")
+    for ah, al in ((0, 1), (1, 0)):
+        sos = bytes([ncomp]) + b"".join(bytes([ci + 1, 0x00])
+                                        for ci in range(ncomp))
+        sos += bytes([0, 0, (ah << 4) | al])
+        out += b"\xFF\xDA" + (len(sos) + 2).to_bytes(2, "big") + sos
+        bw = _BitWriter()
+        preds = [0] * ncomp
+        for m, unit in enumerate(units):
+            if restart_interval and m and m % restart_interval == 0:
+                bw.pad()
+                bw.out += bytes([0xFF, 0xD0 + (m // restart_interval - 1) % 8])
+                preds = [0] * ncomp
+            for ci, r, c in unit:
+                v = int(dc[ci][r, c])
+                if ah:
+                    bw.write(v & 1, 1)
+                    continue
+                t, bits = _magnitude((v >> 1) - preds[ci])
+                preds[ci] = v >> 1
+                bw.write(*dc_tab[t])
+                if t:
+                    bw.write(bits, t)
+        bw.pad()
+        out += bw.out
+    return bytes(out) + b"\xFF\xD9"
+
+
+class TestProgressiveInterleavedDc:
+    """The interleaved DC scan walks each MCU's block plan: luma 2×2 and
+    two 1×1 chroma components, so four luma blocks then Cb then Cr per
+    MCU; chroma is decoded to stay in sync and then dropped."""
+
+    @pytest.mark.parametrize("restart_interval", [0, 2])
+    def test_matches_single_component_luma(self, restart_interval):
+        rng = np.random.default_rng(31)
+        h, w = 24, 40           # MCU 16×16: 2×3 MCUs, padded luma 4×6
+        mcuy, mcux = 2, 3
+        # multiples of 8: a DC-only block decodes to exactly dc/8 + 128
+        luma = 8 * rng.integers(-15, 16, size=(2 * mcuy, 2 * mcux))
+        cb = rng.integers(-200, 200, size=(mcuy, mcux))
+        cr = rng.integers(-200, 200, size=(mcuy, mcux))
+        mcus = [[(0, 2 * my + by, 2 * mx + bx)
+                 for by in range(2) for bx in range(2)]
+                + [(1, my, mx), (2, my, mx)]
+                for my in range(mcuy) for mx in range(mcux)]
+        three = _prog_dc_stream([luma, cb, cr], [(2, 2), (1, 1), (1, 1)],
+                                h, w, mcus, restart_interval)
+        cbh, cbw = 3, 5         # true luma block grid of a 24×40 frame
+        blocks = [[(0, r, c)] for r in range(cbh) for c in range(cbw)]
+        one = _prog_dc_stream([luma], [(1, 1)], h, w, blocks,
+                              restart_interval)
+        got = decode_jpeg_gray(three)
+        assert got.shape == (h, w)
+        assert (got == decode_jpeg_gray(one)).all()
+        want = np.kron(luma // 8 + 128, np.ones((8, 8), np.int64))[:h, :w]
+        assert (got == want).all()

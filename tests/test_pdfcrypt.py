@@ -8,13 +8,15 @@ the FIPS-197 known-answer vector (public spec test data).
 
 from __future__ import annotations
 
+import numpy as np
 import pytest
 
 from pdf_ocr_engine_spark.core.extract_doc import extract_document
 from pdf_ocr_engine_spark.core.pdfcrypt import (
     EncryptedPdfError,
-    _decrypt_block,
-    _encrypt_block,
+    _decrypt_blocks_np,
+    _enc_key_words,
+    _encrypt_block_fast,
     _expand_key,
     aes_cbc_decrypt,
     aes_cbc_encrypt,
@@ -38,9 +40,9 @@ class TestPrimitives:
         key = bytes.fromhex("000102030405060708090a0b0c0d0e0f")
         pt = bytes.fromhex("00112233445566778899aabbccddeeff")
         ct = bytes.fromhex("69c4e0d86a7b0430d8cdb78070b4c55a")
-        rks = _expand_key(key)
-        assert _encrypt_block(pt, rks) == ct
-        assert _decrypt_block(ct, rks) == pt
+        assert _encrypt_block_fast(pt, _enc_key_words(key)) == ct
+        blocks = np.frombuffer(ct, dtype=np.uint8).reshape(1, 16)
+        assert _decrypt_blocks_np(blocks, _expand_key(key)).tobytes() == pt
 
     def test_aes_cbc_roundtrip_sizes(self):
         key = bytes(range(16))
