@@ -5,7 +5,8 @@ PIL (the reference hands all raster work to ``sharp``,
 ``/root/reference/src/lib/ocr/ocr.ts:67-71``).  The format is fully
 public (GIF89a specification + LZW as described there): logical screen
 descriptor, global/local color tables, sub-block chains, and variable-
-width LSB-first LZW with CLEAR/EOI codes.  This module decodes the
+width LSB-first LZW with CLEAR/EOI codes (decoded by the LZW that PDF
+streams share, ``filters.lzw_decode``).  This module decodes the
 FIRST image descriptor — pixel *content* is what the multimodal tier
 consumes (luma for embeddings/OCR); animation compositing is out of
 scope and later frames are ignored.
@@ -32,6 +33,8 @@ from __future__ import annotations
 import struct
 
 import numpy as np
+
+from .filters import lzw_decode
 
 __all__ = [
     "GifError",
@@ -60,55 +63,6 @@ def _sub_blocks(data: bytes, pos: int) -> tuple[bytes, int]:
             raise GifError("truncated sub-block")
         parts.append(data[pos:pos + ln])
         pos += ln
-
-
-def _lzw_decode(payload: bytes, min_code_size: int, n_pixels: int) -> bytes:
-    """GIF LZW (LSB-first variable-width codes) → index bytes."""
-    if not 2 <= min_code_size <= 8:
-        raise GifError(f"bad LZW minimum code size {min_code_size}")
-    clear = 1 << min_code_size
-    eoi = clear + 1
-    base = [bytes([i]) for i in range(clear)] + [b"", b""]
-    table = list(base)
-    width = min_code_size + 1
-    out = bytearray()
-    prev: bytes | None = None
-    bitbuf = 0
-    bitcnt = 0
-    pos = 0
-    n = len(payload)
-    while len(out) < n_pixels:
-        while bitcnt < width:
-            if pos >= n:
-                raise GifError("LZW data exhausted before image complete")
-            bitbuf |= payload[pos] << bitcnt
-            bitcnt += 8
-            pos += 1
-        code = bitbuf & ((1 << width) - 1)
-        bitbuf >>= width
-        bitcnt -= width
-        if code == clear:
-            table = list(base)
-            width = min_code_size + 1
-            prev = None
-            continue
-        if code == eoi:
-            break
-        if code < len(table) and code != clear and code != eoi:
-            entry = table[code]
-            if not entry:
-                raise GifError(f"reference to empty code {code}")
-        elif code == len(table) and prev is not None:
-            entry = prev + prev[:1]
-        else:
-            raise GifError(f"LZW code {code} out of range")
-        out += entry
-        if prev is not None and len(table) < 4096:
-            table.append(prev + entry[:1])
-            if len(table) == (1 << width) and width < 12:
-                width += 1
-        prev = entry
-    return bytes(out[:n_pixels])
 
 
 #: interlaced GIF row passes: (start, step)
@@ -172,8 +126,13 @@ def decode_gif_gray(data: bytes) -> np.ndarray:
         mcs = data[pos]
         pos += 1
         payload, pos = _sub_blocks(data, pos)
-        idx = np.frombuffer(
-            _lzw_decode(payload, mcs, iw * ih), np.uint8)
+        if not 2 <= mcs <= 8:
+            raise GifError(f"bad LZW minimum code size {mcs}")
+        try:
+            idx = lzw_decode(payload, mcs, False, 0, iw * ih)
+        except ValueError as exc:
+            raise GifError(str(exc)) from exc
+        idx = np.frombuffer(idx, np.uint8)
         if idx.size != iw * ih:
             raise GifError(
                 f"decoded {idx.size} of {iw * ih} pixels")
@@ -210,7 +169,8 @@ def decode_gif_gray(data: bytes) -> np.ndarray:
 
 
 def _lzw_encode(indices: bytes, min_code_size: int) -> bytes:
-    """GIF LZW encoder — width-growth mirror of :func:`_lzw_decode`,
+    """GIF LZW encoder — width-growth mirror of
+    :func:`.filters.lzw_decode` (LSB-first, no early change),
     CLEAR emitted before the table would pass 4096 entries."""
     clear = 1 << min_code_size
     eoi = clear + 1

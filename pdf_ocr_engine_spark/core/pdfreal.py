@@ -16,9 +16,10 @@ Scope — the deterministic text layer only (no rasterizing, no OCR):
 * object graph: classic ``N G obj`` scan (robust to broken xref tables —
   the index is rebuilt from the bytes, last definition wins, mirroring
   pdf.js recovery mode) plus compressed object streams (``/Type /ObjStm``);
-* filters: FlateDecode (with PNG predictors), ASCIIHexDecode,
-  ASCII85Decode; anything else on a *content* stream raises → the
-  document lands in ``status='decode_error'`` (errors are values);
+* filters: FlateDecode, LZWDecode (both with PNG predictors; see
+  ``filters``), ASCIIHexDecode, ASCII85Decode, RunLengthDecode; anything
+  else on a *content* stream raises → the document lands in
+  ``status='decode_error'`` (errors are values);
 * text operators: BT/ET, Tf, Td/TD/Tm/T*/TL, Tc/Tw/Tz/Ts, Tj/TJ/'/",
   with q/Q/cm tracked so positioned text survives transformed pages;
 * fonts: simple-font ``/Widths`` + base-14 AFM fallback
@@ -46,6 +47,7 @@ import zlib
 from typing import Any
 
 from ..functions.afm import FALLBACK_UNITS, HELVETICA_WIDTHS
+from .filters import lzw_decode, png_unpredict
 from .glyphs import STANDARD, base_encoding_map, glyph_to_unicode
 from .pdfbin import HEADER_SCAN, MAGIC
 
@@ -250,51 +252,18 @@ def _parse_value(d: bytes, p: int) -> tuple[Any, int]:
 # Filters
 # --------------------------------------------------------------------------
 
-def _png_unpredict(data: bytes, colors: int, bpc: int, columns: int) -> bytes:
-    """Reverse PNG row predictors (used by Flate DecodeParms)."""
-    bpp = max(1, (colors * bpc) // 8)
-    row_len = (columns * colors * bpc + 7) // 8
-    out = bytearray()
-    prev = bytearray(row_len)
-    pos = 0
-    while pos + 1 + row_len <= len(data) + row_len and pos < len(data):
-        ft = data[pos]
-        row = bytearray(data[pos + 1:pos + 1 + row_len])
-        pos += 1 + row_len
-        if ft == 1:    # Sub
-            for i in range(bpp, len(row)):
-                row[i] = (row[i] + row[i - bpp]) & 0xFF
-        elif ft == 2:  # Up
-            for i in range(len(row)):
-                row[i] = (row[i] + prev[i]) & 0xFF
-        elif ft == 3:  # Average
-            for i in range(len(row)):
-                left = row[i - bpp] if i >= bpp else 0
-                row[i] = (row[i] + ((left + prev[i]) >> 1)) & 0xFF
-        elif ft == 4:  # Paeth
-            for i in range(len(row)):
-                a = row[i - bpp] if i >= bpp else 0
-                b = prev[i]
-                cc = prev[i - bpp] if i >= bpp else 0
-                pa, pb, pc = abs(b - cc), abs(a - cc), abs(a + b - 2 * cc)
-                pr = a if (pa <= pb and pa <= pc) else (b if pb <= pc else cc)
-                row[i] = (row[i] + pr) & 0xFF
-        out += row
-        prev = row
-    return bytes(out)
-
-
 def _apply_predictor(raw: bytes, parms: dict | None) -> bytes:
     """Shared DecodeParms predictor handling (Flate and LZW take the same
-    parameters): PNG predictors reversed, TIFF predictor 2 rejected loudly
-    — silently passing predicted bytes through would extract wrong text
-    with status='ok'."""
+    parameters): PNG predictors reversed, TIFF predictor 2 and PNG row
+    tags above 4 rejected loudly — silently passing predicted bytes
+    through would extract wrong text with status='ok'."""
     parms = parms or {}
     pred = int(parms.get("Predictor", 1) or 1)
     if pred >= 10:
-        return _png_unpredict(raw, int(parms.get("Colors", 1)),
-                              int(parms.get("BitsPerComponent", 8)),
-                              int(parms.get("Columns", 1)))
+        bits = (int(parms.get("Colors", 1))
+                * int(parms.get("BitsPerComponent", 8)))
+        stride = (int(parms.get("Columns", 1)) * bits + 7) // 8
+        return png_unpredict(raw, stride, max(1, bits // 8)).tobytes()
     if pred != 1:
         raise ValueError(f"unsupported predictor {pred}")
     return raw
@@ -303,10 +272,11 @@ def _apply_predictor(raw: bytes, parms: dict | None) -> bytes:
 def _apply_filter(name: str, data: bytes, parms: dict | None) -> bytes:
     if name in ("FlateDecode", "Fl"):
         try:
-            raw = zlib.decompress(data)
-        except zlib.error:
-            # tolerate trailing garbage / missing adler (seen in the wild)
+            # a decompressor object tolerates trailing garbage and a
+            # missing Adler-32 (both seen in the wild)
             raw = zlib.decompressobj().decompress(data)
+        except zlib.error as exc:
+            raise ValueError(f"corrupt Flate stream: {exc}") from exc
         return _apply_predictor(raw, parms)
     if name in ("ASCIIHexDecode", "AHx"):
         body = data.split(b">")[0]
@@ -373,46 +343,13 @@ _LZW_MAX_OUT = 64 << 20
 
 def _lzw_decode(data: bytes, early: int = 1,
                 max_out: int = _LZW_MAX_OUT) -> bytes:
-    """PDF-flavor LZW (ISO 32000 §7.4.4): MSB-first variable-width codes
-    9→12 bits, 256 = clear-table, 257 = EOD, ``EarlyChange`` widens the
-    code size one code early (the default).  Older real-world PDFs (pre-
-    Flate toolchains) still carry it on content streams.  Output is capped
-    at ``max_out`` (quadratic-expansion bombs become ValueError →
-    decode_error, not executor OOM)."""
-    out = bytearray()
-    table: list[bytes] = [bytes([i]) for i in range(256)] + [b"", b""]
-    width = 9
-    buf = 0
-    nbits = 0
-    prev: bytes | None = None
-    for byte in data:
-        buf = (buf << 8) | byte
-        nbits += 8
-        while nbits >= width:
-            code = (buf >> (nbits - width)) & ((1 << width) - 1)
-            nbits -= width
-            if code == 256:  # clear table
-                table = [bytes([i]) for i in range(256)] + [b"", b""]
-                width = 9
-                prev = None
-                continue
-            if code == 257:  # EOD
-                return bytes(out)
-            if code < len(table):
-                entry = table[code]
-            elif code == len(table) and prev is not None:
-                entry = prev + prev[:1]
-            else:
-                raise ValueError("corrupt LZW stream (code out of range)")
-            out += entry
-            if len(out) > max_out:
-                raise ValueError("LZW stream expands past the output cap")
-            if prev is not None:
-                table.append(prev + entry[:1])
-            prev = entry
-            if len(table) + early >= (1 << width) and width < 12:
-                width += 1
-    return bytes(out)
+    """PDF ``LZWDecode`` (ISO 32000 §7.4.4), still on content streams of
+    older real-world PDFs.  Output past ``max_out`` raises (quadratic-
+    expansion bombs become decode_error, not executor OOM)."""
+    out = lzw_decode(data, 8, True, early, max_out + 1)
+    if len(out) > max_out:
+        raise ValueError("LZW stream expands past the output cap")
+    return out
 
 
 # --------------------------------------------------------------------------

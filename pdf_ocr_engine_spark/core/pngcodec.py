@@ -14,8 +14,9 @@ Decoder coverage (PNG spec, third edition):
 * bit depths 1 / 2 / 4 / 8 / 16 (16-bit reduced to its high byte, the
   spec's own sample-depth-scaling approximation)
 * color types 0 (gray), 2 (RGB), 3 (palette), 4 (gray+alpha), 6 (RGBA)
-* scanline filters 0-4 (None / Sub / Up / Average / Paeth); Sub is
-  vectorized as a per-byte-class cumulative sum, Up as one vector add
+* scanline filters 0-4 (None / Sub / Up / Average / Paeth), inverted by
+  the predictor kernel PDF streams share (``filters.png_unpredict``);
+  IDAT inflates only as far as the rows IHDR declares
 * Adam7 interlace: each of the seven passes is an independently
   filtered sub-image (PNG spec §8.2), unfiltered with the same kernel
   and scattered into the full grid by strided assignment
@@ -32,6 +33,8 @@ import zlib
 from binascii import crc32
 
 import numpy as np
+
+from .filters import png_unpredict
 
 PNG_MAGIC = b"\x89PNG\r\n\x1a\n"
 
@@ -67,59 +70,6 @@ def _iter_chunks(data: bytes):
     raise PngError("missing IEND")
 
 
-def _unfilter(raw: bytes, h: int, stride: int, fu: int) -> np.ndarray:
-    """Invert the five PNG scanline filters → (h, stride) uint8.
-
-    ``fu`` is the filter unit (bytes per complete pixel, min 1).  Filter 1
-    (Sub) is a cumulative sum within each byte class mod ``fu`` — addition
-    mod 256 distributes, so ``cumsum() & 255`` vectorizes it exactly;
-    filter 2 (Up) is one vector add.  Average/Paeth carry a true sequential
-    dependency and run as per-byte loops (they are rare in encoder output
-    and bounded by the row width).
-    """
-    need = (stride + 1) * h
-    if len(raw) < need:
-        raise PngError(f"IDAT too short: {len(raw)} < {need}")
-    rows = np.frombuffer(raw[:need], dtype=np.uint8).reshape(h, stride + 1)
-    filters = rows[:, 0]
-    if filters.max(initial=0) > 4:
-        raise PngError(f"bad filter byte {int(filters.max())}")
-    out = np.zeros((h, stride), dtype=np.uint8)
-    prev = np.zeros(stride, dtype=np.uint8)
-    pad = (-stride) % fu
-    for y in range(h):
-        f = int(filters[y])
-        cur = rows[y, 1:]
-        if f == 0:
-            rec = cur.copy()
-        elif f == 2:  # Up
-            rec = cur + prev  # uint8 wraps == mod 256
-        elif f == 1:  # Sub: cumsum within each byte class mod fu
-            padded = np.concatenate(
-                [cur, np.zeros(pad, dtype=np.uint8)]) if pad else cur
-            csum = padded.reshape(-1, fu).astype(np.int64).cumsum(axis=0)
-            rec = (csum & 255).astype(np.uint8).reshape(-1)[:stride]
-        else:  # Average / Paeth: sequential
-            rec = np.zeros(stride, dtype=np.uint8)
-            c_i = cur.astype(np.int64)
-            p_i = prev.astype(np.int64)
-            for i in range(stride):
-                a = int(rec[i - fu]) if i >= fu else 0
-                b = int(p_i[i])
-                if f == 3:  # Average
-                    rec[i] = (c_i[i] + ((a + b) >> 1)) & 255
-                else:  # Paeth
-                    c = int(p_i[i - fu]) if i >= fu else 0
-                    p = a + b - c
-                    pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-                    pred = a if (pa <= pb and pa <= pc) else \
-                        (b if pb <= pc else c)
-                    rec[i] = (c_i[i] + pred) & 255
-        out[y] = rec
-        prev = rec
-    return out
-
-
 def _unpack_samples(row_bytes: np.ndarray, w: int, depth: int,
                     channels: int) -> np.ndarray:
     """(h, stride) filtered-out bytes → (h, w*channels) uint8 samples
@@ -144,31 +94,41 @@ _ADAM7 = (
 )
 
 
-def _decode_samples(raw: bytes, w: int, h: int, depth: int,
+def _decode_samples(idat: bytes, w: int, h: int, depth: int,
                     channels: int, interlace: int) -> np.ndarray:
-    """Inflated IDAT → (h, w*channels) uint8 samples, both interlace
-    methods.  Adam7 passes are consumed in spec order, each with its own
-    scanline filtering, and scattered by strided assignment."""
-    bpp_bits = depth * channels
-    fu = max(1, bpp_bits // 8)
-    if interlace == 0:
-        stride = (w * bpp_bits + 7) // 8
-        recon = _unfilter(raw, h, stride, fu)
-        return _unpack_samples(recon, w, depth, channels)
-    out = np.zeros((h, w, channels), dtype=np.uint8)
+    """IDAT → (h, w*channels) uint8 samples, both interlace methods.  Each
+    pass (the whole grid, or each non-empty Adam7 pass, PNG spec §8.2) is
+    unfiltered on its own by ``filters.png_unpredict``; Adam7 passes are
+    scattered into the full grid by strided assignment."""
+    fu = max(1, depth * channels // 8)
+    passes = []
+    for x0, y0, dx, dy in _ADAM7 if interlace else ((0, 0, 1, 1),):
+        wp, hp = (w - x0 + dx - 1) // dx, (h - y0 + dy - 1) // dy
+        if wp > 0 and hp > 0:
+            stride = (wp * depth * channels + 7) // 8
+            passes.append((x0, y0, dx, dy, wp, hp, stride))
+    # inflate only the rows IHDR declares: a tiny image over a huge IDAT
+    # costs only its own bytes (and the Adler-32 past them goes unchecked)
+    try:
+        raw = zlib.decompressobj().decompress(
+            idat, sum((stride + 1) * hp for *_, hp, stride in passes))
+    except zlib.error as exc:
+        raise PngError(f"IDAT inflate failed: {exc}") from exc
+    out = np.zeros((h, w, channels), dtype=np.uint8) if interlace else None
     pos = 0
-    for x0, y0, dx, dy in _ADAM7:
-        wp = (w - x0 + dx - 1) // dx
-        hp = (h - y0 + dy - 1) // dy
-        if wp <= 0 or hp <= 0:
-            continue  # empty pass contributes zero bytes (spec §8.2)
-        stride_p = (wp * bpp_bits + 7) // 8
-        need = (stride_p + 1) * hp
-        recon = _unfilter(raw[pos:pos + need], hp, stride_p, fu)
+    for x0, y0, dx, dy, wp, hp, stride in passes:
+        need = (stride + 1) * hp
+        if len(raw) - pos < need:
+            raise PngError(f"IDAT too short: {len(raw) - pos} < {need}")
+        try:
+            rows = png_unpredict(raw[pos:pos + need], stride, fu)
+        except ValueError as exc:
+            raise PngError(str(exc)) from exc
         pos += need
-        sp = _unpack_samples(recon, wp, depth, channels) \
-            .reshape(hp, wp, channels)
-        out[y0::dy, x0::dx] = sp
+        sp = _unpack_samples(rows.reshape(hp, stride), wp, depth, channels)
+        if out is None:
+            return sp
+        out[y0::dy, x0::dx] = sp.reshape(hp, wp, channels)
     return out.reshape(h, w * channels)
 
 
@@ -204,11 +164,8 @@ def decode_png(data: bytes) -> tuple[np.ndarray, int]:
     if w == 0 or h == 0 or w > 1 << 24 or h > 1 << 24:
         raise PngError(f"bad dimensions {w}x{h}")
     channels = _CHANNELS[color]
-    try:
-        raw = zlib.decompress(b"".join(idat))
-    except zlib.error as exc:
-        raise PngError(f"IDAT inflate failed: {exc}") from exc
-    samples = _decode_samples(raw, w, h, depth, channels, interlace)
+    samples = _decode_samples(b"".join(idat), w, h, depth, channels,
+                              interlace)
     if color == 3:  # palette → RGB
         if plte is None or len(plte) % 3:
             raise PngError("palette image without valid PLTE")

@@ -555,6 +555,121 @@ class TestLzw:
             _lzw_decode(payload, max_out=10_000)
 
 
+def _png_predict(rows, colors: int, bpc: int, tags) -> bytes:
+    """PNG-predicted rows (one tag byte + the filtered row each), made by
+    the PNG encoder's forward filter."""
+    import numpy as np
+
+    from pdf_ocr_engine_spark.core.pngcodec import _filter_row
+
+    unit = max(1, colors * bpc // 8)
+    out = bytearray()
+    prev = np.zeros(len(rows[0]), np.uint8)
+    for row, tag in zip(rows, tags):
+        cur = np.frombuffer(row, np.uint8)
+        out.append(tag)
+        out += _filter_row(cur, prev, unit, tag).tobytes()
+        prev = cur
+    return bytes(out)
+
+
+class TestPngPredictors:
+    """PDF ``/Predictor`` 10-15 (ISO 32000 §7.4.4.4) over Flate and LZW:
+    each row carries its own PNG tag."""
+
+    @staticmethod
+    def _parms(colors: int, bpc: int, columns: int) -> dict:
+        return {"Predictor": 15, "Colors": colors, "BitsPerComponent": bpc,
+                "Columns": columns}
+
+    def test_predicted_content_stream_extracts(self):
+        content = (b"BT /F1 12 Tf 72 720 Td (predicted) Tj 90 0 Td "
+                   b"(flate) Tj 60 0 Td (text) Tj ET")
+        cols = 9
+        content += b" " * (-len(content) % cols)
+        rows = [content[i:i + cols] for i in range(0, len(content), cols)]
+        data = zlib.compress(_png_predict(
+            rows, 1, 8, [i % 5 for i in range(len(rows))]))
+        objs = [
+            b"<< /Type /Catalog /Pages 2 0 R >>",
+            (b"<< /Type /Pages /Kids [4 0 R] /Count 1 "
+             b"/MediaBox [0 0 612 792] "
+             b"/Resources << /Font << /F1 3 0 R >> >> >>"),
+            b"<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica >>",
+            b"<< /Type /Page /Parent 2 0 R /Contents 5 0 R >>",
+            (f"<< /Filter /FlateDecode /DecodeParms << /Predictor 15 "
+             f"/Columns {cols} >> /Length {len(data)} >>\nstream\n"
+             ).encode() + data + b"\nendstream",
+        ]
+        r = extract_document(_assemble(objs), "eng")
+        assert r["status"] == "ok"
+        assert r["text"].split() == ["predicted", "flate", "text"]
+
+    @pytest.mark.parametrize("colors,bpc", [(1, 8), (3, 8), (1, 1)])
+    @pytest.mark.parametrize("tag", [0, 1, 2, 3, 4])
+    def test_each_tag_roundtrips(self, colors, bpc, tag):
+        import random
+
+        from pdf_ocr_engine_spark.core.pdfreal import _apply_filter
+
+        rng = random.Random(tag * 10 + colors + bpc)
+        columns = 23
+        stride = (columns * colors * bpc + 7) // 8
+        rows = [bytes(rng.randrange(256) for _ in range(stride))
+                for _ in range(12)]
+        body = _png_predict(rows, colors, bpc, [tag] * len(rows))
+        parms = self._parms(colors, bpc, columns)
+        assert _apply_filter("FlateDecode", zlib.compress(body),
+                             parms) == b"".join(rows)
+        assert _apply_filter("LZWDecode", _lzw_encode(body),
+                             parms) == b"".join(rows)
+
+    def test_short_final_row_decodes_bytes_present(self):
+        from pdf_ocr_engine_spark.core.pdfreal import _apply_filter
+
+        rows = [bytes(range(10, 46, 3)), bytes(range(60, 96, 3))]
+        for tag in range(5):
+            body = _png_predict(rows, 3, 8, [tag, tag])
+            # the last row loses its final 4 bytes: the predictors read
+            # only left and up, so the 8 bytes present still decode
+            got = _apply_filter("FlateDecode", zlib.compress(body[:-4]),
+                                self._parms(3, 8, 4))
+            assert got == rows[0] + rows[1][:8], tag
+
+    def test_tag_above_four_raises(self):
+        from pdf_ocr_engine_spark.core.pdfreal import _apply_filter
+
+        body = b"\x00abc" + b"\x05def"
+        with pytest.raises(ValueError, match="filter byte 5"):
+            _apply_filter("FlateDecode", zlib.compress(body),
+                          self._parms(1, 8, 3))
+
+
+class TestCorruptFontStream:
+    """A font stream whose filter fails falls back like any other bad
+    font data: the document still extracts, whatever the filter."""
+
+    @pytest.mark.parametrize("filt", ["FlateDecode", "ASCIIHexDecode",
+                                      "LZWDecode"])
+    def test_bad_tounicode_stream_falls_back(self, filt):
+        junk = b"\xff\xfe junk \x00\x01 not a stream \x9c\x9c" * 4
+        objs = [
+            b"<< /Type /Catalog /Pages 2 0 R >>",
+            (b"<< /Type /Pages /Kids [4 0 R] /Count 1 "
+             b"/MediaBox [0 0 612 792] "
+             b"/Resources << /Font << /F1 3 0 R >> >> >>"),
+            b"<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica "
+            b"/ToUnicode 6 0 R >>",
+            b"<< /Type /Page /Parent 2 0 R /Contents 5 0 R >>",
+            b"<< /Length 36 >>\nstream\n"
+            b"BT /F1 12 Tf 72 720 Td (hello) Tj ET\nendstream",
+            (f"<< /Filter /{filt} /Length {len(junk)} >>\nstream\n"
+             ).encode() + junk + b"\nendstream",
+        ]
+        r = extract_document(_assemble(objs), "eng")
+        assert (r["status"], r["text"]) == ("ok", "hello")
+
+
 class TestStructureFuzz:
     """Property-based sweep over the foreign-dialect space: random page
     counts, filters, positioning operators, and token texts — the parser

@@ -169,6 +169,42 @@ class TestAdam7:
             decode_png(png)
 
 
+class TestDeclaredSizeBound:
+    """IDAT inflates only as far as the rows IHDR declares."""
+
+    @staticmethod
+    def _gray_1x1(idat: bytes) -> bytes:
+        ihdr = struct.pack(">IIBBBBB", 1, 1, 8, 0, 0, 0, 0)
+        return PNG_MAGIC + _chunk(b"IHDR", ihdr) + _chunk(b"IDAT", idat) \
+            + _chunk(b"IEND", b"")
+
+    def test_huge_idat_behind_one_pixel_stays_small(self):
+        import tracemalloc
+
+        # one row (tag 0, pixel 7) and then 256 MiB of zeros: ~261 KB
+        co = zlib.compressobj(9)
+        zero = bytes(1 << 20)
+        idat = co.compress(b"\x00\x07") + b"".join(
+            co.compress(zero) for _ in range(256)) + co.flush()
+        png = self._gray_1x1(idat)
+        tracemalloc.start()
+        try:
+            px, _ = decode_png(png)
+            _, peak = tracemalloc.get_traced_memory()
+        finally:
+            tracemalloc.stop()
+        assert px.shape == (1, 1, 1) and int(px[0, 0, 0]) == 7
+        assert peak < 8 << 20, peak
+
+    def test_stream_broken_after_declared_rows_decodes(self):
+        # the decoder never reads past the declared rows, so a truncated
+        # tail or a bad Adler-32 behind them is not an error
+        idat = zlib.compress(b"\x00\x07" + bytes(100))
+        for broken in (idat[:-6], idat[:-4] + b"\0\0\0\0"):
+            px, _ = decode_png(self._gray_1x1(broken))
+            assert int(px[0, 0, 0]) == 7
+
+
 class TestRoundTrip:
     @pytest.mark.parametrize("filter_type", [0, 1, 2, 3, 4])
     def test_gray_roundtrip_every_filter(self, filter_type):
