@@ -6,7 +6,7 @@ from .layout import (  # noqa: F401
     js_trim,
     page_text,
 )
-from .pdfbin import decode_pdf, encode_pdf, sniff_kind  # noqa: F401
+from .pdfbin import decode_pdf, sniff_kind  # noqa: F401
 from .hyphen import repair_hyphenation  # noqa: F401
 from .html_extract import extract_main_text, segment_blocks  # noqa: F401
 from .extract_doc import (  # noqa: F401

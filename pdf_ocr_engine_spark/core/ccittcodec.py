@@ -1,4 +1,4 @@
-"""Pure-stdlib CCITT Group 4 (ITU-T T.6) codec — 2-D MMR decode + encode.
+"""Pure-stdlib CCITT Group 4 (ITU-T T.6) decoder — 2-D MMR and G3.
 
 Black-and-white scanned documents in the wild overwhelmingly embed
 **CCITTFaxDecode** image XObjects (the TIFF G4 / fax family); the
@@ -30,9 +30,8 @@ Scope — what PDF producers actually emit for ``/CCITTFaxDecode``:
 The decoder mirrors the LUT design of ``core/jpegcodec``: the bit stream
 becomes a list of 32-bit lookahead words, and every mode / run-length
 codeword resolves through one flat table index instead of a per-bit
-tree walk.  The encoder is the fixture-authoring side (scanned-PDF
-fixtures with genuine G4 rasters) and emits standard vertical-preferred
-G4 with EOFB, so any fax-capable tool can decode its output.
+tree walk.  The fixture encoder (``encoders.bilevel.encode_g4`` /
+``encode_g3``) imports the code tables from here.
 """
 
 from __future__ import annotations
@@ -44,8 +43,6 @@ __all__ = [
     "CcittUnsupported",
     "decode_g3",
     "decode_g4",
-    "encode_g3",
-    "encode_g4",
 ]
 
 
@@ -127,8 +124,6 @@ _MODE_CODES = {
     "0001": ("p", 0), "000011": ("v", 2), "000010": ("v", -2),
     "0000011": ("v", 3), "0000010": ("v", -3),
 }
-
-_EOL = "000000000001"  # 12 bits; EOFB = two in a row
 
 # mode ids packed into the mode LUT
 _M_V0, _M_VR1, _M_VR2, _M_VR3 = 1, 2, 3, 4
@@ -497,223 +492,3 @@ def decode_g3(data: bytes, columns: int, rows: int | None = None,
     if not out:
         return np.zeros((0, w), dtype=np.uint8)
     return np.stack(out)
-
-
-# --------------------------------------------------------------------------
-# Encoder (fixture authoring; vertical-preferred G4 + EOFB)
-# --------------------------------------------------------------------------
-
-
-def _enc_tables() -> tuple[list, list]:
-    """Per color: (terminating (code,len) by run, makeup dict)."""
-    out = []
-    for term, makeup in ((_WHITE_TERM, _WHITE_MAKEUP),
-                         (_BLACK_TERM, _BLACK_MAKEUP)):
-        t = [(int(c, 2), len(c)) for c in term]
-        m = {run: (int(c, 2), len(c)) for run, c in makeup.items()}
-        m.update({run: (int(c, 2), len(c))
-                  for run, c in _EXT_MAKEUP.items()})
-        out.append((t, m))
-    return out[0], out[1]
-
-
-_ENC_WHITE, _ENC_BLACK = _enc_tables()
-_ENC_MODES = {key: (int(c, 2), len(c)) for c, key in _MODE_CODES.items()}
-
-
-def _emit_run(lens: list[int], vals: list[int], color: int,
-              run: int) -> None:
-    term, makeup = _ENC_BLACK if color else _ENC_WHITE
-    while run >= 2624:
-        c, ln = makeup[2560]
-        lens.append(ln)
-        vals.append(c)
-        run -= 2560
-    if run >= 64:
-        m = (run >> 6) << 6
-        c, ln = makeup[m]
-        lens.append(ln)
-        vals.append(c)
-        run -= m
-    c, ln = term[run]
-    lens.append(ln)
-    vals.append(c)
-
-
-def _emit_g4(lens: list[int], vals: list[int], bm: np.ndarray) -> None:
-    """One bitmap's 2-D lines + EOFB appended to the code streams."""
-    h, w = bm.shape
-    per_line = _bitmap_transitions(bm)
-    ref: list[int] = [w, w, w, w]
-    for li in range(h):
-        cur = per_line[li]
-        _emit_2d_line(lens, vals, cur, ref, w)
-        ref = cur + [w, w, w, w]
-    eol_c, eol_l = int(_EOL, 2), len(_EOL)
-    lens += [eol_l, eol_l]
-    vals += [eol_c, eol_c]
-
-
-def encode_g4(bitmap: np.ndarray) -> bytes:
-    """2-D bitmap (nonzero/True = black ink) → G4 bytes ending in EOFB,
-    zero-padded to a byte boundary.  Inverse of :func:`decode_g4` and
-    standard T.6, so fax-capable tools decode the output.  Grayscale
-    callers threshold first (``gray < 128``) — the truthy-is-black
-    contract is deliberate and unambiguous."""
-    bm = np.asarray(bitmap)
-    if bm.ndim != 2:
-        raise ValueError("encode_g4 wants a 2-D bitmap")
-    h, w = bm.shape
-    if w == 0 or h == 0:
-        raise ValueError("encode_g4 wants a non-empty bitmap")
-    lens: list[int] = []
-    vals: list[int] = []
-    _emit_g4(lens, vals, bm)
-    return _pack_codes(lens, vals)
-
-
-def encode_g4_planes(planes: list[np.ndarray]) -> bytes:
-    """Bitplanes → ONE bit-continuous G4 stream, each plane EOFB-
-    terminated with the next starting at the following bit (no byte
-    alignment) — the T.88 Annex C.5 halftone form.  Inverse of
-    :func:`decode_g4_planes`."""
-    if not planes:
-        raise ValueError("encode_g4_planes wants at least one plane")
-    lens: list[int] = []
-    vals: list[int] = []
-    shape = None
-    for bm in planes:
-        bm = np.asarray(bm)
-        if bm.ndim != 2 or bm.size == 0:
-            raise ValueError("planes must be non-empty 2-D bitmaps")
-        if shape is None:
-            shape = bm.shape
-        elif bm.shape != shape:
-            raise ValueError("planes disagree in shape")
-        _emit_g4(lens, vals, bm)
-    return _pack_codes(lens, vals)
-
-
-def _pack_codes(lens: list[int], vals: list[int]) -> bytes:
-    """(code length, code value) streams → zero-padded bytes."""
-    la = np.asarray(lens, dtype=np.int64)
-    va = np.asarray(vals, dtype=np.int64)
-    j = np.arange(int(la.max()) if la.size else 1, dtype=np.int64)
-    shifts = np.maximum(la[:, None] - 1 - j[None, :], 0)
-    bitmat = ((va[:, None] >> shifts) & 1).astype(np.uint8)
-    bits = bitmat[j[None, :] < la[:, None]]
-    pad = (-bits.size) % 8
-    if pad:
-        bits = np.concatenate([bits, np.zeros(pad, np.uint8)])
-    return np.packbits(bits).tobytes()
-
-
-def _bitmap_transitions(bm: np.ndarray) -> list[list[int]]:
-    """Per-line changing-element columns for a truthy-is-black bitmap."""
-    black = bm != 0
-    trans_mask = np.concatenate(
-        [black[:, :1], black[:, 1:] != black[:, :-1]], axis=1)
-    rows_idx, cols_idx = np.nonzero(trans_mask)
-    splits = np.searchsorted(rows_idx, np.arange(1, bm.shape[0]))
-    return [c.tolist() for c in np.split(cols_idx, splits)]
-
-
-def _emit_1d_line(lens: list[int], vals: list[int], cur: list[int],
-                  w: int) -> None:
-    """T.4 1-D modified-Huffman line from its transition columns —
-    alternating runs starting white (zero-length first white run when
-    the line starts black)."""
-    prev = 0
-    color = 0
-    for t in [*cur, w]:
-        _emit_run(lens, vals, color, t - prev)
-        prev = t
-        color ^= 1
-
-
-def _emit_2d_line(lens: list[int], vals: list[int], cur: list[int],
-                  ref: list[int], w: int) -> None:
-    """One vertical-preferred 2-D coding line (the single mode-selection
-    loop shared by encode_g4 and encode_g3's mixed lines)."""
-    a0 = -1
-    color = 0
-    ci = 0
-    ptr = 0
-    while a0 < w:
-        a1 = cur[ci] if ci < len(cur) else w
-        a2 = cur[ci + 1] if ci + 1 < len(cur) else w
-        while ptr < len(ref) and ref[ptr] <= a0:
-            ptr += 1
-        bi = ptr if (ptr & 1) == color else ptr + 1
-        b1 = ref[bi] if bi < len(ref) else w
-        b2 = ref[bi + 1] if bi + 1 < len(ref) else w
-        if b2 < a1:
-            c, ln = _ENC_MODES[("p", 0)]
-            lens.append(ln)
-            vals.append(c)
-            a0 = b2
-        elif -3 <= a1 - b1 <= 3:
-            c, ln = _ENC_MODES[("v", a1 - b1)]
-            lens.append(ln)
-            vals.append(c)
-            a0 = a1
-            color ^= 1
-            ci += 1
-        else:
-            c, ln = _ENC_MODES[("h", 0)]
-            lens.append(ln)
-            vals.append(c)
-            start = a0 if a0 > 0 else 0
-            _emit_run(lens, vals, color, a1 - start)
-            _emit_run(lens, vals, color ^ 1, a2 - a1)
-            a0 = a2
-            ci += 2
-
-
-def encode_g3(bitmap: np.ndarray, k: int = 0,
-              with_eol: bool = True) -> bytes:
-    """2-D bitmap (truthy = black ink) → G3 (T.4) bytes.  ``k = 0``
-    emits pure 1-D modified-Huffman lines; ``k > 0`` emits the mixed
-    arrangement (every ``k``-th line 1-D, the rest 2-D), each line
-    tagged after its EOL.  ``with_eol=False`` (K=0 only) emits bare
-    concatenated lines — the PDF ``/EndOfLine false`` shape.  Ends with
-    RTC so self-delimiting decoders stop cleanly.  Inverse of
-    :func:`decode_g3`."""
-    bm = np.asarray(bitmap)
-    if bm.ndim != 2:
-        raise ValueError("encode_g3 wants a 2-D bitmap")
-    h, w = bm.shape
-    if w == 0 or h == 0:
-        raise ValueError("encode_g3 wants a non-empty bitmap")
-    if k < 0:
-        raise ValueError("encode_g3 is for K >= 0 (use encode_g4)")
-    if k > 0 and not with_eol:
-        raise ValueError("K > 0 G3 needs EOL+tag line prefixes")
-    per_line = _bitmap_transitions(bm)
-    eol_c, eol_l = int(_EOL, 2), len(_EOL)
-    lens: list[int] = []
-    vals: list[int] = []
-    ref: list[int] = [w, w, w, w]
-    for li in range(h):
-        cur = per_line[li]
-        one_d = k == 0 or li % k == 0
-        if with_eol:
-            lens.append(eol_l)
-            vals.append(eol_c)
-            if k > 0:
-                lens.append(1)
-                vals.append(1 if one_d else 0)
-        if one_d:
-            _emit_1d_line(lens, vals, cur, w)
-        else:
-            _emit_2d_line(lens, vals, cur, ref, w)
-        ref = cur + [w, w, w, w]
-    # RTC: six EOLs (K=0) / six EOL+1 (K>0); two suffice for decode_g3
-    # but the full pattern keeps the stream standard
-    for _ in range(6):
-        lens.append(eol_l)
-        vals.append(eol_c)
-        if k > 0:
-            lens.append(1)
-            vals.append(1)
-    return _pack_codes(lens, vals)

@@ -1,4 +1,4 @@
-"""Pure-stdlib GIF codec — first-frame pixel decode + fixture encoder.
+"""Pure-stdlib GIF decoder — first-frame pixel decode.
 
 GIF is the last common web image format whose pixel decode still needed
 PIL (the reference hands all raster work to ``sharp``,
@@ -22,10 +22,9 @@ Coverage:
 * malformed data raises :class:`GifError` (→ undecodable DATA
   upstream, never a task crash).
 
-The encoder authors test fixtures: 8-bit grayscale palette, real LZW
-(same width-growth rule as the decoder, CLEAR emitted before the table
-overflows), so any GIF-capable tool decodes its output — the PIL
-cross-check tests prove interop where PIL exists.
+The fixture encoder (``encoders.raster.encode_gif_gray``) writes 8-bit
+grayscale GIFs through ``encoders.raster.lzw_encode``, the mirror of the
+shared LZW decoder.
 """
 
 from __future__ import annotations
@@ -35,11 +34,11 @@ import struct
 import numpy as np
 
 from .filters import lzw_decode
+from .pngcodec import to_gray
 
 __all__ = [
     "GifError",
     "decode_gif_gray",
-    "encode_gif_gray",
 ]
 
 
@@ -71,7 +70,7 @@ _GIF_INTERLACE = ((0, 8), (4, 8), (2, 4), (1, 2))
 
 def decode_gif_gray(data: bytes) -> np.ndarray:
     """GIF bytes → first frame as ``uint8 ndarray (h, w)`` luma (integer
-    BT.601, matching :func:`..core.pngcodec.to_gray`).  The frame is
+    BT.601 per palette entry, :func:`.pngcodec.to_gray`).  The frame is
     placed on the logical screen (background-color fill outside it)."""
     if data[:6] not in (b"GIF87a", b"GIF89a"):
         raise GifError("not a GIF (bad signature)")
@@ -147,18 +146,13 @@ def decode_gif_gray(data: bytes) -> np.ndarray:
                 ordered[start::step] = frame[src:src + cnt]
                 src += cnt
             frame = ordered
-        rgb = pal[frame].astype(np.uint32)  # (ih, iw, 3)
-        # all three planes widened BEFORE the multiply: uint8 * 114 stays
-        # uint8 under value-based casting and wraps per element
-        luma = ((rgb[:, :, 0] * 299 + rgb[:, :, 1] * 587
-                 + rgb[:, :, 2] * 114 + 500) // 1000).astype(np.uint8)
+        luma = to_gray(pal[None], 2)[0][frame]  # palette luma per pixel
         if (left, top, iw, ih) == (0, 0, sw, sh):
             return luma
         # place on the logical screen, background fill elsewhere
         bg_luma = 0
         if gct is not None and bg < gct.shape[0]:
-            r, g, b = (int(v) for v in gct[bg])
-            bg_luma = (r * 299 + g * 587 + b * 114 + 500) // 1000
+            bg_luma = to_gray(gct[None], 2)[0, bg]
         screen = np.full((sh, sw), bg_luma, np.uint8)
         y1 = min(top + ih, sh)
         x1 = min(left + iw, sw)
@@ -167,83 +161,3 @@ def decode_gif_gray(data: bytes) -> np.ndarray:
         return screen
     raise GifError("no image data")
 
-
-def _lzw_encode(indices: bytes, min_code_size: int) -> bytes:
-    """GIF LZW encoder — width-growth mirror of
-    :func:`.filters.lzw_decode` (LSB-first, no early change),
-    CLEAR emitted before the table would pass 4096 entries."""
-    clear = 1 << min_code_size
-    eoi = clear + 1
-    out = bytearray()
-    bitbuf = 0
-    bitcnt = 0
-
-    def emit(code: int, width: int) -> None:
-        nonlocal bitbuf, bitcnt
-        bitbuf |= code << bitcnt
-        bitcnt += width
-        while bitcnt >= 8:
-            out.append(bitbuf & 0xFF)
-            bitbuf >>= 8
-            bitcnt -= 8
-
-    table: dict[bytes, int] = {bytes([i]): i for i in range(clear)}
-    next_code = eoi + 1
-    width = min_code_size + 1
-    emit(clear, width)
-    w = b""
-    for byte in indices:
-        c = bytes([byte])
-        if w + c in table:
-            w += c
-            continue
-        emit(table[w], width)
-        if next_code < 4096:
-            table[w + c] = next_code
-            next_code += 1
-            # the decoder adds nothing for the first post-clear code, so
-            # its table length trails next_code by one: it grows width
-            # when length hits 1<<width, which is next_code == 1<<width + 1
-            if next_code == (1 << width) + 1 and width < 12:
-                width += 1
-        else:
-            emit(clear, width)
-            table = {bytes([i]): i for i in range(clear)}
-            next_code = eoi + 1
-            width = min_code_size + 1
-        w = c
-    if w:
-        emit(table[w], width)
-    emit(eoi, width)
-    if bitcnt:
-        out.append(bitbuf & 0xFF)
-    return bytes(out)
-
-
-def encode_gif_gray(px: np.ndarray, interlace: bool = False) -> bytes:
-    """uint8 (h, w) grayscale → GIF89a with a 256-entry gray global
-    color table — fixture authoring; standard output any GIF tool reads."""
-    arr = np.ascontiguousarray(px, dtype=np.uint8)
-    if arr.ndim != 2:
-        raise ValueError("encode_gif_gray wants (h, w)")
-    h, w = arr.shape
-    if h == 0 or w == 0 or h > 0xFFFF or w > 0xFFFF:
-        raise ValueError(f"bad dimensions {w}x{h}")
-    gct = bytes(v for g in range(256) for v in (g, g, g))
-    if interlace:
-        rows = [arr[start::step] for start, step in _GIF_INTERLACE]
-        indices = np.concatenate(rows).tobytes()
-    else:
-        indices = arr.tobytes()
-    lzw = _lzw_encode(indices, 8)
-    blocks = bytearray()
-    for i in range(0, len(lzw), 255):
-        chunk = lzw[i:i + 255]
-        blocks.append(len(chunk))
-        blocks += chunk
-    blocks.append(0)
-    return (b"GIF89a"
-            + struct.pack("<HHBBB", w, h, 0x80 | 0x07, 0, 0) + gct
-            + b"\x2C" + struct.pack("<HHHHB", 0, 0, w, h,
-                                    0x40 if interlace else 0)
-            + bytes([8]) + bytes(blocks) + b"\x3B")

@@ -7,9 +7,8 @@ decode to pdf.js (``/root/reference/src/lib/ocr/extractor.ts:12-37``);
 this repo decodes them itself, from the public T.88 recommendation:
 
 * **MQ arithmetic coder** (T.88 Annex E — the same coder JPEG 2000
-  uses): 47-state Qe table, INITDEC/DECODE/BYTEIN and the encoder-side
-  INITENC/CODEMPS/CODELPS/BYTEOUT/FLUSH flows, bit-exact per the spec's
-  software conventions.
+  uses): 47-state Qe table and the INITDEC/DECODE/BYTEIN flows,
+  bit-exact per the spec's software conventions.
 * **Generic region decoding** (T.88 §6.2): templates 0-3 with nominal
   adaptive-template pixels via the sliding-context formulation (the
   per-template keep-masks 0x7BF7/0x0EFB/0x01BD/0x01F7 fall out of the
@@ -57,13 +56,9 @@ this repo decodes them itself, from the public T.88 recommendation:
 
 The decoder emits semantic pixels (0 = black ink, 255 = white), the
 input contract of the OCR tier (``core/rasterfont.recognize_gray``) and
-the same convention as ``core/ccittcodec``.  The encoders are the
-fixture-authoring side: :func:`encode_jbig2_embedded` writes one
-immediate-lossless generic region (template 0, nominal AT, TPGDON);
-:func:`encode_jbig2_symbol_embedded` writes the dictionary-coded
-arrangement (connected components → deduplicated symbol classes → text
-region, the jbig2enc architecture).  Both emit standard T.88 any
-JBIG2-capable tool decodes.
+the same convention as ``core/ccittcodec``.  The fixture encoders live
+in ``encoders.bilevel`` and import the MQ state table, the template
+layouts and the Huffman tables from here.
 """
 
 from __future__ import annotations
@@ -78,9 +73,6 @@ __all__ = [
     "Jbig2Error",
     "Jbig2Unsupported",
     "decode_jbig2_embedded",
-    "encode_jbig2_embedded",
-    "encode_jbig2_halftone_embedded",
-    "encode_jbig2_symbol_embedded",
 ]
 
 
@@ -196,88 +188,6 @@ class _MQDecoder:
                 break
         self.a, self.c, self.ct = a, c, ct
         return d
-
-
-class _MQEncoder:
-    """T.88 Annex E encoder (INITENC/CODEMPS/CODELPS/BYTEOUT/FLUSH)."""
-
-    __slots__ = ("out", "c", "a", "ct")
-
-    def __init__(self) -> None:
-        self.out = bytearray(b"\x00")  # BP starts one before the buffer
-        self.c = 0
-        self.a = 0x8000
-        self.ct = 12
-
-    def encode(self, idx: list, mps: list, cx: int, d: int) -> None:
-        qe, nmps, nlps, switch = _QE[idx[cx]]
-        if d == mps[cx]:
-            self.a -= qe
-            if self.a & 0x8000:
-                self.c += qe
-                return
-            if self.a < qe:
-                self.a = qe
-            else:
-                self.c += qe
-            idx[cx] = nmps
-        else:
-            self.a -= qe
-            if self.a < qe:
-                self.c += qe
-            else:
-                self.a = qe
-            if switch:
-                mps[cx] ^= 1
-            idx[cx] = nlps
-        while True:  # RENORME
-            self.a = (self.a << 1) & 0xFFFF
-            self.c <<= 1
-            self.ct -= 1
-            if self.ct == 0:
-                self._byteout()
-            if self.a & 0x8000:
-                break
-
-    def _byteout(self) -> None:
-        out = self.out
-        if out[-1] == 0xFF:
-            out.append((self.c >> 20) & 0xFF)
-            self.c &= 0xFFFFF
-            self.ct = 7
-        elif self.c < 0x8000000:
-            out.append((self.c >> 19) & 0xFF)
-            self.c &= 0x7FFFF
-            self.ct = 8
-        else:
-            out[-1] += 1
-            if out[-1] == 0xFF:
-                self.c &= 0x7FFFFFF
-                out.append((self.c >> 20) & 0xFF)
-                self.c &= 0xFFFFF
-                self.ct = 7
-            else:
-                out.append((self.c >> 19) & 0xFF)
-                self.c &= 0x7FFFF
-                self.ct = 8
-
-    def flush(self) -> bytes:
-        # SETBITS: force the low 16 bits to ONES so the decoder's
-        # feed-1s-past-the-end tail reproduces the code exactly, backing
-        # off half a step if that left the final interval [C, C+A) — the
-        # back-off stays inside because A >= 0x8000 post-renormalization
-        top = self.c + self.a
-        self.c |= 0xFFFF
-        if self.c >= top:
-            self.c -= 0x8000
-        self.c <<= self.ct
-        self._byteout()
-        self.c <<= self.ct
-        self._byteout()
-        if self.out[-1] != 0xFF:
-            self.out.append(0xFF)
-        self.out.append(0xAC)
-        return bytes(self.out[1:])  # strip the BP-start dummy
 
 
 # --------------------------------------------------------------------------
@@ -460,114 +370,6 @@ def _decode_generic(mq: _MQDecoder, width: int, height: int, template: int,
     return np.array(rows, dtype=np.uint8)
 
 
-def _encode_generic(bm: np.ndarray, template: int = 0,
-                    tpgdon: bool = True, enc: "_MQEncoder | None" = None,
-                    contexts: tuple[list, list] | None = None,
-                    at: tuple | None = None) -> bytes | None:
-    """(h, w) 0/1 bitmap → MQ-coded generic region data.
-
-    With ``enc``/``contexts`` the bitmap is coded INTO an existing MQ
-    codestream with persistent GB contexts (the symbol-dictionary
-    arrangement, T.88 §6.5.8) and None is returned; standalone callers
-    get the flushed bytes.  ``at`` defaults to the nominal adaptive
-    pixels; non-nominal positions (the pattern-dictionary collective
-    bitmap uses A1 = (-HDPW, 0)) take the general gather path, the
-    mirror of the decoder's."""
-    h, w = bm.shape
-    own = enc is None
-    idx, mps = contexts if contexts is not None else _fresh_contexts(template)
-    if own:
-        enc = _MQEncoder()
-    rows = bm.astype(np.uint8).tolist()
-    zrow = [0] * w
-    tctx = _TPGD_CTX[template]
-    nominal = at is None or _at_is_nominal(template, at)
-    if not nominal:
-        atl = list(at)
-        pixels = [(atl[a - 1][0], atl[a - 1][1], 0) if a else (dx, dy, 0)
-                  for (dx, dy, a) in _TEMPLATE_PIXELS[template]]
-    ltp = 0
-    put = enc.encode
-    for y in range(h):
-        row = rows[y]
-        prev = rows[y - 1] if y else zrow
-        if tpgdon:
-            typical = 1 if row == prev else 0
-            put(idx, mps, tctx, typical ^ ltp)
-            ltp = typical
-            if typical:
-                continue
-        r1 = prev
-        r2 = rows[y - 2] if y >= 2 else zrow
-        if not nominal:
-            for x in range(w):
-                ctx = 0
-                for dx, dy, _a in pixels:
-                    px, py = x + dx, y + dy
-                    v = (rows[py][px]
-                         if 0 <= px < w and 0 <= py <= y
-                         and (py < y or px < x) else 0)
-                    ctx = (ctx << 1) | v
-                put(idx, mps, ctx, row[x])
-        elif template == 0:
-            ctx = (r2[0] << 13) | (r1[0] << 7)
-            if w > 1:
-                ctx |= (r2[1] << 12) | (r1[1] << 6)
-            if w > 2:
-                ctx |= (r2[2] << 11) | (r1[2] << 5)
-            if w > 3:
-                ctx |= r1[3] << 4
-            for x in range(w):
-                bit = row[x]
-                put(idx, mps, ctx, bit)
-                n2 = r2[x + 3] if x + 3 < w else 0
-                n1 = r1[x + 4] if x + 4 < w else 0
-                ctx = (((ctx & 0x7BF7) << 1) | (n2 << 11) | (n1 << 4)
-                       | bit)
-        elif template == 1:
-            ctx = (r2[0] << 11) | (r1[0] << 6)
-            if w > 1:
-                ctx |= (r2[1] << 10) | (r1[1] << 5)
-            if w > 2:
-                ctx |= (r2[2] << 9) | (r1[2] << 4)
-            if w > 3:
-                ctx |= r1[3] << 3
-            for x in range(w):
-                bit = row[x]
-                put(idx, mps, ctx, bit)
-                n2 = r2[x + 3] if x + 3 < w else 0
-                n1 = r1[x + 4] if x + 4 < w else 0
-                ctx = (((ctx & 0x0EFB) << 1) | (n2 << 9) | (n1 << 3)
-                       | bit)
-        elif template == 2:
-            ctx = (r2[0] << 8) | (r1[0] << 4)
-            if w > 1:
-                ctx |= (r2[1] << 7) | (r1[1] << 3)
-            if w > 2:
-                ctx |= (r1[2] << 2)
-            for x in range(w):
-                bit = row[x]
-                put(idx, mps, ctx, bit)
-                n2 = r2[x + 2] if x + 2 < w else 0
-                n1 = r1[x + 3] if x + 3 < w else 0
-                ctx = (((ctx & 0x01BD) << 1) | (n2 << 7) | (n1 << 2)
-                       | bit)
-        elif template == 3:
-            ctx = (r1[0] << 6)
-            if w > 1:
-                ctx |= r1[1] << 5
-            if w > 2:
-                ctx |= r1[2] << 4
-            for x in range(w):
-                bit = row[x]
-                put(idx, mps, ctx, bit)
-                n1 = r1[x + 3] if x + 3 < w else 0
-                ctx = (((ctx & 0x01F7) << 1) | (n1 << 4) | bit)
-        else:
-            raise Jbig2Error(f"bad GBTEMPLATE {template}")
-    return enc.flush() if own else None
-
-
 # --------------------------------------------------------------------------
 # Arithmetic integer decoding (T.88 Annex A) — the IAx procedures
 # --------------------------------------------------------------------------
@@ -607,38 +409,6 @@ def _int_decode(mq: _MQDecoder, idx: list, mps: list) -> int | None:
     return v
 
 
-def _int_encode(enc: _MQEncoder, idx: list, mps: list,
-                value: int | None) -> None:
-    """Inverse of :func:`_int_decode` (None encodes OOB)."""
-    prev = 1
-
-    def put(b: int) -> None:
-        nonlocal prev
-        enc.encode(idx, mps, prev, b)
-        prev = ((prev << 1) | b) if prev < 256 else \
-            ((((prev << 1) | b) & 511) | 256)
-
-    if value is None:
-        put(1)
-        v = 0
-    else:
-        put(1 if value < 0 else 0)
-        v = -value if value < 0 else value
-    cls = 5
-    for ci, (nb, off) in enumerate(_INT_CLASSES):
-        if v < off + (1 << nb):
-            cls = ci
-            break
-    for _ in range(cls):
-        put(1)
-    if cls < 5:
-        put(0)
-    nbits, offset = _INT_CLASSES[cls]
-    rem = v - offset
-    for i in range(nbits - 1, -1, -1):
-        put((rem >> i) & 1)
-
-
 def _iaid_ctx(symcodelen: int) -> tuple[list, list]:
     n = 1 << (symcodelen + 1)
     return [0] * n, [0] * n
@@ -651,16 +421,6 @@ def _iaid_decode(mq: _MQDecoder, idx: list, mps: list,
     for _ in range(symcodelen):
         prev = (prev << 1) | mq.decode(idx, mps, prev)
     return prev - (1 << symcodelen)
-
-
-def _iaid_encode(enc: _MQEncoder, idx: list, mps: list,
-                 value: int, symcodelen: int) -> None:
-    prev = 1
-    v = value + (1 << symcodelen)
-    for i in range(symcodelen - 1, -1, -1):
-        b = (v >> i) & 1
-        enc.encode(idx, mps, prev, b)
-        prev = (prev << 1) | b
 
 
 # --------------------------------------------------------------------------
@@ -751,60 +511,6 @@ def _decode_refinement(mq: _MQDecoder, width: int, height: int,
             row[x] = dec(idx, mps, ctx)
     return np.array(rows, dtype=np.uint8) if height else \
         np.zeros((0, width), dtype=np.uint8)
-
-
-def _encode_refinement(enc: _MQEncoder, bm: np.ndarray,
-                       template: int, reference: np.ndarray,
-                       dx: int, dy: int, at=_REF_NOMINAL_AT,
-                       tpgron: bool = False,
-                       contexts: tuple[list, list] | None = None) -> None:
-    """Inverse of :func:`_decode_refinement`, coding INTO ``enc``.  With
-    ``tpgron`` a row is marked typical whenever every uniform-reference-
-    window pixel already equals its window value (those pixels are then
-    skipped, the refinement win the flag exists for)."""
-    coding, refer = _ref_layout(template, at)
-    idx, mps = contexts if contexts is not None else _ref_ctx()
-    height, width = bm.shape
-    rows = bm.astype(np.uint8).tolist()
-    ref_rows = reference.tolist()
-    rh = len(ref_rows)
-    rw = len(ref_rows[0]) if rh else 0
-
-    def rpix(x: int, y: int) -> int:
-        return ref_rows[y][x] if 0 <= x < rw and 0 <= y < rh else 0
-
-    tctx = _REF_TPGR_CTX[template]
-    ltp = 0
-    put = enc.encode
-    for y in range(height):
-        row = rows[y]
-        skip = [False] * width
-        if tpgron:
-            typical = True
-            for x in range(width):
-                s = sum(rpix(x - dx + i, y - dy + j)
-                        for j in (-1, 0, 1) for i in (-1, 0, 1))
-                if s == 0 or s == 9:
-                    if row[x] != (1 if s == 9 else 0):
-                        typical = False
-                        break
-                    skip[x] = True
-            if not typical:
-                skip = [False] * width
-            put(idx, mps, tctx, ltp ^ typical)
-            ltp = typical
-        for x in range(width):
-            if ltp and skip[x]:
-                continue
-            ctx = 0
-            for cx_, cy_ in coding:
-                px, py = x + cx_, y + cy_
-                v = (rows[py][px]
-                     if 0 <= px < width and 0 <= py < height else 0)
-                ctx = (ctx << 1) | v
-            for rx_, ry_ in refer:
-                ctx = (ctx << 1) | rpix(x - dx + rx_, y - dy + ry_)
-            put(idx, mps, ctx, row[x])
 
 
 # --------------------------------------------------------------------------
@@ -1238,38 +944,6 @@ class _BitReader:
         return self.data[b0:b0 + n]
 
 
-class _BitWriter:
-    """MSB-first bit writer (fixture/encoder side)."""
-
-    __slots__ = ("bits",)
-
-    def __init__(self) -> None:
-        self.bits: list[int] = []
-
-    def write(self, value: int, n: int) -> None:
-        for i in range(n - 1, -1, -1):
-            self.bits.append((value >> i) & 1)
-
-    def byte_align(self) -> None:
-        while len(self.bits) % 8:
-            self.bits.append(0)
-
-    def write_bytes(self, data: bytes) -> None:
-        self.byte_align()
-        for b in data:
-            self.write(b, 8)
-
-    def flush(self) -> bytes:
-        self.byte_align()
-        out = bytearray()
-        for i in range(0, len(self.bits), 8):
-            v = 0
-            for b in self.bits[i:i + 8]:
-                v = (v << 1) | b
-            out.append(v)
-        return bytes(out)
-
-
 class _HuffTable:
     """One Annex-B Huffman table: lines are ``("n", preflen, rangelen,
     low)`` (value = low + rangelen extra bits), ``("l", preflen, low)``
@@ -1322,42 +996,6 @@ class _HuffTable:
                 return _HUFF_OOB
             if length > 32:
                 raise Jbig2Error("invalid huffman code")
-
-    # ---- encoder side (fixtures) ----
-
-    def _code_of(self, target) -> tuple[int, int]:
-        for (length, code), ln in self.by_code.items():
-            if ln is target:
-                return length, code
-        raise AssertionError("line not in table")
-
-    def encode(self, w: _BitWriter, value: int) -> None:
-        for ln in self.lines:
-            if ln[0] == "n" and ln[3] <= value < ln[3] + (1 << ln[2]):
-                length, code = self._code_of(ln)
-                w.write(code, length)
-                w.write(value - ln[3], ln[2])
-                return
-        for ln in self.lines:
-            if ln[0] == "u" and value >= ln[2]:
-                length, code = self._code_of(ln)
-                w.write(code, length)
-                w.write(value - ln[2], 32)
-                return
-            if ln[0] == "l" and value <= ln[2]:
-                length, code = self._code_of(ln)
-                w.write(code, length)
-                w.write(ln[2] - value, 32)
-                return
-        raise ValueError(f"value {value} not codable by this table")
-
-    def encode_oob(self, w: _BitWriter) -> None:
-        for ln in self.lines:
-            if ln[0] == "o":
-                length, code = self._code_of(ln)
-                w.write(code, length)
-                return
-        raise ValueError("table has no OOB code")
 
 
 #: ITU-T T.88 Annex B standard tables B.1-B.15 (public spec data)
@@ -1477,35 +1115,6 @@ def _parse_table_segment(seg_data: bytes) -> _HuffTable:
     if htoob:
         lines.append(("o", r.read(htps)))
     return _HuffTable(lines)
-
-
-def _encode_table_segment(value_lines: list[tuple], low_pl: int,
-                          high_pl: int, oob_pl: int = 0) -> bytes:
-    """Fixture inverse of :func:`_parse_table_segment`: ``value_lines``
-    are ``(preflen, rangelen, low)`` triples tiling ``[low, high)`` from
-    the first line's low bound; ``oob_pl=0`` omits the OOB line."""
-    if not value_lines:
-        raise ValueError("need at least one value line")
-    htlow = value_lines[0][2]
-    cur = htlow
-    pls = [pl for pl, _rl, _lo in value_lines]
-    pls += [low_pl, high_pl] + ([oob_pl] if oob_pl else [])
-    rls = [rl for _pl, rl, _lo in value_lines]
-    htps = max(max(pls).bit_length(), 1)
-    htrs = max(max(rls).bit_length(), 1)
-    w = _BitWriter()
-    for pl, rl, lo in value_lines:
-        if lo != cur:
-            raise ValueError("value lines must tile the range")
-        w.write(pl, htps)
-        w.write(rl, htrs)
-        cur += 1 << rl
-    w.write(low_pl, htps)
-    w.write(high_pl, htps)
-    if oob_pl:
-        w.write(oob_pl, htps)
-    tflags = (1 if oob_pl else 0) | ((htps - 1) << 1) | ((htrs - 1) << 4)
-    return bytes([tflags]) + struct.pack(">ii", htlow, cur) + w.flush()
 
 
 def _take_table(custom: list, what: str) -> _HuffTable:
@@ -1650,163 +1259,6 @@ def _draw_instance(page: np.ndarray, sym: np.ndarray, curs: int,
         if refcorner in (1, 3):
             curs += hi - 1
     return curs
-
-
-#: custom DW table emitted by the ``custom_dw_table`` fixture tier:
-#: [0, 64) with 6 extra bits, [64, 1088) with 10 — covers every width
-#: delta the fixture pages produce; Kraft 31/32 (incomplete is legal)
-_CUSTOM_DW_SEG = None
-
-
-def _custom_dw_table_segment() -> bytes:
-    global _CUSTOM_DW_SEG
-    if _CUSTOM_DW_SEG is None:
-        _CUSTOM_DW_SEG = _encode_table_segment(
-            [(1, 6, 0), (2, 10, 64)], low_pl=5, high_pl=4, oob_pl=3)
-    return _CUSTOM_DW_SEG
-
-
-def _encode_huffman_symbol_dict(symbols: list[np.ndarray],
-                                custom_dw: bool = False) -> bytes:
-    """Symbols (sorted by ascending height, then width) → SDHUFF=1
-    dictionary segment data with B.4/B.2/B.1 tables and UNCOMPRESSED
-    collective bitmaps (BMSIZE=0) — the simplest conforming huffman
-    arrangement.  ``custom_dw=True`` codes the width deltas with the
-    type-53 custom table of :func:`_custom_dw_table_segment` instead
-    (selector value 3); the caller must emit that table segment in the
-    dictionary's referred-to list."""
-    flags = 1 | ((3 << 4) if custom_dw else 0)
-    header = struct.pack(">H", flags) + struct.pack(
-        ">II", len(symbols), len(symbols))
-    t_dh, t_bm, t_ex = (_std_table(4), _std_table(1), _std_table(1))
-    t_dw = _parse_table_segment(_custom_dw_table_segment()) \
-        if custom_dw else _std_table(2)
-    w = _BitWriter()
-    classes: dict[int, list[np.ndarray]] = {}
-    for sym in symbols:
-        classes.setdefault(sym.shape[0], []).append(sym)
-    prev_h = 0
-    for hh in sorted(classes):
-        t_dh.encode(w, hh - prev_h)
-        prev_h = hh
-        prev_w = 0
-        for sym in classes[hh]:
-            t_dw.encode(w, sym.shape[1] - prev_w)
-            prev_w = sym.shape[1]
-        t_dw.encode_oob(w)
-        t_bm.encode(w, 0)  # uncompressed collective bitmap
-        coll = np.hstack(classes[hh])
-        w.write_bytes(np.packbits(coll, axis=1).tobytes())
-    t_ex.encode(w, 0)              # run of 0 non-exports,
-    t_ex.encode(w, len(symbols))   # then export everything
-    return header + w.flush()
-
-
-def _encode_huffman_text_region(instances: list[tuple],
-                                symbols: list[np.ndarray],
-                                w: int, h: int,
-                                refcorner: int = 1) -> bytes:
-    """Instances ``[(x0, y0, symbol_id)]`` (top-left anchors) →
-    SBHUFF=1 text region segment data (standard tables, flat symbol ID
-    code, SBSTRIPS=1)."""
-    region_info = struct.pack(">IIIIB", w, h, 0, 0, 0)
-    flags = 1 | ((refcorner & 3) << 4)  # SBHUFF=1, LOGSBSTRIPS=0
-    hflags = 0  # B.6 / B.8 / B.11, no refinement tables, RSIZE=B.1
-    t_fs, t_ds, t_dt = _std_table(6), _std_table(8), _std_table(11)
-    bw = _BitWriter()
-    n_syms = len(symbols)
-    scl = max((n_syms - 1).bit_length(), 1)
-    # 35 runcode lengths: only runcode `scl` is used, as a 1-bit code
-    for i in range(35):
-        bw.write(1 if i == scl else 0, 4)
-    for _ in range(n_syms):
-        bw.write(0, 1)  # every symbol's code length = scl (runcode 0b0)
-    bw.byte_align()
-    t_sym = _HuffTable([("n", scl, 0, i) for i in range(n_syms)]) \
-        if n_syms > 1 else None
-
-    def enc_t(y0: int, sid: int) -> int:
-        return y0 if refcorner in (1, 3) else y0 + symbols[sid].shape[0] - 1
-
-    strips: dict[int, list[tuple]] = {}
-    for x0, y0, sid in instances:
-        strips.setdefault(enc_t(y0, sid), []).append((x0, y0, sid))
-
-    t_dt.encode(bw, 1)  # initial STRIPT = -1
-    stript = -1
-    firsts = 0
-    for st in sorted(strips):
-        t_dt.encode(bw, st - stript)
-        stript = st
-        row = sorted(strips[st])
-        first = True
-        curs = 0
-        for x0, _y0, sid in row:
-            wi = symbols[sid].shape[1]
-            if first:
-                t_fs.encode(bw, x0 - firsts)
-                firsts = x0
-                first = False
-            else:
-                t_ds.encode(bw, x0 - curs)  # SBDSOFFSET = 0
-            curs = x0 + wi - 1
-            if t_sym is not None:
-                length, code = t_sym._code_of(t_sym.lines[sid])
-                bw.write(code, length)
-        t_ds.encode_oob(bw)
-    return (region_info + struct.pack(">H", flags)
-            + struct.pack(">H", hflags)
-            + struct.pack(">I", len(instances)) + bw.flush())
-
-
-def encode_jbig2_symbol_huffman_embedded(bitmap: np.ndarray,
-                                         refcorner: int = 1,
-                                         custom_dw_table: bool = False,
-                                         ) -> bytes:
-    """2-D bitmap → PDF-embedded JBIG2 stream in the HUFFMAN-CODED
-    dictionary arrangement (SDHUFF=1 collective bitmaps + SBHUFF=1 text
-    region with standard Annex-B tables) — the non-arithmetic variant
-    some encoders emit.  ``custom_dw_table=True`` additionally routes
-    the width deltas through a type-53 CUSTOM table segment (Annex
-    B.2) referred by the dictionary — the custom-table arrangement.
-    Lossless; inverse of :func:`decode_jbig2_embedded`."""
-    bm = np.asarray(bitmap)
-    if bm.ndim != 2:
-        raise ValueError(
-            "encode_jbig2_symbol_huffman_embedded wants a 2-D bitmap")
-    bm = bm.astype(bool).astype(np.uint8)
-    h, w = bm.shape
-    comps = _connected_components(bm)
-    page_info = (struct.pack(">IIII", w, h, 0, 0) + b"\x01"
-                 + b"\x00\x00")
-    if not comps:
-        return (_segment(1, 48, 1, page_info)
-                + _segment(2, 49, 1, b""))
-    comp_keys = [(mask.shape[0], mask.shape[1], mask.tobytes())
-                 for _x0, _y0, mask in comps]
-    keys = sorted(set(comp_keys))  # ascending height, width, pixels
-    classes = {key: sid for sid, key in enumerate(keys)}
-    symbols = [np.frombuffer(key[2], dtype=np.uint8)
-               .reshape(key[0], key[1]) for key in keys]
-    instances = [(x0, y0, classes[key])
-                 for (x0, y0, _mask), key in zip(comps, comp_keys)]
-    parts: list[tuple[int, bytes, str]] = [(48, page_info, "")]
-    if custom_dw_table:
-        parts.append((53, _custom_dw_table_segment(), ""))
-    parts.append((0, _encode_huffman_symbol_dict(
-        symbols, custom_dw=custom_dw_table),
-        "table" if custom_dw_table else ""))
-    parts.append((7, _encode_huffman_text_region(
-        instances, symbols, w, h, refcorner), "dict"))
-    parts.append((49, b"", ""))
-    out = bytearray()
-    num_of = {}
-    for num, (seg_type, payload, ref_kind) in enumerate(parts, start=1):
-        refs = (num_of[ref_kind],) if ref_kind else ()
-        if seg_type in (0, 53):
-            num_of["table" if seg_type == 53 else "dict"] = num
-        out += _segment(num, seg_type, 1, payload, refs=refs)
-    return bytes(out)
 
 
 def _combine(dst: np.ndarray, src: np.ndarray, op: int) -> None:
@@ -1963,78 +1415,6 @@ def _decode_halftone_region(seg_data: bytes,
             _combine(page[y0:y0 + ch, x0:x0 + cw],
                      pat[sy:sy + ch, sx:sx + cw], hcombop)
     return info, page
-
-
-def _encode_pattern_dict(patterns: list[np.ndarray]) -> bytes:
-    """Pattern bitmaps (equal HDPW×HDPH) → pattern dictionary segment
-    data (template 0, collective coding)."""
-    ph, pw = patterns[0].shape
-    collective = np.concatenate([p.astype(np.uint8) for p in patterns],
-                                axis=1)
-    at = ((-pw, 0), (-3, -1), (2, -2), (-2, -2))
-    return (bytes([0, pw, ph]) + struct.pack(">I", len(patterns) - 1)
-            + _encode_generic(collective, template=0, tpgdon=False,
-                              at=at))
-
-
-def _encode_halftone_region(gray: np.ndarray, patterns: list[np.ndarray],
-                            w: int, h: int, mmr: bool = False) -> bytes:
-    """Gray-scale pattern-index grid → halftone region segment data on
-    a regular grid (square patterns; HRX = HDPW<<8, HRY = 0).
-    ``mmr=True`` codes the gray bitplanes as one bit-continuous G4
-    stream (HMMR=1, Annex C.5) instead of MQ arithmetic."""
-    ph, pw = patterns[0].shape
-    if ph != pw:
-        raise ValueError("fixture halftone grid wants square patterns")
-    hgh, hgw = gray.shape
-    region_info = struct.pack(">IIIIB", w, h, 0, 0, 0)
-    bpv = (len(patterns) - 1).bit_length()
-    g = gray.astype(np.int64)
-    planes = [((g >> j) & 1).astype(np.uint8)
-              for j in range(bpv - 1, -1, -1)]  # MSB first
-    coded: list[np.ndarray] = []
-    prev = np.zeros_like(g, dtype=np.uint8)
-    for bits in planes:
-        coded.append(bits ^ prev)  # gray-code the bitplane
-        prev = bits
-    if mmr:
-        from .ccittcodec import encode_g4_planes
-
-        body = encode_g4_planes(coded) if coded else b""
-    else:
-        enc = _MQEncoder()
-        gb_ctx = _fresh_contexts(0)
-        at = ((3, -1), (-3, -1), (2, -2), (-2, -2))
-        for plane in coded:
-            _encode_generic(plane, template=0, tpgdon=False, enc=enc,
-                            contexts=gb_ctx, at=at)
-        body = enc.flush()
-    return (region_info + bytes([1 if mmr else 0])  # template 0, OR
-            + struct.pack(">II", hgw, hgh)
-            + struct.pack(">ii", 0, 0)
-            + struct.pack(">HH", pw << 8, 0)
-            + body)
-
-
-def encode_jbig2_halftone_embedded(gray: np.ndarray,
-                                   patterns: list[np.ndarray],
-                                   mmr: bool = False) -> bytes:
-    """Pattern-index grid (values < len(patterns)) + square patterns →
-    PDF-embedded JBIG2 stream: page info + pattern dictionary +
-    immediate lossless halftone region + end of page.  ``mmr=True``
-    emits the HMMR=1 (G4-coded gray planes) arrangement."""
-    g = np.asarray(gray)
-    ph, pw = patterns[0].shape
-    hgh, hgw = g.shape
-    w, h = hgw * pw, hgh * ph
-    page_info = (struct.pack(">IIII", w, h, 0, 0) + b"\x01" + b"\x00\x00")
-    return (_segment(1, 48, 1, page_info)
-            + _segment(2, 16, 1, _encode_pattern_dict(patterns))
-            + _segment(3, 23, 1,  # immediate lossless halftone region
-                       _encode_halftone_region(g, patterns, w, h,
-                                               mmr=mmr),
-                       refs=(2,))
-            + _segment(4, 49, 1, b""))
 
 
 # --------------------------------------------------------------------------
@@ -2253,255 +1633,3 @@ def decode_jbig2_embedded(data: bytes, globals_data: bytes | None = None,
         _combine(page[y:y + h, x:x + w], bm, info["comb"])
     return np.where(page, 0, 255).astype(np.uint8)
 
-
-def _segment(number: int, seg_type: int, page: int, payload: bytes,
-             refs: tuple[int, ...] = ()) -> bytes:
-    """Author one segment (short referred-to form, 1-byte refs and page
-    association — valid while segment numbers stay ≤ 256)."""
-    if len(refs) > 4:
-        raise ValueError("short referred-to form holds at most 4 refs")
-    return (struct.pack(">IB", number, seg_type)
-            + bytes([len(refs) << 5]) + bytes(refs)
-            + struct.pack(">B", page) + struct.pack(">I", len(payload))
-            + payload)
-
-
-def encode_jbig2_embedded(bitmap: np.ndarray) -> bytes:
-    """2-D bitmap (nonzero/True = black ink) → PDF-embedded JBIG2 stream:
-    page info + immediate lossless generic region (template 0, nominal
-    AT, TPGDON) + end of page.  Inverse of :func:`decode_jbig2_embedded`
-    and standard T.88, so any JBIG2-capable tool decodes the output.
-    Grayscale callers threshold first (``gray < 128``)."""
-    bm = np.asarray(bitmap)
-    if bm.ndim != 2:
-        raise ValueError("encode_jbig2_embedded wants a 2-D bitmap")
-    bm = (bm.astype(bool)).astype(np.uint8)
-    h, w = bm.shape
-    page_info = (struct.pack(">IIII", w, h, 0, 0)
-                 + b"\x01"    # flags: defaults may be overridden... bit0=lossless
-                 + b"\x00\x00")  # no striping
-    region_info = struct.pack(">IIIIB", w, h, 0, 0, 0)  # OR onto page
-    gflags = (0 << 1) | (1 << 3)  # MMR=0, template 0, TPGDON=1
-    at = b"".join(struct.pack("bb", dx, dy) for dx, dy in _NOMINAL_AT[0])
-    body = _encode_generic(bm, template=0, tpgdon=True)
-    region = region_info + bytes([gflags]) + at + body
-    return (_segment(1, 48, 1, page_info)
-            + _segment(2, 39, 1, region)      # immediate lossless generic
-            + _segment(3, 49, 1, b""))        # end of page
-
-
-def _connected_components(bm: np.ndarray,
-                          ) -> list[tuple[int, int, np.ndarray]]:
-    """8-connected ink components of a 0/1 bitmap → [(x0, y0, mask)] in
-    raster order of each component's first pixel.  ``mask`` holds exactly
-    the component's pixels (overlapping bounding boxes stay clean).
-    Fixture-authoring side only — pages are glyph-sized."""
-    h, w = bm.shape
-    labels = np.zeros((h, w), dtype=np.int32)
-    comps: list[tuple[int, int, np.ndarray]] = []
-    ys, xs = np.nonzero(bm)
-    for y, x in zip(ys.tolist(), xs.tolist()):
-        if labels[y, x]:
-            continue
-        label = len(comps) + 1
-        labels[y, x] = label
-        stack = [(y, x)]
-        pix: list[tuple[int, int]] = []
-        while stack:
-            cy, cx = stack.pop()
-            pix.append((cy, cx))
-            for ny in range(max(0, cy - 1), min(h, cy + 2)):
-                for nx in range(max(0, cx - 1), min(w, cx + 2)):
-                    if bm[ny, nx] and not labels[ny, nx]:
-                        labels[ny, nx] = label
-                        stack.append((ny, nx))
-        py = [p[0] for p in pix]
-        px = [p[1] for p in pix]
-        y0, y1, x0, x1 = min(py), max(py), min(px), max(px)
-        mask = np.zeros((y1 - y0 + 1, x1 - x0 + 1), dtype=np.uint8)
-        for cy, cx in pix:
-            mask[cy - y0, cx - x0] = 1
-        comps.append((x0, y0, mask))
-    return comps
-
-
-def _encode_symbol_dict(symbols: list[np.ndarray],
-                        refine_from: "list | None" = None,
-                        input_syms: "list[np.ndarray] | None" = None,
-                        ) -> bytes:
-    """Symbol bitmaps (MUST be sorted by ascending height; IDs are list
-    positions) → symbol dictionary segment data, all exported (input
-    symbols from referred-to dicts are re-exported first).  With
-    ``refine_from`` (one global symbol id per entry, indexing the
-    input+new space) the dictionary is SDREFAGG-coded: every symbol is
-    a single-instance refinement of an earlier one."""
-    input_syms = input_syms or []
-    refagg = refine_from is not None
-    flags = 2 if refagg else 0  # SDHUFF=0, template 0, rtemplate 0
-    header = (struct.pack(">H", flags)
-              + b"".join(struct.pack("bb", dx, dy)
-                         for dx, dy in _NOMINAL_AT[0])
-              + (b"".join(struct.pack("bb", dx, dy)
-                          for dx, dy in _REF_NOMINAL_AT) if refagg
-                 else b"")
-              + struct.pack(">II", len(input_syms) + len(symbols),
-                            len(symbols)))
-    enc = _MQEncoder()
-    iadh, iadw, iaex = _int_ctx(), _int_ctx(), _int_ctx()
-    iaai, iardx, iardy = _int_ctx(), _int_ctx(), _int_ctx()
-    scl = _symcodelen(len(input_syms) + len(symbols))
-    iaid = _iaid_ctx(scl)
-    gb_ctx = _fresh_contexts(0)
-    gr_ctx = _ref_ctx()
-    pool = list(input_syms)
-    hprev = 0
-    i = 0
-    while i < len(symbols):
-        hc = symbols[i].shape[0]
-        _int_encode(enc, *iadh, hc - hprev)
-        hprev = hc
-        wprev = 0
-        while i < len(symbols) and symbols[i].shape[0] == hc:
-            wi = symbols[i].shape[1]
-            _int_encode(enc, *iadw, wi - wprev)
-            wprev = wi
-            if refagg:
-                rid = refine_from[i]
-                _int_encode(enc, *iaai, 1)  # REFAGGNINST
-                if scl:
-                    _iaid_encode(enc, *iaid, rid, scl)
-                _int_encode(enc, *iardx, 0)
-                _int_encode(enc, *iardy, 0)
-                _encode_refinement(enc, symbols[i], 0, pool[rid], 0, 0,
-                                   contexts=gr_ctx)
-            else:
-                _encode_generic(symbols[i], template=0, tpgdon=False,
-                                enc=enc, contexts=gb_ctx)
-            pool.append(symbols[i])
-            i += 1
-        _int_encode(enc, *iadw, None)  # OOB closes the height class
-    _int_encode(enc, *iaex, 0)                    # run of 0 non-exports,
-    _int_encode(enc, *iaex, len(pool))            # then export everything
-    return header + enc.flush()
-
-
-def _encode_text_region(instances: list[tuple],
-                        symbols: list[np.ndarray],
-                        w: int, h: int, refcorner: int = 1,
-                        sbstrips: int = 1) -> bytes:
-    """Instances ``[(x0, y0, symbol_id)]`` or ``[(x0, y0, symbol_id,
-    target_bitmap)]`` (top-left anchors) drawn onto a (h, w) region →
-    text region segment data (TRANSPOSED=0, OR composition).  A 4-tuple
-    instance is SBREFINE-coded: the placed bitmap is ``target`` coded
-    as a refinement of ``symbols[symbol_id]``.  ``refcorner`` picks the
-    encoded REFCORNER and ``sbstrips`` ∈ {1,2,4,8} the strip height
-    (>1 exercises the IAIT T-residual path) — the emitted T/S values
-    are adjusted so every variant draws identically."""
-    if sbstrips not in (1, 2, 4, 8):
-        raise ValueError("SBSTRIPS must be 1, 2, 4 or 8")
-    insts = [inst if len(inst) == 4 else (*inst, None)
-             for inst in instances]
-    sbrefine = any(t is not None for *_x, t in insts)
-    region_info = struct.pack(">IIIIB", w, h, 0, 0, 0)
-    flags = ((refcorner & 3) << 4  # SBHUFF=0 ...
-             | (1 << 1 if sbrefine else 0)
-             | (sbstrips.bit_length() - 1) << 2)  # LOGSBSTRIPS
-    rat_hdr = (b"".join(struct.pack("bb", dx, dy)
-                        for dx, dy in _REF_NOMINAL_AT) if sbrefine
-               else b"")
-    enc = _MQEncoder()
-    iadt, iafs, iads, iait = (_int_ctx() for _ in range(4))
-    iari, iardw, iardh, iardx, iardy = (_int_ctx() for _ in range(5))
-    gr_ctx = _ref_ctx()
-    scl = _symcodelen(len(symbols))
-    iaid = _iaid_ctx(scl)
-
-    def placed(sid: int, target) -> np.ndarray:
-        return symbols[sid] if target is None else target
-
-    def enc_t(y0: int, sid: int, target) -> int:
-        hi = placed(sid, target).shape[0]
-        return y0 if refcorner in (1, 3) else y0 + hi - 1
-
-    strips: dict[int, list[tuple]] = {}
-    for x0, y0, sid, target in insts:
-        t = enc_t(y0, sid, target)
-        strips.setdefault(t - t % sbstrips, []).append((x0, y0, sid,
-                                                        target))
-
-    _int_encode(enc, *iadt, 0)  # STRIPT starts at 0
-    stript = 0
-    firsts = 0
-    for st in sorted(strips):
-        _int_encode(enc, *iadt, (st - stript) // sbstrips)
-        stript = st
-        row = sorted(strips[st],
-                     key=lambda inst: (inst[0], inst[1], inst[2]))
-        first = True
-        curs = 0
-        for x0, y0, sid, target in row:
-            wi = placed(sid, target).shape[1]
-            if first:
-                _int_encode(enc, *iafs, x0 - firsts)
-                firsts = x0
-                first = False
-            else:
-                _int_encode(enc, *iads, x0 - curs)  # SBDSOFFSET = 0
-            curs = x0 + wi - 1
-            if sbstrips > 1:
-                _int_encode(enc, *iait, enc_t(y0, sid, target) - st)
-            if scl:
-                _iaid_encode(enc, *iaid, sid, scl)
-            if sbrefine:
-                _int_encode(enc, *iari, 0 if target is None else 1)
-                if target is not None:
-                    rdw = target.shape[1] - symbols[sid].shape[1]
-                    rdh = target.shape[0] - symbols[sid].shape[0]
-                    _int_encode(enc, *iardw, rdw)
-                    _int_encode(enc, *iardh, rdh)
-                    _int_encode(enc, *iardx, -(rdw >> 1))
-                    _int_encode(enc, *iardy, -(rdh >> 1))
-                    _encode_refinement(enc, target, 0, symbols[sid],
-                                       0, 0, contexts=gr_ctx)
-        _int_encode(enc, *iads, None)  # OOB ends the strip
-    return (region_info + struct.pack(">H", flags) + rat_hdr
-            + struct.pack(">I", len(instances)) + enc.flush())
-
-
-def encode_jbig2_symbol_embedded(bitmap: np.ndarray,
-                                 refcorner: int = 1,
-                                 sbstrips: int = 1) -> bytes:
-    """2-D bitmap (nonzero/True = black ink) → PDF-embedded JBIG2 stream
-    in the DICTIONARY-CODED arrangement real scanner output uses: each
-    connected ink component becomes a symbol instance, identical shapes
-    share one dictionary entry (the jbig2enc architecture), and a text
-    region places them.  Lossless for any bitmap — a component is its
-    own symbol — and the inverse of :func:`decode_jbig2_embedded`."""
-    bm = np.asarray(bitmap)
-    if bm.ndim != 2:
-        raise ValueError("encode_jbig2_symbol_embedded wants a 2-D bitmap")
-    bm = (bm.astype(bool)).astype(np.uint8)
-    h, w = bm.shape
-    comps = _connected_components(bm)
-    if not comps:
-        # no ink: an empty page needs no region segments at all
-        page_info = (struct.pack(">IIII", w, h, 0, 0) + b"\x01"
-                     + b"\x00\x00")
-        return (_segment(1, 48, 1, page_info)
-                + _segment(2, 49, 1, b""))
-    comp_keys = [(mask.shape[0], mask.shape[1], mask.tobytes())
-                 for _x0, _y0, mask in comps]
-    keys = sorted(set(comp_keys))  # ascending height, width, pixels
-    classes = {key: sid for sid, key in enumerate(keys)}
-    symbols = [np.frombuffer(key[2], dtype=np.uint8)
-               .reshape(key[0], key[1]) for key in keys]
-    instances = [(x0, y0, classes[key])
-                 for (x0, y0, _mask), key in zip(comps, comp_keys)]
-    page_info = (struct.pack(">IIII", w, h, 0, 0) + b"\x01" + b"\x00\x00")
-    return (_segment(1, 48, 1, page_info)
-            + _segment(2, 0, 1, _encode_symbol_dict(symbols))
-            + _segment(3, 7, 1,  # immediate lossless text region
-                       _encode_text_region(instances, symbols, w, h,
-                                           refcorner, sbstrips),
-                       refs=(2,))
-            + _segment(4, 49, 1, b""))

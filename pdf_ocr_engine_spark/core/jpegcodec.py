@@ -1,4 +1,4 @@
-"""Pure-stdlib baseline JPEG codec (ITU-T T.81) — luma decode + encoder.
+"""Pure-stdlib JPEG decoder (ITU-T T.81) — baseline and progressive luma.
 
 The reference delegates all raster decode to ``sharp``/``pdf.js``
 (``/root/reference/src/lib/ocr/ocr.ts:67-71``, ``extractor.ts:12-37``);
@@ -34,12 +34,9 @@ coefficient grid, and the block plan of one MCU).  The sequential scan
 units; one ``_restart`` check serves every loop, and ``_Frame.finish``
 runs the one batched dequant + IDCT.
 
-The encoder (:func:`encode_jpeg_gray` / :func:`encode_jpeg_rgb`) is the
-fixture-authoring side: standard Annex K tables, quality scaling per the
-common IJG formula, optional 4:2:0 subsampling and restart intervals.
-At ``quality=100`` every quantizer entry is 1, so a decoded binary page
-raster stays within ±2 of the source — far inside the OCR tier's
-128-threshold margin, keeping recognition deterministic and exact.
+The fixture encoder (``encoders.raster.encode_jpeg_gray`` and its
+progressive and RGB siblings) takes ``ZIGZAG`` and the DCT basis from
+here.
 """
 
 from __future__ import annotations
@@ -52,9 +49,6 @@ __all__ = [
     "JpegError",
     "JpegUnsupported",
     "decode_jpeg_gray",
-    "encode_jpeg_gray",
-    "encode_jpeg_gray_progressive",
-    "encode_jpeg_rgb",
 ]
 
 
@@ -638,582 +632,3 @@ def _decode_scan(data: bytes, pos: int, fr: _Frame, sos_body: bytes,
                 k += 1
             if bitpos > nbits:
                 raise JpegError("entropy data exhausted")
-
-
-# --------------------------------------------------------------------------
-# Encoder (fixture authoring; standard Annex K tables)
-# --------------------------------------------------------------------------
-
-#: T.81 Annex K.1 luminance quantization table, zigzag order
-_STD_LUM_QT = np.array([
-    16, 11, 12, 14, 12, 10, 16, 14,
-    13, 14, 18, 17, 16, 19, 24, 40,
-    26, 24, 22, 22, 24, 49, 35, 37,
-    29, 40, 58, 51, 61, 60, 57, 51,
-    56, 55, 64, 72, 92, 78, 64, 68,
-    87, 69, 55, 56, 80, 109, 81, 87,
-    95, 98, 103, 104, 103, 62, 77, 113,
-    121, 112, 100, 120, 92, 101, 103, 99], dtype=np.int64)
-
-#: Annex K.1 chrominance table, zigzag order
-_STD_CHR_QT = np.array([
-    17, 18, 18, 24, 21, 24, 47, 26,
-    26, 47, 99, 66, 56, 66, 99, 99,
-    99, 99, 99, 99, 99, 99, 99, 99,
-    99, 99, 99, 99, 99, 99, 99, 99,
-    99, 99, 99, 99, 99, 99, 99, 99,
-    99, 99, 99, 99, 99, 99, 99, 99,
-    99, 99, 99, 99, 99, 99, 99, 99,
-    99, 99, 99, 99, 99, 99, 99, 99], dtype=np.int64)
-
-# Annex K.3 standard Huffman tables: (BITS[1..16], HUFFVAL)
-_STD_DC_LUM = ([0, 1, 5, 1, 1, 1, 1, 1, 1, 0, 0, 0, 0, 0, 0, 0],
-               bytes(range(12)))
-_STD_DC_CHR = ([0, 3, 1, 1, 1, 1, 1, 1, 1, 1, 1, 0, 0, 0, 0, 0],
-               bytes(range(12)))
-_STD_AC_LUM = (
-    [0, 2, 1, 3, 3, 2, 4, 3, 5, 5, 4, 4, 0, 0, 1, 0x7D],
-    bytes([
-        0x01, 0x02, 0x03, 0x00, 0x04, 0x11, 0x05, 0x12, 0x21, 0x31, 0x41,
-        0x06, 0x13, 0x51, 0x61, 0x07, 0x22, 0x71, 0x14, 0x32, 0x81, 0x91,
-        0xA1, 0x08, 0x23, 0x42, 0xB1, 0xC1, 0x15, 0x52, 0xD1, 0xF0, 0x24,
-        0x33, 0x62, 0x72, 0x82, 0x09, 0x0A, 0x16, 0x17, 0x18, 0x19, 0x1A,
-        0x25, 0x26, 0x27, 0x28, 0x29, 0x2A, 0x34, 0x35, 0x36, 0x37, 0x38,
-        0x39, 0x3A, 0x43, 0x44, 0x45, 0x46, 0x47, 0x48, 0x49, 0x4A, 0x53,
-        0x54, 0x55, 0x56, 0x57, 0x58, 0x59, 0x5A, 0x63, 0x64, 0x65, 0x66,
-        0x67, 0x68, 0x69, 0x6A, 0x73, 0x74, 0x75, 0x76, 0x77, 0x78, 0x79,
-        0x7A, 0x83, 0x84, 0x85, 0x86, 0x87, 0x88, 0x89, 0x8A, 0x92, 0x93,
-        0x94, 0x95, 0x96, 0x97, 0x98, 0x99, 0x9A, 0xA2, 0xA3, 0xA4, 0xA5,
-        0xA6, 0xA7, 0xA8, 0xA9, 0xAA, 0xB2, 0xB3, 0xB4, 0xB5, 0xB6, 0xB7,
-        0xB8, 0xB9, 0xBA, 0xC2, 0xC3, 0xC4, 0xC5, 0xC6, 0xC7, 0xC8, 0xC9,
-        0xCA, 0xD2, 0xD3, 0xD4, 0xD5, 0xD6, 0xD7, 0xD8, 0xD9, 0xDA, 0xE1,
-        0xE2, 0xE3, 0xE4, 0xE5, 0xE6, 0xE7, 0xE8, 0xE9, 0xEA, 0xF1, 0xF2,
-        0xF3, 0xF4, 0xF5, 0xF6, 0xF7, 0xF8, 0xF9, 0xFA]))
-_STD_AC_CHR = (
-    [0, 2, 1, 2, 4, 4, 3, 4, 7, 5, 4, 4, 0, 1, 2, 0x77],
-    bytes([
-        0x00, 0x01, 0x02, 0x03, 0x11, 0x04, 0x05, 0x21, 0x31, 0x06, 0x12,
-        0x41, 0x51, 0x07, 0x61, 0x71, 0x13, 0x22, 0x32, 0x81, 0x08, 0x14,
-        0x42, 0x91, 0xA1, 0xB1, 0xC1, 0x09, 0x23, 0x33, 0x52, 0xF0, 0x15,
-        0x62, 0x72, 0xD1, 0x0A, 0x16, 0x24, 0x34, 0xE1, 0x25, 0xF1, 0x17,
-        0x18, 0x19, 0x1A, 0x26, 0x27, 0x28, 0x29, 0x2A, 0x35, 0x36, 0x37,
-        0x38, 0x39, 0x3A, 0x43, 0x44, 0x45, 0x46, 0x47, 0x48, 0x49, 0x4A,
-        0x53, 0x54, 0x55, 0x56, 0x57, 0x58, 0x59, 0x5A, 0x63, 0x64, 0x65,
-        0x66, 0x67, 0x68, 0x69, 0x6A, 0x73, 0x74, 0x75, 0x76, 0x77, 0x78,
-        0x79, 0x7A, 0x82, 0x83, 0x84, 0x85, 0x86, 0x87, 0x88, 0x89, 0x8A,
-        0x92, 0x93, 0x94, 0x95, 0x96, 0x97, 0x98, 0x99, 0x9A, 0xA2, 0xA3,
-        0xA4, 0xA5, 0xA6, 0xA7, 0xA8, 0xA9, 0xAA, 0xB2, 0xB3, 0xB4, 0xB5,
-        0xB6, 0xB7, 0xB8, 0xB9, 0xBA, 0xC2, 0xC3, 0xC4, 0xC5, 0xC6, 0xC7,
-        0xC8, 0xC9, 0xCA, 0xD2, 0xD3, 0xD4, 0xD5, 0xD6, 0xD7, 0xD8, 0xD9,
-        0xDA, 0xE2, 0xE3, 0xE4, 0xE5, 0xE6, 0xE7, 0xE8, 0xE9, 0xEA, 0xF2,
-        0xF3, 0xF4, 0xF5, 0xF6, 0xF7, 0xF8, 0xF9, 0xFA]))
-
-
-def _scaled_qt(base: np.ndarray, quality: int) -> np.ndarray:
-    """IJG quality scaling: 100 → all-ones (near-lossless), 50 → base."""
-    if not 1 <= quality <= 100:
-        raise ValueError(f"quality {quality} outside [1, 100]")
-    scale = 5000 // quality if quality < 50 else 200 - 2 * quality
-    return np.clip((base * scale + 50) // 100, 1, 255).astype(np.int64)
-
-
-def _huff_encode_table(counts: list[int], symbols: bytes) -> dict:
-    """(BITS, HUFFVAL) → symbol → (code, length) per canonical ordering."""
-    out = {}
-    code = 0
-    k = 0
-    for length in range(1, 17):
-        for _ in range(counts[length - 1]):
-            out[symbols[k]] = (code, length)
-            code += 1
-            k += 1
-        code <<= 1
-    return out
-
-
-class _BitWriter:
-    __slots__ = ("out", "buf", "cnt")
-
-    def __init__(self) -> None:
-        self.out = bytearray()
-        self.buf = 0
-        self.cnt = 0
-
-    def write(self, code: int, length: int) -> None:
-        for i in range(length - 1, -1, -1):
-            self.buf = (self.buf << 1) | ((code >> i) & 1)
-            self.cnt += 1
-            if self.cnt == 8:
-                self.out.append(self.buf)
-                if self.buf == 0xFF:
-                    self.out.append(0x00)  # byte stuffing
-                self.buf = 0
-                self.cnt = 0
-
-    def pad(self) -> None:
-        while self.cnt:
-            self.write(1, 1)  # pad with 1-bits per spec
-
-
-def _magnitude(v: int) -> tuple[int, int]:
-    """signed value → (category t, t-bit code)."""
-    if v == 0:
-        return 0, 0
-    a = abs(v)
-    t = a.bit_length()
-    code = v if v > 0 else v + (1 << t) - 1
-    return t, code
-
-
-def _encode_block(bw: _BitWriter, coefs_zig: np.ndarray, pred: int,
-                  dc_tab: dict, ac_tab: dict) -> int:
-    dc = int(coefs_zig[0])
-    t, code = _magnitude(dc - pred)
-    c, ln = dc_tab[t]
-    bw.write(c, ln)
-    if t:
-        bw.write(code, t)
-    run = 0
-    last_nz = int(np.max(np.flatnonzero(coefs_zig), initial=0))
-    for k in range(1, 64):
-        v = int(coefs_zig[k])
-        if v == 0:
-            if k > last_nz:
-                c, ln = ac_tab[0x00]  # EOB
-                bw.write(c, ln)
-                break
-            run += 1
-            continue
-        while run > 15:
-            c, ln = ac_tab[0xF0]  # ZRL
-            bw.write(c, ln)
-            run -= 16
-        t, code = _magnitude(v)
-        c, ln = ac_tab[(run << 4) | t]
-        bw.write(c, ln)
-        bw.write(code, t)
-        run = 0
-    return dc
-
-
-def _tab_arrays(tab: dict) -> tuple[np.ndarray, np.ndarray]:
-    """symbol → (code, length) dict → dense arrays for vectorized lookup."""
-    code = np.zeros(256, dtype=np.int64)
-    ln = np.zeros(256, dtype=np.int64)
-    for s, (c, length) in tab.items():
-        code[s] = c
-        ln[s] = length
-    return code, ln
-
-
-def _bitsize(a: np.ndarray) -> np.ndarray:
-    """Vectorized T.81 magnitude category: |v| → bit length (0 for 0).
-    Exact for all int magnitudes here (≪ 2^53): log2 is monotonic and
-    only powers of two land on representable boundaries."""
-    return np.where(
-        a == 0, 0,
-        np.floor(np.log2(np.maximum(a, 1))).astype(np.int64) + 1)
-
-
-def _pack_bits(lens: np.ndarray, vals: np.ndarray) -> bytes:
-    """(bit-length, value) emission arrays → padded, 0xFF-stuffed entropy
-    bytes — the vectorized replacement for the per-bit ``_BitWriter``."""
-    j = np.arange(16, dtype=np.int64)
-    shifts = np.maximum(lens[:, None] - 1 - j[None, :], 0)
-    bitmat = ((vals[:, None] >> shifts) & 1).astype(np.uint8)
-    bits = bitmat[j[None, :] < lens[:, None]]
-    pad = (-bits.size) % 8
-    if pad:
-        bits = np.concatenate([bits, np.ones(pad, np.uint8)])  # 1-pad (spec)
-    packed = np.packbits(bits)
-    ff = np.flatnonzero(packed == 0xFF)
-    if ff.size:
-        packed = np.insert(packed, ff + 1, 0)  # byte stuffing
-    return packed.tobytes()
-
-
-def _encode_gray_segment(zz: np.ndarray, dc_code: np.ndarray,
-                         dc_len: np.ndarray, ac_code: np.ndarray,
-                         ac_len: np.ndarray) -> bytes:
-    """One entropy segment (DC pred starts at 0) of single-component
-    blocks ``zz (N, 64)`` — fully vectorized: every Huffman symbol and
-    magnitude-extra emission is computed as numpy arrays, ordered by a
-    ``(block, zigzag_pos, sub)`` lexsort, and bit-packed in one pass."""
-    n = zz.shape[0]
-    recs_b: list[np.ndarray] = []
-    recs_k: list[np.ndarray] = []
-    recs_s: list[np.ndarray] = []
-    recs_l: list[np.ndarray] = []
-    recs_v: list[np.ndarray] = []
-
-    def emit(b, k, s, ln, v):
-        recs_b.append(np.asarray(b, dtype=np.int64))
-        recs_k.append(np.broadcast_to(
-            np.asarray(k, dtype=np.int64), recs_b[-1].shape).copy())
-        recs_s.append(np.broadcast_to(
-            np.asarray(s, dtype=np.int64), recs_b[-1].shape).copy())
-        recs_l.append(np.asarray(ln, dtype=np.int64))
-        recs_v.append(np.asarray(v, dtype=np.int64))
-
-    # DC: symbol (sub 0) + magnitude extra (sub 1) at zigzag pos 0
-    diff = np.diff(zz[:, 0], prepend=0)
-    t_dc = _bitsize(np.abs(diff))
-    if np.any(dc_len[t_dc] == 0):
-        raise ValueError("DC category outside Huffman table")
-    emit(np.arange(n), 0, 0, dc_len[t_dc], dc_code[t_dc])
-    m = t_dc > 0
-    if m.any():
-        mag = np.where(diff > 0, diff,
-                       diff + np.left_shift(1, t_dc) - 1)
-        emit(np.flatnonzero(m), 0, 1, t_dc[m], mag[m])
-
-    # AC: ZRLs (sub 0-2), (run, size) symbol (sub 3), extra (sub 4)
-    b_idx, k0 = np.nonzero(zz[:, 1:])
-    k = k0 + 1
-    if b_idx.size:
-        vals = zz[b_idx, k]
-        first = np.ones(b_idx.size, dtype=bool)
-        first[1:] = b_idx[1:] != b_idx[:-1]
-        prevk = np.empty_like(k)
-        prevk[1:] = k[:-1]
-        prevk[first] = 0
-        run = k - prevk - 1
-        nzrl = run >> 4
-        t_ac = _bitsize(np.abs(vals))
-        sym = ((run & 15) << 4) | t_ac
-        if np.any(ac_len[sym] == 0):
-            raise ValueError("AC (run, size) outside Huffman table")
-        zrl_c, zrl_l = int(ac_code[0xF0]), int(ac_len[0xF0])
-        for zi in range(1, 4):  # run ≤ 62 → at most 3 ZRLs
-            zm = nzrl >= zi
-            if zm.any():
-                emit(b_idx[zm], k[zm], zi - 1,
-                     np.full(int(zm.sum()), zrl_l),
-                     np.full(int(zm.sum()), zrl_c))
-        emit(b_idx, k, 3, ac_len[sym], ac_code[sym])
-        mag = np.where(vals > 0, vals, vals + np.left_shift(1, t_ac) - 1)
-        emit(b_idx, k, 4, t_ac, mag)
-
-    # EOB (zigzag pos 64) for every block whose last AC nonzero is < 63
-    last = np.zeros(n, dtype=np.int64)
-    if b_idx.size:
-        last[b_idx] = k  # k ascends within a block: final write is max
-    eob = np.flatnonzero(last < 63)
-    if eob.size:
-        emit(eob, 64, 0,
-             np.full(eob.size, int(ac_len[0x00])),
-             np.full(eob.size, int(ac_code[0x00])))
-
-    bb = np.concatenate(recs_b)
-    kk = np.concatenate(recs_k)
-    ss = np.concatenate(recs_s)
-    ll = np.concatenate(recs_l)
-    vv = np.concatenate(recs_v)
-    order = np.lexsort((ss, kk, bb))
-    return _pack_bits(ll[order], vv[order])
-
-
-def _fdct_quant(plane: np.ndarray, qt_zig: np.ndarray) -> np.ndarray:
-    """(H, W) uint8 (H, W multiples of 8) → per-block quantized zigzag
-    coefficients, shape (blocks_y, blocks_x, 64)."""
-    hh, ww = plane.shape
-    by, bx = hh // 8, ww // 8
-    blocks = plane.reshape(by, 8, bx, 8).transpose(0, 2, 1, 3) \
-        .astype(np.float64) - 128.0
-    coefs = np.einsum("ux,byxw,vw->byuv", _C, blocks, _C, optimize=True)
-    # natural→zigzag: zig[k] = natural[ZIGZAG[k]]
-    zig = coefs.reshape(by, bx, 64)[:, :, ZIGZAG]
-    return np.rint(zig / qt_zig).astype(np.int64)
-
-
-def _pad_to_blocks(plane: np.ndarray, bh: int, bw_: int) -> np.ndarray:
-    """Edge-replicate pad up to multiples of (bh, bw_)."""
-    h, w = plane.shape
-    ph = (-h) % bh
-    pw = (-w) % bw_
-    if ph or pw:
-        plane = np.pad(plane, ((0, ph), (0, pw)), mode="edge")
-    return plane
-
-
-def _dqt_segment(tid: int, qt_zig: np.ndarray) -> bytes:
-    body = bytes([tid]) + qt_zig.astype(np.uint8).tobytes()
-    return b"\xFF\xDB" + struct.pack(">H", len(body) + 2) + body
-
-
-def _dht_segment(tc: int, th: int, table: tuple) -> bytes:
-    counts, syms = table
-    body = bytes([(tc << 4) | th]) + bytes(counts) + syms
-    return b"\xFF\xC4" + struct.pack(">H", len(body) + 2) + body
-
-
-def encode_jpeg_gray(px: np.ndarray, quality: int = 90,
-                     restart_interval: int = 0) -> bytes:
-    """uint8 (h, w) → single-component baseline JPEG."""
-    arr = np.ascontiguousarray(px, dtype=np.uint8)
-    if arr.ndim != 2:
-        raise ValueError("encode_jpeg_gray wants (h, w)")
-    h, w = arr.shape
-    qt_zig = _scaled_qt(_STD_LUM_QT, quality)
-    coefs = _fdct_quant(_pad_to_blocks(arr, 8, 8), qt_zig)
-    by, bx = coefs.shape[:2]
-    zz = coefs.reshape(by * bx, 64)
-    dc_code, dc_len = _tab_arrays(_huff_encode_table(*_STD_DC_LUM))
-    ac_code, ac_len = _tab_arrays(_huff_encode_table(*_STD_AC_LUM))
-    ri = restart_interval
-    ecs = bytearray()
-    if ri:
-        # each restart segment is an independent entropy stream (pred
-        # reset, byte-aligned), joined by cycling RSTn markers
-        for si, s in enumerate(range(0, len(zz), ri)):
-            if si:
-                ecs += bytes([0xFF, 0xD0 + ((si - 1) & 7)])
-            ecs += _encode_gray_segment(zz[s:s + ri], dc_code, dc_len,
-                                        ac_code, ac_len)
-    else:
-        ecs += _encode_gray_segment(zz, dc_code, dc_len, ac_code, ac_len)
-    sof = b"\xFF\xC0" + struct.pack(">HBHHB", 11, 8, h, w, 1) + \
-        bytes([1, 0x11, 0])
-    sos = b"\xFF\xDA" + struct.pack(">HB", 8, 1) + bytes([1, 0x00, 0, 63, 0])
-    dri = (b"\xFF\xDD" + struct.pack(">HH", 4, restart_interval)
-           if restart_interval else b"")
-    return b"\xFF\xD8" + _dqt_segment(0, qt_zig) + \
-        _dht_segment(0, 0, _STD_DC_LUM) + _dht_segment(1, 0, _STD_AC_LUM) + \
-        dri + sof + sos + bytes(ecs) + b"\xFF\xD9"
-
-
-#: progressive fixture tables: flat canonical codes (16 DC symbols at 5
-#: bits, all 256 AC symbols at 9 bits) — deliberately complete so EOBn
-#: codes with any run category exist; compression quality is irrelevant
-#: for fixture authoring, validity and path coverage are the point
-_PROG_DC = ([0, 0, 0, 0, 16, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0],
-            bytes(range(16)))
-#: DHT length counts are single bytes (≤255), so the last AC symbol
-#: rides one level deeper
-_PROG_AC = ([0, 0, 0, 0, 0, 0, 0, 0, 255, 1, 0, 0, 0, 0, 0, 0],
-            bytes(range(256)))
-
-
-def encode_jpeg_gray_progressive(px: np.ndarray,
-                                 quality: int = 90) -> bytes:
-    """uint8 (h, w) → single-component **progressive** JPEG (SOF2) with a
-    six-scan script that exercises every T.81 Annex G decode path: DC
-    first with point transform (Al=1), DC refinement, AC first per
-    spectral band (1-5, 6-63, Al=1) with EOB runs, and AC refinement with
-    correction bits.  Fixture-authoring side of the progressive decoder;
-    the scan shapes mirror what libjpeg's default progression emits."""
-    arr = np.ascontiguousarray(px, dtype=np.uint8)
-    if arr.ndim != 2:
-        raise ValueError("encode_jpeg_gray_progressive wants (h, w)")
-    h, w = arr.shape
-    qt_zig = _scaled_qt(_STD_LUM_QT, quality)
-    coefs = _fdct_quant(_pad_to_blocks(arr, 8, 8), qt_zig)
-    by, bx = coefs.shape[:2]
-    zz = coefs.reshape(by * bx, 64)
-    dc_tab = _huff_encode_table(*_PROG_DC)
-    ac_tab = _huff_encode_table(*_PROG_AC)
-
-    def sos(ss, se, ah, al):
-        return b"\xFF\xDA" + struct.pack(">HB", 8, 1) + \
-            bytes([1, 0x00, ss, se, (ah << 4) | al])
-
-    out = bytearray(b"\xFF\xD8")
-    out += _dqt_segment(0, qt_zig)
-    out += _dht_segment(0, 0, _PROG_DC)
-    out += _dht_segment(1, 0, _PROG_AC)
-    out += b"\xFF\xC2" + struct.pack(">HBHHB", 11, 8, h, w, 1) + \
-        bytes([1, 0x11, 0])
-
-    # ---- scan 1: DC first, Al=1 ----
-    bw = _BitWriter()
-    pred = 0
-    for i in range(len(zz)):
-        v = int(zz[i, 0]) >> 1
-        t, code = _magnitude(v - pred)
-        pred = v
-        c, ln = dc_tab[t]
-        bw.write(c, ln)
-        if t:
-            bw.write(code, t)
-    bw.pad()
-    out += sos(0, 0, 0, 1) + bw.out
-
-    # ---- scan 2: DC refinement, Ah=1 Al=0 ----
-    bw = _BitWriter()
-    for i in range(len(zz)):
-        bw.write(int(zz[i, 0]) & 1, 1)
-    bw.pad()
-    out += sos(0, 0, 1, 0) + bw.out
-
-    def pt(v: int, al: int) -> int:
-        """AC point transform: magnitude shift, sign preserved (G.1.2.2)."""
-        return -((-v) >> al) if v < 0 else v >> al
-
-    for ss, se in ((1, 5), (6, 63)):
-        # ---- AC first for the band, Al=1 ----
-        bw = _BitWriter()
-
-        def _flush_first(bwr, state):
-            n = state[0]
-            if not n:
-                return
-            r = n.bit_length() - 1
-            c, ln = ac_tab[r << 4]
-            bwr.write(c, ln)
-            if r:
-                bwr.write(n - (1 << r), r)
-            state[0] = 0
-
-        st = [0]  # eobrun box
-        for i in range(len(zz)):
-            r = 0
-            for k in range(ss, se + 1):
-                t = pt(int(zz[i, k]), 1)
-                if t == 0:
-                    r += 1
-                    continue
-                _flush_first(bw, st)
-                while r > 15:
-                    c, ln = ac_tab[0xF0]
-                    bw.write(c, ln)
-                    r -= 16
-                s, code = _magnitude(t)
-                c, ln = ac_tab[(r << 4) | s]
-                bw.write(c, ln)
-                bw.write(code, s)
-                r = 0
-            if r:
-                st[0] += 1
-                if st[0] == 0x7FFF:
-                    _flush_first(bw, st)
-        _flush_first(bw, st)
-        bw.pad()
-        out += sos(ss, se, 0, 1) + bw.out
-
-        # ---- AC refinement for the band, Ah=1 Al=0 ----
-        bw = _BitWriter()
-        st = [0]           # eobrun
-        be: list[int] = []  # correction bits buffered behind the EOB run
-
-        def _flush_refine(bwr, state, buffered):
-            n = state[0]
-            if not n:
-                return
-            r = n.bit_length() - 1
-            c, ln = ac_tab[r << 4]
-            bwr.write(c, ln)
-            if r:
-                bwr.write(n - (1 << r), r)
-            state[0] = 0
-            for bit in buffered:
-                bwr.write(bit, 1)
-            buffered.clear()
-
-        for i in range(len(zz)):
-            vals = [int(zz[i, k]) for k in range(ss, se + 1)]
-            absv = [pt(abs(v), 0) for v in vals]  # Al=0: |v|
-            eob_rel = -1
-            for j, t in enumerate(absv):
-                if t == 1:
-                    eob_rel = j
-            r = 0
-            br: list[int] = []
-            for j, t in enumerate(absv):
-                if t == 0:
-                    r += 1
-                    continue
-                while r > 15 and j <= eob_rel:
-                    _flush_refine(bw, st, be)
-                    c, ln = ac_tab[0xF0]
-                    bw.write(c, ln)
-                    for bit in br:
-                        bw.write(bit, 1)
-                    br = []
-                    r -= 16
-                if t > 1:
-                    br.append(t & 1)
-                    continue
-                _flush_refine(bw, st, be)
-                c, ln = ac_tab[(r << 4) | 1]
-                bw.write(c, ln)
-                bw.write(1 if vals[j] > 0 else 0, 1)
-                for bit in br:
-                    bw.write(bit, 1)
-                br = []
-                r = 0
-            if r > 0 or br:
-                st[0] += 1
-                be.extend(br)
-                if st[0] == 0x7FFF:
-                    _flush_refine(bw, st, be)
-        _flush_refine(bw, st, be)
-        bw.pad()
-        out += sos(ss, se, 1, 0) + bw.out
-
-    return bytes(out) + b"\xFF\xD9"
-
-
-def encode_jpeg_rgb(px: np.ndarray, quality: int = 90,
-                    subsample: bool = True) -> bytes:
-    """uint8 (h, w, 3) RGB → 3-component YCbCr baseline JPEG
-    (4:2:0 when ``subsample``, else 4:4:4) — exercises the decoder's
-    interleaved multi-component MCU path."""
-    arr = np.ascontiguousarray(px, dtype=np.uint8).astype(np.float64)
-    if arr.ndim != 3 or arr.shape[2] != 3:
-        raise ValueError("encode_jpeg_rgb wants (h, w, 3)")
-    h, w = arr.shape[:2]
-    r, g, b = arr[:, :, 0], arr[:, :, 1], arr[:, :, 2]
-    y = 0.299 * r + 0.587 * g + 0.114 * b
-    cb = -0.168736 * r - 0.331264 * g + 0.5 * b + 128.0
-    cr = 0.5 * r - 0.418688 * g - 0.081312 * b + 128.0
-    planes = [np.clip(np.rint(p), 0, 255).astype(np.uint8)
-              for p in (y, cb, cr)]
-    sh = sv = 2 if subsample else 1
-    # luma padded to MCU multiples; chroma averaged down then padded
-    yp = _pad_to_blocks(planes[0], 8 * sv, 8 * sh)
-    if subsample:
-        ch, cw = yp.shape[0] // 2, yp.shape[1] // 2
-        chroma = []
-        for p in planes[1:]:
-            pp = _pad_to_blocks(p, 2, 2).astype(np.float64)
-            down = (pp[0::2, 0::2] + pp[1::2, 0::2] +
-                    pp[0::2, 1::2] + pp[1::2, 1::2]) / 4.0
-            down = np.clip(np.rint(down), 0, 255).astype(np.uint8)
-            chroma.append(_pad_to_blocks(down, 8, 8)[:ch, :cw])
-    else:
-        chroma = [_pad_to_blocks(p, 8, 8) for p in planes[1:]]
-    lum_qt = _scaled_qt(_STD_LUM_QT, quality)
-    chr_qt = _scaled_qt(_STD_CHR_QT, quality)
-    lum_coefs = _fdct_quant(yp, lum_qt)
-    chr_coefs = [_fdct_quant(c, chr_qt) for c in chroma]
-    tabs = {
-        "dcl": _huff_encode_table(*_STD_DC_LUM),
-        "acl": _huff_encode_table(*_STD_AC_LUM),
-        "dcc": _huff_encode_table(*_STD_DC_CHR),
-        "acc": _huff_encode_table(*_STD_AC_CHR),
-    }
-    mcux = yp.shape[1] // (8 * sh)
-    mcuy = yp.shape[0] // (8 * sv)
-    bw = _BitWriter()
-    preds = [0, 0, 0]
-    for my in range(mcuy):
-        for mx in range(mcux):
-            for by_ in range(sv):
-                for bx_ in range(sh):
-                    preds[0] = _encode_block(
-                        bw, lum_coefs[my * sv + by_, mx * sh + bx_],
-                        preds[0], tabs["dcl"], tabs["acl"])
-            for ci, cc in enumerate(chr_coefs):
-                preds[ci + 1] = _encode_block(
-                    bw, cc[my, mx], preds[ci + 1],
-                    tabs["dcc"], tabs["acc"])
-    bw.pad()
-    hv_l = (sh << 4) | sv
-    sof = b"\xFF\xC0" + struct.pack(">HBHHB", 17, 8, h, w, 3) + \
-        bytes([1, hv_l, 0, 2, 0x11, 1, 3, 0x11, 1])
-    sos = b"\xFF\xDA" + struct.pack(">HB", 12, 3) + \
-        bytes([1, 0x00, 2, 0x11, 3, 0x11, 0, 63, 0])
-    return b"\xFF\xD8" + _dqt_segment(0, lum_qt) + _dqt_segment(1, chr_qt) + \
-        _dht_segment(0, 0, _STD_DC_LUM) + _dht_segment(1, 0, _STD_AC_LUM) + \
-        _dht_segment(0, 1, _STD_DC_CHR) + _dht_segment(1, 1, _STD_AC_CHR) + \
-        sof + sos + bytes(bw.out) + b"\xFF\xD9"

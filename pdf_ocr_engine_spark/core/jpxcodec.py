@@ -42,29 +42,25 @@ overrides, coder bypass/termination style bits.  Malformed streams raise
 (``operators/ocr.py`` maps it to ``status='decode_error'``), never a
 crash, and every allocation is budget-capped before it happens.
 
-The encoder half exists for fixtures (same convention as
-``core/ccittcodec`` / ``core/jbig2codec``): it emits real, spec-shaped
-codestreams — SIZ/COD/QCD/SOT/SOD markers, tag-tree-coded packet
-headers, per-block MQ codeword segments — that the decoder has no
-private knowledge of, so round-trip tests exercise the same structure a
-foreign encoder would produce.
+The fixture encoder (``encoders.raster.encode_jp2_gray`` /
+``encode_jp2_rgb``) shares the T1 context model, the inverse-wavelet
+lifting constants, the tag tree and the precinct geometry with this
+module; it emits real, spec-shaped codestreams the decoder has no
+private knowledge of.
 """
 
 from __future__ import annotations
 
-import math
 import struct
 
 import numpy as np
 
-from .jbig2codec import _MQDecoder, _MQEncoder
+from .jbig2codec import _MQDecoder
 
 __all__ = [
     "JpxError",
     "JpxUnsupported",
     "decode_jpx_gray",
-    "encode_jp2_gray",
-    "encode_jp2_rgb",
 ]
 
 
@@ -340,140 +336,9 @@ def _t1_decode(data: bytes, w: int, h: int, npasses: int, nbps: int,
     return out
 
 
-def _t1_encode(coeffs: np.ndarray, cls: str) -> tuple[bytes, int, int]:
-    """(h, w) int coefficients → (codeword segment, n passes, n bitplanes).
-    All-zero blocks return ``(b"", 0, 0)`` (not included in any packet)."""
-    h, w = coeffs.shape
-    absv = np.abs(coeffs).astype(np.int64)
-    vmax = int(absv.max()) if absv.size else 0
-    if vmax == 0:
-        return b"", 0, 0
-    nbps = vmax.bit_length()
-    npasses = 3 * nbps - 2
-    enc = _MQEncoder()
-    idx, mps = _fresh_t1_ctx()
-    code = enc.encode
-    st = _T1State(w, h, cls)
-    sig, pi = st.sig, st.pi
-    lut = st.lut
-    av = [int(v) for v in absv.reshape(-1)]
-    neg = [1 if v < 0 else 0 for v in coeffs.reshape(-1)]
-    weight = nbps - 1
-    for p in range(npasses):
-        kind = 2 if p == 0 else (p - 1) % 3
-        if kind == 0:                                   # significance prop
-            for y0 in range(0, h, 4):
-                if not st.stripe_live(y0 >> 2):
-                    continue
-                ymax = min(y0 + 4, h)
-                for x in range(w):
-                    for y in range(y0, ymax):
-                        i = y * w + x
-                        if sig[i]:
-                            continue
-                        sh, sv, sd = st.counts(x, y, i)
-                        if not (sh | sv | sd):
-                            continue
-                        b = (av[i] >> weight) & 1
-                        code(idx, mps, lut[sh][sv][sd], b)
-                        if b:
-                            sc, xr = st.sign_ctx(x, y, i)
-                            code(idx, mps, sc, neg[i] ^ xr)
-                            st.set_sig(y, i, neg[i])
-                        pi[i] = 1
-        elif kind == 1:                                 # magnitude refine
-            ref = st.ref
-            for y0 in range(0, h, 4):
-                if not st.stripe_cnt[y0 >> 2]:
-                    continue
-                ymax = min(y0 + 4, h)
-                for x in range(w):
-                    for y in range(y0, ymax):
-                        i = y * w + x
-                        if not sig[i] or pi[i]:
-                            continue
-                        if ref[i]:
-                            c = 16
-                        else:
-                            sh, sv, sd = st.counts(x, y, i)
-                            c = 15 if (sh | sv | sd) else 14
-                            ref[i] = 1
-                        code(idx, mps, c, (av[i] >> weight) & 1)
-        else:                                           # cleanup
-            for y0 in range(0, h, 4):
-                ymax = min(y0 + 4, h)
-                full = ymax - y0 == 4
-                clean = full and not st.stripe_live(y0 >> 2)
-                for x in range(w):
-                    y = y0
-                    rl = clean
-                    if full and not clean:
-                        rl = True
-                        for yy in range(y0, ymax):
-                            i = yy * w + x
-                            if sig[i] or pi[i]:
-                                rl = False
-                                break
-                            sh, sv, sd = st.counts(x, yy, i)
-                            if sh | sv | sd:
-                                rl = False
-                                break
-                    if rl:
-                        bits = [(av[(y0 + k) * w + x] >> weight) & 1
-                                for k in range(4)]
-                        if not any(bits):
-                            code(idx, mps, _CTX_RL, 0)
-                            continue
-                        code(idx, mps, _CTX_RL, 1)
-                        r = bits.index(1)
-                        code(idx, mps, _CTX_UNI, (r >> 1) & 1)
-                        code(idx, mps, _CTX_UNI, r & 1)
-                        y = y0 + r
-                        i = y * w + x
-                        sc, xr = st.sign_ctx(x, y, i)
-                        code(idx, mps, sc, neg[i] ^ xr)
-                        st.set_sig(y, i, neg[i])
-                        clean = False
-                        y += 1
-                    for yy in range(y, ymax):
-                        i = yy * w + x
-                        if sig[i] or pi[i]:
-                            continue
-                        sh, sv, sd = st.counts(x, yy, i)
-                        b = (av[i] >> weight) & 1
-                        code(idx, mps, lut[sh][sv][sd], b)
-                        if b:
-                            sc, xr = st.sign_ctx(x, yy, i)
-                            code(idx, mps, sc, neg[i] ^ xr)
-                            st.set_sig(yy, i, neg[i])
-                            clean = False
-            weight -= 1
-            for i, v in enumerate(pi):
-                if v:
-                    pi[i] = 0
-    return enc.flush(), npasses, nbps
-
-
 # --------------------------------------------------------------------------
 # 5/3 reversible wavelet (T.800 Annex F)
 # --------------------------------------------------------------------------
-
-def _fwd53_axis(a: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
-    """1-D forward lifting along axis 0 with symmetric extension; even
-    absolute indices are low-pass (the image origin is 0)."""
-    n = a.shape[0]
-    if n == 1:
-        return a.astype(np.int64), a[:0].astype(np.int64)
-    xe = a[0::2].astype(np.int64)
-    xo = a[1::2].astype(np.int64)
-    ce, co = xe.shape[0], xo.shape[0]
-    re = xe[1:] if ce > co else np.concatenate([xe[1:], xe[-1:]])
-    hb = xo - ((xe[:co] + re) >> 1)
-    hl = np.concatenate([hb[:1], hb[:ce - 1]])
-    hr = hb[:ce] if co >= ce else np.concatenate([hb, hb[-1:]])
-    lb = xe + ((hl + hr + 2) >> 2)
-    return lb, hb
-
 
 def _inv53_axis(lb: np.ndarray, hb: np.ndarray) -> np.ndarray:
     ce, co = lb.shape[0], hb.shape[0]
@@ -525,19 +390,6 @@ def _lift97(y: np.ndarray, steps: tuple) -> None:
         y[sel] += coef * (y[sel - 1] + y[sel + 1])
 
 
-def _fwd97_axis(a: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
-    """1-D forward 9/7 lifting along axis 0 (float64), whole-sample
-    symmetric extension — the irreversible analysis filter."""
-    n = a.shape[0]
-    x = a.astype(np.float64)
-    if n == 1:
-        return x, x[:0]
-    y = _sym_ext(x, n)
-    _lift97(y, ((_ALPHA, 1), (_BETA, 0), (_GAMMA, 1), (_DELTA, 0)))
-    core = y[_97_PAD:_97_PAD + n]
-    return core[0::2] / _KAPPA, core[1::2] * _KAPPA
-
-
 def _inv97_axis(lo: np.ndarray, hi: np.ndarray) -> np.ndarray:
     ce, co = lo.shape[0], hi.shape[0]
     n = ce + co
@@ -551,16 +403,6 @@ def _inv97_axis(lo: np.ndarray, hi: np.ndarray) -> np.ndarray:
     return y[_97_PAD:_97_PAD + n]
 
 
-def _fwd53_2d(a: np.ndarray) -> tuple[np.ndarray, ...]:
-    """One decomposition: vertical then horizontal lifting → LL, HL
-    (horizontally high-pass), LH, HH.  The inverse mirrors the order, so
-    reversibility is exact."""
-    lv, hv = _fwd53_axis(a)
-    ll_t, hl_t = _fwd53_axis(np.ascontiguousarray(lv.T))
-    lh_t, hh_t = _fwd53_axis(np.ascontiguousarray(hv.T))
-    return ll_t.T, hl_t.T, lh_t.T, hh_t.T
-
-
 def _inv53_2d(ll: np.ndarray, hl: np.ndarray, lh: np.ndarray,
               hh: np.ndarray) -> np.ndarray:
     lv = _inv53_axis(np.ascontiguousarray(ll.T),
@@ -568,15 +410,6 @@ def _inv53_2d(ll: np.ndarray, hl: np.ndarray, lh: np.ndarray,
     hv = _inv53_axis(np.ascontiguousarray(lh.T),
                      np.ascontiguousarray(hh.T)).T
     return _inv53_axis(np.ascontiguousarray(lv), np.ascontiguousarray(hv))
-
-
-def _fwd97_2d(a: np.ndarray) -> tuple[np.ndarray, ...]:
-    """One irreversible decomposition, same orientation convention as
-    :func:`_fwd53_2d` (vertical then horizontal)."""
-    lv, hv = _fwd97_axis(a)
-    ll_t, hl_t = _fwd97_axis(np.ascontiguousarray(lv.T))
-    lh_t, hh_t = _fwd97_axis(np.ascontiguousarray(hv.T))
-    return ll_t.T, hl_t.T, lh_t.T, hh_t.T
 
 
 def _inv97_2d(ll: np.ndarray, hl: np.ndarray, lh: np.ndarray,
@@ -611,44 +444,10 @@ def _band_dims(w: int, h: int, levels: int) -> list[dict]:
 # Tier-2: tag trees and bit-stuffed packet headers (T.800 Annex B)
 # --------------------------------------------------------------------------
 
-class _HdrWriter:
-    """MSB-first bit writer with JPEG 2000 header stuffing: a byte after
-    an emitted 0xFF carries only 7 bits, and a header never ends 0xFF."""
-
-    __slots__ = ("out", "_acc", "_n", "_cap")
-
-    def __init__(self) -> None:
-        self.out = bytearray()
-        self._acc = 0
-        self._n = 0
-        self._cap = 8
-
-    def bit(self, b: int) -> None:
-        self._acc = (self._acc << 1) | (b & 1)
-        self._n += 1
-        if self._n == self._cap:
-            self.out.append(self._acc)
-            self._cap = 7 if self._acc == 0xFF else 8
-            self._acc = 0
-            self._n = 0
-
-    def bits(self, v: int, n: int) -> None:
-        for i in range(n - 1, -1, -1):
-            self.bit((v >> i) & 1)
-
-    def flush(self) -> bytes:
-        if self._n:
-            self.out.append(self._acc << (self._cap - self._n))
-            self._acc = 0
-            self._n = 0
-            self._cap = 8
-        if self.out and self.out[-1] == 0xFF:
-            self.out.append(0)
-        return bytes(self.out)
-
-
 class _HdrReader:
-    """Mirror of :class:`_HdrWriter` over a shared buffer + cursor."""
+    """MSB-first packet-header bit reader over a shared buffer + cursor,
+    undoing JPEG 2000 header stuffing: a byte after 0xFF carries only 7
+    bits."""
 
     __slots__ = ("data", "pos", "_acc", "_n", "_prev")
 
@@ -696,7 +495,8 @@ class _HdrReader:
 
 class _TagTree:
     """T.800 B.10.2 tag tree over a w×h leaf grid.  Decoder state
-    persists across packets (thresholds only ever grow)."""
+    persists across packets (thresholds only ever grow); the fixture
+    encoder's subclass adds the leaf values and the writing side."""
 
     __slots__ = ("sizes", "off", "value", "low", "known")
 
@@ -723,41 +523,6 @@ class _TagTree:
         path.reverse()              # root first
         return path
 
-    def set(self, x: int, y: int, v: int) -> None:
-        node = self.off[0] + y * self.sizes[0][0] + x
-        self.value[node] = v
-
-    def finalize(self) -> None:
-        """Propagate child minima up — call once after all leaf values
-        are set (encoder side)."""
-        for lev in range(1, len(self.sizes)):
-            pw, _ph = self.sizes[lev]
-            cw, ch = self.sizes[lev - 1]
-            for cy in range(ch):
-                for cx in range(cw):
-                    child = self.off[lev - 1] + cy * cw + cx
-                    parent = self.off[lev] + (cy >> 1) * pw + (cx >> 1)
-                    if self.value[child] < self.value[parent]:
-                        self.value[parent] = self.value[child]
-
-    def encode(self, x: int, y: int, threshold: int, bw: _HdrWriter) -> None:
-        value, low, known = self.value, self.low, self.known
-        cur = 0
-        for node in self._path(x, y):
-            if cur > low[node]:
-                low[node] = cur
-            else:
-                cur = low[node]
-            while cur < threshold:
-                if cur >= value[node]:
-                    if not known[node]:
-                        bw.bit(1)
-                        known[node] = True
-                    break
-                bw.bit(0)
-                cur += 1
-            low[node] = cur
-
     def decode(self, x: int, y: int, threshold: int,
                br: _HdrReader) -> bool:
         """True iff the leaf value is < threshold (refining state)."""
@@ -779,26 +544,6 @@ class _TagTree:
             if known[node]:
                 cur = max(cur, value[node])
         return known[node] and self.value[node] < threshold
-
-
-def _write_npasses(bw: _HdrWriter, n: int) -> None:
-    """Coding-pass count codeword (T.800 Table B.4)."""
-    if n == 1:
-        bw.bit(0)
-    elif n == 2:
-        bw.bit(1)
-        bw.bit(0)
-    elif n <= 5:
-        bw.bits(0b11, 2)
-        bw.bits(n - 3, 2)
-    elif n <= 36:
-        bw.bits(0b1111, 4)
-        bw.bits(n - 6, 5)
-    elif n <= 164:
-        bw.bits(0b111111111, 9)
-        bw.bits(n - 37, 7)
-    else:
-        raise JpxError(f"cannot signal {n} coding passes")
 
 
 def _read_npasses(br: _HdrReader) -> int:
@@ -831,7 +576,7 @@ class _Block:
 
 
 # --------------------------------------------------------------------------
-# encoder
+# precinct geometry (T.800 B.6 / B.7), shared with the fixture encoder
 # --------------------------------------------------------------------------
 
 def _grid(n: int, step: int) -> int:
@@ -884,404 +629,6 @@ def _band_precincts(bw_: int, bh_: int, geo_r: tuple) -> list[dict]:
             precs.append({"blocks": blocks, "incl": _TagTree(lgw, lgh),
                           "imsb": _TagTree(lgw, lgh)})
     return precs
-
-
-def _encode_component(a: np.ndarray, levels: int, geo: list[tuple],
-                      layout: list[dict],
-                      deltas: list[float] | None = None,
-                      ) -> tuple[list, list]:
-    """DC-shifted plane → (per-resolution T1-coded block lists, flat
-    resolution-major per-band max bitplane counts).  ``geo`` is the
-    :func:`_precinct_geometry` of the tile (carries the per-resolution
-    clamped block size); ``deltas`` (one quantization step per flat
-    band index) switches to the irreversible path: 9/7 float wavelet,
-    coefficients quantized toward zero."""
-    per_res: list[list[np.ndarray]] = []
-    ll = a
-    lvl_bands = []
-    fwd = _fwd97_2d if deltas is not None else _fwd53_2d
-    for _ in range(levels):
-        ll, hl, lh, hh = fwd(ll)
-        lvl_bands.append([hl, lh, hh])
-    per_res.append([ll])
-    for r in range(1, levels + 1):
-        per_res.append(lvl_bands[levels - r])
-
-    res_blocks: list[list[list[dict]]] = []
-    band_maxes: list[int] = []
-    flat = 0
-    for r, resol in enumerate(layout):
-        res_blocks.append([])
-        cw_r, ch_r = geo[r][0], geo[r][1]
-        for bi, (cls, bw_, bh_, _gain) in enumerate(resol["bands"]):
-            arr = per_res[r][bi]
-            if deltas is not None:
-                arr = np.trunc(arr / deltas[flat]).astype(np.int64)
-            flat += 1
-            assert arr.shape == (bh_, bw_), (arr.shape, bw_, bh_)
-            blocks = []
-            band_max = 0
-            for by in range(_grid(bh_, ch_r)):
-                for bx in range(_grid(bw_, cw_r)):
-                    sub = arr[by * ch_r:(by + 1) * ch_r,
-                              bx * cw_r:(bx + 1) * cw_r]
-                    data, npasses, nbps = _t1_encode(sub, cls)
-                    band_max = max(band_max, nbps)
-                    blocks.append({"x": bx, "y": by, "data": data,
-                                   "npasses": npasses, "nbps": nbps})
-            band_maxes.append(band_max)
-            res_blocks[r].append(blocks)
-    return res_blocks, band_maxes
-
-
-def _emit_tile_body(comps: list, layout: list[dict], levels: int,
-                    geo: list[tuple], comp_mbs: list[list[int]],
-                    sop: bool, eph: bool) -> bytes:
-    """One tile's per-component T1-coded blocks → packet bytes, LRCP
-    order (single layer): resolution, then component, then precinct in
-    raster order.  ``comp_mbs`` are the per-component per-band
-    magnitude bitplane counts (QCD, overridden per component by QCC)."""
-    for c, res_blocks in enumerate(comps):
-        flat = 0
-        for r in range(levels + 1):
-            for band in res_blocks[r]:
-                for blk in band:
-                    blk["p"] = comp_mbs[c][flat] - blk["nbps"]
-                flat += 1
-
-    body = bytearray()
-    nsop = 0
-    for r, resol in enumerate(layout):
-        cw_r, ch_r, cell_w, cell_h, npx, npy = geo[r]
-        sx, sy = cell_w // cw_r, cell_h // ch_r
-        for res_blocks in comps:
-            # bucket each band's blocks by precinct ONCE (mirror of the
-            # decoder's _band_precincts grouping; avoids an O(blocks x
-            # precincts) rescan)
-            grouped: list[dict[int, list]] = []
-            for band in res_blocks[r]:
-                buckets: dict[int, list] = {}
-                for blk in band:
-                    px, py = blk["x"] // sx, blk["y"] // sy
-                    buckets.setdefault(py * npx + px, []).append(
-                        (blk, blk["x"] - px * sx, blk["y"] - py * sy))
-                grouped.append(buckets)
-            for p in range(npx * npy):
-                py, px = divmod(p, npx)
-                x0, y0 = px * sx, py * sy
-                if sop:
-                    body += struct.pack(">HHH", 0xFF91, 4,
-                                        nsop & 0xFFFF)
-                    nsop += 1
-                hdr = _HdrWriter()
-                if not any(blk["npasses"]
-                           for buckets in grouped
-                           for blk, _lx, _ly in buckets.get(p, ())):
-                    hdr.bit(0)
-                    body += hdr.flush()
-                    if eph:
-                        body += b"\xff\x92"
-                    continue
-                hdr.bit(1)
-                payload = bytearray()
-                for bi, (cls, bw_, bh_, _gain) in \
-                        enumerate(resol["bands"]):
-                    local = grouped[bi].get(p)
-                    if not local:
-                        continue
-                    gw, gh = _grid(bw_, cw_r), _grid(bh_, ch_r)
-                    lgw = min(sx, gw - x0)
-                    lgh = min(sy, gh - y0)
-                    incl = _TagTree(lgw, lgh)
-                    imsb = _TagTree(lgw, lgh)
-                    for blk, lx, ly in local:
-                        incl.set(lx, ly, 0 if blk["npasses"] else 1)
-                        imsb.set(lx, ly,
-                                 blk["p"] if blk["npasses"] else 0)
-                    incl.finalize()
-                    imsb.finalize()
-                    for blk, lx, ly in local:
-                        incl.encode(lx, ly, 1, hdr)
-                        if not blk["npasses"]:
-                            continue
-                        imsb.encode(lx, ly, blk["p"] + 1, hdr)
-                        _write_npasses(hdr, blk["npasses"])
-                        length = len(blk["data"])
-                        lblock = 3
-                        nbits = lblock + blk["npasses"].bit_length() - 1
-                        extra = max(0, length.bit_length() - nbits)
-                        for _ in range(extra):
-                            hdr.bit(1)
-                        hdr.bit(0)
-                        hdr.bits(length, nbits + extra)
-                        payload += blk["data"]
-                body += hdr.flush()
-                if eph:
-                    body += b"\xff\x92"
-                body += payload
-    return bytes(body)
-
-
-def _emit_codestream(planes: list[np.ndarray], w: int, h: int, bpc: int,
-                     levels: int, cblk: int, mct: int, sop: bool,
-                     eph: bool, tile: int | None,
-                     irreversible: bool = False,
-                     step: float = 0.25,
-                     derived: bool = False,
-                     precincts: list[tuple[int, int]] | None = None,
-                     comp_steps: list[float] | None = None) -> bytes:
-    """DC-shifted component planes → full codestream.  ``tile`` splits
-    the image into a ``tile``×``tile`` grid (one tile-part per tile);
-    None keeps the single whole-image tile.  The QCD (shared across
-    components and tiles) is derived from the global per-band maxima.
-    ``irreversible`` switches to the 9/7 wavelet with scalar-expounded
-    quantization (step 1/4 of a unit in every band)."""
-    if tile is None:
-        xts = yts = max(w, h)
-    else:
-        if tile < 1:
-            raise ValueError(f"tile size {tile} must be positive")
-        xts = yts = tile
-    ntx, nty = _grid(w, xts), _grid(h, yts)
-    if ((ntx > 1 and xts % (1 << levels))
-            or (nty > 1 and yts % (1 << levels))):
-        # only axes with >1 tile need even-origin parity
-        raise ValueError(
-            f"tile size {tile} must be a multiple of 2^levels so "
-            "every tile origin keeps even wavelet parity")
-    if ntx * nty > 1 << 16:
-        raise ValueError("tile count exceeds the 16-bit Isot field")
-    ncomp = len(planes)
-    csteps = comp_steps if comp_steps is not None else [step] * ncomp
-    if len(csteps) != ncomp:
-        raise ValueError("need one quantization step per component")
-    comp_deltas: list = [None] * ncomp
-    comp_exps: list = [None] * ncomp
-    comp_mants = [0] * ncomp
-    if irreversible:
-        gains = [g for resol in _band_dims(max(w, 2), max(h, 2), levels)
-                 for (_c, _w2, _h2, g) in resol["bands"]]
-        guard = 3
-        for c, cstep in enumerate(csteps):
-            if not 2.0 ** -10 <= cstep <= 2.0 ** 10:
-                raise ValueError(f"quantization step {cstep} out of"
-                                 " range")
-            e2 = math.floor(math.log2(cstep))
-            mant = min(max(int(round((cstep / 2.0 ** e2 - 1) * 2048)),
-                           0), 2047)
-            if derived:
-                # scalar derived: LL carries (eps0, mu); band exponents
-                # drop by one per finer resolution (E.1.1)
-                eps0 = bpc - e2
-                exps = [eps0]
-                for r in range(1, levels + 1):
-                    exps += [eps0 - (r - 1)] * 3
-            else:
-                exps = [bpc + g - e2 for g in gains]
-            if min(exps) < 0 or max(exps) > 31:
-                raise ValueError("quantization step outside the"
-                                 " exponent field for this precision")
-            # the REPRESENTABLE steps (mantissa-rounded) — encoder and
-            # decoder must agree exactly
-            comp_exps[c] = exps
-            comp_mants[c] = mant
-            comp_deltas[c] = [2.0 ** (bpc + g - e) * (1 + mant / 2048.0)
-                              for g, e in zip(gains, exps)]
-    if precincts is not None:
-        if ntx > 1 or nty > 1:
-            raise ValueError("custom precincts with multiple tiles are"
-                             " out of scope (reference-grid anchoring)")
-        if len(precincts) != levels + 1:
-            raise ValueError("need one precinct size per resolution")
-        for r, (px, py) in enumerate(precincts):
-            if not (0 <= px <= 15 and 0 <= py <= 15) \
-                    or (r > 0 and (px == 0 or py == 0)):
-                raise ValueError(f"invalid precinct exponents ({px},"
-                                 f" {py}) at resolution {r}")
-    pps = precincts if precincts is not None \
-        else [(15, 15)] * (levels + 1)
-    tiles = []                       # (layout, geo, comps_res_blocks)
-    comp_maxes: list = [None] * ncomp
-    for ty in range(nty):
-        for tx in range(ntx):
-            tw = min(xts, w - tx * xts)
-            th = min(yts, h - ty * yts)
-            layout = _band_dims(tw, th, levels)
-            geo = _precinct_geometry(tw, th, levels, pps, cblk, cblk)
-            comps = []
-            for c, plane in enumerate(planes):
-                sub = plane[ty * yts:ty * yts + th,
-                            tx * xts:tx * xts + tw]
-                res_blocks, band_maxes = _encode_component(
-                    sub, levels, geo, layout, deltas=comp_deltas[c])
-                comps.append(res_blocks)
-                comp_maxes[c] = band_maxes if comp_maxes[c] is None \
-                    else [max(a2, b2) for a2, b2
-                          in zip(comp_maxes[c], band_maxes)]
-            tiles.append((layout, geo, comps))
-
-    if irreversible:
-        comp_mbs = [[guard + e - 1 for e in comp_exps[c]]
-                    for c in range(ncomp)]
-        for c in range(ncomp):
-            for m, mb in zip(comp_maxes[c], comp_mbs[c]):
-                if m > mb:
-                    raise ValueError("quantized coefficient range"
-                                     " exceeds the guard-bit budget")
-    else:
-        guard = 2
-        maxes = [max(ms) for ms in zip(*comp_maxes)]   # shared QCD
-        exps = [max(m, 1) - guard + 1 if max(m, 1) - guard + 1 > 0
-                else 0 for m in maxes]
-        comp_exps = [exps] * ncomp
-        comp_mbs = [[guard + e - 1 for e in exps]] * ncomp
-
-    def seg(marker: int, payload: bytes) -> bytes:
-        return struct.pack(">HH", marker, len(payload) + 2) + payload
-
-    ncomp = len(planes)
-    siz = struct.pack(">HIIIIIIIIH", 0, w, h, 0, 0, xts, yts, 0, 0,
-                      ncomp) + bytes([bpc - 1, 1, 1]) * ncomp
-    xcb = cblk.bit_length() - 1
-    scod = (0x01 if precincts is not None else 0) \
-        | (0x02 if sop else 0) | (0x04 if eph else 0)
-    cod = bytes([scod]) + bytes([0]) + struct.pack(">H", 1) \
-        + bytes([mct]) + bytes([levels, xcb - 2, xcb - 2, 0,
-                                0 if irreversible else 1])
-    if precincts is not None:
-        cod += bytes((py << 4) | px for px, py in precincts)
-
-    def quant_seg(c: int) -> bytes:
-        exps_, mant_ = comp_exps[c], comp_mants[c]
-        if max(exps_) > 31:
-            raise ValueError("coefficient range exceeds QCD exponent"
-                             " field")
-        if irreversible and derived:   # derived: single 16-bit pair
-            return bytes([(guard << 5) | 1]) \
-                + struct.pack(">H", (exps_[0] << 11) | mant_)
-        if irreversible:               # expounded: (exponent, mantissa)
-            return bytes([(guard << 5) | 2]) + b"".join(
-                struct.pack(">H", (e << 11) | mant_) for e in exps_)
-        return bytes([(guard << 5) | 0]) + bytes(e << 3 for e in exps_)
-
-    out = bytearray(b"\xffO" + seg(0xFF51, siz) + seg(0xFF52, cod)
-                    + seg(0xFF5C, quant_seg(0)))
-    for c in range(1, ncomp):          # QCC for components that differ
-        if comp_exps[c] != comp_exps[0] \
-                or comp_mants[c] != comp_mants[0]:
-            out += seg(0xFF5D, bytes([c]) + quant_seg(c))
-    for i, (layout, geo, comps) in enumerate(tiles):
-        body = _emit_tile_body(comps, layout, levels, geo, comp_mbs,
-                               sop, eph)
-        psot = 2 + 10 + 2 + len(body)     # SOT..Lsot seg..SOD..body
-        out += seg(0xFF90, struct.pack(">HIBB", i, psot, 0, 1))
-        out += b"\xff\x93" + body
-    out += b"\xff\xd9"
-    return bytes(out)
-
-
-def _wrap_boxes(stream: bytes, w: int, h: int, bpc: int,
-                ncomp: int) -> bytes:
-    def box(btype: bytes, payload: bytes) -> bytes:
-        return struct.pack(">I", 8 + len(payload)) + btype + payload
-
-    ihdr = box(b"ihdr",
-               struct.pack(">IIHBBBB", h, w, ncomp, bpc - 1, 7, 0, 0))
-    colr = box(b"colr", bytes([1, 0, 0])
-               + struct.pack(">I", 17 if ncomp == 1 else 16))
-    return (struct.pack(">I", 12) + b"jP  " + b"\x0d\x0a\x87\x0a"
-            + box(b"ftyp", b"jp2 \x00\x00\x00\x00jp2 ")
-            + box(b"jp2h", ihdr + colr)
-            + box(b"jp2c", stream))
-
-
-def _check_encode_args(shape: tuple, bpc: int, levels: int,
-                       cblk: int) -> None:
-    h, w = shape
-    if not 1 <= bpc <= 8:
-        raise ValueError(f"unsupported bpc {bpc}")
-    if not 0 <= levels <= _MAX_LEVELS:
-        raise ValueError(f"unsupported decomposition levels {levels}")
-    if cblk & (cblk - 1) or not 4 <= cblk <= 64:
-        # square blocks: xcb + ycb <= 12 (T.800 A.6.1) caps a side at 64
-        raise ValueError(f"code-block size {cblk} not a power of two in "
-                         "[4, 64]")
-    if w > _MAX_DIM or h > _MAX_DIM:
-        raise ValueError(f"image {w}x{h} exceeds {_MAX_DIM} per axis")
-
-
-def encode_jp2_gray(img: np.ndarray, bpc: int = 8, levels: int = 1,
-                    cblk: int = 64, wrap_jp2: bool = True,
-                    sop: bool = False, eph: bool = False,
-                    tile: int | None = None,
-                    irreversible: bool = False,
-                    step: float = 0.25,
-                    derived: bool = False,
-                    precincts: list[tuple[int, int]] | None = None,
-                    ) -> bytes:
-    """Grayscale 2-D uint8 array → lossless JPEG 2000 bytes (JP2 file by
-    default; ``wrap_jp2=False`` emits the raw codestream).  ``bpc`` sets
-    the component precision: 8 stores samples as-is, lower depths
-    re-quantize (``bpc=1`` thresholds at 128 — the bilevel-scan form,
-    the fixture corpus's fast tier: ±1 coefficients keep the T1 pass
-    count tiny while exercising the whole wavelet/packet machinery).
-    ``sop``/``eph`` emit the optional packet-boundary markers some real
-    encoders use; ``tile`` splits the image into a tile grid (one
-    tile-part each), the way scanners tile large pages;
-    ``irreversible=True`` codes through the 9/7 float wavelet with
-    scalar-expounded quantization — the LOSSY form photographic archive
-    scans use (reconstruction error bounded by the 1/4-unit step)."""
-    if img.ndim != 2 or img.size == 0:
-        raise ValueError("need a non-empty 2-D grayscale array")
-    _check_encode_args(img.shape, bpc, levels, cblk)
-    h, w = img.shape
-    if bpc == 8:
-        samples = img.astype(np.int64)
-    else:
-        top = (1 << bpc) - 1
-        samples = ((img.astype(np.int64) * top + 127) // 255)
-    a = samples - (1 << (bpc - 1))
-    stream = _emit_codestream([a], w, h, bpc, levels, cblk, mct=0,
-                              sop=sop, eph=eph, tile=tile,
-                              irreversible=irreversible, step=step,
-                              derived=derived, precincts=precincts)
-    return _wrap_boxes(stream, w, h, bpc, 1) if wrap_jp2 else stream
-
-
-def encode_jp2_rgb(img: np.ndarray, levels: int = 1, cblk: int = 64,
-                   wrap_jp2: bool = True, sop: bool = False,
-                   eph: bool = False, tile: int | None = None,
-                   irreversible: bool = False, step: float = 0.25,
-                   precincts: list[tuple[int, int]] | None = None,
-                   chroma_step: float | None = None) -> bytes:
-    """(h, w, 3) uint8 RGB → JPEG 2000 bytes: three 8-bit components
-    through the reversible color transform (T.800 Annex G.2 RCT,
-    lossless), or — with ``irreversible=True`` — the float ICT (G.3)
-    over the 9/7 wavelet, the lossy color-scan form."""
-    if img.ndim != 3 or img.shape[2] != 3 or img.size == 0:
-        raise ValueError("need a non-empty (h, w, 3) RGB array")
-    _check_encode_args(img.shape[:2], 8, levels, cblk)
-    h, w = img.shape[:2]
-    if irreversible:                   # DC level shift, then float ICT
-        rgb = img.astype(np.float64) - 128.0
-        r_, g_, b_ = rgb[..., 0], rgb[..., 1], rgb[..., 2]
-        planes = [0.299 * r_ + 0.587 * g_ + 0.114 * b_,
-                  -0.168736 * r_ - 0.331264 * g_ + 0.5 * b_,
-                  0.5 * r_ - 0.418688 * g_ - 0.081312 * b_]
-    else:                              # DC level shift, then RCT
-        rgb = img.astype(np.int64) - 128
-        r_, g_, b_ = rgb[..., 0], rgb[..., 1], rgb[..., 2]
-        planes = [(r_ + 2 * g_ + b_) >> 2, b_ - g_, r_ - g_]
-    if chroma_step is not None and not irreversible:
-        raise ValueError("chroma_step needs irreversible coding")
-    comp_steps = [step, chroma_step, chroma_step] \
-        if chroma_step is not None else None
-    stream = _emit_codestream(planes, w, h, 8, levels, cblk, mct=1,
-                              sop=sop, eph=eph, tile=tile,
-                              irreversible=irreversible, step=step,
-                              precincts=precincts,
-                              comp_steps=comp_steps)
-    return _wrap_boxes(stream, w, h, 8, 3) if wrap_jp2 else stream
 
 
 # --------------------------------------------------------------------------

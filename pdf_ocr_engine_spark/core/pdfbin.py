@@ -25,6 +25,7 @@ scaling long before arithmetic does)::
     \\n%%EOF
 
 Any other ``%PDF-`` payload is parsed as a genuine PDF (``core/pdfreal.py``).
+The fixture writer is ``encoders.pdf.encode_pdf``.
 
 ``page_count`` is declared independently of ``len(pages)`` so fixtures can
 exercise the reference's page-extraction-mismatch invariant
@@ -43,48 +44,6 @@ _HEADER = b"%PDF-1.7\n%WBOX2\n"
 _FOOTER = b"\n%%EOF"
 
 HTML_MAGICS = (b"<!doctype", b"<html", b"<head", b"<body")
-
-
-def encode_pdf(
-    pages: list[dict[str, Any]],
-    page_count: int | None = None,
-) -> bytes:
-    """Encode page word-box records into the WBOX2 container.
-
-    Each page dict: ``{"page_no", "width", "height", "has_text", "words"}``
-    with ``words`` a list of ``(text, x0, y0, x1, y1[, confidence])``.
-    """
-    import numpy as np
-
-    parts = [_HEADER,
-             struct.pack("<II", len(pages) if page_count is None
-                         else int(page_count), len(pages))]
-    for p in pages:
-        words = p.get("words") or []
-        n = len(words)
-        parts.append(struct.pack(
-            "<iddBI", int(p["page_no"]), float(p.get("width", 612.0)),
-            float(p.get("height", 792.0)), 1 if p.get("has_text") else 0, n))
-        coords = np.empty((n, 5), dtype="<f8")
-        texts = []
-        for i, w in enumerate(words):
-            coords[i, 0] = float(w[1])
-            coords[i, 1] = float(w[2])
-            coords[i, 2] = float(w[3])
-            coords[i, 3] = float(w[4])
-            coords[i, 4] = float(w[5]) if len(w) > 5 else 90.0
-            texts.append(str(w[0]).encode("utf-8"))
-        blob = b"".join(texts)
-        offsets = np.zeros(n + 1, dtype="<u4")
-        if n:
-            offsets[1:] = np.cumsum(
-                np.fromiter((len(t) for t in texts), dtype="<u4", count=n))
-        parts.append(struct.pack("<I", len(blob)))
-        parts.append(offsets.tobytes())
-        parts.append(coords.tobytes())
-        parts.append(blob)
-    parts.append(_FOOTER)
-    return b"".join(parts)
 
 
 #: pdf.js-style header recovery window: crawl PDFs frequently carry leading

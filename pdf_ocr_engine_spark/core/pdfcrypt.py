@@ -16,10 +16,11 @@ why.  Scope (all from the public spec):
 * **Refuse loudly**: wrong password, V5/R6 (AES-256), or a non-Standard
   filter raise :class:`EncryptedPdfError` → ``status='encrypted'`` —
   distinct from corrupt, so a crawl can count/route them.
-* **Encrypt** (fixture-grade): :func:`encrypt_pdf` re-writes a classic
-  PDF produced by this repo's writers with encrypted streams + the
-  ``/Encrypt`` dictionary, so the decryptor has a round-trip oracle the
-  same way ``pdfwrite ⊣ pdfreal`` oracle each other.
+* **Encrypt** (fixture-grade): ``encoders.pdf.encrypt_pdf`` re-writes a
+  classic PDF produced by this repo's writers with encrypted streams +
+  the ``/Encrypt`` dictionary, from the key derivation and ciphers here,
+  so the decryptor has a round-trip oracle the same way
+  ``pdfwrite ⊣ pdfreal`` oracle each other.
 
 Strings outside streams are NOT decrypted (extraction reads names,
 numbers, and streams only — content text lives inside encrypted content
@@ -30,13 +31,11 @@ Algorithm-1 string decryption at the parse sites.
 from __future__ import annotations
 
 import hashlib
-import re
 import struct
 
 __all__ = [
     "EncryptedPdfError",
     "StandardDecryptor",
-    "encrypt_pdf",
     "rc4",
 ]
 
@@ -274,22 +273,6 @@ def _compute_key(o: bytes, p: int, id0: bytes, r: int, length_bits: int,
     return h[:n]
 
 
-def _compute_o(r: int, length_bits: int) -> bytes:
-    """Algorithm 3 with empty owner AND user passwords (the common crawl
-    case: permissions-only encryption)."""
-    n = max(length_bits // 8, 5)
-    h = hashlib.md5(_PAD).digest()
-    if r >= 3:
-        for _ in range(50):
-            h = hashlib.md5(h[:n]).digest()
-    key = h[:n]
-    o = rc4(key, _PAD)
-    if r >= 3:
-        for i in range(1, 20):
-            o = rc4(bytes(b ^ i for b in key), o)
-    return o
-
-
 def _compute_u(key: bytes, id0: bytes, r: int) -> bytes:
     """Algorithm 4 (R2) / 5 (R≥3): the /U verification value."""
     if r == 2:
@@ -378,122 +361,3 @@ class StandardDecryptor:
         if self.aes:
             return aes_cbc_decrypt(k, data)
         return rc4(k, data)
-
-
-# --------------------------------------------------------------------------
-# Fixture-grade encryptor (round-trip oracle for the decryptor)
-# --------------------------------------------------------------------------
-
-_OBJ_SPAN_RE = re.compile(rb"(\d+)\s+(\d+)\s+obj\b(.*?)endobj", re.S)
-_STREAM_RE = re.compile(rb"stream\r?\n(.*?)\r?\nendstream", re.S)
-_LEN_RE = re.compile(rb"/Length\s+(\d+)(?![\s\d]*R)")
-
-
-def encrypt_pdf(data: bytes, scheme: str = "rc4-128",
-                id0: bytes = b"\x01" * 16) -> bytes:
-    """Encrypt a classic (non-objstm, literal-``/Length``) PDF — the shape
-    this repo's writers emit — with empty user/owner passwords.  Schemes:
-    ``rc4-40`` (V1/R2), ``rc4-128`` (V2/R3), ``aes-128`` (V4/R4 AESV2).
-    Deterministic: AES IVs derive from the object number, not randomness
-    (fixtures must be reproducible)."""
-    if scheme == "rc4-40":
-        v, r, bits = 1, 2, 40
-    elif scheme == "rc4-128":
-        v, r, bits = 2, 3, 128
-    elif scheme == "aes-128":
-        v, r, bits = 4, 4, 128
-    elif scheme == "rc4-128-cf":
-        # V4 crypt-filter RC4 whose key width is stated ONLY in the crypt
-        # filter's /Length (bytes) — no top-level /Length.  Seen in the
-        # wild; regression fixture for the CF-Length-preference rule in
-        # _StandardDecryptor (a reader that ignores /CF .../Length derives
-        # a 40-bit key and refuses a decryptable document).
-        v, r, bits = 4, 4, 128
-    else:
-        raise ValueError(f"unknown scheme {scheme}")
-    p = -44  # typical permissions: print allowed, modify/copy denied
-    o = _compute_o(r, bits)
-    key = _compute_key(o, p, id0, r, bits)
-    u = _compute_u(key, id0, r)
-
-    def obj_key(num: int, gen: int) -> bytes:
-        buf = (key + num.to_bytes(4, "little")[:3]
-               + gen.to_bytes(4, "little")[:2])
-        if scheme == "aes-128":
-            buf += b"sAlT"
-        return hashlib.md5(buf).digest()[:min(len(key) + 5, 16)]
-
-    # 1. encrypt every stream payload in place
-    bodies: list[bytes] = []
-    last_num = 0
-
-    def enc_obj(m: re.Match) -> bytes:
-        nonlocal last_num
-        num, gen = int(m.group(1)), int(m.group(2))
-        last_num = max(last_num, num)
-        body = m.group(3)
-        sm = _STREAM_RE.search(body)
-        if sm is None:
-            return m.group(0)
-        payload = sm.group(1)
-        k = obj_key(num, gen)
-        if scheme == "aes-128":
-            iv = hashlib.md5(b"iv" + num.to_bytes(4, "big")).digest()
-            enc = aes_cbc_encrypt(k, iv, payload)
-        else:
-            enc = rc4(k, payload)
-        body = (body[:sm.start()] + b"stream\n" + enc + b"\nendstream"
-                + body[sm.end():])
-        body = _LEN_RE.sub(b"/Length " + str(len(enc)).encode(), body, 1)
-        return b"%d %d obj" % (num, gen) + body + b"endobj"
-
-    head_end = data.find(b"%PDF-")
-    out = _OBJ_SPAN_RE.sub(enc_obj, data[head_end:])
-
-    # 2. append the /Encrypt object and rebuild trailer + xref
-    enc_num = last_num + 1
-    if scheme == "aes-128":
-        cf = (b" /CF << /StdCF << /CFM /AESV2 /AuthEvent /DocOpen "
-              b"/Length 16 >> >> /StmF /StdCF /StrF /StdCF")
-    elif scheme == "rc4-128-cf":
-        cf = (b" /CF << /StdCF << /CFM /V2 /AuthEvent /DocOpen "
-              b"/Length 16 >> >> /StmF /StdCF /StrF /StdCF")
-    else:
-        cf = b""
-    # rc4-128-cf deliberately omits the top-level /Length: the key width
-    # travels only in the crypt filter dict (the case the decryptor's
-    # CF-Length-preference rule exists for)
-    length_part = (b"" if scheme == "rc4-128-cf"
-                   else b" /Length %d" % bits)
-    enc_obj_body = (
-        b"<< /Filter /Standard /V %d /R %d%s /P %d /O <%s> "
-        b"/U <%s>%s >>"
-        % (v, r, length_part, p, o.hex().encode(), u[:32].hex().encode(),
-           cf))
-    # strip the old xref/trailer, keep objects — match the xref SECTION
-    # keyword at line start, not the 'xref' inside 'startxref' (which
-    # would leave the old cleartext trailer + a dangling 'start' behind)
-    m_x = None
-    for m_x in re.finditer(rb"(?:^|[\r\n])xref\b", out):
-        pass
-    objs_part = out[:m_x.start()] if m_x is not None else out
-    buf = bytearray(objs_part)
-    buf += b"%d 0 obj\n" % enc_num + enc_obj_body + b"\nendobj\n"
-    # xref rebuilt from scratch (object scan — robust to input layout)
-    offsets: dict[int, int] = {}
-    for m in _OBJ_SPAN_RE.finditer(bytes(buf)):
-        offsets[int(m.group(1))] = m.start()
-    xref_at = len(buf)
-    max_num = max(offsets)
-    buf += b"xref\n0 %d\n" % (max_num + 1)
-    buf += b"0000000000 65535 f \n"
-    for i in range(1, max_num + 1):
-        if i in offsets:
-            buf += b"%010d 00000 n \n" % offsets[i]
-        else:
-            buf += b"0000000000 65535 f \n"
-    buf += (b"trailer\n<< /Size %d /Root 1 0 R /Encrypt %d 0 R "
-            b"/ID [<%s> <%s>] >>\nstartxref\n%d\n%%%%EOF"
-            % (max_num + 1, enc_num, id0.hex().encode(), id0.hex().encode(),
-               xref_at))
-    return bytes(buf)

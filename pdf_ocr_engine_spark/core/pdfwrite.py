@@ -48,9 +48,14 @@ def _escape_text(raw: str) -> str:
     docstring).  The fallback must be strict-or-utf8: ``errors='ignore'``
     would silently drop the non-Latin-1 chars from MIXED text."""
     try:
-        encoded = raw.encode("latin-1")
+        return _escape_bytes(raw.encode("latin-1"))
     except UnicodeEncodeError:
-        encoded = raw.encode("utf-8")
+        return _escape_bytes(raw.encode("utf-8"))
+
+
+def _escape_bytes(encoded: bytes) -> str:
+    """Literal-string body for ``encoded``: ``( ) \\`` escaped, printable
+    ASCII as is, every other byte as an octal escape."""
     out = []
     for b in encoded:
         if b in (0x28, 0x29, 0x5C):  # ( ) backslash
@@ -64,11 +69,13 @@ def _escape_text(raw: str) -> str:
 
 def _page_content(spans, page_w: float, page_h: float,
                   img_w: float | None, img_h: float | None,
-                  font_res: str = "F1") -> bytes:
+                  font_res: str = "F1", show=None) -> bytes:
     """Content stream for one page: invisible text ops per drawable span.
 
     ``spans``: iterable of ``(raw, x0, y0, x1, y1)`` in image coords
-    (top-left origin), exactly what the layout kernel emits.
+    (top-left origin), exactly what the layout kernel emits.  ``show``
+    maps a word to its show-string operand (default: an escaped literal
+    string; the TrueType fixtures pass hex CIDs or scrambled codes).
     """
     sx = page_w / img_w if img_w else 1.0          # builder.ts:155
     sy = page_h / img_h if img_h else 1.0          # builder.ts:156
@@ -90,7 +97,8 @@ def _page_content(spans, page_w: float, page_h: float,
         font_size = max(fitted, 4.0)               # builder.ts:193 render floor
         ops.append(f"/{font_res} {_fmt(font_size)} Tf")
         ops.append(f"1 0 0 1 {_fmt(x)} {_fmt(y)} Tm")
-        ops.append(f"({_escape_text(raw)}) Tj")
+        ops.append((show(raw) if show else f"({_escape_text(raw)})")
+                   + " Tj")
     ops.append("ET")
     return "\n".join(ops).encode("latin-1")
 
@@ -102,22 +110,28 @@ def build_searchable_pdf(pages: list[dict]) -> bytes:
     "img_width", "img_height"}`` (image dims optional — omit when spans are
     already in page points).  Returns the complete PDF bytes.
     """
-    objects: list[bytes] = []  # 1-indexed bodies, object i = objects[i-1]
+    return _text_pdf(
+        pages, [b"<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica >>"])
 
+
+def _text_pdf(pages: list[dict], font_objs: list[bytes], show=None) -> bytes:
+    """Invisible-text PDF: catalog, page tree, ``font_objs`` (object 3 is
+    every page's ``/F1``), then per page its page object and content
+    stream (:func:`_page_content` with ``show``)."""
     n_pages = len(pages)
-    first_page_obj = 4  # 1=catalog, 2=pages, 3=font; then page,content pairs
+    first_page_obj = 3 + len(font_objs)  # then page,content pairs
     kids = " ".join(f"{first_page_obj + 2 * i} 0 R" for i in range(n_pages))
-
-    objects.append(b"<< /Type /Catalog /Pages 2 0 R >>")
-    objects.append(
-        f"<< /Type /Pages /Kids [{kids}] /Count {n_pages} >>".encode())
-    objects.append(b"<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica >>")
-
+    objects = [  # 1-indexed bodies, object i = objects[i-1]
+        b"<< /Type /Catalog /Pages 2 0 R >>",
+        f"<< /Type /Pages /Kids [{kids}] /Count {n_pages} >>".encode(),
+        *font_objs,
+    ]
     for i, page in enumerate(pages):
         w = float(page.get("width") or DEFAULT_PAGE[0])
         h = float(page.get("height") or DEFAULT_PAGE[1])
         content = _page_content(page.get("spans") or [], w, h,
-                                page.get("img_width"), page.get("img_height"))
+                                page.get("img_width"), page.get("img_height"),
+                                show=show)
         page_obj = first_page_obj + 2 * i
         objects.append(
             (f"<< /Type /Page /Parent 2 0 R /MediaBox [0 0 {_fmt(w)} "
@@ -129,15 +143,17 @@ def build_searchable_pdf(pages: list[dict]) -> bytes:
     return _assemble_objects(objects)
 
 
-def _assemble_objects(objects: list[bytes]) -> bytes:
-    """1-indexed object bodies → complete PDF bytes (header, sequential
-    bodies, hand-built xref with exact offsets, trailer) — the one
-    serialization tail shared by every writer in this module."""
+def _assemble_objects(objects: list[bytes], reverse: bool = False) -> bytes:
+    """1-indexed object bodies → complete PDF bytes (header, bodies in
+    object order or with ``reverse`` in reverse order, hand-built xref
+    with exact offsets, trailer) — the one serialization tail shared by
+    every object-numbered PDF writer, fixture builders included."""
     buf = bytearray(b"%PDF-1.4\n%\xe2\xe3\xcf\xd3\n")
-    offsets = [0]
-    for i, body in enumerate(objects, start=1):
-        offsets.append(len(buf))
-        buf += f"{i} 0 obj\n".encode() + body + b"\nendobj\n"
+    offsets = [0] * (len(objects) + 1)
+    ids = range(1, len(objects) + 1)
+    for i in reversed(ids) if reverse else ids:
+        offsets[i] = len(buf)
+        buf += f"{i} 0 obj\n".encode() + objects[i - 1] + b"\nendobj\n"
     xref_at = len(buf)
     buf += f"xref\n0 {len(objects) + 1}\n".encode()
     buf += b"0000000000 65535 f \n"
@@ -146,179 +162,6 @@ def _assemble_objects(objects: list[bytes]) -> bytes:
     buf += (f"trailer\n<< /Size {len(objects) + 1} /Root 1 0 R >>\n"
             f"startxref\n{xref_at}\n%%EOF").encode()
     return bytes(buf)
-
-
-def _tt_page_content(spans, page_w: float, page_h: float,
-                     encode_word) -> bytes:
-    """Invisible-text content stream like :func:`_page_content`, but the
-    show-string operand is produced by ``encode_word`` (hex CID strings
-    for Identity-H, scrambled byte codes for the symbolic simple font)."""
-    ops = ["BT", "3 Tr"]
-    for raw, x0, y0, x1, y1 in spans:
-        word_w = x1 - x0
-        word_h = y1 - y0
-        width_at_12 = text_width_at(raw, 12.0)
-        if width_at_12 <= 0 or word_w <= 0 or word_h <= 0:
-            continue
-        y = page_h - y1 + word_h * 0.2
-        if not (x0 == x0 and y == y):               # NaN guard
-            continue
-        fitted = min((word_w / width_at_12) * 12.0, word_h * 0.9)
-        if fitted <= 1 or not raw.strip():
-            continue
-        font_size = max(fitted, 4.0)
-        ops.append(f"/F1 {_fmt(font_size)} Tf")
-        ops.append(f"1 0 0 1 {_fmt(x0)} {_fmt(y)} Tm")
-        ops.append(encode_word(raw) + " Tj")
-    ops.append("ET")
-    return "\n".join(ops).encode("latin-1")
-
-
-def build_truetype_pdf(pages: list[dict], variant: str = "cid") -> bytes:
-    """Genuine PDF whose text layer uses a SUBSETTED EMBEDDED TRUETYPE
-    font with **no /ToUnicode CMap** — the print-driver shape where the
-    only record of glyph meaning is the font program's ``cmap``/``post``
-    tables (the reference reads these through pdf.js,
-    ``extractor.ts:62-103``; here ``core/sfnt`` + ``pdfreal``'s recovery
-    tier must).  Codes are deliberately scrambled relative to Unicode so
-    a Latin-1 byte fallback provably CANNOT reproduce the text:
-
-    * ``variant="cid"``: Type0 / Identity-H / CIDFontType2, /CIDToGIDMap
-      /Identity, FontFile2 carrying a (3,1) format-4 Unicode cmap; CIDs
-      are dense gids (1, 2, 3, …) in alphabet order.
-    * ``variant="symbolic"``: simple /TrueType with NO /Encoding, Flags
-      bit 3 (symbolic), FontFile2 carrying only a (3,0) Symbol cmap
-      (0xF000+code) and post 2.0 glyph names; codes start at 0x21.
-
-    Page dicts are ``{"width", "height", "spans": [(raw,x0,y0,x1,y1)]}``
-    like :func:`build_searchable_pdf` (spans already in page points).
-    """
-    from .sfnt import build_minimal_truetype
-
-    if variant not in ("cid", "cidstream", "symbolic"):
-        raise ValueError(f"unknown truetype fixture variant {variant!r}")
-    alphabet = sorted({ch for page in pages
-                       for raw, *_ in (page.get("spans") or [])
-                       for ch in raw})
-    char_to_gid = {ch: i + 1 for i, ch in enumerate(alphabet)}
-    from ..functions.afm import FALLBACK_UNITS, HELVETICA_WIDTHS
-
-    def _char_w(ch: str) -> int:
-        code = ord(ch)
-        w = HELVETICA_WIDTHS[code] if code < 256 else 0
-        return w or FALLBACK_UNITS
-
-    if variant in ("cid", "cidstream"):
-        font = build_minimal_truetype(char_to_gid, unicode_cmap=True)
-        # cidstream: CID = gid + 5 through an explicit /CIDToGIDMap
-        # stream (2 bytes big-endian per CID) — the non-identity shape
-        cid_shift = 5 if variant == "cidstream" else 0
-
-        def encode_word(raw: str) -> str:
-            return "<" + "".join(f"{char_to_gid[ch] + cid_shift:04X}"
-                                 for ch in raw) + ">"
-    else:
-        # scrambled 1-byte codes; the font's (3,0) cmap wraps them as
-        # 0xF000+code per ISO 32000 9.6.6.4
-        char_to_code = {ch: 0x21 + i for i, ch in enumerate(alphabet)}
-        if alphabet and 0x21 + len(alphabet) > 0x100:
-            raise ValueError("symbolic fixture alphabet too large")
-        # symbolic cmap keyed by the SCRAMBLED code bytes; post 2.0
-        # names the REAL characters — glyph meaning lives only there
-        font = build_minimal_truetype(
-            char_to_gid, symbolic=True, unicode_cmap=False,
-            post_names=True,
-            symbolic_codes={char_to_code[ch]: gid
-                            for ch, gid in char_to_gid.items()})
-
-        def encode_word(raw: str) -> str:
-            out = []
-            for ch in raw:
-                b = char_to_code[ch]
-                if b in (0x28, 0x29, 0x5C):
-                    out.append("\\" + chr(b))
-                elif 32 <= b < 127:
-                    out.append(chr(b))
-                else:
-                    out.append(f"\\{b:03o}")
-            return "(" + "".join(out) + ")"
-
-    n_pages = len(pages)
-    # 1=catalog 2=pages 3=font [4=descendant 5=fontdescr 6=fontfile
-    # (7=cid2gid stream)] then per page: page, content
-    if variant in ("cid", "cidstream"):
-        c2g_entry = b"/Identity"
-        extra_objs: list[bytes] = []
-        if variant == "cidstream":
-            c2g_entry = b"7 0 R"
-            max_cid = max(char_to_gid.values(), default=0) + cid_shift
-            raw = bytearray(2 * (max_cid + 1))
-            for gid in char_to_gid.values():
-                raw[2 * (gid + cid_shift)] = gid >> 8
-                raw[2 * (gid + cid_shift) + 1] = gid & 0xFF
-            extra_objs.append(
-                b"<< /Length " + str(len(raw)).encode()
-                + b" >>\nstream\n" + bytes(raw) + b"\nendstream")
-        first_page_obj = 7 + len(extra_objs)
-        font_objs = [
-            (b"<< /Type /Font /Subtype /Type0 /BaseFont /SUBSET+Fix "
-             b"/Encoding /Identity-H /DescendantFonts [4 0 R] >>"),
-            (b"<< /Type /Font /Subtype /CIDFontType2 /BaseFont "
-             b"/SUBSET+Fix /CIDSystemInfo << /Registry (Adobe) "
-             b"/Ordering (Identity) /Supplement 0 >> /FontDescriptor "
-             b"5 0 R /DW 600 /CIDToGIDMap " + c2g_entry + b" /W ["
-             + " ".join(f"{gid + cid_shift} [{_char_w(ch)}]"
-                        for ch, gid in char_to_gid.items()).encode()
-             + b"] >>"),
-            (b"<< /Type /FontDescriptor /FontName /SUBSET+Fix /Flags 4 "
-             b"/ItalicAngle 0 /Ascent 800 /Descent -200 /CapHeight 700 "
-             b"/StemV 80 /FontBBox [0 -200 1000 800] /FontFile2 6 0 R >>"),
-            (b"<< /Length " + str(len(font)).encode() + b" /Length1 "
-             + str(len(font)).encode() + b" >>\nstream\n" + font
-             + b"\nendstream"),
-            *extra_objs,
-        ]
-    else:
-        first_page_obj = 6
-        lo = 0x21
-        hi = 0x20 + len(alphabet) if alphabet else 0x21
-        code_to_char = {0x21 + i: ch for i, ch in enumerate(alphabet)}
-        widths = " ".join(
-            str(_char_w(code_to_char[c])) if c in code_to_char else "600"
-            for c in range(lo, hi + 1))
-        font_objs = [
-            (f"<< /Type /Font /Subtype /TrueType /BaseFont /SUBSET+Fix "
-             f"/FirstChar {lo} /LastChar {hi} /Widths [{widths}] "
-             f"/FontDescriptor 4 0 R >>").encode(),
-            (b"<< /Type /FontDescriptor /FontName /SUBSET+Fix /Flags 4 "
-             b"/ItalicAngle 0 /Ascent 800 /Descent -200 /CapHeight 700 "
-             b"/StemV 80 /FontBBox [0 -200 1000 800] /FontFile2 5 0 R >>"),
-            (b"<< /Length " + str(len(font)).encode() + b" /Length1 "
-             + str(len(font)).encode() + b" >>\nstream\n" + font
-             + b"\nendstream"),
-        ]
-
-    kids = " ".join(f"{first_page_obj + 2 * i} 0 R" for i in range(n_pages))
-    objects: list[bytes] = [
-        b"<< /Type /Catalog /Pages 2 0 R >>",
-        (f"<< /Type /Pages /Kids [{kids}] /Count {n_pages} "
-         f">>").encode(),
-        *font_objs,
-    ]
-    for i, page in enumerate(pages):
-        w = float(page.get("width") or DEFAULT_PAGE[0])
-        h = float(page.get("height") or DEFAULT_PAGE[1])
-        content = _tt_page_content(page.get("spans") or [], w, h,
-                                   encode_word)
-        page_obj = first_page_obj + 2 * i
-        objects.append(
-            (f"<< /Type /Page /Parent 2 0 R /MediaBox [0 0 {_fmt(w)} "
-             f"{_fmt(h)}] /Resources << /Font << /F1 3 0 R >> >> "
-             f"/Contents {page_obj + 1} 0 R >>").encode())
-        objects.append(b"<< /Length " + str(len(content)).encode()
-                       + b" >>\nstream\n" + content + b"\nendstream")
-
-    return _assemble_objects(objects)
 
 
 def extract_pdf_text(data: bytes) -> list[list[str]]:

@@ -1,4 +1,4 @@
-"""Pure-stdlib PNG codec — real pixel decode with no external library.
+"""Pure-stdlib PNG decoder — real pixel decode with no external library.
 
 The reference pipeline leans on ``sharp`` for all raster work
 (``/root/reference/src/lib/ocr/ocr.ts:67-71``); this sandbox ships no
@@ -21,16 +21,14 @@ Decoder coverage (PNG spec, third edition):
   filtered sub-image (PNG spec §8.2), unfiltered with the same kernel
   and scattered into the full grid by strided assignment
 
-The encoder is deliberately minimal (8-bit gray / RGB / RGBA, selectable
-filter) — enough to author test fixtures and to re-emit rasters, with
-CRCs so external tools accept the output.
+The fixture encoder (``encoders.raster.encode_png``) shares
+``PNG_MAGIC`` and the Adam7 pass table with this module.
 """
 
 from __future__ import annotations
 
 import struct
 import zlib
-from binascii import crc32
 
 import numpy as np
 
@@ -193,74 +191,3 @@ def to_gray(px: np.ndarray, color: int) -> np.ndarray:
     b = px[:, :, 2].astype(np.uint32)
     return ((r * 299 + g * 587 + b * 114 + 500) // 1000).astype(np.uint8)
 
-
-def _chunk(ctype: bytes, body: bytes) -> bytes:
-    return struct.pack(">I", len(body)) + ctype + body + \
-        struct.pack(">I", crc32(ctype + body) & 0xFFFFFFFF)
-
-
-def _filter_row(cur: np.ndarray, prev: np.ndarray, fu: int,
-                f: int) -> np.ndarray:
-    """Apply filter ``f`` forward (encoder side)."""
-    c = cur.astype(np.int64)
-    a = np.zeros_like(c)
-    a[fu:] = c[:-fu]
-    b = prev.astype(np.int64)
-    cc = np.zeros_like(b)
-    cc[fu:] = b[:-fu]
-    if f == 0:
-        out = c
-    elif f == 1:
-        out = c - a
-    elif f == 2:
-        out = c - b
-    elif f == 3:
-        out = c - ((a + b) >> 1)
-    else:  # Paeth
-        p = a + b - cc
-        pa, pb, pc = np.abs(p - a), np.abs(p - b), np.abs(p - cc)
-        pred = np.where((pa <= pb) & (pa <= pc), a, np.where(pb <= pc, b, cc))
-        out = c - pred
-    return (out & 255).astype(np.uint8)
-
-
-def encode_png(px: np.ndarray, filter_type: int = 0,
-               interlace: bool = False) -> bytes:
-    """uint8 array (h, w) gray, (h, w, 3) RGB or (h, w, 4) RGBA → PNG bytes
-    (8-bit, one IDAT).  ``filter_type`` selects the same scanline filter
-    for every row — 0 for plain fixtures, 1-4 to exercise the decoder's
-    unfilter paths; ``interlace`` emits Adam7 (each pass filtered
-    independently, per spec)."""
-    if filter_type not in (0, 1, 2, 3, 4):
-        raise ValueError(f"bad filter_type {filter_type}")
-    arr = np.ascontiguousarray(px, dtype=np.uint8)
-    if arr.ndim == 2:
-        arr = arr[:, :, None]
-    h, w, channels = arr.shape
-    color = {1: 0, 3: 2, 4: 6}.get(channels)
-    if color is None:
-        raise ValueError(f"unsupported channel count {channels}")
-    fu = channels
-    body = bytearray()
-
-    def filter_rows(sub: np.ndarray) -> None:
-        hp, wp = sub.shape[:2]
-        flat = np.ascontiguousarray(sub).reshape(hp, wp * channels)
-        prev = np.zeros(wp * channels, dtype=np.uint8)
-        for y in range(hp):
-            body.append(filter_type)
-            body.extend(_filter_row(flat[y], prev, fu,
-                                    filter_type).tobytes())
-            prev = flat[y]
-
-    if interlace:
-        for x0, y0, dx, dy in _ADAM7:
-            sub = arr[y0::dy, x0::dx]
-            if sub.shape[0] and sub.shape[1]:
-                filter_rows(sub)
-    else:
-        filter_rows(arr)
-    ihdr = struct.pack(">IIBBBBB", w, h, 8, color, 0, 0,
-                       1 if interlace else 0)
-    return PNG_MAGIC + _chunk(b"IHDR", ihdr) + \
-        _chunk(b"IDAT", zlib.compress(bytes(body), 6)) + _chunk(b"IEND", b"")

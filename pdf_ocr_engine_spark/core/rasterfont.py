@@ -6,10 +6,11 @@ real rasterizer/OCR pair would run (reference ``extractor.ts:12-37`` →
 *foreign-structure* scanned PDFs: pages whose embedded image XObject is a
 genuine raster (``/DeviceGray`` samples), not a repo-authored container.
 
-* :func:`render_words_gray` — "print" words into an 8-bit grayscale page
-  with a classic 5×7 dot-matrix font (the public HD44780-style glyph
-  shapes): 255 background, 0 ink.  This is the fixture-side stand-in for
-  a scanner: the output is real pixels, decodable by any image tool.
+* ``encoders.raster.render_words_gray`` — "print" words into an 8-bit
+  grayscale page with the classic 5×7 dot-matrix font defined here (the
+  public HD44780-style glyph shapes): 255 background, 0 ink.  This is the
+  fixture-side stand-in for a scanner: the output is real pixels,
+  decodable by any image tool.
 * :func:`recognize_gray` — a real (if minimal) OCR algorithm over those
   pixels: horizontal-projection line banding, vertical-projection
   character/word segmentation, then exact template classification.  It
@@ -41,13 +42,11 @@ __all__ = [
     "GLYPH_H",
     "GLYPH_W",
     "recognize_gray",
-    "render_words_gray",
 ]
 
 GLYPH_W = 5
 GLYPH_H = 7
 _CELL_W = GLYPH_W + 1          # one blank column between characters
-_INK_Y_OFF = 2                 # ink anchored 2 px below the word-box top
 _WORD_GAP_MIN = 4              # blank columns: >= this starts a new word
 
 #: classic 5×7 dot-matrix glyphs (one int per row, bit 4 = leftmost).
@@ -259,42 +258,6 @@ def _segment_run(band: np.ndarray, run_start: int, run_end: int,
             f"unreadable ink run cols [{run_start}, {run_end}) at row "
             f"{band_start} under every candidate pitch")
     return best[1]
-
-
-def render_words_gray(width: int, height: int,
-                      words: list[tuple[str, float, float, float, float]],
-                      ) -> bytes:
-    """Render word boxes into an 8-bit grayscale page (row-major samples,
-    255 = background, 0 = ink).  ``words`` are ``(text, x0, y0, x1, y1)``
-    in top-origin pixel coords; each character prints in a 6-px cell
-    starting at ``round(x0)``, glyph ink 2 px below ``round(y0)``.
-
-    Raises ``ValueError`` on characters outside the font or on ink that
-    would fall outside the page — a silently clipped word would break the
-    extraction byte-identity oracle downstream.
-    """
-    w, h = int(width), int(height)
-    page = np.full((h, w), 255, dtype=np.uint8)
-    for text, x0, y0, _x1, _y1 in words:
-        cx = int(round(x0))
-        cy = int(round(y0)) + _INK_Y_OFF
-        if cy < 0 or cy + GLYPH_H > h:
-            raise ValueError(
-                f"word {text!r} ink rows [{cy}, {cy + GLYPH_H}) outside "
-                f"page height {h}")
-        for ch in text:
-            tpl = _TEMPLATES.get(ch)
-            if tpl is None:
-                raise ValueError(
-                    f"character {ch!r} not in the 5x7 raster font")
-            if cx < 0 or cx + GLYPH_W > w:
-                raise ValueError(
-                    f"word {text!r} ink cols [{cx}, {cx + GLYPH_W}) "
-                    f"outside page width {w}")
-            region = page[cy:cy + GLYPH_H, cx:cx + GLYPH_W]
-            region[tpl == 1] = 0
-            cx += _CELL_W
-    return page.tobytes()
 
 
 def recognize_gray(width: int, height: int, samples: bytes,

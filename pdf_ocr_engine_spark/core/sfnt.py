@@ -21,9 +21,9 @@ glyph names filling the gaps.  Everything raises :class:`SfntError` on
 malformed data; callers treat that as "no recovery" and keep their
 fallback counters honest.
 
-The module also WRITES a minimal valid font (:func:`build_minimal_
-truetype`) — fixture-side only, so tests and the corpus can exercise
-the recovery path against genuine sfnt bytes rather than mocks.
+The fixture writer of a minimal valid font
+(``encoders.pdf.build_minimal_truetype``) lets tests and the corpus
+exercise the recovery path against genuine sfnt bytes rather than mocks.
 """
 
 from __future__ import annotations
@@ -34,7 +34,6 @@ from .glyphs import glyph_to_unicode
 
 __all__ = [
     "SfntError",
-    "build_minimal_truetype",
     "gid_to_unicode",
     "parse_tables",
 ]
@@ -309,133 +308,3 @@ def gid_to_unicode(font: bytes) -> dict[int, str]:
             pass  # cmap result (if any) still stands
     out.pop(0, None)  # .notdef never carries text
     return out
-
-
-# --------------------------------------------------------------------------
-# fixture-side writer (minimal valid font)
-# --------------------------------------------------------------------------
-
-def _checksum(data: bytes) -> int:
-    if len(data) % 4:
-        data += b"\x00" * (4 - len(data) % 4)
-    return sum(struct.unpack(f">{len(data) // 4}I", data)) & 0xFFFFFFFF
-
-
-def _encode_cmap_format4(code_to_gid: dict[int, int]) -> bytes:
-    # one segment per code + the required terminal segment; idDelta
-    # arithmetic, no glyphIdArray (idRangeOffset 0 everywhere)
-    import math
-
-    codes = sorted(code_to_gid)
-    segs = [(c, c, (code_to_gid[c] - c) & 0xFFFF) for c in codes]
-    segs.append((0xFFFF, 0xFFFF, 1))
-    seg = len(segs)
-    floor_pow = 1 << int(math.log2(seg))
-    body = struct.pack(">HHHHHHH", 4, 16 + 8 * seg, 0, seg * 2,
-                       floor_pow * 2, int(math.log2(floor_pow)),
-                       seg * 2 - floor_pow * 2)
-    body += b"".join(struct.pack(">H", e) for _s, e, _d in segs)
-    body += b"\x00\x00"  # reservedPad
-    body += b"".join(struct.pack(">H", s) for s, _e, _d in segs)
-    body += b"".join(struct.pack(">h", d - 0x10000 if d > 0x7FFF else d)
-                     for _s, _e, d in segs)
-    body += b"\x00\x00" * seg  # idRangeOffset
-    return body
-
-
-def _encode_post2(gid_names: dict[int, str], num_glyphs: int) -> bytes:
-    header = struct.pack(">IiHHIIIII", 0x00020000, 0, 0, 0, 0, 0, 0, 0, 0)
-    idx = []
-    names: list[bytes] = []
-    for gid in range(num_glyphs):
-        name = gid_names.get(gid)
-        if name is None:
-            idx.append(0)  # .notdef
-        elif name in _MAC_GLYPH_NAMES:
-            idx.append(_MAC_GLYPH_NAMES.index(name))
-        else:
-            idx.append(258 + len(names))
-            names.append(name.encode("latin-1"))
-    body = header + struct.pack(">H", num_glyphs)
-    body += b"".join(struct.pack(">H", i) for i in idx)
-    body += b"".join(bytes([len(n)]) + n for n in names)
-    return body
-
-
-def build_minimal_truetype(char_to_gid: dict[str, int],
-                           *, symbolic: bool = False,
-                           unicode_cmap: bool = True,
-                           post_names: bool = False,
-                           symbolic_codes: dict[int, int] | None = None,
-                           ) -> bytes:
-    """A minimal, structurally valid TrueType program for fixtures.
-
-    ``char_to_gid`` assigns glyph ids (>= 1) to characters.  With
-    ``unicode_cmap`` the font carries a (3,1) format-4 Unicode subtable;
-    with ``symbolic`` a (3,0) Symbol subtable mapping 0xF000+byte →
-    gid (the print-driver pattern); with ``post_names`` a post 2.0
-    table naming every glyph (AGL names for ASCII).  Tables: head,
-    maxp, cmap, post — enough for any sfnt reader that walks the
-    directory."""
-    num_glyphs = max(char_to_gid.values(), default=0) + 1
-    sub_recs: list[tuple[int, int, bytes]] = []
-    if unicode_cmap:
-        sub_recs.append((3, 1, _encode_cmap_format4(
-            {ord(ch): gid for ch, gid in char_to_gid.items()})))
-    if symbolic:
-        # ``symbolic_codes`` decouples the FONT code bytes from the
-        # characters (a real subsetter's arbitrary assignment); default
-        # is the character's own low byte
-        sym = symbolic_codes if symbolic_codes is not None else {
-            ord(ch) & 0xFF: gid for ch, gid in char_to_gid.items()}
-        sub_recs.append((3, 0, _encode_cmap_format4(
-            {0xF000 + code: gid for code, gid in sym.items()})))
-    header = struct.pack(">HH", 0, len(sub_recs))
-    offset = 4 + 8 * len(sub_recs)
-    recs, bodies = b"", b""
-    for plat, enc, body in sub_recs:
-        recs += struct.pack(">HHI", plat, enc, offset)
-        bodies += body
-        offset += len(body)
-    cmap = header + recs + bodies
-
-    if post_names:
-        gid_names = {gid: _AGL_NAME.get(ch, f"uni{ord(ch):04X}")
-                     for ch, gid in char_to_gid.items()}
-        post = _encode_post2(gid_names, num_glyphs)
-    else:
-        post = struct.pack(">IiHHIIIII", 0x00030000, 0, 0, 0, 0, 0, 0, 0, 0)
-
-    head = struct.pack(">IIIIHHQQhhhhHHhhh", 0x00010000, 0, 0,
-                       0x5F0F3CF5, 0, 1000, 0, 0, 0, 0, 1000, 1000,
-                       0, 8, 2, 0, 0)
-    maxp = struct.pack(">IH", 0x00010000, num_glyphs) + b"\x00" * 26
-
-    tables = [(b"cmap", cmap), (b"head", head), (b"maxp", maxp),
-              (b"post", post)]
-    tables.sort(key=lambda t: t[0])
-    n = len(tables)
-    import math
-    floor_pow = 1 << int(math.log2(n))
-    sfnt = struct.pack(">IHHHH", 0x00010000, n, floor_pow * 16,
-                       int(math.log2(floor_pow)), n * 16 - floor_pow * 16)
-    offset = 12 + 16 * n
-    dir_recs = b""
-    body = b""
-    for tag, data in tables:
-        dir_recs += struct.pack(">4sIII", tag, _checksum(data), offset,
-                                len(data))
-        pad = (4 - len(data) % 4) % 4
-        body += data + b"\x00" * pad
-        offset += len(data) + pad
-    return sfnt + dir_recs + body
-
-
-#: minimal AGL names for the fixture alphabet (lowercase + digits —
-#: matches the corpus; everything else falls back to uniXXXX)
-_AGL_NAME = {
-    **{ch: ch for ch in "abcdefghijklmnopqrstuvwxyz"},
-    "0": "zero", "1": "one", "2": "two", "3": "three", "4": "four",
-    "5": "five", "6": "six", "7": "seven", "8": "eight", "9": "nine",
-    " ": "space",
-}

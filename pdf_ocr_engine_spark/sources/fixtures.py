@@ -32,7 +32,13 @@ import datetime as dt
 import random
 from typing import Any
 
-from ..core.pdfbin import encode_pdf
+from ..encoders.pdf import (
+    build_pixel_scanned_pdf,
+    build_scanned_pdf,
+    build_truetype_pdf,
+    encode_pdf,
+    encrypt_pdf,
+)
 
 SEED = 42
 WORDS_PER_LINE = 12
@@ -116,8 +122,6 @@ def text_to_truetype_pdf_payload(text: str,
     (``core/sfnt`` + ``core/pdfreal._truetype_recovery``; the reference
     gets this from pdf.js, ``extractor.ts:62-103``).  Paginated exactly
     like :func:`text_to_real_pdf_payload` so both share one oracle."""
-    from ..core.pdfwrite import build_truetype_pdf
-
     return build_truetype_pdf(
         _paginate_spans(text, words_per_line, words_per_page),
         variant=variant)
@@ -126,14 +130,12 @@ def text_to_truetype_pdf_payload(text: str,
 def text_to_scanned_pdf_payload(text: str,
                                 words_per_line: int = WORDS_PER_LINE,
                                 words_per_page: int | None = None) -> bytes:
-    """Genuine *image-only* PDF (``core/pdfscan``): pages carry no text
+    """Genuine *image-only* PDF (``encoders/pdf``): pages carry no text
     operators, only an embedded raster of the same word grid — re-extraction
     must go through the OCR tier (has-text detect → image pull → recognize →
     layout) and reproduce the token stream.  The scanned twin of
     :func:`text_to_real_pdf_payload`, paginated identically so both share
     one oracle."""
-    from ..core.pdfscan import build_scanned_pdf
-
     tokens = text.split()
     per_page = words_per_page or max(len(tokens), 1)
     pages = [
@@ -158,8 +160,6 @@ def text_to_pixel_scanned_pdf_payload(text: str,
     to :func:`text_to_scanned_pdf_payload` so all scanned flavors share
     one oracle; page size is computed from the ink extent (the fixed
     612-pt sheet can overflow: 12 max-width corpus words span 630 pt)."""
-    from ..core.pdfscan import build_pixel_scanned_pdf
-
     tokens = text.split()
     per_page = words_per_page or max(len(tokens), 1)
     pages = []
@@ -343,11 +343,9 @@ def text_to_encrypted_pdf_payload(text: str, scheme: str = "rc4-128",
                                   words_per_line: int = WORDS_PER_LINE,
                                   words_per_page: int | None = None) -> bytes:
     """Encrypted twin of :func:`text_to_real_pdf_payload`: the same genuine
-    PDF re-written by ``core/pdfcrypt.encrypt_pdf`` with an empty user
+    PDF re-written by ``encoders/pdf.encrypt_pdf`` with an empty user
     password — re-extraction must transparently decrypt (RC4 V1/V2 or
     AESV2) and reproduce the token stream."""
-    from ..core.pdfcrypt import encrypt_pdf
-
     return encrypt_pdf(
         text_to_real_pdf_payload(text, words_per_line, words_per_page),
         scheme)

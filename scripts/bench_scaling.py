@@ -69,7 +69,7 @@ def materialize_corpus(path: str, sf_dir: str, replicas: int, n_pages: int) -> N
 
     @F.pandas_udf(BinaryType())
     def heavy_payload(text):
-        from pdf_ocr_engine_spark.core.pdfbin import encode_pdf
+        from pdf_ocr_engine_spark.encoders.pdf import encode_pdf
         from pdf_ocr_engine_spark.sources.fixtures import layout_words
 
         def enc(t):
@@ -167,7 +167,7 @@ def skew_experiment(sf_dir: str, cores: int = 8, n_pages: int = 8,
 
     @F.pandas_udf(BinaryType())
     def heavy_payload(text):
-        from pdf_ocr_engine_spark.core.pdfbin import encode_pdf
+        from pdf_ocr_engine_spark.encoders.pdf import encode_pdf
         from pdf_ocr_engine_spark.sources.fixtures import layout_words
 
         def enc(t):

@@ -63,7 +63,7 @@ class TestExecutorAsset:
         extraction UDF: the exception word keeps its hyphen, the plain word
         fuses — per document, inside Spark."""
         from pdf_ocr_engine_spark.core.extract_doc import ExtractOptions
-        from pdf_ocr_engine_spark.core.pdfbin import encode_pdf
+        from pdf_ocr_engine_spark.encoders.pdf import encode_pdf
         from pdf_ocr_engine_spark.operators.extract import extract_pages
         from pdf_ocr_engine_spark.sources import assets
 

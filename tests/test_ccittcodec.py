@@ -8,9 +8,8 @@ from pdf_ocr_engine_spark.core.ccittcodec import (
     CcittError,
     decode_g3,
     decode_g4,
-    encode_g3,
-    encode_g4,
 )
+from pdf_ocr_engine_spark.encoders.bilevel import encode_g3, encode_g4
 from pdf_ocr_engine_spark.core.extract_doc import extract_document
 from pdf_ocr_engine_spark.operators.ocr import deterministic_recognizer
 
@@ -160,7 +159,7 @@ class TestPilInterop:
 class TestPdfIntegration:
     def test_ccitt_scanned_pdf_ocr(self):
         from pdf_ocr_engine_spark.core.extract_doc import extract_document
-        from pdf_ocr_engine_spark.core.pdfscan import build_pixel_scanned_pdf
+        from pdf_ocr_engine_spark.encoders.pdf import build_pixel_scanned_pdf
         from pdf_ocr_engine_spark.operators.ocr import (
             deterministic_recognizer,
         )
@@ -181,7 +180,7 @@ class TestPdfIntegration:
 
     def test_decoded_image_reports_ccitt_filter_and_parms(self):
         from pdf_ocr_engine_spark.core.pdfreal import extract_page_images
-        from pdf_ocr_engine_spark.core.pdfscan import build_pixel_scanned_pdf
+        from pdf_ocr_engine_spark.encoders.pdf import build_pixel_scanned_pdf
 
         pages = [{"width": 100, "height": 40,
                   "words": [("x", 10, 10, 16, 18)]}]
@@ -196,7 +195,7 @@ class TestPdfIntegration:
 
     def test_corrupt_ccitt_raster_is_decode_error(self):
         from pdf_ocr_engine_spark.core.extract_doc import extract_document
-        from pdf_ocr_engine_spark.core.pdfscan import build_pixel_scanned_pdf
+        from pdf_ocr_engine_spark.encoders.pdf import build_pixel_scanned_pdf
         from pdf_ocr_engine_spark.operators.ocr import (
             deterministic_recognizer,
         )

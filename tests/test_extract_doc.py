@@ -12,7 +12,8 @@ from pdf_ocr_engine_spark.core.extract_doc import (
 )
 from pdf_ocr_engine_spark.core.hyphen import repair_hyphenation
 from pdf_ocr_engine_spark.core.html_extract import extract_main_text
-from pdf_ocr_engine_spark.core.pdfbin import decode_pdf, encode_pdf, sniff_kind
+from pdf_ocr_engine_spark.core.pdfbin import decode_pdf, sniff_kind
+from pdf_ocr_engine_spark.encoders.pdf import encode_pdf
 
 
 def page(page_no, words, has_text=False, width=612.0, height=792.0):
@@ -196,7 +197,7 @@ class TestSpans:
             ExtractOptions,
             extract_document,
         )
-        from pdf_ocr_engine_spark.core.pdfbin import encode_pdf
+        from pdf_ocr_engine_spark.encoders.pdf import encode_pdf
 
         # reference table-gap golden, input deliberately unsorted
         words = [("Qty", 180, 10, 220, 22), ("Item", 10, 10, 60, 22),
@@ -211,7 +212,7 @@ class TestSpans:
 
     def test_spans_off_by_default(self):
         from pdf_ocr_engine_spark.core.extract_doc import extract_document
-        from pdf_ocr_engine_spark.core.pdfbin import encode_pdf
+        from pdf_ocr_engine_spark.encoders.pdf import encode_pdf
 
         pdf = encode_pdf([{"page_no": 1, "words": [("x", 0, 0, 5, 9)]}])
         assert "spans" not in extract_document(pdf, "eng")
@@ -223,7 +224,7 @@ class TestTimeBudget:
             ExtractOptions,
             extract_document,
         )
-        from pdf_ocr_engine_spark.core.pdfbin import encode_pdf
+        from pdf_ocr_engine_spark.encoders.pdf import encode_pdf
         from pdf_ocr_engine_spark.sources.fixtures import layout_words
 
         pages = [{"page_no": p + 1,

@@ -18,20 +18,15 @@ import zlib
 import numpy as np
 import pytest
 
-from pdf_ocr_engine_spark.core.gifcodec import (
-    GifError,
-    decode_gif_gray,
-    encode_gif_gray,
-)
+from pdf_ocr_engine_spark.core.gifcodec import GifError, decode_gif_gray
 from pdf_ocr_engine_spark.core.pdfreal import _apply_filter
-from pdf_ocr_engine_spark.core.pngcodec import (
-    PngError,
+from pdf_ocr_engine_spark.core.pngcodec import PngError, decode_png
+from pdf_ocr_engine_spark.encoders.raster import (
     _filter_row,
-    decode_png,
+    encode_gif_gray,
     encode_png,
+    lzw_encode,
 )
-
-from test_pdfreal import _lzw_encode
 
 #: mutants per stream family, and the CPU seconds any one may take
 N_MUTANTS = 500
@@ -97,8 +92,9 @@ _PDF_FAMILIES = {
     "flate": ("FlateDecode", None, zlib.compress(_CONTENT)),
     "flate_predictor": ("FlateDecode", _PRED,
                         zlib.compress(_predicted(_CONTENT))),
-    "lzw": ("LZWDecode", None, _lzw_encode(_CONTENT)),
-    "lzw_predictor": ("LZWDecode", _PRED, _lzw_encode(_predicted(_CONTENT))),
+    "lzw": ("LZWDecode", None, lzw_encode(_CONTENT, 8, True, 1)),
+    "lzw_predictor": ("LZWDecode", _PRED,
+                      lzw_encode(_predicted(_CONTENT), 8, True, 1)),
     "ahx": ("ASCIIHexDecode", None, _CONTENT.hex().encode() + b">"),
     "a85": ("ASCII85Decode", None, base64.a85encode(_CONTENT) + b"~>"),
     "rl": ("RunLengthDecode", None,
@@ -174,9 +170,22 @@ class TestKernels:
     def test_lzw_stops_at_limit(self):
         from pdf_ocr_engine_spark.core.filters import lzw_decode
 
-        data = _lzw_encode(b"ab" * 500)
+        data = lzw_encode(b"ab" * 500, 8, True, 1)
         assert lzw_decode(data, 8, True, 1, 7) == b"abababa"
         assert lzw_decode(data, 8, True, 1, 10 ** 6) == b"ab" * 500
+
+    @pytest.mark.parametrize("mcs, msb_first, early",
+                             [(8, True, 1), (8, True, 0), (8, False, 0),
+                              (2, False, 0)])
+    def test_lzw_encode_round_trips_past_a_full_table(self, mcs, msb_first,
+                                                      early):
+        from pdf_ocr_engine_spark.core.filters import lzw_decode
+
+        rng = random.Random(mcs)
+        for n in (0, 1, 300, 20_000):  # 20,000 bytes pass 4,096 codes
+            data = bytes(rng.randrange(1 << mcs) for _ in range(n))
+            enc = lzw_encode(data, mcs, msb_first, early)
+            assert lzw_decode(enc, mcs, msb_first, early, 10 ** 6) == data
 
     def test_lzw_out_of_range_code_raises(self):
         from pdf_ocr_engine_spark.core.filters import lzw_decode

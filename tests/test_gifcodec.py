@@ -4,11 +4,8 @@ interlace, error paths, and the multimodal pixel tier."""
 import numpy as np
 import pytest
 
-from pdf_ocr_engine_spark.core.gifcodec import (
-    GifError,
-    decode_gif_gray,
-    encode_gif_gray,
-)
+from pdf_ocr_engine_spark.core.gifcodec import GifError, decode_gif_gray
+from pdf_ocr_engine_spark.encoders.raster import encode_gif_gray
 
 
 class TestRoundTrip:
@@ -88,6 +85,28 @@ class TestWireFormat:
         assert out.shape == (4, 6)
         assert out[1, 3] == 10 and out[2, 4] == 40
         assert out[0, 0] == 255  # background fill
+
+    def test_colour_frame_and_background_match_to_gray(self):
+        # colour GCT with a non-white background entry, a 4x3 frame at
+        # (2, 1) with its own local colour table: every screen pixel is
+        # to_gray of its RGB, inside the frame and in the fill around it
+        import struct as s
+
+        from pdf_ocr_engine_spark.core.pngcodec import to_gray
+        from pdf_ocr_engine_spark.encoders.raster import lzw_encode
+
+        rng = np.random.default_rng(12)
+        gct = rng.integers(0, 256, (256, 3), dtype=np.uint8)
+        lct = rng.integers(0, 256, (256, 3), dtype=np.uint8)
+        idx = rng.integers(0, 256, (3, 4), dtype=np.uint8)
+        lzw = lzw_encode(idx.tobytes(), 8, False, 0)
+        gif = (b"GIF89a" + s.pack("<HHBBB", 7, 5, 0x87, 9, 0)
+               + gct.tobytes() + b"\x2C" + s.pack("<HHHHB", 2, 1, 4, 3, 0x87)
+               + lct.tobytes() + bytes([8, len(lzw)]) + lzw + b"\x00\x3B")
+        assert len(lzw) < 256 and to_gray(gct[None, 9:10], 2)[0, 0] < 255
+        rgb = np.broadcast_to(gct[9], (5, 7, 3)).copy()
+        rgb[1:4, 2:6] = lct[idx]
+        assert (decode_gif_gray(gif) == to_gray(rgb, 2)).all()
 
 
 class TestErrors:

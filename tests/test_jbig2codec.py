@@ -12,6 +12,10 @@ from pdf_ocr_engine_spark.core.jbig2codec import (
     Jbig2Error,
     Jbig2Unsupported,
     decode_jbig2_embedded,
+)
+from pdf_ocr_engine_spark.encoders import bilevel
+from pdf_ocr_engine_spark.encoders.bilevel import (
+    _huff_put,
     encode_jbig2_embedded,
 )
 
@@ -25,7 +29,7 @@ class TestMQCoder:
                     < rng.random()).astype(int).tolist()
             cxs = rng.integers(0, n_ctx, len(bits)).tolist()
             idx, mps = [0] * n_ctx, [0] * n_ctx
-            enc = jb._MQEncoder()
+            enc = bilevel._MQEncoder()
             for b, cx in zip(bits, cxs):
                 enc.encode(idx, mps, cx, b)
             data = enc.flush()
@@ -39,7 +43,7 @@ class TestMQCoder:
         # byte-stuffing through BYTEOUT; the decoder must unstuff them
         bits = [1] * 400 + [0, 1] * 100
         idx, mps = [0], [0]
-        enc = jb._MQEncoder()
+        enc = bilevel._MQEncoder()
         for b in bits:
             enc.encode(idx, mps, 0, b)
         data = enc.flush()
@@ -57,7 +61,8 @@ class TestGenericRegion:
             h = int(rng.integers(1, 40))
             w = int(rng.integers(1, 70))
             bm = (rng.random((h, w)) < rng.random()).astype(np.uint8)
-            data = jb._encode_generic(bm, template=template, tpgdon=tpgdon)
+            data = bilevel._encode_generic(bm, template=template,
+                                           tpgdon=tpgdon)
             mq = jb._MQDecoder(data)
             got = jb._decode_generic(mq, w, h, template,
                                      jb._NOMINAL_AT[template], tpgdon)
@@ -71,7 +76,7 @@ class TestGenericRegion:
         # gather — any divergence means a keep-mask / layout bug
         rng = np.random.default_rng(40 + template)
         bm = (rng.random((23, 41)) < 0.4).astype(np.uint8)
-        data = jb._encode_generic(bm, template=template, tpgdon=False)
+        data = bilevel._encode_generic(bm, template=template, tpgdon=False)
         fast = jb._decode_generic(jb._MQDecoder(data), 41, 23, template,
                                   jb._NOMINAL_AT[template], False)
         monkeypatch.setattr(jb, "_at_is_nominal", lambda *_: False)
@@ -83,7 +88,7 @@ class TestGenericRegion:
     def test_tpgdon_blank_page_is_tiny(self):
         # every row identical -> one typical-prediction decision per row
         bm = np.zeros((400, 800), dtype=np.uint8)
-        data = jb._encode_generic(bm, template=0, tpgdon=True)
+        data = bilevel._encode_generic(bm, template=0, tpgdon=True)
         assert len(data) < 32
         got = jb._decode_generic(jb._MQDecoder(data), 800, 400, 0,
                                  jb._NOMINAL_AT[0], True)
@@ -116,13 +121,13 @@ class TestEmbeddedStream:
 
     def test_mmr_generic_region(self):
         # MMR=1 generic region carries T.6 data decoded by ccittcodec
-        from pdf_ocr_engine_spark.core.ccittcodec import encode_g4
+        from pdf_ocr_engine_spark.encoders.bilevel import encode_g4
 
         bm = (np.arange(20)[:, None] + np.arange(50)[None, :]) % 7 < 3
         region = (struct.pack(">IIIIB", 50, 20, 0, 0, 0)
                   + bytes([1])  # MMR=1
                   + encode_g4(bm))
-        blob = jb._segment(1, 39, 1, region)
+        blob = bilevel._segment(1, 39, 1, region)
         gray = decode_jbig2_embedded(blob, width=50, height=20)
         assert (gray == np.where(bm, 0, 255)).all()
 
@@ -141,18 +146,18 @@ class TestEmbeddedStream:
             at = b"".join(struct.pack("bb", dx, dy)
                           for dx, dy in jb._NOMINAL_AT[0])
             return (info + bytes([gflags]) + at
-                    + jb._encode_generic(bm.astype(np.uint8), 0, True))
+                    + bilevel._encode_generic(bm.astype(np.uint8), 0, True))
 
-        blob = (jb._segment(1, 48, 1, page_info)
-                + jb._segment(2, 39, 1, region(a, 0))    # OR
-                + jb._segment(3, 39, 1, region(b, 2))    # XOR
-                + jb._segment(4, 49, 1, b""))
+        blob = (bilevel._segment(1, 48, 1, page_info)
+                + bilevel._segment(2, 39, 1, region(a, 0))    # OR
+                + bilevel._segment(3, 39, 1, region(b, 2))    # XOR
+                + bilevel._segment(4, 49, 1, b""))
         gray = decode_jbig2_embedded(blob)
         assert (gray == np.where(a ^ b, 0, 255)).all()
 
     def test_truncated_symbol_dictionary_is_error(self):
         # bare flags with no AT pixels / counts behind them
-        blob = jb._segment(1, 0, 1, b"\x00\x00")
+        blob = bilevel._segment(1, 0, 1, b"\x00\x00")
         with pytest.raises(Jbig2Error):
             decode_jbig2_embedded(blob, width=8, height=8)
 
@@ -175,7 +180,7 @@ class TestEmbeddedStream:
 class TestPdfIntegration:
     def test_jbig2_scanned_pdf_ocr_matches_flate(self):
         from pdf_ocr_engine_spark.core.extract_doc import extract_document
-        from pdf_ocr_engine_spark.core.pdfscan import build_pixel_scanned_pdf
+        from pdf_ocr_engine_spark.encoders.pdf import build_pixel_scanned_pdf
         from pdf_ocr_engine_spark.operators.ocr import (
             deterministic_recognizer,
         )
@@ -196,7 +201,7 @@ class TestPdfIntegration:
 
     def test_decoded_image_reports_jbig2_filter(self):
         from pdf_ocr_engine_spark.core.pdfreal import extract_page_images
-        from pdf_ocr_engine_spark.core.pdfscan import build_pixel_scanned_pdf
+        from pdf_ocr_engine_spark.encoders.pdf import build_pixel_scanned_pdf
 
         pages = [{"width": 100, "height": 40,
                   "words": [("x", 10, 10, 16, 18)]}]
@@ -216,7 +221,7 @@ class TestPdfIntegration:
             deterministic_recognizer,
         )
 
-        from pdf_ocr_engine_spark.core.rasterfont import render_words_gray
+        from pdf_ocr_engine_spark.encoders.raster import render_words_gray
 
         samples = render_words_gray(60, 20, [("hi", 10, 5, 22, 13)])
         bm = np.frombuffer(samples, dtype=np.uint8).reshape(20, 60) < 128
@@ -271,7 +276,7 @@ class TestPdfIntegration:
 
     def test_corrupt_jbig2_raster_is_decode_error(self):
         from pdf_ocr_engine_spark.core.extract_doc import extract_document
-        from pdf_ocr_engine_spark.core.pdfscan import build_pixel_scanned_pdf
+        from pdf_ocr_engine_spark.encoders.pdf import build_pixel_scanned_pdf
         from pdf_ocr_engine_spark.operators.ocr import (
             deterministic_recognizer,
         )
@@ -295,10 +300,10 @@ class TestArithInteger:
         values = [0, 1, 3, 4, 19, 20, 83, 84, 339, 340, 4435, 4436,
                   100000, 2**31 - 1, -1, -3, -4, -20, -84, -340, -4436,
                   -99999, None, 7, None, 0]
-        enc = jb._MQEncoder()
+        enc = bilevel._MQEncoder()
         ctx = jb._int_ctx()
         for v in values:
-            jb._int_encode(enc, *ctx, v)
+            bilevel._int_encode(enc, *ctx, v)
         data = enc.flush()
         mq = jb._MQDecoder(data)
         ctx = jb._int_ctx()
@@ -307,10 +312,10 @@ class TestArithInteger:
     def test_random_values_round_trip(self):
         rng = np.random.default_rng(21)
         values = [int(v) for v in rng.integers(-10000, 10000, 500)]
-        enc = jb._MQEncoder()
+        enc = bilevel._MQEncoder()
         ctx = jb._int_ctx()
         for v in values:
-            jb._int_encode(enc, *ctx, v)
+            bilevel._int_encode(enc, *ctx, v)
         mq = jb._MQDecoder(enc.flush())
         ctx = jb._int_ctx()
         assert [jb._int_decode(mq, *ctx) for _ in values] == values
@@ -319,17 +324,17 @@ class TestArithInteger:
     def test_iaid_round_trip(self, scl):
         rng = np.random.default_rng(scl)
         ids = [int(v) for v in rng.integers(0, 1 << scl, 200)]
-        enc = jb._MQEncoder()
+        enc = bilevel._MQEncoder()
         ctx = jb._iaid_ctx(scl)
         for v in ids:
-            jb._iaid_encode(enc, *ctx, v, scl)
+            bilevel._iaid_encode(enc, *ctx, v, scl)
         mq = jb._MQDecoder(enc.flush())
         ctx = jb._iaid_ctx(scl)
         assert [jb._iaid_decode(mq, *ctx, scl) for _ in ids] == ids
 
 
 def _glyph_page(words, w=200, h=40):
-    from pdf_ocr_engine_spark.core.rasterfont import render_words_gray
+    from pdf_ocr_engine_spark.encoders.raster import render_words_gray
 
     samples = render_words_gray(w, h, words)
     return np.frombuffer(samples, dtype=np.uint8).reshape(h, w) < 128
@@ -342,24 +347,24 @@ class TestSymbolText:
     @pytest.mark.parametrize("refcorner", [0, 1, 2, 3])
     def test_round_trip_all_refcorners(self, refcorner):
         bm = _glyph_page(self.WORDS)
-        blob = jb.encode_jbig2_symbol_embedded(bm, refcorner=refcorner)
+        blob = bilevel.encode_jbig2_symbol_embedded(bm, refcorner=refcorner)
         assert (decode_jbig2_embedded(blob) == np.where(bm, 0, 255)).all()
 
     @pytest.mark.parametrize("sbstrips", [2, 4, 8])
     def test_round_trip_strips_exercise_iait(self, sbstrips):
         bm = _glyph_page(self.WORDS)
-        blob = jb.encode_jbig2_symbol_embedded(bm, sbstrips=sbstrips)
+        blob = bilevel.encode_jbig2_symbol_embedded(bm, sbstrips=sbstrips)
         assert (decode_jbig2_embedded(blob) == np.where(bm, 0, 255)).all()
 
     def test_arbitrary_bitmap_is_lossless(self):
         rng = np.random.default_rng(3)
         bm = rng.random((30, 50)) < 0.25
-        blob = jb.encode_jbig2_symbol_embedded(bm)
+        blob = bilevel.encode_jbig2_symbol_embedded(bm)
         assert (decode_jbig2_embedded(blob) == np.where(bm, 0, 255)).all()
 
     def test_empty_page(self):
         gray = decode_jbig2_embedded(
-            jb.encode_jbig2_symbol_embedded(np.zeros((8, 9), bool)))
+            bilevel.encode_jbig2_symbol_embedded(np.zeros((8, 9), bool)))
         assert gray.shape == (8, 9) and (gray == 255).all()
 
     def test_dictionary_dedup_pays(self):
@@ -375,11 +380,11 @@ class TestSymbolText:
             gi = rng.random((14, 10)) < 0.5
             gi[0, 0] = True
             distinct[4:18, i * 14:i * 14 + 10] = gi
-        n_same = len(jb.encode_jbig2_symbol_embedded(same))
-        n_distinct = len(jb.encode_jbig2_symbol_embedded(distinct))
+        n_same = len(bilevel.encode_jbig2_symbol_embedded(same))
+        n_distinct = len(bilevel.encode_jbig2_symbol_embedded(distinct))
         assert n_same < n_distinct * 0.6
         for bm in (same, distinct):
-            blob = jb.encode_jbig2_symbol_embedded(bm)
+            blob = bilevel.encode_jbig2_symbol_embedded(bm)
             assert (decode_jbig2_embedded(blob)
                     == np.where(bm, 0, 255)).all()
 
@@ -387,24 +392,24 @@ class TestSymbolText:
         # hand-author a TRANSPOSED=1 TOPLEFT region: S runs down rows,
         # T across columns; two instances of one 3x2 symbol
         sym = np.array([[1, 1], [1, 0], [1, 1]], dtype=np.uint8)
-        enc = jb._MQEncoder()
+        enc = bilevel._MQEncoder()
         iadt, iafs, iads = (jb._int_ctx() for _ in range(3))
-        jb._int_encode(enc, *iadt, 0)        # STRIPT = 0
+        bilevel._int_encode(enc, *iadt, 0)        # STRIPT = 0
         # strip at T=4 (x): first S (y) = 2, second S, then OOB
-        jb._int_encode(enc, *iadt, 4)
-        jb._int_encode(enc, *iafs, 2)        # FIRSTS=2, draw at y=2
+        bilevel._int_encode(enc, *iadt, 4)
+        bilevel._int_encode(enc, *iafs, 2)        # FIRSTS=2, draw at y=2
         # after draw curs = 2 + 3 - 1 = 4; next at y=10: IDS = 6
-        jb._int_encode(enc, *iads, 6)
-        jb._int_encode(enc, *iads, None)
+        bilevel._int_encode(enc, *iads, 6)
+        bilevel._int_encode(enc, *iads, None)
         region = (struct.pack(">IIIIB", 8, 16, 0, 0, 0)
                   + struct.pack(">H", (1 << 4) | (1 << 6))  # TL, TRANSPOSED
                   + struct.pack(">I", 2) + enc.flush())
-        blob = (jb._segment(1, 48, 1,
-                            struct.pack(">IIII", 8, 16, 0, 0)
-                            + b"\x01\x00\x00")
-                + jb._segment(2, 0, 1, jb._encode_symbol_dict([sym]))
-                + jb._segment(3, 7, 1, region, refs=(2,))
-                + jb._segment(4, 49, 1, b""))
+        blob = (bilevel._segment(1, 48, 1,
+                                 struct.pack(">IIII", 8, 16, 0, 0)
+                                 + b"\x01\x00\x00")
+                + bilevel._segment(2, 0, 1, bilevel._encode_symbol_dict([sym]))
+                + bilevel._segment(3, 7, 1, region, refs=(2,))
+                + bilevel._segment(4, 49, 1, b""))
         gray = decode_jbig2_embedded(blob)
         expect = np.zeros((16, 8), dtype=bool)
         expect[2:5, 4:6] = sym.astype(bool)
@@ -416,14 +421,14 @@ class TestSymbolText:
         # with a referred type-53 table segment; without one the stream
         # is malformed and must reject loudly
         seg = struct.pack(">H", 1 | (3 << 2)) + b"\x00" * 16
-        blob = jb._segment(1, 0, 1, seg)
+        blob = bilevel._segment(1, 0, 1, seg)
         with pytest.raises(Jbig2Error):
             decode_jbig2_embedded(blob, width=8, height=8)
 
     def test_truncated_refagg_dict_is_error(self):
         # SDREFAGG=1 needs AT + refinement-AT + counts behind the flags
         seg = struct.pack(">H", 2) + b"\x00" * 16
-        blob = jb._segment(1, 0, 1, seg)
+        blob = bilevel._segment(1, 0, 1, seg)
         with pytest.raises(Jbig2Error):
             decode_jbig2_embedded(blob, width=8, height=8)
 
@@ -431,7 +436,7 @@ class TestSymbolText:
         # SBREFINE=1 without the refinement-AT pixels behind the flags
         region = (struct.pack(">IIIIB", 8, 8, 0, 0, 0)
                   + struct.pack(">H", 2) + struct.pack(">I", 0))
-        blob = jb._segment(1, 7, 1, region)
+        blob = bilevel._segment(1, 7, 1, region)
         with pytest.raises(Jbig2Error):
             decode_jbig2_embedded(blob, width=8, height=8)
 
@@ -439,13 +444,13 @@ class TestSymbolText:
         region = (struct.pack(">IIIIB", 8, 8, 0, 0, 0)
                   + struct.pack(">H", 1 << 4) + struct.pack(">I", 1)
                   + b"\x00" * 8)
-        blob = jb._segment(1, 7, 1, region)
+        blob = bilevel._segment(1, 7, 1, region)
         with pytest.raises(Jbig2Error):
             decode_jbig2_embedded(blob, width=8, height=8)
 
     def test_jbig2sym_scanned_pdf_ocr_matches_flate(self):
         from pdf_ocr_engine_spark.core.extract_doc import extract_document
-        from pdf_ocr_engine_spark.core.pdfscan import build_pixel_scanned_pdf
+        from pdf_ocr_engine_spark.encoders.pdf import build_pixel_scanned_pdf
         from pdf_ocr_engine_spark.operators.ocr import (
             deterministic_recognizer,
         )
@@ -474,9 +479,9 @@ class TestRefinement:
             h, w = int(rng.integers(3, 25)), int(rng.integers(3, 30))
             ref = (rng.random((h, w)) < 0.4).astype(np.uint8)
             tgt = ref ^ ((rng.random((h, w)) < 0.1).astype(np.uint8))
-            enc = jb._MQEncoder()
-            jb._encode_refinement(enc, tgt, template, ref, 1, -1,
-                                  tpgron=tpgron)
+            enc = bilevel._MQEncoder()
+            bilevel._encode_refinement(enc, tgt, template, ref, 1, -1,
+                                       tpgron=tpgron)
             mq = jb._MQDecoder(enc.flush())
             got = jb._decode_refinement(mq, w, h, template, ref, 1, -1,
                                         tpgron=tpgron)
@@ -489,10 +494,10 @@ class TestRefinement:
         ref = (rng.random((40, 80)) < 0.35).astype(np.uint8)
         tgt = ref.copy()
         tgt[17, 23] ^= 1  # one flipped pixel
-        enc = jb._MQEncoder()
-        jb._encode_refinement(enc, tgt, 0, ref, 0, 0)
+        enc = bilevel._MQEncoder()
+        bilevel._encode_refinement(enc, tgt, 0, ref, 0, 0)
         refined = len(enc.flush())
-        fresh = len(jb._encode_generic(tgt, template=0, tpgdon=False))
+        fresh = len(bilevel._encode_generic(tgt, template=0, tpgdon=False))
         assert refined < fresh * 0.5
 
     def test_sdrefagg_dictionary_refines_referred_symbols(self):
@@ -503,19 +508,19 @@ class TestRefinement:
             s[0, 0] = 1
         symB = [s ^ (rng.random(s.shape) < 0.15).astype(np.uint8)
                 for s in symA]
-        segA = jb._encode_symbol_dict(symA)
-        segB = jb._encode_symbol_dict(symB, refine_from=[0, 1, 2],
-                                      input_syms=symA)
+        segA = bilevel._encode_symbol_dict(symA)
+        segB = bilevel._encode_symbol_dict(symB, refine_from=[0, 1, 2],
+                                           input_syms=symA)
         # dict B re-exports A's symbols then its own refinements
         insts = [(2 + 8 * i, 2, len(symA) + i) for i in range(3)]
-        segT = jb._encode_text_region(insts, symA + symB, 30, 10)
-        blob = (jb._segment(1, 48, 1,
-                            struct.pack(">IIII", 30, 10, 0, 0)
-                            + b"\x01\x00\x00")
-                + jb._segment(2, 0, 1, segA)
-                + jb._segment(3, 0, 1, segB, refs=(2,))
-                + jb._segment(4, 7, 1, segT, refs=(3,))
-                + jb._segment(5, 49, 1, b""))
+        segT = bilevel._encode_text_region(insts, symA + symB, 30, 10)
+        blob = (bilevel._segment(1, 48, 1,
+                                 struct.pack(">IIII", 30, 10, 0, 0)
+                                 + b"\x01\x00\x00")
+                + bilevel._segment(2, 0, 1, segA)
+                + bilevel._segment(3, 0, 1, segB, refs=(2,))
+                + bilevel._segment(4, 7, 1, segT, refs=(3,))
+                + bilevel._segment(5, 49, 1, b""))
         gray = decode_jbig2_embedded(blob)
         expect = np.zeros((10, 30), dtype=np.uint8)
         for i in range(3):
@@ -528,14 +533,14 @@ class TestRefinement:
         sym[0, 0] = 1
         tgt = np.pad(sym, ((0, 1), (1, 0)))  # refined dims differ too
         tgt ^= (rng.random(tgt.shape) < 0.2).astype(np.uint8)
-        segT = jb._encode_text_region([(3, 2, 0, tgt), (15, 2, 0)],
-                                      [sym], 30, 12)
-        blob = (jb._segment(1, 48, 1,
-                            struct.pack(">IIII", 30, 12, 0, 0)
-                            + b"\x01\x00\x00")
-                + jb._segment(2, 0, 1, jb._encode_symbol_dict([sym]))
-                + jb._segment(3, 7, 1, segT, refs=(2,))
-                + jb._segment(4, 49, 1, b""))
+        segT = bilevel._encode_text_region([(3, 2, 0, tgt), (15, 2, 0)],
+                                           [sym], 30, 12)
+        blob = (bilevel._segment(1, 48, 1,
+                                 struct.pack(">IIII", 30, 12, 0, 0)
+                                 + b"\x01\x00\x00")
+                + bilevel._segment(2, 0, 1, bilevel._encode_symbol_dict([sym]))
+                + bilevel._segment(3, 7, 1, segT, refs=(2,))
+                + bilevel._segment(4, 49, 1, b""))
         gray = decode_jbig2_embedded(blob)
         expect = np.zeros((12, 30), dtype=np.uint8)
         expect[2:2 + tgt.shape[0], 3:3 + tgt.shape[1]] |= tgt
@@ -546,14 +551,14 @@ class TestRefinement:
         """Hand-encode a REFAGG dictionary whose one NEW symbol is a
         two-instance aggregate of ``base`` on a 3x8 canvas (§6.5.8.2.2:
         text-region walk, SBSTRIPS=1, TL corner, shared IAID)."""
-        enc = jb._MQEncoder()
+        enc = bilevel._MQEncoder()
         iadh, iadw, iaai, iaex = (jb._int_ctx() for _ in range(4))
         iadt, iafs, iads, iari = (jb._int_ctx() for _ in range(4))
         scl = jb._symcodelen(2)          # one input + one new symbol
         iaid = jb._iaid_ctx(scl)
-        jb._int_encode(enc, *iadh, 3)    # height class 3
-        jb._int_encode(enc, *iadw, 8)    # aggregate canvas width 8
-        jb._int_encode(enc, *iaai, 2)    # TWO instances
+        bilevel._int_encode(enc, *iadh, 3)    # height class 3
+        bilevel._int_encode(enc, *iadw, 8)    # aggregate canvas width 8
+        bilevel._int_encode(enc, *iaai, 2)    # TWO instances
         if truncate:
             return (struct.pack(">H", 2)
                     + b"".join(struct.pack("bb", dx, dy)
@@ -561,18 +566,18 @@ class TestRefinement:
                     + b"".join(struct.pack("bb", dx, dy)
                                for dx, dy in jb._REF_NOMINAL_AT)
                     + struct.pack(">II", 1, 1) + enc.flush())
-        jb._int_encode(enc, *iadt, 0)    # STRIPT init
-        jb._int_encode(enc, *iadt, 0)    # strip at T=0
-        jb._int_encode(enc, *iafs, 0)    # FIRSTS = 0
-        jb._iaid_encode(enc, *iaid, 0, scl)   # instance 1: base at x=0
-        jb._int_encode(enc, *iari, 0)    # no per-instance refinement
+        bilevel._int_encode(enc, *iadt, 0)    # STRIPT init
+        bilevel._int_encode(enc, *iadt, 0)    # strip at T=0
+        bilevel._int_encode(enc, *iafs, 0)    # FIRSTS = 0
+        bilevel._iaid_encode(enc, *iaid, 0, scl)   # instance 1: base at x=0
+        bilevel._int_encode(enc, *iari, 0)    # no per-instance refinement
         # CURS after TL draw = 0 + 3 - 1 = 2; next instance at x=5
-        jb._int_encode(enc, *iads, 3)
-        jb._iaid_encode(enc, *iaid, 0, scl)   # instance 2: base at x=5
-        jb._int_encode(enc, *iari, 0)
-        jb._int_encode(enc, *iadw, None)      # OOB: end of height class
-        jb._int_encode(enc, *iaex, 1)    # skip the input symbol,
-        jb._int_encode(enc, *iaex, 1)    # export the aggregate
+        bilevel._int_encode(enc, *iads, 3)
+        bilevel._iaid_encode(enc, *iaid, 0, scl)   # instance 2: base at x=5
+        bilevel._int_encode(enc, *iari, 0)
+        bilevel._int_encode(enc, *iadw, None)      # OOB: end of height class
+        bilevel._int_encode(enc, *iaex, 1)    # skip the input symbol,
+        bilevel._int_encode(enc, *iaex, 1)    # export the aggregate
         return (struct.pack(">H", 2)     # SDHUFF=0 REFAGG=1 template 0
                 + b"".join(struct.pack("bb", dx, dy)
                            for dx, dy in jb._NOMINAL_AT[0])
@@ -593,16 +598,17 @@ class TestRefinement:
     def test_multi_instance_aggregate_e2e(self):
         base = np.array([[1, 1, 1], [1, 0, 1], [1, 1, 1]], np.uint8)
         dict_seg = self._aggregate_dict_seg(base)
-        segT = jb._encode_text_region([(2, 1, 0)], [np.zeros((3, 8),
-                                                             np.uint8)],
-                                      14, 6)
-        blob = (jb._segment(1, 48, 1,
-                            struct.pack(">IIII", 14, 6, 0, 0)
-                            + b"\x01\x00\x00")
-                + jb._segment(2, 0, 1, jb._encode_symbol_dict([base]))
-                + jb._segment(3, 0, 1, dict_seg, refs=(2,))
-                + jb._segment(4, 7, 1, segT, refs=(3,))
-                + jb._segment(5, 49, 1, b""))
+        segT = bilevel._encode_text_region([(2, 1, 0)], [np.zeros((3, 8),
+                                                                  np.uint8)],
+                                           14, 6)
+        blob = (bilevel._segment(1, 48, 1,
+                                 struct.pack(">IIII", 14, 6, 0, 0)
+                                 + b"\x01\x00\x00")
+                + bilevel._segment(2, 0, 1,
+                                   bilevel._encode_symbol_dict([base]))
+                + bilevel._segment(3, 0, 1, dict_seg, refs=(2,))
+                + bilevel._segment(4, 7, 1, segT, refs=(3,))
+                + bilevel._segment(5, 49, 1, b""))
         gray = decode_jbig2_embedded(blob)
         want = np.zeros((6, 14), np.uint8)
         want[1:4, 2:5] |= base
@@ -616,45 +622,45 @@ class TestRefinement:
         base = np.array([[1, 0, 1], [0, 1, 0], [1, 0, 1]], np.uint8)
         target = np.array([[1, 1, 0, 1], [0, 1, 1, 0], [1, 0, 1, 1]],
                           np.uint8)
-        enc = jb._MQEncoder()
+        enc = bilevel._MQEncoder()
         iadh, iadw, iaai, iaex = (jb._int_ctx() for _ in range(4))
         iadt, iafs, iads, iari = (jb._int_ctx() for _ in range(4))
         iardw, iardh, iardx, iardy = (jb._int_ctx() for _ in range(4))
         gr = jb._ref_ctx()
         scl = jb._symcodelen(3)          # one input + two new
         iaid = jb._iaid_ctx(scl)
-        jb._int_encode(enc, *iadh, 3)    # height class 3
+        bilevel._int_encode(enc, *iadh, 3)    # height class 3
         # aggregate 1: width 8, two unrefined placements of base
-        jb._int_encode(enc, *iadw, 8)
-        jb._int_encode(enc, *iaai, 2)
-        jb._int_encode(enc, *iadt, 0)
-        jb._int_encode(enc, *iadt, 0)
-        jb._int_encode(enc, *iafs, 0)
-        jb._iaid_encode(enc, *iaid, 0, scl)
-        jb._int_encode(enc, *iari, 0)
-        jb._int_encode(enc, *iads, 3)    # CURS 2 -> 5
-        jb._iaid_encode(enc, *iaid, 0, scl)
-        jb._int_encode(enc, *iari, 0)
+        bilevel._int_encode(enc, *iadw, 8)
+        bilevel._int_encode(enc, *iaai, 2)
+        bilevel._int_encode(enc, *iadt, 0)
+        bilevel._int_encode(enc, *iadt, 0)
+        bilevel._int_encode(enc, *iafs, 0)
+        bilevel._iaid_encode(enc, *iaid, 0, scl)
+        bilevel._int_encode(enc, *iari, 0)
+        bilevel._int_encode(enc, *iads, 3)    # CURS 2 -> 5
+        bilevel._iaid_encode(enc, *iaid, 0, scl)
+        bilevel._int_encode(enc, *iari, 0)
         # aggregate 2 (same class, width 9): persistent contexts; the
         # second instance is REFINED (target = 3x4 variant of base)
-        jb._int_encode(enc, *iadw, 1)    # width 8 -> 9
-        jb._int_encode(enc, *iaai, 2)
-        jb._int_encode(enc, *iadt, 0)
-        jb._int_encode(enc, *iadt, 0)
-        jb._int_encode(enc, *iafs, 0)
-        jb._iaid_encode(enc, *iaid, 0, scl)
-        jb._int_encode(enc, *iari, 0)
-        jb._int_encode(enc, *iads, 3)    # CURS 2 -> 5
-        jb._iaid_encode(enc, *iaid, 0, scl)
-        jb._int_encode(enc, *iari, 1)
-        jb._int_encode(enc, *iardw, 1)   # 3 -> 4 wide
-        jb._int_encode(enc, *iardh, 0)
-        jb._int_encode(enc, *iardx, 0)
-        jb._int_encode(enc, *iardy, 0)
-        jb._encode_refinement(enc, target, 0, base, 0, 0, contexts=gr)
-        jb._int_encode(enc, *iadw, None)      # end of height class
-        jb._int_encode(enc, *iaex, 1)    # skip the input symbol,
-        jb._int_encode(enc, *iaex, 2)    # export both aggregates
+        bilevel._int_encode(enc, *iadw, 1)    # width 8 -> 9
+        bilevel._int_encode(enc, *iaai, 2)
+        bilevel._int_encode(enc, *iadt, 0)
+        bilevel._int_encode(enc, *iadt, 0)
+        bilevel._int_encode(enc, *iafs, 0)
+        bilevel._iaid_encode(enc, *iaid, 0, scl)
+        bilevel._int_encode(enc, *iari, 0)
+        bilevel._int_encode(enc, *iads, 3)    # CURS 2 -> 5
+        bilevel._iaid_encode(enc, *iaid, 0, scl)
+        bilevel._int_encode(enc, *iari, 1)
+        bilevel._int_encode(enc, *iardw, 1)   # 3 -> 4 wide
+        bilevel._int_encode(enc, *iardh, 0)
+        bilevel._int_encode(enc, *iardx, 0)
+        bilevel._int_encode(enc, *iardy, 0)
+        bilevel._encode_refinement(enc, target, 0, base, 0, 0, contexts=gr)
+        bilevel._int_encode(enc, *iadw, None)      # end of height class
+        bilevel._int_encode(enc, *iaex, 1)    # skip the input symbol,
+        bilevel._int_encode(enc, *iaex, 2)    # export both aggregates
         seg = (struct.pack(">H", 2)
                + b"".join(struct.pack("bb", dx, dy)
                           for dx, dy in jb._NOMINAL_AT[0])
@@ -677,10 +683,10 @@ class TestRefinement:
         # tail must surface as a data error, never hang or mis-decode
         base = np.ones((3, 3), np.uint8)
         seg = self._aggregate_dict_seg(base, truncate=True)
-        blob = (jb._segment(1, 0, 1, seg)
-                + jb._segment(2, 48, 1,
-                              struct.pack(">IIII", 8, 8, 0, 0)
-                              + b"\x01\x00\x00"))
+        blob = (bilevel._segment(1, 0, 1, seg)
+                + bilevel._segment(2, 48, 1,
+                                   struct.pack(">IIII", 8, 8, 0, 0)
+                                   + b"\x01\x00\x00"))
         with pytest.raises(Jbig2Error):
             decode_jbig2_embedded(blob)
 
@@ -692,7 +698,7 @@ class TestHardening:
     def test_huge_page_info_rejected_before_allocation(self):
         page_info = (struct.pack(">IIII", 0x40000000, 0x40000000, 0, 0)
                      + b"\x01\x00\x00")
-        blob = jb._segment(1, 48, 1, page_info)
+        blob = bilevel._segment(1, 48, 1, page_info)
         with pytest.raises(Jbig2Error):
             decode_jbig2_embedded(blob)
 
@@ -702,8 +708,8 @@ class TestHardening:
                   + bytes([(0 << 1) | (1 << 3)])
                   + b"".join(struct.pack("bb", dx, dy)
                              for dx, dy in jb._NOMINAL_AT[0])
-                  + jb._encode_generic(bm, 0, True))
-        blob = jb._segment(1, 39, 1, region)
+                  + bilevel._encode_generic(bm, 0, True))
+        blob = bilevel._segment(1, 39, 1, region)
         with pytest.raises(Jbig2Error):
             decode_jbig2_embedded(blob)
 
@@ -711,7 +717,7 @@ class TestHardening:
         # a stream-supplied AT pixel pointing BELOW the current row must
         # read as 0 (causal bound), not crash on the last row
         bm = (np.arange(64).reshape(8, 8) % 3 == 0).astype(np.uint8)
-        data = jb._encode_generic(bm, template=0, tpgdon=False)
+        data = bilevel._encode_generic(bm, template=0, tpgdon=False)
         got = jb._decode_generic(jb._MQDecoder(data), 8, 8, 0,
                                  ((-1, 1), (-3, -1), (2, -2), (-2, -2)),
                                  False)
@@ -719,8 +725,8 @@ class TestHardening:
 
     def test_positive_dy_refinement_at_is_safe(self):
         ref = np.ones((6, 6), dtype=np.uint8)
-        enc = jb._MQEncoder()
-        jb._encode_refinement(enc, ref, 0, ref, 0, 0)
+        enc = bilevel._MQEncoder()
+        bilevel._encode_refinement(enc, ref, 0, ref, 0, 0)
         mq = jb._MQDecoder(enc.flush())
         got = jb._decode_refinement(mq, 6, 6, 0, ref, 0, 0,
                                     at=((1, 1), (-1, -1)))
@@ -739,15 +745,15 @@ class TestHardening:
     def test_zero_export_runs_terminate(self):
         # a valid dictionary body whose export runs are stuck at 0
         sym = np.ones((2, 2), dtype=np.uint8)
-        enc = jb._MQEncoder()
+        enc = bilevel._MQEncoder()
         iadh, iadw, iaex = (jb._int_ctx() for _ in range(3))
         gb = jb._fresh_contexts(0)
-        jb._int_encode(enc, *iadh, 2)
-        jb._int_encode(enc, *iadw, 2)
-        jb._encode_generic(sym, 0, False, enc=enc, contexts=gb)
-        jb._int_encode(enc, *iadw, None)
+        bilevel._int_encode(enc, *iadh, 2)
+        bilevel._int_encode(enc, *iadw, 2)
+        bilevel._encode_generic(sym, 0, False, enc=enc, contexts=gb)
+        bilevel._int_encode(enc, *iadw, None)
         for _ in range(8):
-            jb._int_encode(enc, *iaex, 0)  # never advances
+            bilevel._int_encode(enc, *iaex, 0)  # never advances
         seg = (struct.pack(">H", 0)
                + b"".join(struct.pack("bb", dx, dy)
                           for dx, dy in jb._NOMINAL_AT[0])
@@ -756,10 +762,10 @@ class TestHardening:
             jb._decode_symbol_dict(seg, [])
 
     def test_oversized_symbol_rejected_by_pixel_budget(self):
-        enc = jb._MQEncoder()
+        enc = bilevel._MQEncoder()
         iadh, iadw = jb._int_ctx(), jb._int_ctx()
-        jb._int_encode(enc, *iadh, 16000)
-        jb._int_encode(enc, *iadw, 16000)   # 256M px symbol
+        bilevel._int_encode(enc, *iadh, 16000)
+        bilevel._int_encode(enc, *iadw, 16000)   # 256M px symbol
         seg = (struct.pack(">H", 0)
                + b"".join(struct.pack("bb", dx, dy)
                           for dx, dy in jb._NOMINAL_AT[0])
@@ -770,13 +776,13 @@ class TestHardening:
     def test_exttemplate_is_unsupported(self):
         region = (struct.pack(">IIIIB", 8, 8, 0, 0, 0)
                   + bytes([0x10]) + b"\x00" * 24)
-        blob = jb._segment(1, 39, 1, region)
+        blob = bilevel._segment(1, 39, 1, region)
         with pytest.raises(Jbig2Unsupported):
             decode_jbig2_embedded(blob)
 
     def test_imported_contexts_are_unsupported(self):
         seg = struct.pack(">H", 1 << 8) + b"\x00" * 20
-        blob = jb._segment(1, 0, 1, seg)
+        blob = bilevel._segment(1, 0, 1, seg)
         with pytest.raises(Jbig2Unsupported):
             decode_jbig2_embedded(blob, width=8, height=8)
 
@@ -790,7 +796,7 @@ class TestHalftone:
     def test_round_trip(self):
         rng = np.random.default_rng(4)
         gray = rng.integers(0, 4, (9, 13))
-        blob = jb.encode_jbig2_halftone_embedded(gray, self.PATTERNS)
+        blob = bilevel.encode_jbig2_halftone_embedded(gray, self.PATTERNS)
         out = decode_jbig2_embedded(blob)
         expect = np.zeros((36, 52), np.uint8)
         for m in range(9):
@@ -800,13 +806,13 @@ class TestHalftone:
         assert (out == np.where(expect, 0, 255)).all()
 
     def test_single_pattern_needs_zero_planes(self):
-        blob = jb.encode_jbig2_halftone_embedded(
+        blob = bilevel.encode_jbig2_halftone_embedded(
             np.zeros((3, 3), np.int64), [np.ones((4, 4), np.uint8)])
         out = decode_jbig2_embedded(blob)
         assert out.shape == (12, 12) and (out == 0).all()
 
     def test_mmr_pattern_dictionary(self):
-        from pdf_ocr_engine_spark.core.ccittcodec import encode_g4
+        from pdf_ocr_engine_spark.encoders.bilevel import encode_g4
 
         collective = np.concatenate(self.PATTERNS, axis=1)
         seg = (bytes([1, 4, 4]) + struct.pack(">I", 3)
@@ -818,7 +824,7 @@ class TestHalftone:
 
     def test_gray_value_beyond_patterns_is_error(self):
         # 3 patterns need 2 bitplanes; a grid value of 3 has no pattern
-        blob = jb.encode_jbig2_halftone_embedded(
+        blob = bilevel.encode_jbig2_halftone_embedded(
             np.full((2, 2), 3, np.int64), self.PATTERNS[:3])
         with pytest.raises(Jbig2Error):
             decode_jbig2_embedded(blob)
@@ -829,8 +835,8 @@ class TestHalftone:
         # pdf.js also decodes
         rng = np.random.default_rng(14)
         gray = rng.integers(0, 4, (7, 11))
-        blob = jb.encode_jbig2_halftone_embedded(gray, self.PATTERNS,
-                                                 mmr=True)
+        blob = bilevel.encode_jbig2_halftone_embedded(gray, self.PATTERNS,
+                                                      mmr=True)
         out = decode_jbig2_embedded(blob)
         expect = np.zeros((28, 44), np.uint8)
         for m in range(7):
@@ -843,10 +849,10 @@ class TestHalftone:
         rng = np.random.default_rng(15)
         gray = rng.integers(0, 4, (5, 9))
         a = decode_jbig2_embedded(
-            jb.encode_jbig2_halftone_embedded(gray, self.PATTERNS))
+            bilevel.encode_jbig2_halftone_embedded(gray, self.PATTERNS))
         b = decode_jbig2_embedded(
-            jb.encode_jbig2_halftone_embedded(gray, self.PATTERNS,
-                                              mmr=True))
+            bilevel.encode_jbig2_halftone_embedded(gray, self.PATTERNS,
+                                                   mmr=True))
         assert np.array_equal(a, b)
 
     def test_truncated_mmr_gray_planes_is_error(self):
@@ -854,31 +860,31 @@ class TestHalftone:
         # from the MMR plane decoder, not the segment-header parser
         rng = np.random.default_rng(16)
         gray = rng.integers(0, 4, (6, 8))
-        region = jb._encode_halftone_region(gray, self.PATTERNS,
-                                            32, 24, mmr=True)
-        blob = (jb._segment(1, 48, 1,
-                            struct.pack(">IIII", 32, 24, 0, 0)
-                            + b"\x01\x00\x00")
-                + jb._segment(2, 16, 1,
-                              jb._encode_pattern_dict(self.PATTERNS))
-                + jb._segment(3, 23, 1, region[:-8], refs=(2,))
-                + jb._segment(4, 49, 1, b""))
+        region = bilevel._encode_halftone_region(gray, self.PATTERNS,
+                                                 32, 24, mmr=True)
+        blob = (bilevel._segment(1, 48, 1,
+                                 struct.pack(">IIII", 32, 24, 0, 0)
+                                 + b"\x01\x00\x00")
+                + bilevel._segment(2, 16, 1,
+                                   bilevel._encode_pattern_dict(self.PATTERNS))
+                + bilevel._segment(3, 23, 1, region[:-8], refs=(2,))
+                + bilevel._segment(4, 49, 1, b""))
         with pytest.raises(Jbig2Error, match="MMR halftone"):
             decode_jbig2_embedded(blob)
 
     def test_skip_flag_is_unsupported(self):
         region = (struct.pack(">IIIIB", 8, 8, 0, 0, 0)
                   + bytes([1 << 3]) + b"\x00" * 20)
-        blob = (jb._segment(1, 16, 1,
-                            jb._encode_pattern_dict(self.PATTERNS))
-                + jb._segment(2, 23, 1, region, refs=(1,)))
+        blob = (bilevel._segment(1, 16, 1,
+                                 bilevel._encode_pattern_dict(self.PATTERNS))
+                + bilevel._segment(2, 23, 1, region, refs=(1,)))
         with pytest.raises(Jbig2Unsupported):
             decode_jbig2_embedded(blob, width=8, height=8)
 
     def test_halftone_without_patterns_is_error(self):
         region = (struct.pack(">IIIIB", 8, 8, 0, 0, 0)
                   + bytes([0]) + b"\x00" * 20)
-        blob = jb._segment(1, 23, 1, region)
+        blob = bilevel._segment(1, 23, 1, region)
         with pytest.raises(Jbig2Error):
             decode_jbig2_embedded(blob, width=8, height=8)
 
@@ -897,27 +903,27 @@ class TestStandaloneRefinementRegion:
         at = b"".join(struct.pack("bb", dx, dy)
                       for dx, dy in jb._NOMINAL_AT[0])
         gen = (struct.pack(">IIIIB", 30, 20, 0, 0, 0) + bytes([gflags])
-               + at + jb._encode_generic(base, 0, True))
-        enc = jb._MQEncoder()
-        jb._encode_refinement(enc, target, 0, base, 0, 0, tpgron=True)
+               + at + bilevel._encode_generic(base, 0, True))
+        enc = bilevel._MQEncoder()
+        bilevel._encode_refinement(enc, target, 0, base, 0, 0, tpgron=True)
         ref_seg = (struct.pack(">IIIIB", 30, 20, 0, 0, 4)  # REPLACE
                    + bytes([0 | 2])  # template 0, TPGRON
                    + b"".join(struct.pack("bb", dx, dy)
                               for dx, dy in jb._REF_NOMINAL_AT)
                    + enc.flush())
-        blob = (jb._segment(1, 48, 1,
-                            struct.pack(">IIII", 30, 20, 0, 0)
-                            + b"\x01\x00\x00")
-                + jb._segment(2, 39, 1, gen)
-                + jb._segment(3, 43, 1, ref_seg)
-                + jb._segment(4, 49, 1, b""))
+        blob = (bilevel._segment(1, 48, 1,
+                                 struct.pack(">IIII", 30, 20, 0, 0)
+                                 + b"\x01\x00\x00")
+                + bilevel._segment(2, 39, 1, gen)
+                + bilevel._segment(3, 43, 1, ref_seg)
+                + bilevel._segment(4, 49, 1, b""))
         out = decode_jbig2_embedded(blob)
         assert (out == np.where(target, 0, 255)).all()
 
     def test_refinement_of_intermediate_is_unsupported(self):
         ref_seg = (struct.pack(">IIIIB", 8, 8, 0, 0, 4)
                    + bytes([1]) + b"\x00" * 4)
-        blob = jb._segment(2, 43, 1, ref_seg, refs=(1,))
+        blob = bilevel._segment(2, 43, 1, ref_seg, refs=(1,))
         with pytest.raises(Jbig2Unsupported):
             decode_jbig2_embedded(blob, width=8, height=8)
 
@@ -930,28 +936,28 @@ class TestStandaloneRefinementRegion:
         at = b"".join(struct.pack("bb", dx, dy)
                       for dx, dy in jb._NOMINAL_AT[0])
         gen = (struct.pack(">IIIIB", 8, 8, 0, 0, 0) + bytes([gflags])
-               + at + jb._encode_generic(bm, 0, True))
-        blob = jb._segment(1, 36, 1, gen)
+               + at + bilevel._encode_generic(bm, 0, True))
+        blob = bilevel._segment(1, 36, 1, gen)
         out = decode_jbig2_embedded(blob, width=8, height=8)
         assert (out == np.where(bm, 0, 255)).all()
 
     def test_truncated_halftone_header_is_error(self):
         region = (struct.pack(">IIIIB", 8, 8, 0, 0, 0)
                   + bytes([0]) + b"\x00" * 16)  # 4 bytes short
-        blob = (jb._segment(1, 16, 1, jb._encode_pattern_dict(
+        blob = (bilevel._segment(1, 16, 1, bilevel._encode_pattern_dict(
                     [np.ones((4, 4), np.uint8)]))
-                + jb._segment(2, 23, 1, region, refs=(1,)))
+                + bilevel._segment(2, 23, 1, region, refs=(1,)))
         with pytest.raises(Jbig2Error):
             decode_jbig2_embedded(blob, width=8, height=8)
 
     def test_mixed_pattern_sizes_are_error(self):
         region = (struct.pack(">IIIIB", 8, 8, 0, 0, 0)
                   + bytes([0]) + b"\x00" * 20)
-        blob = (jb._segment(1, 16, 1, jb._encode_pattern_dict(
+        blob = (bilevel._segment(1, 16, 1, bilevel._encode_pattern_dict(
                     [np.ones((4, 4), np.uint8)]))
-                + jb._segment(2, 16, 1, jb._encode_pattern_dict(
+                + bilevel._segment(2, 16, 1, bilevel._encode_pattern_dict(
                     [np.ones((2, 2), np.uint8)]))
-                + jb._segment(3, 23, 1, region, refs=(1, 2)))
+                + bilevel._segment(3, 23, 1, region, refs=(1, 2)))
         with pytest.raises(Jbig2Error):
             decode_jbig2_embedded(blob, width=8, height=8)
 
@@ -961,8 +967,8 @@ class TestStandaloneRefinementRegion:
                   + struct.pack(">ii", 0, 0)
                   + struct.pack(">HH", 1 << 10, 0))
         pats = [np.ones((4, 4), np.uint8), np.zeros((4, 4), np.uint8)]
-        blob = (jb._segment(1, 16, 1, jb._encode_pattern_dict(pats))
-                + jb._segment(2, 23, 1, region, refs=(1,)))
+        blob = (bilevel._segment(1, 16, 1, bilevel._encode_pattern_dict(pats))
+                + bilevel._segment(2, 23, 1, region, refs=(1,)))
         with pytest.raises(Jbig2Error):
             decode_jbig2_embedded(blob, width=8, height=8)
 
@@ -980,8 +986,8 @@ class TestFuzz:
             h = int(rng.integers(1, 24))
             w = int(rng.integers(1, 48))
             bm = (rng.random((h, w)) < density).astype(np.uint8)
-            data = jb._encode_generic(bm, template=template,
-                                      tpgdon=tpgdon)
+            data = bilevel._encode_generic(bm, template=template,
+                                           tpgdon=tpgdon)
             got = jb._decode_generic(jb._MQDecoder(data), w, h, template,
                                      jb._NOMINAL_AT[template], tpgdon)
             assert (got == bm).all()
@@ -1001,7 +1007,7 @@ class TestFuzz:
             w = int(rng.integers(4, 56))
             bm = (rng.random((h, w)) < float(rng.random() * 0.5)
                   ).astype(np.uint8)
-            blob = jb.encode_jbig2_symbol_embedded(
+            blob = bilevel.encode_jbig2_symbol_embedded(
                 bm, refcorner=refcorner, sbstrips=sbstrips)
             got = decode_jbig2_embedded(blob)
             assert (got == np.where(bm, 0, 255)).all()
@@ -1029,7 +1035,7 @@ class TestFuzz:
         # every prefix of a real stream must error cleanly or decode
         bm = np.eye(12, 20, dtype=bool)
         for blob in (encode_jbig2_embedded(bm),
-                     jb.encode_jbig2_symbol_embedded(bm)):
+                     bilevel.encode_jbig2_symbol_embedded(bm)):
             for cut in range(0, len(blob), 3):
                 try:
                     decode_jbig2_embedded(blob[:cut], width=20,
@@ -1047,17 +1053,17 @@ class TestRefinementBudget:
         # per-dimension caps pass (nw = nh = 1<<14) but the 2^28-pixel
         # area must be rejected BEFORE any refinement decode/allocation
         sym = np.ones((1, 1), dtype=np.uint8)
-        enc = jb._MQEncoder()
+        enc = bilevel._MQEncoder()
         iadt, iafs, iari = (jb._int_ctx() for _ in range(3))
         iardw, iardh, iardx, iardy = (jb._int_ctx() for _ in range(4))
-        jb._int_encode(enc, *iadt, 0)            # STRIPT
-        jb._int_encode(enc, *iadt, 0)            # strip delta
-        jb._int_encode(enc, *iafs, 0)            # FIRSTS
-        jb._int_encode(enc, *iari, 1)            # refined instance
-        jb._int_encode(enc, *iardw, (1 << 14) - 1)
-        jb._int_encode(enc, *iardh, (1 << 14) - 1)
-        jb._int_encode(enc, *iardx, 0)
-        jb._int_encode(enc, *iardy, 0)
+        bilevel._int_encode(enc, *iadt, 0)            # STRIPT
+        bilevel._int_encode(enc, *iadt, 0)            # strip delta
+        bilevel._int_encode(enc, *iafs, 0)            # FIRSTS
+        bilevel._int_encode(enc, *iari, 1)            # refined instance
+        bilevel._int_encode(enc, *iardw, (1 << 14) - 1)
+        bilevel._int_encode(enc, *iardh, (1 << 14) - 1)
+        bilevel._int_encode(enc, *iardx, 0)
+        bilevel._int_encode(enc, *iardy, 0)
         region_info = struct.pack(">IIIIB", 64, 64, 0, 0, 0)
         flags = (1 << 1) | (1 << 4)              # SBREFINE=1, REFCORNER=TL
         rat = b"".join(struct.pack("bb", dx, dy)
@@ -1072,7 +1078,7 @@ class TestRefinementBudget:
         # budget; a shrunken budget must trip on the SECOND instance
         sym = np.ones((1, 1), dtype=np.uint8)
         tgt = np.ones((8, 8), dtype=np.uint8)
-        seg = jb._encode_text_region(
+        seg = bilevel._encode_text_region(
             [(2, 2, 0, tgt), (14, 2, 0, tgt)], [sym], 30, 12)
         _info, page = jb._decode_text_region(seg, [sym])
         assert page[2:10, 2:10].all() and page[2:10, 14:22].all()
@@ -1100,9 +1106,9 @@ class TestHuffman:
                     values += [ln[2], ln[2] - 1000]
                 elif ln[0] == "u":
                     values += [ln[2], ln[2] + 100000]
-            w = jb._BitWriter()
+            w = bilevel._BitWriter()
             for v in values:
-                t.encode(w, v)
+                _huff_put(t, w, v)
             r = jb._BitReader(w.flush())
             got = [t.decode(r) for _ in values]
             assert got == values, f"table B.{n}"
@@ -1110,9 +1116,9 @@ class TestHuffman:
     def test_oob_roundtrip(self):
         for n in (2, 3, 8, 9, 10):
             t = jb._std_table(n)
-            w = jb._BitWriter()
-            t.encode(w, 0 if n < 8 else 4)
-            t.encode_oob(w)
+            w = bilevel._BitWriter()
+            _huff_put(t, w, 0 if n < 8 else 4)
+            _huff_put(t, w, None)
             r = jb._BitReader(w.flush())
             assert t.decode(r) is not jb._HUFF_OOB
             assert t.decode(r) is jb._HUFF_OOB
@@ -1123,28 +1129,28 @@ class TestHuffman:
             h = int(rng.integers(4, 40))
             w = int(rng.integers(8, 120))
             bm = (rng.random((h, w)) < rng.random() * 0.6).astype(np.uint8)
-            blob = jb.encode_jbig2_symbol_huffman_embedded(bm)
+            blob = bilevel.encode_jbig2_symbol_huffman_embedded(bm)
             gray = decode_jbig2_embedded(blob)
             assert (gray == np.where(bm, 0, 255)).all(), (h, w)
 
     def test_matches_arithmetic_arrangement_pixelwise(self):
         rng = np.random.default_rng(22)
         bm = (rng.random((30, 90)) < 0.35).astype(np.uint8)
-        a = decode_jbig2_embedded(jb.encode_jbig2_symbol_embedded(bm))
+        a = decode_jbig2_embedded(bilevel.encode_jbig2_symbol_embedded(bm))
         hf = decode_jbig2_embedded(
-            jb.encode_jbig2_symbol_huffman_embedded(bm))
+            bilevel.encode_jbig2_symbol_huffman_embedded(bm))
         assert (a == hf).all()
 
     def test_empty_page(self):
         bm = np.zeros((10, 20), np.uint8)
         gray = decode_jbig2_embedded(
-            jb.encode_jbig2_symbol_huffman_embedded(bm), width=20,
+            bilevel.encode_jbig2_symbol_huffman_embedded(bm), width=20,
             height=10)
         assert (gray == 255).all()
 
     def test_truncations_error_cleanly(self):
         bm = np.eye(14, 40, dtype=bool)
-        blob = jb.encode_jbig2_symbol_huffman_embedded(bm)
+        blob = bilevel.encode_jbig2_symbol_huffman_embedded(bm)
         for cut in range(0, len(blob), 3):
             try:
                 decode_jbig2_embedded(blob[:cut], width=40, height=14)
@@ -1170,22 +1176,22 @@ class TestHuffman:
         s1 = np.array([[1, 0, 1], [0, 1, 0]], dtype=np.uint8)
         t_fs, t_ds, t_dt = jb._std_table(6), jb._std_table(8), \
             jb._std_table(11)
-        bw = jb._BitWriter()
+        bw = bilevel._BitWriter()
         for i in range(35):             # runcode 1 is the 1-bit code 0
             bw.write(1 if i == 1 else 0, 4)
         bw.write(0, 2)                  # both symbol ID codes 1 bit long
         bw.byte_align()
-        t_dt.encode(bw, 1)              # STRIPT = -1 * 4
-        t_dt.encode(bw, 2)              # strip at T = -4 + 2 * 4 = 4
-        t_fs.encode(bw, 2)              # FIRSTS = 2: s0 at y=2, x=4+1
+        _huff_put(t_dt, bw, 1)          # STRIPT = -1 * 4
+        _huff_put(t_dt, bw, 2)          # strip at T = -4 + 2 * 4 = 4
+        _huff_put(t_fs, bw, 2)          # FIRSTS = 2: s0 at y=2, x=4+1
         bw.write(1, 2)
         bw.write(0, 1)
-        t_ds.encode(bw, 6)              # curs 2+3-1=4 → 10: s1 at x=4+3
+        _huff_put(t_ds, bw, 6)          # curs 2+3-1=4 → 10: s1 at x=4+3
         bw.write(3, 2)
         bw.write(1, 1)
-        t_ds.encode_oob(bw)
-        t_dt.encode(bw, 1)              # strip at T = 8
-        t_fs.encode(bw, -1)             # FIRSTS = 1: s0 at y=1, x=8+2
+        _huff_put(t_ds, bw, None)
+        _huff_put(t_dt, bw, 1)          # strip at T = 8
+        _huff_put(t_fs, bw, -1)         # FIRSTS = 1: s0 at y=1, x=8+2
         bw.write(2, 2)
         bw.write(0, 1)
         region_info = struct.pack(">IIIIB", 16, 16, 0, 0, 0)
@@ -1202,7 +1208,7 @@ class TestHuffman:
 
     def test_ocr_extraction_through_huffman_pdf(self):
         from pdf_ocr_engine_spark.core.extract_doc import extract_document
-        from pdf_ocr_engine_spark.core.pdfscan import build_pixel_scanned_pdf
+        from pdf_ocr_engine_spark.encoders.pdf import build_pixel_scanned_pdf
         from pdf_ocr_engine_spark.operators.ocr import (
             deterministic_recognizer,
         )
@@ -1220,7 +1226,7 @@ class TestHuffman:
     def test_mmr_collective_bitmap_class(self):
         # hand-encode one height class whose collective bitmap is
         # MMR-coded (BMSIZE > 0) — the other branch of §6.5.9
-        from pdf_ocr_engine_spark.core.ccittcodec import encode_g4
+        from pdf_ocr_engine_spark.encoders.bilevel import encode_g4
 
         syms = [np.array([[1, 0], [1, 1]], np.uint8),
                 np.array([[1, 1, 1], [1, 0, 1]], np.uint8)]
@@ -1228,15 +1234,15 @@ class TestHuffman:
         mmr = encode_g4(coll)
         t_dh, t_dw = jb._std_table(4), jb._std_table(2)
         t_bm, t_ex = jb._std_table(1), jb._std_table(1)
-        w = jb._BitWriter()
-        t_dh.encode(w, 2)           # height class 2
-        t_dw.encode(w, 2)           # width 2
-        t_dw.encode(w, 1)           # width 3
-        t_dw.encode_oob(w)
-        t_bm.encode(w, len(mmr))    # MMR-coded collective bitmap
+        w = bilevel._BitWriter()
+        _huff_put(t_dh, w, 2)       # height class 2
+        _huff_put(t_dw, w, 2)       # width 2
+        _huff_put(t_dw, w, 1)       # width 3
+        _huff_put(t_dw, w, None)
+        _huff_put(t_bm, w, len(mmr))  # MMR-coded collective bitmap
         w.write_bytes(mmr)
-        t_ex.encode(w, 0)
-        t_ex.encode(w, 2)
+        _huff_put(t_ex, w, 0)
+        _huff_put(t_ex, w, 2)
         seg = (struct.pack(">H", 1) + struct.pack(">II", 2, 2)
                + w.flush())
         got = jb._decode_symbol_dict(seg, [])
@@ -1253,15 +1259,15 @@ class TestCustomTables:
     _DW_LINES = [(1, 4, 0)]
 
     def _table_seg(self, oob=3):
-        return jb._encode_table_segment(self._DW_LINES, low_pl=2,
-                                        high_pl=3, oob_pl=oob)
+        return bilevel._encode_table_segment(self._DW_LINES, low_pl=2,
+                                             high_pl=3, oob_pl=oob)
 
     def test_table_segment_roundtrip(self):
         t = jb._parse_table_segment(self._table_seg())
-        w = jb._BitWriter()
+        w = bilevel._BitWriter()
         for v in (0, 7, 15, -4, 40):
-            t.encode(w, v)
-        t.encode_oob(w)
+            _huff_put(t, w, v)
+        _huff_put(t, w, None)
         r = jb._BitReader(w.flush())
         assert [t.decode(r) for _ in range(5)] == [0, 7, 15, -4, 40]
         assert t.decode(r) is jb._HUFF_OOB
@@ -1294,24 +1300,24 @@ class TestCustomTables:
             ">II", len(symbols), len(symbols))
         t_dh, t_bm, t_ex = (jb._std_table(4), jb._std_table(1),
                             jb._std_table(1))
-        w = jb._BitWriter()
+        w = bilevel._BitWriter()
         classes = {}
         for sym in symbols:
             classes.setdefault(sym.shape[0], []).append(sym)
         prev_h = 0
         for hh in sorted(classes):
-            t_dh.encode(w, hh - prev_h)
+            _huff_put(t_dh, w, hh - prev_h)
             prev_h = hh
             prev_w = 0
             for sym in classes[hh]:
-                t.encode(w, sym.shape[1] - prev_w)
+                _huff_put(t, w, sym.shape[1] - prev_w)
                 prev_w = sym.shape[1]
-            t.encode_oob(w)
-            t_bm.encode(w, 0)
+            _huff_put(t, w, None)
+            _huff_put(t_bm, w, 0)
             w.write_bytes(np.packbits(np.hstack(classes[hh]),
                                       axis=1).tobytes())
-        t_ex.encode(w, 0)
-        t_ex.encode(w, len(symbols))
+        _huff_put(t_ex, w, 0)
+        _huff_put(t_ex, w, len(symbols))
         return header + w.flush()
 
     def test_symbol_dict_with_custom_dw_table(self):
@@ -1347,14 +1353,14 @@ class TestCustomTables:
         dict_seg = self._dict_with_custom_dw(syms)
         instances = [(2, 1, 0), (12, 1, 1), (24, 1, 0)]
         w, h = 40, 10
-        region = jb._encode_huffman_text_region(instances, syms, w, h)
+        region = bilevel._encode_huffman_text_region(instances, syms, w, h)
         page_info = (struct.pack(">IIII", w, h, 0, 0)
                      + b"\x01" + b"\x00\x00")
-        stream = (jb._segment(1, 48, 1, page_info)
-                  + jb._segment(2, 53, 1, self._table_seg())
-                  + jb._segment(3, 0, 1, dict_seg, refs=(2,))
-                  + jb._segment(4, 6, 1, region, refs=(3,))
-                  + jb._segment(5, 49, 1, b""))
+        stream = (bilevel._segment(1, 48, 1, page_info)
+                  + bilevel._segment(2, 53, 1, self._table_seg())
+                  + bilevel._segment(3, 0, 1, dict_seg, refs=(2,))
+                  + bilevel._segment(4, 6, 1, region, refs=(3,))
+                  + bilevel._segment(5, 49, 1, b""))
         got = decode_jbig2_embedded(stream)
         want = np.full((h, w), 255, np.uint8)
         for x0, y0, sid in instances:
@@ -1365,22 +1371,22 @@ class TestCustomTables:
     def test_text_region_with_custom_fs_table(self):
         # FS values are first-instance x offsets (0 and 2 here): a tiny
         # custom table over [0, 8) with OOB absent
-        tseg = jb._encode_table_segment([(1, 3, 0)], low_pl=2, high_pl=2)
+        tseg = bilevel._encode_table_segment([(1, 3, 0)], low_pl=2, high_pl=2)
         t_fs = jb._parse_table_segment(tseg)
         syms = [np.ones((3, 3), np.uint8)]
         region_info = struct.pack(">IIIIB", 12, 5, 0, 0, 0)
         flags = 1 | (1 << 4)            # SBHUFF=1, TL refcorner
         hflags = 3                      # FS selector = custom
         t_ds, t_dt = jb._std_table(8), jb._std_table(11)
-        bw = jb._BitWriter()
+        bw = bilevel._BitWriter()
         for i in range(35):
             bw.write(1 if i == 1 else 0, 4)
         bw.write(0, 1)                  # the single symbol's code length
         bw.byte_align()
-        t_dt.encode(bw, 1)              # STRIPT = -1
-        t_dt.encode(bw, 2)              # strip at T=1
-        t_fs.encode(bw, 2)              # FIRSTS = 2
-        t_ds.encode_oob(bw)
+        _huff_put(t_dt, bw, 1)          # STRIPT = -1
+        _huff_put(t_dt, bw, 2)          # strip at T=1
+        _huff_put(t_fs, bw, 2)          # FIRSTS = 2
+        _huff_put(t_ds, bw, None)
         seg = (region_info + struct.pack(">H", flags)
                + struct.pack(">H", hflags) + struct.pack(">I", 1)
                + bw.flush())
@@ -1392,14 +1398,14 @@ class TestCustomTables:
     def test_encoder_custom_table_arrangement_roundtrip(self):
         rng = np.random.default_rng(13)
         bm = (rng.random((40, 120)) < 0.25).astype(np.uint8)
-        data = jb.encode_jbig2_symbol_huffman_embedded(
+        data = bilevel.encode_jbig2_symbol_huffman_embedded(
             bm, custom_dw_table=True)
         got = decode_jbig2_embedded(data)
         assert np.array_equal(got, np.where(bm, 0, 255))
 
     def test_custom_arrangement_ocr_extraction(self):
         from pdf_ocr_engine_spark.core.extract_doc import extract_document
-        from pdf_ocr_engine_spark.core.pdfscan import build_pixel_scanned_pdf
+        from pdf_ocr_engine_spark.encoders.pdf import build_pixel_scanned_pdf
         from pdf_ocr_engine_spark.operators.ocr import (
             deterministic_recognizer,
         )
@@ -1418,7 +1424,7 @@ class TestCustomTables:
         # references must not flip a decodable page into an error
         bm = np.eye(10, 24, dtype=bool)
         blob = encode_jbig2_embedded(bm)
-        bad_table = jb._segment(9, 53, 1,
-                                b"\x01" + struct.pack(">ii", 5, 5))
+        bad_table = bilevel._segment(9, 53, 1,
+                                     b"\x01" + struct.pack(">ii", 5, 5))
         gray = decode_jbig2_embedded(blob + bad_table)
         assert np.array_equal(gray, np.where(bm, 0, 255))

@@ -8,6 +8,8 @@ from pdf_ocr_engine_spark.core.jpegcodec import (
     JpegError,
     JpegUnsupported,
     decode_jpeg_gray,
+)
+from pdf_ocr_engine_spark.encoders.raster import (
     encode_jpeg_gray,
     encode_jpeg_rgb,
 )
@@ -147,7 +149,7 @@ class TestMalformedInput:
         # truncated, bit-flipped and spliced encoder outputs: every failure
         # must be a JpegError (the callers' data-error contract), never an
         # IndexError / struct.error / plain ValueError from a short read
-        from pdf_ocr_engine_spark.core.jpegcodec import (
+        from pdf_ocr_engine_spark.encoders.raster import (
             encode_jpeg_gray_progressive,
         )
 
@@ -185,7 +187,7 @@ class TestMalformedInput:
 class TestPdfDctPath:
     def test_dct_scanned_pdf_extracts_identical_text(self):
         from pdf_ocr_engine_spark.core.extract_doc import extract_document
-        from pdf_ocr_engine_spark.core.pdfscan import build_pixel_scanned_pdf
+        from pdf_ocr_engine_spark.encoders.pdf import build_pixel_scanned_pdf
         from pdf_ocr_engine_spark.operators.ocr import (
             deterministic_recognizer,
         )
@@ -206,7 +208,7 @@ class TestPdfDctPath:
 
     def test_decoded_image_reports_dct_filter(self):
         from pdf_ocr_engine_spark.core.pdfreal import extract_page_images
-        from pdf_ocr_engine_spark.core.pdfscan import build_pixel_scanned_pdf
+        from pdf_ocr_engine_spark.encoders.pdf import build_pixel_scanned_pdf
 
         pages = [{"width": 100, "height": 40,
                   "words": [("x", 10, 10, 16, 18)]}]
@@ -222,7 +224,7 @@ class TestPdfDctPath:
 
     def test_corrupt_jpeg_raster_is_decode_error(self):
         from pdf_ocr_engine_spark.core.extract_doc import extract_document
-        from pdf_ocr_engine_spark.core.pdfscan import build_pixel_scanned_pdf
+        from pdf_ocr_engine_spark.encoders.pdf import build_pixel_scanned_pdf
         from pdf_ocr_engine_spark.operators.ocr import (
             deterministic_recognizer,
         )
@@ -259,7 +261,7 @@ class TestProgressive:
     def test_matches_baseline_decode_exactly(self):
         # same quantized coefficients in, so the decoded planes must be
         # IDENTICAL — any progressive path bug shows as a pixel diff
-        from pdf_ocr_engine_spark.core.jpegcodec import (
+        from pdf_ocr_engine_spark.encoders.raster import (
             encode_jpeg_gray_progressive,
         )
 
@@ -272,7 +274,7 @@ class TestProgressive:
             assert (prog == base).all(), q
 
     def test_mostly_white_page_exercises_eob_runs(self):
-        from pdf_ocr_engine_spark.core.jpegcodec import (
+        from pdf_ocr_engine_spark.encoders.raster import (
             encode_jpeg_gray_progressive,
         )
 
@@ -284,7 +286,7 @@ class TestProgressive:
         assert (prog == base).all()
 
     def test_truncated_progressive_is_error(self):
-        from pdf_ocr_engine_spark.core.jpegcodec import (
+        from pdf_ocr_engine_spark.encoders.raster import (
             encode_jpeg_gray_progressive,
         )
 
@@ -295,7 +297,7 @@ class TestProgressive:
 
     def test_scanned_pdf_with_progressive_raster_ocrs(self):
         from pdf_ocr_engine_spark.core.extract_doc import extract_document
-        from pdf_ocr_engine_spark.core.pdfscan import build_pixel_scanned_pdf
+        from pdf_ocr_engine_spark.encoders.pdf import build_pixel_scanned_pdf
         from pdf_ocr_engine_spark.operators.ocr import (
             deterministic_recognizer,
         )
@@ -311,7 +313,7 @@ class TestProgressive:
         assert out["text"] == "web jpeg"
 
     def test_multimodal_tier_decodes_progressive(self):
-        from pdf_ocr_engine_spark.core.jpegcodec import (
+        from pdf_ocr_engine_spark.encoders.raster import (
             encode_jpeg_gray_progressive,
         )
         from pdf_ocr_engine_spark.operators.multimodal import (
@@ -328,7 +330,7 @@ class TestProgressive:
         Image = pytest.importorskip("PIL.Image")
         import io
 
-        from pdf_ocr_engine_spark.core.jpegcodec import (
+        from pdf_ocr_engine_spark.encoders.raster import (
             encode_jpeg_gray_progressive,
         )
 
@@ -361,13 +363,13 @@ def _prog_dc_stream(dc: list, comps: list, h: int, w: int,
     component; ``dc[ci]`` is that component's block grid of DC values and
     ``units`` lists the scan's units, each as the ``(ci, row, col)`` of its
     blocks in coding order."""
-    from pdf_ocr_engine_spark.core.jpegcodec import (
-        _PROG_DC,
+    from pdf_ocr_engine_spark.encoders.raster import (
         _BitWriter,
         _dht_segment,
         _dqt_segment,
         _huff_encode_table,
         _magnitude,
+        _PROG_DC,
     )
 
     dc_tab = _huff_encode_table(*_PROG_DC)

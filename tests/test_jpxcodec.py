@@ -12,6 +12,9 @@ from pdf_ocr_engine_spark.core.jpxcodec import (
     JpxError,
     JpxUnsupported,
     decode_jpx_gray,
+)
+from pdf_ocr_engine_spark.encoders import raster
+from pdf_ocr_engine_spark.encoders.raster import (
     encode_jp2_gray,
     encode_jp2_rgb,
 )
@@ -26,7 +29,7 @@ class TestWavelet:
                                        (16, 16), (17, 13), (2, 3)])
     def test_2d_roundtrip(self, shape):
         a = _rng().integers(-512, 512, shape).astype(np.int64)
-        ll, hl, lh, hh = jx._fwd53_2d(a)
+        ll, hl, lh, hh = raster._fwd_2d(a, raster._fwd53_axis)
         back = jx._inv53_2d(ll, hl, lh, hh)
         assert np.array_equal(back, a)
 
@@ -49,7 +52,7 @@ class TestT1:
     def test_block_roundtrip(self, cls, shape):
         co = _rng(shape[0] * 100 + shape[1]).integers(
             -300, 300, shape).astype(np.int64)
-        data, npasses, nbps = jx._t1_encode(co, cls)
+        data, npasses, nbps = raster._t1_encode(co, cls)
         got = jx._t1_decode(data, shape[1], shape[0], npasses, nbps, cls)
         assert np.array_equal(got, co)
 
@@ -58,13 +61,13 @@ class TestT1:
         co = np.zeros((32, 32), np.int64)
         co[3, 7] = -5
         co[30, 30] = 200
-        data, npasses, nbps = jx._t1_encode(co, "hh")
+        data, npasses, nbps = raster._t1_encode(co, "hh")
         got = jx._t1_decode(data, 32, 32, npasses, nbps, "hh")
         assert np.array_equal(got, co)
 
     def test_zero_block_not_included(self):
-        data, npasses, nbps = jx._t1_encode(np.zeros((8, 8), np.int64),
-                                            "ll_lh")
+        data, npasses, nbps = raster._t1_encode(np.zeros((8, 8), np.int64),
+                                                "ll_lh")
         assert (data, npasses, nbps) == (b"", 0, 0)
 
     def test_pass_overrun_rejected(self):
@@ -75,12 +78,12 @@ class TestT1:
 class TestTagTree:
     def test_roundtrip_grid(self):
         vals = [[0, 1, 3], [2, 0, 1]]
-        enc = jx._TagTree(3, 2)
+        enc = raster._TagTreeWriter(3, 2)
         for y, row in enumerate(vals):
             for x, v in enumerate(row):
                 enc.set(x, y, v)
         enc.finalize()
-        bw = jx._HdrWriter()
+        bw = raster._HdrWriter()
         for y in range(2):
             for x in range(3):
                 enc.encode(x, y, vals[y][x] + 1, bw)
@@ -97,7 +100,7 @@ class TestTagTree:
     def test_header_stuffing(self):
         # 16 one-bits force an 0xFF byte; the writer then emits a 7-bit
         # byte and the reader mirrors it
-        bw = jx._HdrWriter()
+        bw = raster._HdrWriter()
         for _ in range(16):
             bw.bit(1)
         bw.bit(0)
@@ -368,7 +371,7 @@ class TestErrors:
 class TestOcrIntegration:
     def test_ocr_extraction_through_jpx_pdf(self):
         from pdf_ocr_engine_spark.core.extract_doc import extract_document
-        from pdf_ocr_engine_spark.core.pdfscan import build_pixel_scanned_pdf
+        from pdf_ocr_engine_spark.encoders.pdf import build_pixel_scanned_pdf
         from pdf_ocr_engine_spark.operators.ocr import (
             deterministic_recognizer,
         )
@@ -385,7 +388,7 @@ class TestOcrIntegration:
 
     def test_ocr_extraction_through_color_jpx_pdf(self):
         from pdf_ocr_engine_spark.core.extract_doc import extract_document
-        from pdf_ocr_engine_spark.core.pdfscan import build_pixel_scanned_pdf
+        from pdf_ocr_engine_spark.encoders.pdf import build_pixel_scanned_pdf
         from pdf_ocr_engine_spark.operators.ocr import (
             deterministic_recognizer,
         )
@@ -418,7 +421,7 @@ class TestOcrIntegration:
 
     def test_corrupt_jpx_is_decode_error(self):
         from pdf_ocr_engine_spark.core.extract_doc import extract_document
-        from pdf_ocr_engine_spark.core.pdfscan import build_pixel_scanned_pdf
+        from pdf_ocr_engine_spark.encoders.pdf import build_pixel_scanned_pdf
         from pdf_ocr_engine_spark.operators.ocr import (
             deterministic_recognizer,
         )
@@ -441,7 +444,7 @@ class TestTileGuards:
         # strip-tiling layout some encoders emit for odd-width scans
         img = _rng(43).integers(0, 256, (32, 7), dtype=np.uint8)
         a = img.astype(np.int64) - 128
-        stream = bytearray(jx._emit_codestream(
+        stream = bytearray(raster._emit_codestream(
             [a], 7, 32, 8, 1, 64, mct=0, sop=False, eph=False, tile=8))
         siz = stream.index(b"\xffQ")
         struct.pack_into(">I", stream, siz + 4 + 18, 7)   # XTsiz = 7
@@ -540,7 +543,7 @@ class TestIrreversible:
         rng = _rng(53)
         for shape in ((1, 1), (3, 7), (16, 16), (13, 21), (1, 9)):
             a = rng.random(shape) * 255 - 128
-            back = jx._inv97_2d(*jx._fwd97_2d(a))
+            back = jx._inv97_2d(*raster._fwd_2d(a, raster._fwd97_axis))
             assert np.abs(back - a).max() < 1e-9
 
     def test_fine_step_is_visually_exact(self):
@@ -737,7 +740,7 @@ class TestTilePartMarkers:
 
     def test_ocr_extraction_through_precinct_jpx_pdf(self):
         from pdf_ocr_engine_spark.core.extract_doc import extract_document
-        from pdf_ocr_engine_spark.core.pdfscan import build_pixel_scanned_pdf
+        from pdf_ocr_engine_spark.encoders.pdf import build_pixel_scanned_pdf
         from pdf_ocr_engine_spark.operators.ocr import (
             deterministic_recognizer,
         )

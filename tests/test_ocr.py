@@ -16,9 +16,9 @@ from pdf_ocr_engine_spark.core.pdfreal import (
     extract_page_images,
     parse_real_pdf,
 )
-from pdf_ocr_engine_spark.core.pdfscan import (
+from pdf_ocr_engine_spark.core.pdfscan import decode_page_raster
+from pdf_ocr_engine_spark.encoders.pdf import (
     build_scanned_pdf,
-    decode_page_raster,
     encode_page_raster,
 )
 from pdf_ocr_engine_spark.operators.ocr import deterministic_recognizer
@@ -224,7 +224,7 @@ def _hybrid_pdf(text_tokens, scan_tokens):
     (raster of scan_tokens) — the per-PAGE F6 predicate inside one doc."""
     import zlib
 
-    from pdf_ocr_engine_spark.core.pdfscan import encode_page_raster
+    from pdf_ocr_engine_spark.encoders.pdf import encode_page_raster
     from pdf_ocr_engine_spark.core.pdfwrite import _page_content
 
     c1 = _page_content(layout_words(text_tokens), 612.0, 792.0, None, None)
@@ -284,10 +284,8 @@ class TestPixelRaster:
     sandbox analog of extractor.ts:12-37 -> ocr.ts:50-110."""
 
     def test_render_recognize_roundtrip(self):
-        from pdf_ocr_engine_spark.core.rasterfont import (
-            recognize_gray,
-            render_words_gray,
-        )
+        from pdf_ocr_engine_spark.core.rasterfont import recognize_gray
+        from pdf_ocr_engine_spark.encoders.raster import render_words_gray
 
         words = layout_words(TOKENS)
         w = max(x1 for *_, x1, _ in words) + 10
@@ -306,8 +304,8 @@ class TestPixelRaster:
         from pdf_ocr_engine_spark.core.rasterfont import (
             FONT_5X7,
             recognize_gray,
-            render_words_gray,
         )
+        from pdf_ocr_engine_spark.encoders.raster import render_words_gray
 
         chars = sorted(FONT_5X7)
         joined, split = [], []
@@ -327,7 +325,7 @@ class TestPixelRaster:
         assert texts[n:] == [t for t, *_ in split]
 
     def test_unknown_char_raises(self):
-        from pdf_ocr_engine_spark.core.rasterfont import render_words_gray
+        from pdf_ocr_engine_spark.encoders.raster import render_words_gray
 
         with pytest.raises(ValueError, match="not in the 5x7"):
             render_words_gray(100, 40, [("café", 10.0, 10.0, 34.0, 22.0)])
@@ -375,14 +373,13 @@ class TestPixelRaster:
         status='decode_error' upstream."""
         import numpy as np
 
-        from pdf_ocr_engine_spark.core import rasterfont
-        from pdf_ocr_engine_spark.core.pdfscan import build_pixel_scanned_pdf
+        from pdf_ocr_engine_spark.encoders import pdf as pdf_encoders
 
         blob = np.full((40, 100), 255, dtype=np.uint8)
         blob[12:19, 10:18] = 0  # 8px-wide ink run: wider than any glyph
-        monkeypatch.setattr(rasterfont, "render_words_gray",
+        monkeypatch.setattr(pdf_encoders, "render_words_gray",
                             lambda w, h, words: blob.tobytes())
-        pdf = build_pixel_scanned_pdf(
+        pdf = pdf_encoders.build_pixel_scanned_pdf(
             [{"width": 100, "height": 40, "words": []}])
         r = extract_document(pdf, "eng",
                              recognizer=deterministic_recognizer())
@@ -402,7 +399,7 @@ class TestPixelRaster:
 class TestGray1Raster:
     def test_packed_1bit_scanned_pdf_ocr_matches_flate(self):
         from pdf_ocr_engine_spark.core.extract_doc import extract_document
-        from pdf_ocr_engine_spark.core.pdfscan import build_pixel_scanned_pdf
+        from pdf_ocr_engine_spark.encoders.pdf import build_pixel_scanned_pdf
         from pdf_ocr_engine_spark.operators.ocr import (
             deterministic_recognizer,
         )
@@ -428,7 +425,7 @@ class TestGray1Raster:
         )
         import numpy as np
 
-        from pdf_ocr_engine_spark.core.rasterfont import render_words_gray
+        from pdf_ocr_engine_spark.encoders.raster import render_words_gray
 
         w, h = 61, 20  # ceil(61/8)=8 bytes/row
         samples = render_words_gray(w, h, [("ok", 10, 5, 22, 13)])
@@ -447,7 +444,7 @@ class TestGray1Raster:
         )
         import numpy as np
 
-        from pdf_ocr_engine_spark.core.rasterfont import render_words_gray
+        from pdf_ocr_engine_spark.encoders.raster import render_words_gray
 
         w, h = 61, 20
         samples = render_words_gray(w, h, [("ok", 10, 5, 22, 13)])
@@ -460,13 +457,13 @@ class TestGray1Raster:
         assert [x[0] for x in words] == ["ok"]
 
     def test_ccitt_blackis1_inverts(self):
-        from pdf_ocr_engine_spark.core.ccittcodec import encode_g4
+        from pdf_ocr_engine_spark.encoders.bilevel import encode_g4
         from pdf_ocr_engine_spark.operators.ocr import (
             deterministic_recognizer,
         )
         import numpy as np
 
-        from pdf_ocr_engine_spark.core.rasterfont import render_words_gray
+        from pdf_ocr_engine_spark.encoders.raster import render_words_gray
 
         w, h = 64, 20
         samples = render_words_gray(w, h, [("ok", 10, 5, 22, 13)])
@@ -493,14 +490,14 @@ class TestInvertedDecodeAllCodecs:
     def _render(w=64, h=20):
         import numpy as np
 
-        from pdf_ocr_engine_spark.core.rasterfont import render_words_gray
+        from pdf_ocr_engine_spark.encoders.raster import render_words_gray
 
         samples = render_words_gray(w, h, [("ok", 10, 5, 22, 13)])
         gray = np.frombuffer(samples, np.uint8).reshape(h, w)
         return w, h, gray
 
     def test_ccitt_decode_array_alone_inverts(self):
-        from pdf_ocr_engine_spark.core.ccittcodec import encode_g4
+        from pdf_ocr_engine_spark.encoders.bilevel import encode_g4
         from pdf_ocr_engine_spark.operators.ocr import (
             deterministic_recognizer,
         )
@@ -517,7 +514,7 @@ class TestInvertedDecodeAllCodecs:
     def test_ccitt_blackis1_and_decode_array_cancel(self):
         # BlackIs1 + /Decode [1 0] compose to identity: the stream is
         # coded exactly as in the default interpretation
-        from pdf_ocr_engine_spark.core.ccittcodec import encode_g4
+        from pdf_ocr_engine_spark.encoders.bilevel import encode_g4
         from pdf_ocr_engine_spark.operators.ocr import (
             deterministic_recognizer,
         )
@@ -533,9 +530,7 @@ class TestInvertedDecodeAllCodecs:
         assert [x[0] for x in words] == ["ok"]
 
     def test_jbig2_decode_array_inverts(self):
-        from pdf_ocr_engine_spark.core.jbig2codec import (
-            encode_jbig2_embedded,
-        )
+        from pdf_ocr_engine_spark.encoders.bilevel import encode_jbig2_embedded
         from pdf_ocr_engine_spark.operators.ocr import (
             deterministic_recognizer,
         )
@@ -554,7 +549,7 @@ class TestInvertedDecodeAllCodecs:
         # so a plain JPX carrying [1 0] recognizes as if it had none
         import numpy as np
 
-        from pdf_ocr_engine_spark.core.jpxcodec import encode_jp2_gray
+        from pdf_ocr_engine_spark.encoders.raster import encode_jp2_gray
         from pdf_ocr_engine_spark.operators.ocr import (
             deterministic_recognizer,
         )
@@ -585,7 +580,7 @@ class TestInvertedDecodeAllCodecs:
         assert inverted == plain
 
     def test_dct_decode_array_inverts(self):
-        from pdf_ocr_engine_spark.core.jpegcodec import encode_jpeg_gray
+        from pdf_ocr_engine_spark.encoders.raster import encode_jpeg_gray
         from pdf_ocr_engine_spark.operators.ocr import (
             deterministic_recognizer,
         )
@@ -613,7 +608,7 @@ class TestRobustRecognizer:
     def _page(cls):
         import numpy as np
 
-        from pdf_ocr_engine_spark.core.rasterfont import render_words_gray
+        from pdf_ocr_engine_spark.encoders.raster import render_words_gray
 
         return np.frombuffer(
             render_words_gray(cls.W, cls.H, cls.WORDS),
@@ -635,10 +630,8 @@ class TestRobustRecognizer:
         return [w[0] for w in self.WORDS]
 
     def test_lossy_jpeg_roundtrip_recognizes_exactly(self):
-        from pdf_ocr_engine_spark.core.jpegcodec import (
-            decode_jpeg_gray,
-            encode_jpeg_gray,
-        )
+        from pdf_ocr_engine_spark.core.jpegcodec import decode_jpeg_gray
+        from pdf_ocr_engine_spark.encoders.raster import encode_jpeg_gray
 
         g = self._page()
         for q in (85, 60, 40):
@@ -792,11 +785,9 @@ class TestPixelCodecEndToEnd:
         # word ("ti" -> "t i")
         import numpy as np
 
-        from pdf_ocr_engine_spark.core.pdfscan import _noisify_gray
-        from pdf_ocr_engine_spark.core.rasterfont import (
-            recognize_gray,
-            render_words_gray,
-        )
+        from pdf_ocr_engine_spark.encoders.pdf import _noisify_gray
+        from pdf_ocr_engine_spark.core.rasterfont import recognize_gray
+        from pdf_ocr_engine_spark.encoders.raster import render_words_gray
 
         w, h = 360, 140
         tokens = ["ti", "t1", "it", "i1", "tt", "11"]
@@ -817,8 +808,8 @@ class TestPixelCodecEndToEnd:
     def test_rgb_decode_array_inverts_end_to_end(self):
         import numpy as np
 
-        from pdf_ocr_engine_spark.core.pdfscan import _tint_rgb
-        from pdf_ocr_engine_spark.core.rasterfont import render_words_gray
+        from pdf_ocr_engine_spark.encoders.pdf import _tint_rgb
+        from pdf_ocr_engine_spark.encoders.raster import render_words_gray
         from pdf_ocr_engine_spark.operators.ocr import (
             deterministic_recognizer,
         )
@@ -840,10 +831,8 @@ class TestPixelCodecEndToEnd:
         # not declare the page blank
         import numpy as np
 
-        from pdf_ocr_engine_spark.core.rasterfont import (
-            recognize_gray,
-            render_words_gray,
-        )
+        from pdf_ocr_engine_spark.core.rasterfont import recognize_gray
+        from pdf_ocr_engine_spark.encoders.raster import render_words_gray
 
         w, h = 64, 20
         g = np.frombuffer(

@@ -20,9 +20,9 @@ from pdf_ocr_engine_spark.core.pdfcrypt import (
     _expand_key,
     aes_cbc_decrypt,
     aes_cbc_encrypt,
-    encrypt_pdf,
     rc4,
 )
+from pdf_ocr_engine_spark.encoders.pdf import encrypt_pdf
 from pdf_ocr_engine_spark.core.pdfreal import parse_real_pdf
 from pdf_ocr_engine_spark.sources.fixtures import (
     expected_text,

@@ -23,6 +23,7 @@ from pdf_ocr_engine_spark.core.layout_fast import page_layout_fast
 from pdf_ocr_engine_spark.core.pdfbin import decode_pdf_arrays
 from pdf_ocr_engine_spark.core.pdfreal import is_real_pdf, parse_real_pdf
 from pdf_ocr_engine_spark.core.pdfwrite import build_searchable_pdf
+from pdf_ocr_engine_spark.encoders.raster import lzw_encode
 from pdf_ocr_engine_spark.sources.fixtures import expected_text, layout_words
 
 
@@ -477,43 +478,18 @@ class TestFuzzRobustness:
         assert isinstance(r, dict) and "status" in r
 
 
-def _lzw_encode(data: bytes, early: int = 1) -> bytes:
-    """Minimal PDF-flavor LZW encoder (test twin of core/pdfreal._lzw_decode)."""
-    bits: list[tuple[int, int]] = []
-    width = 9
-
-    def emit(code: int) -> None:
-        bits.append((code, width))
-
-    table = {bytes([i]): i for i in range(256)}
-    next_code = 258
-    emit(256)
-    w = b""
-    for ch in data:
-        wc = w + bytes([ch])
-        if wc in table:
-            w = wc
-            continue
-        emit(table[w])
-        table[wc] = next_code
-        next_code += 1
-        if next_code + early - 1 >= (1 << width) and width < 12:
-            width += 1
-        w = bytes([ch])
-    if w:
-        emit(table[w])
-    emit(257)
-    out = bytearray()
-    acc = n = 0
-    for code, wd in bits:
-        acc = (acc << wd) | code
-        n += wd
-        while n >= 8:
-            out.append((acc >> (n - 8)) & 0xFF)
-            n -= 8
-    if n:
-        out.append((acc << (8 - n)) & 0xFF)
-    return bytes(out)
+def _lzw_pdf(data: bytes) -> bytes:
+    """One-page PDF whose content stream is the LZWDecode ``data``."""
+    return _assemble([
+        b"<< /Type /Catalog /Pages 2 0 R >>",
+        (b"<< /Type /Pages /Kids [4 0 R] /Count 1 "
+         b"/MediaBox [0 0 612 792] "
+         b"/Resources << /Font << /F1 3 0 R >> >> >>"),
+        b"<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica >>",
+        b"<< /Type /Page /Parent 2 0 R /Contents 5 0 R >>",
+        (f"<< /Filter /LZWDecode /Length {len(data)} >>\nstream\n"
+         ).encode() + data + b"\nendstream",
+    ])
 
 
 class TestLzw:
@@ -522,35 +498,40 @@ class TestLzw:
 
         for payload in (b"", b"a", b"TOBEORNOTTOBEORTOBEORNOT" * 40,
                         bytes(range(256)) * 8):
-            assert _lzw_decode(_lzw_encode(payload)) == payload
+            assert _lzw_decode(lzw_encode(payload, 8, True, 1)) == payload
 
     def test_lzw_content_stream(self):
         content = b"BT /F1 12 Tf 72 720 Td (lzw) Tj 60 0 Td (works) Tj ET"
-        data = _lzw_encode(content)
-        objs = [
-            b"<< /Type /Catalog /Pages 2 0 R >>",
-            (b"<< /Type /Pages /Kids [4 0 R] /Count 1 "
-             b"/MediaBox [0 0 612 792] "
-             b"/Resources << /Font << /F1 3 0 R >> >> >>"),
-            b"<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica >>",
-            b"<< /Type /Page /Parent 2 0 R /Contents 5 0 R >>",
-            (f"<< /Filter /LZWDecode /Length {len(data)} >>\nstream\n"
-             ).encode() + data + b"\nendstream",
-        ]
-        pdf = _assemble(objs)
+        pdf = _lzw_pdf(lzw_encode(content, 8, True, 1))
         assert _tokens(pdf) == ["lzw", "works"]
+
+    def test_lzw_table_reset_round_trip(self):
+        # an 850 KB content stream needs far more than 4,096 LZW codes:
+        # the encoder must emit CLEAR before the table passes 12 bits, and
+        # both the filter and the page parse must see every byte
+        from pdf_ocr_engine_spark.core.pdfreal import _apply_filter
+
+        words = [f"w{i}x{i * 7919 % 1000}" for i in range(24_000)]
+        content = b"".join(
+            b"BT /F1 12 Tf %d %d Td (%s) Tj ET\n"
+            % (72 + i % 400, 700 - i // 400 % 600, w.encode())
+            for i, w in enumerate(words))
+        assert len(content) >= 850_000
+        data = lzw_encode(content, 8, True, 1)
+        assert _apply_filter("LZWDecode", data, {}) == content
+        assert parse_real_pdf(_lzw_pdf(data))["pages"][0]["texts"] == words
 
     def test_lzw_tiff_predictor_rejected(self):
         from pdf_ocr_engine_spark.core.pdfreal import _apply_filter
 
-        data = _lzw_encode(b"abcdef")
+        data = lzw_encode(b"abcdef", 8, True, 1)
         with pytest.raises(ValueError, match="predictor"):
             _apply_filter("LZWDecode", data, {"Predictor": 2, "Columns": 3})
 
     def test_lzw_expansion_bomb_capped(self):
         from pdf_ocr_engine_spark.core.pdfreal import _lzw_decode
 
-        payload = _lzw_encode(b"ab" * 200_000)
+        payload = lzw_encode(b"ab" * 200_000, 8, True, 1)
         with pytest.raises(ValueError, match="cap"):
             _lzw_decode(payload, max_out=10_000)
 
@@ -560,7 +541,7 @@ def _png_predict(rows, colors: int, bpc: int, tags) -> bytes:
     the PNG encoder's forward filter."""
     import numpy as np
 
-    from pdf_ocr_engine_spark.core.pngcodec import _filter_row
+    from pdf_ocr_engine_spark.encoders.raster import _filter_row
 
     unit = max(1, colors * bpc // 8)
     out = bytearray()
@@ -621,7 +602,7 @@ class TestPngPredictors:
         parms = self._parms(colors, bpc, columns)
         assert _apply_filter("FlateDecode", zlib.compress(body),
                              parms) == b"".join(rows)
-        assert _apply_filter("LZWDecode", _lzw_encode(body),
+        assert _apply_filter("LZWDecode", lzw_encode(body, 8, True, 1),
                              parms) == b"".join(rows)
 
     def test_short_final_row_decodes_bytes_present(self):
@@ -990,10 +971,8 @@ class TestFormXObjects:
         import zlib as _z
 
         from pdf_ocr_engine_spark.core.pdfreal import extract_page_images
-        from pdf_ocr_engine_spark.core.pdfscan import (
-            decode_page_raster,
-            encode_page_raster,
-        )
+        from pdf_ocr_engine_spark.core.pdfscan import decode_page_raster
+        from pdf_ocr_engine_spark.encoders.pdf import encode_page_raster
 
         raster = encode_page_raster(612.0, 792.0,
                                     [("wrapped", 1.0, 1.0, 40.0, 13.0)])
@@ -1026,10 +1005,8 @@ class TestFormXObjects:
         import zlib as _z
 
         from pdf_ocr_engine_spark.core.pdfreal import extract_page_images
-        from pdf_ocr_engine_spark.core.pdfscan import (
-            decode_page_raster,
-            encode_page_raster,
-        )
+        from pdf_ocr_engine_spark.core.pdfscan import decode_page_raster
+        from pdf_ocr_engine_spark.encoders.pdf import encode_page_raster
 
         imgs = []
         for word in ("alpha", "bravo"):
@@ -1068,7 +1045,7 @@ class TestFormXObjects:
         import zlib as _z
 
         from pdf_ocr_engine_spark.core.pdfreal import extract_page_images
-        from pdf_ocr_engine_spark.core.pdfscan import encode_page_raster
+        from pdf_ocr_engine_spark.encoders.pdf import encode_page_raster
 
         img = _z.compress(encode_page_raster(
             612.0, 792.0, [("ghost", 1.0, 1.0, 40.0, 13.0)]))
@@ -1139,7 +1116,7 @@ class TestSingleParse:
         # a born-digital page that also paints an image never reaches the
         # recognizer, so its image stream must stay undecoded
         from pdf_ocr_engine_spark.core import pdfreal
-        from pdf_ocr_engine_spark.core.pdfscan import encode_page_raster
+        from pdf_ocr_engine_spark.encoders.pdf import encode_page_raster
 
         img = zlib.compress(encode_page_raster(
             612.0, 792.0, [("logo", 1.0, 1.0, 40.0, 13.0)]))
@@ -1244,7 +1221,7 @@ class TestFormReviewRegressions:
         import zlib as _z
 
         from pdf_ocr_engine_spark.core.pdfreal import detect_pages_text
-        from pdf_ocr_engine_spark.core.pdfscan import encode_page_raster
+        from pdf_ocr_engine_spark.encoders.pdf import encode_page_raster
 
         form = b"BT /F1 12 Tf 10 10 Td (shared text) Tj ET"
         raster = _z.compress(encode_page_raster(612.0, 792.0, []))
@@ -1347,7 +1324,7 @@ class TestFlavorFuzz:
     def test_encryption_transparency_fuzz(self):
         import random
 
-        from pdf_ocr_engine_spark.core.pdfcrypt import encrypt_pdf
+        from pdf_ocr_engine_spark.encoders.pdf import encrypt_pdf
         from pdf_ocr_engine_spark.sources.fixtures import (
             text_to_real_pdf_payload,
         )
@@ -1513,7 +1490,7 @@ class TestProbeParserAgreement:
         import zlib as _z
 
         from pdf_ocr_engine_spark.core.pdfreal import detect_pages_text
-        from pdf_ocr_engine_spark.core.pdfscan import encode_page_raster
+        from pdf_ocr_engine_spark.encoders.pdf import encode_page_raster
 
         rng = random.Random(424242)
         vocab = "red green blue cyan teal plum gold gray".split()

@@ -3,7 +3,7 @@ invisible-text round-trip, and the Spark operator end-to-end."""
 
 import pytest
 
-from pdf_ocr_engine_spark.core.pdfbin import encode_pdf
+from pdf_ocr_engine_spark.encoders.pdf import encode_pdf
 from pdf_ocr_engine_spark.core.pdfwrite import (
     build_searchable_pdf,
     extract_pdf_text,

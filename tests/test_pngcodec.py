@@ -16,9 +16,9 @@ from pdf_ocr_engine_spark.core.pngcodec import (
     PNG_MAGIC,
     PngError,
     decode_png,
-    encode_png,
     to_gray,
 )
+from pdf_ocr_engine_spark.encoders.raster import encode_png
 
 
 def _chunk(ctype: bytes, body: bytes) -> bytes:

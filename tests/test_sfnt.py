@@ -13,7 +13,10 @@ import pytest
 
 from pdf_ocr_engine_spark.core import sfnt
 from pdf_ocr_engine_spark.core.extract_doc import extract_document
-from pdf_ocr_engine_spark.core.pdfwrite import build_truetype_pdf
+from pdf_ocr_engine_spark.encoders.pdf import (
+    build_minimal_truetype,
+    build_truetype_pdf,
+)
 from pdf_ocr_engine_spark.sources.fixtures import (
     expected_text,
     layout_words,
@@ -28,13 +31,13 @@ TOKENS = ("the quick brown fox jumps over lazy dog 42 plus more words "
 
 class TestSfntTables:
     def test_unicode_cmap_roundtrip(self):
-        font = sfnt.build_minimal_truetype(C2G)
+        font = build_minimal_truetype(C2G)
         got = sfnt.gid_to_unicode(font)
         assert all(got.get(g) == ch for ch, g in C2G.items())
 
     def test_post_names_roundtrip(self):
-        font = sfnt.build_minimal_truetype(C2G, unicode_cmap=False,
-                                           post_names=True)
+        font = build_minimal_truetype(C2G, unicode_cmap=False,
+                                      post_names=True)
         got = sfnt.gid_to_unicode(font)
         assert all(got.get(g) == ch for ch, g in C2G.items())
 
@@ -43,7 +46,7 @@ class TestSfntTables:
         # code→gid lookup, but gid_to_unicode must NOT invert it into
         # fabricated code points
         scrambled = {0x21 + i: gid for i, gid in enumerate(C2G.values())}
-        font = sfnt.build_minimal_truetype(
+        font = build_minimal_truetype(
             C2G, symbolic=True, unicode_cmap=False, post_names=True,
             symbolic_codes=scrambled)
         tables = sfnt.parse_tables(font)
@@ -54,7 +57,7 @@ class TestSfntTables:
 
     def test_lowest_code_wins_on_many_to_one(self):
         # 'a' and 'b' both map to gid 1: the inversion must pick 'a'
-        font = sfnt.build_minimal_truetype({"a": 1, "b": 1})
+        font = build_minimal_truetype({"a": 1, "b": 1})
         assert sfnt.gid_to_unicode(font)[1] == "a"
 
     def test_cmap_format0_and_6(self):
@@ -93,7 +96,7 @@ class TestSfntTables:
                 sfnt.parse_tables(bad)
 
     def test_truncated_valid_font_raises_or_degrades(self):
-        font = sfnt.build_minimal_truetype(C2G, post_names=True)
+        font = build_minimal_truetype(C2G, post_names=True)
         for cut in range(0, len(font), 7):
             try:
                 sfnt.gid_to_unicode(font[:cut])
@@ -135,7 +138,7 @@ class TestNoToUnicodeExtraction:
 
     def test_corrupt_fontfile_counts_fallback_not_crash(self):
         pdf = build_truetype_pdf(self.PAGES, variant="cid")
-        from pdf_ocr_engine_spark.core.sfnt import build_minimal_truetype
+        from pdf_ocr_engine_spark.encoders.pdf import build_minimal_truetype
 
         font = build_minimal_truetype(
             {ch: i + 1 for i, ch in enumerate(sorted(
@@ -204,9 +207,9 @@ class TestHardeningReviewFixes:
         tbl[6 + 0x8E] = 2   # Mac Roman high code -> gid 2
         cm = (struct.pack(">HH", 0, 1)
               + struct.pack(">HHI", 1, 0, 12) + bytes(tbl))
-        base = sfnt.build_minimal_truetype({"a": 1, "b": 2},
-                                           unicode_cmap=False,
-                                           post_names=True)
+        base = build_minimal_truetype({"a": 1, "b": 2},
+                                      unicode_cmap=False,
+                                      post_names=True)
         tables = sfnt.parse_tables(base)
         # splice: rebuild a font whose cmap is the (1,0) table and whose
         # post names gid 2 as 'b'

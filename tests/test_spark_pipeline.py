@@ -158,7 +158,7 @@ def test_large_document_stress(spark):
     import pyarrow.parquet as pq
 
     from pdf_ocr_engine_spark.core.extract_doc import extract_document
-    from pdf_ocr_engine_spark.core.pdfbin import encode_pdf
+    from pdf_ocr_engine_spark.encoders.pdf import encode_pdf
     from pdf_ocr_engine_spark.sources.fixtures import layout_words
 
     toks = [f"w{i}" for i in range(400)]
