@@ -55,6 +55,7 @@ import struct
 
 import numpy as np
 
+from .images import _luma
 from .jbig2codec import _MQDecoder
 
 __all__ = [
@@ -64,7 +65,7 @@ __all__ = [
 ]
 
 
-class JpxError(Exception):
+class JpxError(ValueError):
     """Malformed or truncated JPEG 2000 stream."""
 
 
@@ -1075,7 +1076,9 @@ def decode_jpx_gray(data: bytes) -> np.ndarray:
     """JPEG 2000 bytes (JP2 file or raw codestream) → (h, w) uint8
     grayscale.  Sub-8-bit components are scaled to the full 8-bit range
     (a 1-bit scan decodes to 0/255); 3-component images decode to
-    ITU-R BT.601 luma (through the inverse RCT when signalled)."""
+    ITU-R BT.601 luma (through the inverse RCT when signalled), the
+    integer weights of raw ``/DeviceRGB`` page samples (``images._luma``;
+    not PNG/GIF's ``pngcodec.to_gray``, which differs by one at times)."""
     if len(data) < 12:
         raise JpxError("not a JPEG 2000 stream (too short)")
     if len(data) > (1 << 28):
@@ -1128,7 +1131,4 @@ def decode_jpx_gray(data: bytes) -> np.ndarray:
         if bpc != 8:
             p = (p * 255) // top
         rgb.append(p)
-    # ITU-R BT.601 integer luma — the same gray the recognizer's color
-    # paths use (operators/ocr.py DeviceRGB branch)
-    return ((77 * rgb[0] + 150 * rgb[1] + 29 * rgb[2] + 128) >> 8) \
-        .astype(np.uint8)
+    return _luma(*rgb)

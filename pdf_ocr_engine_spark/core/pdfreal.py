@@ -49,6 +49,7 @@ from typing import Any
 from ..functions.afm import FALLBACK_UNITS, HELVETICA_WIDTHS
 from .filters import lzw_decode, png_unpredict
 from .glyphs import STANDARD, base_encoding_map, glyph_to_unicode
+from .images import _image_filter
 from .pdfbin import HEADER_SCAN, MAGIC
 
 __all__ = ["extract_page_images", "is_real_pdf", "parse_real_pdf"]
@@ -297,17 +298,6 @@ def _apply_filter(name: str, data: bytes, parms: dict | None) -> bytes:
     if name in ("RunLengthDecode", "RL"):
         return _rle_decode(data)
     raise ValueError(f"unsupported stream filter {name}")
-
-
-#: trailing filters whose "decoded" form is an image interchange format —
-#: a stream-filter pass must NOT try to expand them (abbreviated names per
-#: ISO 32000 table 6 included)
-_IMAGE_FILTERS = {
-    "DCTDecode": "DCTDecode", "DCT": "DCTDecode",
-    "JPXDecode": "JPXDecode",
-    "CCITTFaxDecode": "CCITTFaxDecode", "CCF": "CCITTFaxDecode",
-    "JBIG2Decode": "JBIG2Decode",
-}
 
 
 def _rle_decode(data: bytes) -> bytes:
@@ -563,15 +553,15 @@ class _Stream:
     def decoded_image(self, doc: _Doc,
                       ) -> tuple[bytes, str | None, dict | None]:
         """Decoded bytes of an image XObject: every stream filter applied
-        EXCEPT a trailing image-codec filter (DCTDecode et al.), whose
-        canonical name and DecodeParms are returned — per ISO 32000 those
-        bytes are the image interchange format itself (JPEG/JPEG2000/
+        EXCEPT a trailing image-codec filter (``core/images`` names them),
+        whose canonical name and DecodeParms are returned — per ISO 32000
+        those bytes are the image interchange format itself (JPEG/JPEG2000/
         CCITT), consumed by an image codec rather than a stream filter
         (CCITTFaxDecode needs /K, /Columns, /Rows from the parms)."""
         data = self._decrypted_raw(doc)
         chain = self._filter_chain(doc)
         for i, (name, pp) in enumerate(chain):
-            canon = _IMAGE_FILTERS.get(name)
+            canon = _image_filter(name)
             if canon is not None and i == len(chain) - 1:
                 return data, canon, pp
             data = _apply_filter(name, data, pp)

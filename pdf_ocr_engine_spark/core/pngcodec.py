@@ -183,7 +183,8 @@ def to_gray(px: np.ndarray, color: int) -> np.ndarray:
     """(h, w, c) → (h, w) uint8 luma.  Integer BT.601 weights
     (``(r*299 + g*587 + b*114 + 500) // 1000``) keep the result
     deterministic across platforms; alpha is ignored (decode is about
-    content, not compositing)."""
+    content, not compositing).  Raw RGB page samples and JPEG 2000 use
+    ``images._luma``'s 77/150/29 ÷ 256, which differs by one at times."""
     if px.shape[2] in (1, 2):  # gray / gray+alpha
         return px[:, :, 0]
     r = px[:, :, 0].astype(np.uint32)

@@ -20,14 +20,12 @@ Two codec tiers:
   the payload), so decode / resize / frame-grab / embed run END TO END —
   real plans, real numpy math, oracle-checkable outputs.
 
-Real-format *pixel* decode is tiered: PNG decodes for real via the
-pure-stdlib codec in ``core/pngcodec.py`` (zlib inflate + the five spec
-filters, Adam7 included), baseline JPEG via ``core/jpegcodec.py``
-(T.81 Huffman + batched IDCT, luma plane out), and GIF via
-``core/gifcodec.py`` (LZW + color tables) — no library needed for any of
-them; exotic streams (progressive JPEG) go through an optional-PIL
-adapter that activates when ``PIL`` is importable and otherwise raises
-``NotImplementedError`` at one clearly-marked point per function.
+Real-format *pixel* decode goes through the codec table in
+``core/images.py``: pure-stdlib PNG (``core/pngcodec.py``, Adam7
+included), baseline and progressive JPEG (``core/jpegcodec.py``) and GIF
+(``core/gifcodec.py``), no library needed.  What the table cannot decode
+goes through an optional-PIL adapter at one point in
+:func:`decode_image_pixels`, active when ``PIL`` is importable.
 Swapping a codec in changes nothing downstream.
 """
 
@@ -162,27 +160,19 @@ def decode_media_header(data: bytes | None) -> tuple[str, int | None, int | None
     return ("unknown", None, None, None)
 
 
-def _pil_image_module():
-    """Guarded PIL import — ``PIL.Image`` when installed, else ``None``.
-    The sandbox ships no PIL; real deployments drop it in and the JPEG/GIF
-    tier activates with no other change."""
+def _pil_decode_gray(data: bytes):
+    """Optional PIL adapter: any PIL-readable format → uint8 luma ndarray
+    (h, w), or None when PIL is not installed (installing it activates
+    the tier with no other change)."""
     try:
         from PIL import Image  # type: ignore[import-not-found]
-        return Image
     except ImportError:
         return None
-
-
-def _pil_decode_gray(data: bytes):
-    """PIL adapter: any PIL-readable format → uint8 luma ndarray (h, w)."""
     import io
 
     import numpy as np
 
-    image_mod = _pil_image_module()
-    if image_mod is None:
-        return None
-    with image_mod.open(io.BytesIO(data)) as im:
+    with Image.open(io.BytesIO(data)) as im:
         return np.asarray(im.convert("L"), dtype=np.uint8)
 
 
@@ -194,14 +184,15 @@ def decode_image_pixels(data: bytes):
     * fake codec (``FAKEIMG1``): row-major payload bytes fill the image;
       cells past the payload take the formula ``(flat_index*31 + w*7 +
       h*13) % 256`` — deterministic and shared with the DuckDB oracles;
-    * PNG / JPEG / GIF: real decode via the pure-stdlib codecs
-      (:mod:`..core.pngcodec` — zlib + spec filters, Adam7 interlace;
-      :mod:`..core.jpegcodec` — baseline + progressive DCT;
-      :mod:`..core.gifcodec` — LZW), PIL as an optional fallback tier;
-    * everything else (WEBP, …): the optional-PIL adapter — raises
-      ``NotImplementedError`` when PIL is absent, so callers treat the
-      row as undecodable DATA, never a task failure."""
+    * PNG / JPEG / GIF: the codec table (:mod:`..core.images`) picks the
+      pure-stdlib codec by magic;
+    * anything the table cannot decode (corrupt stream, unsupported
+      coding process, WEBP, …): the optional-PIL adapter.  Without PIL
+      the table's ``ValueError`` / ``NotImplementedError`` stands, so
+      callers treat the row as undecodable DATA, never a task failure."""
     import numpy as np
+
+    from ..core import images
 
     data = bytes(data) if data else b""
     if data[:8] == IMG_MAGIC:
@@ -213,47 +204,13 @@ def decode_image_pixels(data: bytes):
         if payload:
             arr[:len(payload)] = np.frombuffer(payload, dtype=np.uint8)
         return arr.reshape(h, w).astype(np.uint8)
-    if data[:8] == _PNG_MAGIC:
-        from ..core import pngcodec
-
-        try:
-            px, color = pngcodec.decode_png(data)
-            return pngcodec.to_gray(px, color)
-        except pngcodec.PngError as exc:
-            gray = _pil_decode_gray(data)
-            if gray is not None:
-                return gray
-            raise ValueError(f"undecodable PNG: {exc}") from exc
-    if data[:2] == b"\xFF\xD8":
-        from ..core import jpegcodec
-
-        try:
-            return jpegcodec.decode_jpeg_gray(data)
-        except jpegcodec.JpegUnsupported as exc:
-            gray = _pil_decode_gray(data)
-            if gray is not None:
-                return gray
-            raise NotImplementedError(
-                f"JPEG coding process needs PIL: {exc}") from exc
-        except jpegcodec.JpegError as exc:
-            gray = _pil_decode_gray(data)
-            if gray is not None:
-                return gray
-            raise ValueError(f"undecodable JPEG: {exc}") from exc
-    if data[:6] in (b"GIF87a", b"GIF89a"):
-        from ..core import gifcodec
-
-        try:
-            return gifcodec.decode_gif_gray(data)
-        except gifcodec.GifError as exc:
-            gray = _pil_decode_gray(data)
-            if gray is not None:
-                return gray
-            raise ValueError(f"undecodable GIF: {exc}") from exc
-    raise NotImplementedError(
-        "pixel decode for this format requires an image codec (PIL); "
-        "this environment ships none — PNG, baseline JPEG, and GIF "
-        "(stdlib codecs) and the fake codec decode without it")
+    try:
+        return images._sniffed_gray(data)
+    except (ValueError, NotImplementedError):
+        gray = _pil_decode_gray(data)
+        if gray is None:
+            raise
+        return gray
 
 
 def media_metadata(df: DataFrame, media_col: str = "media",

@@ -7,7 +7,8 @@ the pixels (``src/lib/ocr/ocr.ts:50-110``).  This module gives that flow
 its Spark shape:
 
 * :func:`deterministic_recognizer` — the sandbox recognizer: reads the
-  ``FAKERAST`` page raster (``core/pdfscan.py``).  A real model swaps in
+  ``FAKERAST`` page raster (``core/pdfscan.py``) or the page pixels the
+  codec table decodes (``core/images.py``).  A real model swaps in
   by providing a different factory (e.g. ``lambda: TesseractWorker(...)``)
   — the factory runs ONCE per task at the UDF init point, so model load
   never sits in the batch loop (the reference's singleton worker,
@@ -47,20 +48,6 @@ __all__ = [
 ]
 
 
-def _decode_inverts(dec) -> bool:
-    """True iff a /Decode array remaps every component to the inverted
-    range: [1 0] for one component, [1 0 1 0 1 0] for RGB (ISO 32000
-    8.9.5.2 — one [Dmin Dmax] pair per component)."""
-    if not dec:
-        return False
-    try:
-        vals = tuple(float(v) for v in dec)
-    except (TypeError, ValueError):
-        return False
-    return (len(vals) >= 2 and len(vals) % 2 == 0
-            and vals == (1.0, 0.0) * (len(vals) // 2))
-
-
 def deterministic_recognizer():
     """Factory → the sandbox's deterministic recognizer.  Same signature a
     real model adapter implements: ``image dict → [(text, x0, y0, x1,
@@ -75,125 +62,24 @@ def deterministic_recognizer():
     ``height`` / ``colorspace`` / ``bpc``, everything needed to interpret
     raw samples (a real OCR model needs exactly the same).
 
-    Dispatches on the pixel container:
-
-    * ``FAKERAST`` header → the struct-packed word-record container
-      (``core/pdfscan.decode_page_raster``) — the "pixels" of this repo's
-      own scanned fixtures;
-    * an image codec from the filter table — **DCTDecode** (or raw JPEG
-      magic; ``core/jpegcodec``, the dominant raster format real scanners
-      embed), **CCITTFaxDecode** (G3/G4, ``core/ccittcodec``; /K,
-      /Columns, /Rows, /EncodedByteAlign, /BlackIs1 honoured from the
-      DecodeParms), **JPXDecode** (JPEG 2000, ``core/jpxcodec`` — the
-      archive/ebook scanner format) and **JBIG2Decode** (``core/
-      jbig2codec``, ``/JBIG2Globals`` resolved from the DecodeParms) —
-      each decoding to an 8-bit luma plane;
-    * raw samples of declared size — 8-bit ``/DeviceRGB`` (BT.601 luma),
-      8-bit ``/DeviceGray`` or packed 1-bit gray;
-    * anything else → ``ValueError`` (undecodable pixels).
-
-    Every decoded plane then takes one tail: the /Decode inversion, and
-    real pixel OCR (``core/rasterfont.recognize_gray``: projection
-    segmentation + 5×7 template classification).
+    A ``FAKERAST`` header is the word-record container of this repo's
+    own scanned fixtures (``core/pdfscan.decode_page_raster``).  Every
+    other image goes through the codec table (``core/images``) to a luma
+    plane, which real pixel OCR reads (``core/rasterfont.recognize_gray``:
+    projection segmentation + 5×7 template classification).  Entry points
+    are read off their modules per image, so a wrapper set on a module
+    attribute (a span tracer) is the one called.
     """
-    import numpy as np
-
-    from ..core.ccittcodec import CcittError, decode_g3, decode_g4
-    from ..core.jbig2codec import Jbig2Error, decode_jbig2_embedded
-    from ..core.jpegcodec import JpegError, decode_jpeg_gray
-    from ..core.jpxcodec import JpxError, decode_jpx_gray
-    from ..core.pdfscan import RASTER_MAGIC, decode_page_raster
-    from ..core.rasterfont import recognize_gray
-
-    def ccitt(data: bytes, image: dict):
-        parms = image.get("decode_parms") or {}
-        k = parms.get("K", 0)
-        if not isinstance(k, (int, float)):
-            raise ValueError(f"unsupported CCITT K={k!r}")
-        cols = int(parms.get("Columns", 1728))
-        rows = parms.get("Rows", image.get("height"))
-        rows = int(rows) if rows is not None else None
-        align = bool(parms.get("EncodedByteAlign", False))
-        if k < 0:  # G4 / pure MMR
-            return decode_g4(data, cols, rows, encoded_byte_align=align)
-        # G3: K=0 pure 1-D, K>0 mixed (T.4)
-        return decode_g3(data, cols, rows, k=int(k),
-                         encoded_byte_align=align)
-
-    def jbig2(data: bytes, image: dict):
-        glob = (image.get("decode_parms") or {}).get("JBIG2Globals")
-        return decode_jbig2_embedded(
-            data, globals_data=glob if isinstance(glob, bytes) else None,
-            width=image.get("width"), height=image.get("height"))
-
-    # filter → (decode to a luma plane, codec error, label, honours
-    # /Decode).  ISO 32000 has JPXDecode images ignore /Decode (pdf.js
-    # does too): the codestream carries its own sample interpretation.
-    by_filter = {
-        "DCTDecode": (lambda data, _image: decode_jpeg_gray(data),
-                      JpegError, "JPEG", True),
-        "CCITTFaxDecode": (ccitt, CcittError, "CCITT", True),
-        "JPXDecode": (lambda data, _image: decode_jpx_gray(data),
-                      JpxError, "JPEG 2000", False),
-        "JBIG2Decode": (jbig2, Jbig2Error, "JBIG2", True),
-    }
-
-    def raw_gray(data: bytes, image: dict):
-        w, h = image.get("width"), image.get("height")
-        cs, bpc = image.get("colorspace"), image.get("bpc")
-        if cs == "DeviceRGB" and bpc == 8 and w and h \
-                and len(data) == w * h * 3:
-            # color page scan: ITU-R BT.601 integer luma (color carries no
-            # extra text information)
-            rgb = np.frombuffer(data, np.uint8).reshape(h, w, 3) \
-                .astype(np.uint32)
-            return ((77 * rgb[..., 0] + 150 * rgb[..., 1]
-                     + 29 * rgb[..., 2] + 128) >> 8).astype(np.uint8)
-        if cs == "DeviceGray" and bpc == 8 and w and h \
-                and len(data) == w * h:
-            return np.frombuffer(data, np.uint8).reshape(h, w)
-        if bpc == 1 and cs in ("DeviceGray", None) and w and h \
-                and len(data) == ((w + 7) // 8) * h:
-            # raw packed 1-bit rows (simple B/W scans with no image codec;
-            # PDF DeviceGray: sample 0 = black, 1 = white, rows padded to
-            # byte boundaries per ISO 32000 8.9.3)
-            bits = np.unpackbits(
-                np.frombuffer(data, np.uint8).reshape(h, (w + 7) // 8),
-                axis=1)[:, :w]
-            return np.where(bits, 255, 0).astype(np.uint8)
-        raise ValueError(
-            f"undecodable page image ({cs}, {bpc} bpc, {len(data)} bytes "
-            f"for {w}x{h})")
+    from ..core import images, pdfscan, rasterfont
 
     def recognize(image: dict):
         data = image["data"]
-        if data[:8] == RASTER_MAGIC:
-            _w, _h, words = decode_page_raster(data)
+        if data[:8] == pdfscan.RASTER_MAGIC:
+            _w, _h, words = pdfscan.decode_page_raster(data)
             return words
-        filt = "DCTDecode" if data[:2] == b"\xFF\xD8" else image.get("filter")
-        # /Decode [1 0] (per component) remaps samples to the inverted
-        # range (inverted B/W scans carry it); default is identity
-        invert = _decode_inverts(image.get("decode"))
-        codec = by_filter.get(filt)
-        if codec is not None:
-            decode, error, label, honours_decode = codec
-            try:
-                gray = decode(data, image)
-            except error as exc:
-                raise ValueError(
-                    f"undecodable {label} page image: {exc}") from exc
-            invert = invert and honours_decode
-            if filt == "CCITTFaxDecode":
-                # /BlackIs1 and /Decode [1 0] each flip black/white; both
-                # together cancel (a renderer composes them) — XOR
-                invert ^= bool(
-                    (image.get("decode_parms") or {}).get("BlackIs1"))
-        else:
-            gray = raw_gray(data, image)
-        if invert:
-            gray = 255 - gray
+        gray = images._page_gray(image)
         gh, gw = gray.shape
-        return recognize_gray(gw, gh, gray.tobytes())
+        return rasterfont.recognize_gray(gw, gh, gray.tobytes())
 
     return recognize
 

@@ -32,14 +32,6 @@ import datetime as dt
 import random
 from typing import Any
 
-from ..encoders.pdf import (
-    build_pixel_scanned_pdf,
-    build_scanned_pdf,
-    build_truetype_pdf,
-    encode_pdf,
-    encrypt_pdf,
-)
-
 SEED = 42
 WORDS_PER_LINE = 12
 
@@ -76,6 +68,8 @@ def expected_text(tokens: list[str], words_per_line: int = WORDS_PER_LINE) -> st
 
 def text_to_pdf_payload(text: str, words_per_line: int = WORDS_PER_LINE) -> bytes:
     """One-page word-box PDF whose extraction equals :func:`expected_text`."""
+    from ..encoders.pdf import encode_pdf
+
     tokens = text.split()
     return encode_pdf([{
         "page_no": 1, "width": 612.0, "height": 792.0, "has_text": False,
@@ -83,18 +77,19 @@ def text_to_pdf_payload(text: str, words_per_line: int = WORDS_PER_LINE) -> byte
     }])
 
 
-def _paginate_spans(text: str, words_per_line: int,
-                    words_per_page: int | None) -> list[dict]:
-    """Shared tokenize → grid-layout → paginate step for every span-based
-    PDF fixture writer — one implementation so the writers provably share
-    one pagination (and therefore one extraction oracle)."""
+def _paginate(text: str, words_per_line: int, words_per_page: int | None,
+              key: str = "spans") -> list[dict]:
+    """Shared tokenize → grid-layout → paginate step for the span-based
+    PDF fixture writers and the scans (``key="words"``) — one
+    implementation so the writers provably share one pagination (and
+    therefore one extraction oracle)."""
     tokens = text.split()
     per_page = words_per_page or max(len(tokens), 1)
     return [
         {"width": 612.0, "height": 792.0,
-         "spans": layout_words(tokens[i:i + per_page], words_per_line)}
+         key: layout_words(tokens[i:i + per_page], words_per_line)}
         for i in range(0, len(tokens), per_page)
-    ] or [{"width": 612.0, "height": 792.0, "spans": []}]
+    ] or [{"width": 612.0, "height": 792.0, key: []}]
 
 
 def text_to_real_pdf_payload(text: str,
@@ -109,7 +104,7 @@ def text_to_real_pdf_payload(text: str,
     from ..core.pdfwrite import build_searchable_pdf
 
     return build_searchable_pdf(
-        _paginate_spans(text, words_per_line, words_per_page))
+        _paginate(text, words_per_line, words_per_page))
 
 
 def text_to_truetype_pdf_payload(text: str,
@@ -122,8 +117,10 @@ def text_to_truetype_pdf_payload(text: str,
     (``core/sfnt`` + ``core/pdfreal._truetype_recovery``; the reference
     gets this from pdf.js, ``extractor.ts:62-103``).  Paginated exactly
     like :func:`text_to_real_pdf_payload` so both share one oracle."""
+    from ..encoders.pdf import build_truetype_pdf
+
     return build_truetype_pdf(
-        _paginate_spans(text, words_per_line, words_per_page),
+        _paginate(text, words_per_line, words_per_page),
         variant=variant)
 
 
@@ -136,14 +133,10 @@ def text_to_scanned_pdf_payload(text: str,
     layout) and reproduce the token stream.  The scanned twin of
     :func:`text_to_real_pdf_payload`, paginated identically so both share
     one oracle."""
-    tokens = text.split()
-    per_page = words_per_page or max(len(tokens), 1)
-    pages = [
-        {"width": 612.0, "height": 792.0,
-         "words": layout_words(tokens[i:i + per_page], words_per_line)}
-        for i in range(0, len(tokens), per_page)
-    ] or [{"width": 612.0, "height": 792.0, "words": []}]
-    return build_scanned_pdf(pages)
+    from ..encoders.pdf import build_scanned_pdf
+
+    return build_scanned_pdf(
+        _paginate(text, words_per_line, words_per_page, "words"))
 
 
 def text_to_pixel_scanned_pdf_payload(text: str,
@@ -160,16 +153,13 @@ def text_to_pixel_scanned_pdf_payload(text: str,
     to :func:`text_to_scanned_pdf_payload` so all scanned flavors share
     one oracle; page size is computed from the ink extent (the fixed
     612-pt sheet can overflow: 12 max-width corpus words span 630 pt)."""
-    tokens = text.split()
-    per_page = words_per_page or max(len(tokens), 1)
-    pages = []
-    for i in range(0, len(tokens), per_page):
-        words = layout_words(tokens[i:i + per_page], words_per_line)
-        w = max((x1 for _, _, _, x1, _ in words), default=602.0) + MARGIN
-        h = max((y1 for *_, y1 in words), default=782.0) + MARGIN
-        pages.append({"width": w, "height": h, "words": words})
-    if not pages:
-        pages = [{"width": 612.0, "height": 792.0, "words": []}]
+    from ..encoders.pdf import build_pixel_scanned_pdf
+
+    pages = _paginate(text, words_per_line, words_per_page, "words")
+    for page in pages:
+        words = page["words"]
+        page["width"] = max((x1 for *_, x1, _ in words), default=602.0) + MARGIN
+        page["height"] = max((y1 for *_, y1 in words), default=782.0) + MARGIN
     return build_pixel_scanned_pdf(pages, codec=codec)
 
 
@@ -224,6 +214,8 @@ def _html_doc(rng: random.Random) -> tuple[bytes, str]:
 def _pdf_doc(rng: random.Random) -> tuple[bytes, str, str]:
     """Multi-page word-box PDF (grid layout) + golden text; some pages
     carry has_text=True and contribute empty segments."""
+    from ..encoders.pdf import encode_pdf
+
     n_pages = rng.randint(1, 3)
     pages, segs = [], []
     for p in range(n_pages):
@@ -242,6 +234,8 @@ def _pdf_doc(rng: random.Random) -> tuple[bytes, str, str]:
 
 def _table_pdf() -> tuple[bytes, str]:
     """The reference's own table-gap golden (builder.test.ts:20-40)."""
+    from ..encoders.pdf import encode_pdf
+
     words = [("Qty", 180, 10, 220, 22), ("Item", 10, 10, 60, 22),
              ("Price", 320, 10, 370, 22), ("2", 190, 34, 205, 46),
              ("$3.00", 320, 34, 380, 46), ("Apple", 10, 34, 70, 46)]
@@ -252,6 +246,8 @@ def _table_pdf() -> tuple[bytes, str]:
 
 def _hyphen_pdf() -> tuple[bytes, str]:
     """Two-line doc with a soft line-break hyphen (north_star hyphenation)."""
+    from ..encoders.pdf import encode_pdf
+
     words = [("text", 10, 10, 34, 22), ("exam-", 40, 10, 76, 22),
              ("ple", 10, 30, 28, 42), ("more", 34, 30, 58, 42)]
     payload = encode_pdf([{"page_no": 1, "width": 612.0, "height": 792.0,
@@ -261,6 +257,8 @@ def _hyphen_pdf() -> tuple[bytes, str]:
 
 def make_pages_rows(n_docs: int = 200, seed: int = SEED) -> list[dict[str, Any]]:
     """The `pages` fixture corpus. Deterministic in (n_docs, seed)."""
+    from ..encoders.pdf import encode_pdf
+
     rng = random.Random(seed)
     t0 = dt.datetime(2025, 1, 1)
     rows: list[dict[str, Any]] = []
@@ -346,6 +344,8 @@ def text_to_encrypted_pdf_payload(text: str, scheme: str = "rc4-128",
     PDF re-written by ``encoders/pdf.encrypt_pdf`` with an empty user
     password — re-extraction must transparently decrypt (RC4 V1/V2 or
     AESV2) and reproduce the token stream."""
+    from ..encoders.pdf import encrypt_pdf
+
     return encrypt_pdf(
         text_to_real_pdf_payload(text, words_per_line, words_per_page),
         scheme)

@@ -55,17 +55,11 @@ def build_zip() -> str:
     return zpath
 
 
-def materialize_corpus(path: str, sf_dir: str, replicas: int, n_pages: int) -> None:
-    if os.path.exists(os.path.join(path, "_SUCCESS")):
-        return
+def heavy_payload_udf(n_pages: int):
+    """pandas UDF: document text → an ``n_pages``-page word-box PDF, every
+    page carrying the text's words on the fixture grid."""
     from pyspark.sql import functions as F
     from pyspark.sql.types import BinaryType
-
-    from pdf_ocr_engine_spark.plans.pipeline import build_session
-
-    spark = build_session("make-scaling-corpus", master="local[32]",
-                          shuffle_partitions=64)
-    spark.sparkContext.setLogLevel("ERROR")
 
     @F.pandas_udf(BinaryType())
     def heavy_payload(text):
@@ -82,6 +76,20 @@ def materialize_corpus(path: str, sf_dir: str, replicas: int, n_pages: int) -> N
 
         return text.map(enc)
 
+    return heavy_payload
+
+
+def materialize_corpus(path: str, sf_dir: str, replicas: int, n_pages: int) -> None:
+    if os.path.exists(os.path.join(path, "_SUCCESS")):
+        return
+    from pyspark.sql import functions as F
+
+    from pdf_ocr_engine_spark.plans.pipeline import build_session
+
+    spark = build_session("make-scaling-corpus", master="local[32]",
+                          shuffle_partitions=64)
+    spark.sparkContext.setLogLevel("ERROR")
+
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     reps = spark.range(replicas).withColumnRenamed("id", "rep")
     (docs.crossJoin(reps)
@@ -91,7 +99,7 @@ def materialize_corpus(path: str, sf_dir: str, replicas: int, n_pages: int) -> N
                       F.col("doc_id").cast("string"), F.lit("/r"),
                       F.col("rep").cast("string")).alias("url"),
              F.to_timestamp(F.lit("2025-01-01 00:00:00")).alias("warc_ts"),
-             heavy_payload("text").alias("html"),
+             heavy_payload_udf(n_pages)("text").alias("html"),
              F.lit("").alias("text"),
              F.lit("eng").alias("lang"))
          .write.mode("overwrite").parquet(path))
@@ -152,7 +160,6 @@ def skew_experiment(sf_dir: str, cores: int = 8, n_pages: int = 8,
     spreads it.  Same extraction, same cores; the wall-time gap IS the
     straggler tail, and the per-partition doc counts show why."""
     from pyspark.sql import functions as F
-    from pyspark.sql.types import BinaryType
 
     from pdf_ocr_engine_spark.operators.extract import extract_pages
     from pdf_ocr_engine_spark.plans.pipeline import (
@@ -164,21 +171,6 @@ def skew_experiment(sf_dir: str, cores: int = 8, n_pages: int = 8,
     spark = build_session("skew-bench", master=f"local[{cores}]",
                           shuffle_partitions=cores)
     spark.sparkContext.setLogLevel("ERROR")
-
-    @F.pandas_udf(BinaryType())
-    def heavy_payload(text):
-        from pdf_ocr_engine_spark.encoders.pdf import encode_pdf
-        from pdf_ocr_engine_spark.sources.fixtures import layout_words
-
-        def enc(t):
-            toks = (t or "empty doc").split()
-            return encode_pdf([
-                {"page_no": p + 1, "width": 612.0, "height": 792.0,
-                 "has_text": False, "words": layout_words(toks)}
-                for p in range(n_pages)
-            ])
-
-        return text.map(enc)
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     reps = spark.range(replicas).withColumnRenamed("id", "rep")
@@ -194,7 +186,7 @@ def skew_experiment(sf_dir: str, cores: int = 8, n_pages: int = 8,
                                  F.lit(".example"))),
             F.lit("/doc/"), F.col("doc_id").cast("string"),
             F.lit("/r"), F.col("rep").cast("string")).alias("url"),
-        heavy_payload("text").alias("html"),
+        heavy_payload_udf(n_pages)("text").alias("html"),
         F.lit("eng").alias("lang"))
         .persist())
     n_docs = skewed.count()

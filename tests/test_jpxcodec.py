@@ -436,6 +436,23 @@ class TestOcrIntegration:
                              recognizer=deterministic_recognizer())
         assert r["status"] == "decode_error"
 
+    def test_jpx_error_from_any_recognizer_is_decode_error(self):
+        # JpxError is a ValueError like every codec's typed error, so the
+        # page core maps it even from a recognizer that calls the codec
+        # directly, with the codec's own message
+        from pdf_ocr_engine_spark.core.extract_doc import extract_document
+        from pdf_ocr_engine_spark.encoders.pdf import build_pixel_scanned_pdf
+
+        pdf = build_pixel_scanned_pdf(
+            [{"width": 100, "height": 40,
+              "words": [("hi", 10, 10, 20, 18)]}], codec="jpx")
+        r = extract_document(pdf, "eng",
+                             recognizer=lambda img: decode_jpx_gray(b"x"))
+        assert issubclass(JpxError, ValueError)
+        assert r["status"] == "decode_error"
+        assert r["error"] == ("recognizer: not a JPEG 2000 stream "
+                              "(too short)")
+
 
 class TestTileGuards:
     def test_strip_tiling_with_odd_width_decodes(self):

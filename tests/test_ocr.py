@@ -778,6 +778,30 @@ class TestPixelCodecEndToEnd:
                 # every other codec must byte-match the flate extraction
                 assert r["text"] == baseline, codec
 
+    def test_abbreviated_image_filters_decode_like_full_names(self):
+        # ISO 32000 table 6: /DCT and /CCF name the same codecs as
+        # /DCTDecode and /CCITTFaxDecode (CCITT keeps its DecodeParms)
+        from pdf_ocr_engine_spark.core.extract_doc import extract_document
+        from pdf_ocr_engine_spark.operators.ocr import (
+            deterministic_recognizer,
+        )
+        from pdf_ocr_engine_spark.sources.fixtures import (
+            text_to_pixel_scanned_pdf_payload,
+        )
+
+        rec = deterministic_recognizer()
+        for codec, full, short in (("jpeg", b"/DCTDecode", b"/DCT"),
+                                   ("ccitt", b"/CCITTFaxDecode", b"/CCF")):
+            pdf = text_to_pixel_scanned_pdf_payload(self.TEXT, codec=codec)
+            assert pdf.count(full) == 1, codec
+            abbreviated = pdf.replace(full, short)
+            assert full not in abbreviated
+            want = extract_document(pdf, "eng", recognizer=rec)
+            got = extract_document(abbreviated, "eng", recognizer=rec)
+            assert got["status"] == "ok", (codec, got.get("error"))
+            assert got["text"] == want["text"], codec
+            assert got["text"].split() == self.TEXT.split(), codec
+
     def test_noise_pipeline_never_splits_or_misreads(self):
         # gap-sensitive narrow glyphs at EVERY pepper-grid x-phase and at
         # line y-positions that put glyph top rows on the pepper rows —
