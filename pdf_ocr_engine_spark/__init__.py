@@ -13,9 +13,10 @@ Layout:
   operators/  Arrow-batched Spark operators (extract, dedup, ann, multimodal)
   sources/    deterministic fixture generation + table readers/writers
   functions/  JVM-side column-expression libraries (text analysis, sniffing)
-  plans/      staged pipeline DAG, salting, metrics/lineage, checkpoint resume
-  streaming/  incremental-processing notes/stubs (batch+manifest is the
-              resumability model per SURVEY.md §1.4)
+  plans/      staged pipeline DAG, salting, metrics/lineage, the one unit
+              commit of every driver, checkpoint resume
+  streaming/  Structured Streaming driver (one unit commit per micro-batch)
+              and stream sessionization
 """
 
 import sys

@@ -28,25 +28,20 @@ import numpy as np
 
 from .layout import _JS_WS
 
-__all__ = ["page_text_fast", "page_layout_fast"]
-
-
-def page_text_fast(texts: list[str], coords: np.ndarray) -> tuple[str, int]:
-    """Extracted text of one page + surviving word count.
-
-    ``texts``: raw word strings; ``coords``: float64 array (n, >=4) of
-    ``x0, y0, x1, y1`` (column 4, confidence, is ignored — the reference's
-    builder never reads it).  Returns ``(page_text, n_words)``.
-    """
-    text, n_words, _ = page_layout_fast(texts, coords, want_spans=False)
-    return text, n_words
+__all__ = ["page_layout_fast"]
 
 
 def page_layout_fast(
     texts: list[str], coords: np.ndarray, want_spans: bool = False,
 ) -> tuple[str, int, list[tuple] | None]:
-    """Like :func:`page_text_fast` but optionally also emits the positioned
-    spans: ``(raw_text, x0, y0, x1, y1)`` per surviving word in reading
+    """Extracted text of one page, surviving word count, and optionally the
+    positioned spans.
+
+    ``texts``: raw word strings; ``coords``: float64 array (n, >=4) of
+    ``x0, y0, x1, y1`` (column 4, confidence, is ignored — the reference's
+    builder never reads it).  Returns ``(page_text, n_words, spans)``;
+    ``spans`` is ``None`` unless ``want_spans``, else
+    ``(raw_text, x0, y0, x1, y1)`` per surviving word in reading
     order — the reference's ``CopyFriendlyWord`` sequence
     (``builder.ts:4-8,113-121``) minus the separator prefix, which is
     recoverable from the page text.  Span assembly allocates per word, so it

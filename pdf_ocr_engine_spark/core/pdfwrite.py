@@ -31,7 +31,7 @@ from __future__ import annotations
 
 from ..functions.afm import text_width_at
 
-__all__ = ["build_searchable_pdf", "extract_pdf_text", "DEFAULT_PAGE"]
+__all__ = ["build_searchable_pdf", "DEFAULT_PAGE"]
 
 DEFAULT_PAGE = (612.0, 792.0)  # builder.ts:214-215 default Letter
 
@@ -163,66 +163,3 @@ def _assemble_objects(objects: list[bytes], reverse: bool = False) -> bytes:
             f"startxref\n{xref_at}\n%%EOF").encode()
     return bytes(buf)
 
-
-def extract_pdf_text(data: bytes) -> list[list[str]]:
-    """Micro text extractor for PDFs produced by :func:`build_searchable_pdf`
-    (and structurally similar single-content-stream PDFs): returns the list
-    of ``Tj`` string operands per page, in stream order.  Used by tests to
-    round-trip the invisible text layer; also validates the xref table
-    (every object must start exactly at its recorded offset)."""
-    # xref validation
-    start = data.rfind(b"startxref")
-    xref_at = int(data[start:].split()[1])
-    assert data[xref_at:xref_at + 4] == b"xref", "xref offset wrong"
-    lines = data[xref_at:].split(b"\n")
-    n_objs = int(lines[1].split()[1])
-    for i in range(1, n_objs):
-        off = int(lines[2 + i].split()[0])
-        expect = f"{i} 0 obj".encode()
-        assert data[off:off + len(expect)] == expect, f"object {i} offset wrong"
-
-    pages: list[list[str]] = []
-    pos = 0
-    while True:
-        # ">>\nstream\n" can't false-match inside "endstream\nendobj"
-        s = data.find(b">>\nstream\n", pos)
-        if s < 0:
-            break
-        s += len(b">>\nstream\n")
-        e = data.find(b"\nendstream", s)
-        if e < 0:
-            break
-        stream = data[s:e]
-        words: list[str] = []
-        i = 0
-        while True:
-            i = stream.find(b"(", i)
-            if i < 0:
-                break
-            j, out = i + 1, bytearray()
-            while j < len(stream):
-                c = stream[j]
-                if c == 0x5C:  # backslash
-                    nxt = stream[j + 1:j + 2]
-                    if nxt.isdigit():
-                        k = j + 1
-                        oct_digits = b""
-                        while k < len(stream) and len(oct_digits) < 3 \
-                                and stream[k:k + 1].isdigit():
-                            oct_digits += stream[k:k + 1]
-                            k += 1
-                        out.append(int(oct_digits, 8))
-                        j = k
-                    else:
-                        out += nxt
-                        j += 2
-                elif c == 0x29:  # ')'
-                    break
-                else:
-                    out.append(c)
-                    j += 1
-            words.append(out.decode("latin-1"))
-            i = j + 1
-        pages.append(words)
-        pos = e + len(b"\nendstream")
-    return pages

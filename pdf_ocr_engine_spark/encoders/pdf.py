@@ -32,21 +32,6 @@ from ..core.pdfwrite import _assemble_objects, _escape_bytes, _fmt, _text_pdf
 from ..core.rasterfont import GLYPH_H, _neighbor_count
 from ..core.sfnt import _MAC_GLYPH_NAMES
 from ..functions.afm import FALLBACK_UNITS, HELVETICA_WIDTHS
-from .bilevel import (
-    encode_g3,
-    encode_g4,
-    encode_jbig2_embedded,
-    encode_jbig2_symbol_embedded,
-    encode_jbig2_symbol_huffman_embedded,
-)
-from .raster import (
-    encode_jp2_gray,
-    encode_jp2_rgb,
-    encode_jpeg_gray,
-    encode_jpeg_gray_progressive,
-    encode_jpeg_rgb,
-    render_words_gray,
-)
 
 
 # --------------------------------------------------------------------------
@@ -291,6 +276,23 @@ def build_pixel_scanned_pdf(pages: list[dict], codec: str = "flate") -> bytes:
                      "jbig2huff", "jbig2huffct", "jpx", "jpxprec",
                      "jpxcolor", "gray1", "rgb", "noisy"):
         raise ValueError(f"unknown raster codec {codec!r}")
+    # here, not at module top: they load every codec decoder, which no
+    # other builder needs
+    from .bilevel import (
+        encode_g3,
+        encode_g4,
+        encode_jbig2_embedded,
+        encode_jbig2_symbol_embedded,
+        encode_jbig2_symbol_huffman_embedded,
+    )
+    from .raster import (
+        encode_jp2_gray,
+        encode_jp2_rgb,
+        encode_jpeg_gray,
+        encode_jpeg_gray_progressive,
+        encode_jpeg_rgb,
+        render_words_gray,
+    )
 
     n_pages = len(pages)
     w = max((float(p.get("width") or 612.0) for p in pages), default=612.0)

@@ -196,6 +196,8 @@ def decode_image_pixels(data: bytes):
 
     data = bytes(data) if data else b""
     if data[:8] == IMG_MAGIC:
+        if len(data) < 12:
+            raise ValueError("FAKEIMG1 header truncated")
         w, h = struct.unpack("<HH", data[8:12])
         n = w * h
         idx = np.arange(n, dtype=np.int64)
@@ -285,16 +287,19 @@ def decode_frame_pixels(data: bytes, ts_ms: int, size: int = 16):
     """Fake-codec frame grab at ``ts_ms`` → ``uint8 ndarray (size, size)``.
 
     Frame model (deterministic): ``pixel(x, y) = (x*7 + y*13 + ts_ms) %
-    256``.  Sampling beyond the clip raises ``ValueError`` (a corrupt
-    request is data upstream).  Real containers (mp4/webm) need pyav —
-    that single decode line is the plug-in point; the sampling plan
-    (:func:`frame_sample`) and batching around it are unchanged."""
+    256``.  Sampling beyond the clip or a truncated header raises
+    ``ValueError`` (a corrupt request is data upstream).  Real containers
+    (mp4/webm) need pyav — that single decode line is the plug-in point;
+    the sampling plan (:func:`frame_sample`) and batching around it are
+    unchanged."""
     import numpy as np
 
     if not data or data[:8] != VID_MAGIC:
         raise NotImplementedError(
             "real-format frame decode requires a video codec (pyav); plug "
             "it in here — the sampling plan works without it")
+    if len(data) < 12:
+        raise ValueError("FAKEVID1 header truncated")
     (duration,) = struct.unpack("<I", data[8:12])
     if ts_ms < 0 or ts_ms >= duration:
         raise ValueError(f"ts {ts_ms} outside clip duration {duration}")

@@ -7,9 +7,10 @@ implements it (SURVEY.md §4):
 * every document belongs to a deterministic bucket
   ``pmod(xxhash64(url), n_buckets)`` — identical across runs and cluster
   sizes;
-* pending buckets are processed in chunks; each chunk is one unit written
-  by ``pipeline._commit`` (overwrite) to ``<out>/data/unit=<b0>/`` (``b0``
-  = its first bucket).  Only after the write commits, a manifest
+* pending buckets are processed in chunks; each chunk is one unit
+  committed by ``pipeline._commit``: its rows overwrite
+  ``<out>/data/unit=<b0>/`` (``b0`` = its first bucket), and only after
+  that write, a manifest
   ``<out>/_manifests/unit_<b0>.json`` records the chunk's buckets,
   ``n_buckets``, ``run_id`` and the write's counters (manifest-LAST: a
   crash before it leaves an orphan unit dir, which the re-run deletes
@@ -19,7 +20,9 @@ implements it (SURVEY.md §4):
   reads the whole input and drops other buckets' rows after the scan, and
   only the extract stage is saved;
 * bucket ids only mean something under the ``n_buckets`` that wrote them,
-  so a re-run with another value is refused before any Spark work.
+  so a re-run with another value is refused before any Spark work;
+* manifests and the orphan sweep live on the local filesystem, so a URI
+  output (``s3a://``, ``file://``) is refused before any Spark work too.
 
 At 10^12 documents the manifest table is ``n_buckets / chunk_buckets`` tiny
 JSON files — list it on the driver in O(n_buckets); data-file listing is
@@ -31,34 +34,18 @@ from __future__ import annotations
 import json
 import os
 import shutil
-import time
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..core.extract_doc import ExtractOptions
-from ..operators.extract import extract_pages
-from .pipeline import _commit
-
-
-def _manifest_dir(output_dir: str) -> str:
-    return os.path.join(output_dir, "_manifests")
-
-
-def write_manifest(output_dir: str, unit: int, fields: dict) -> None:
-    """Commit point of one unit: ``_manifests/unit_<unit>.json``, written
-    to a temp name and renamed so a kill never leaves half a manifest."""
-    path = os.path.join(_manifest_dir(output_dir), f"unit_{unit}.json")
-    os.makedirs(os.path.dirname(path), exist_ok=True)
-    with open(path + ".tmp", "w") as f:
-        json.dump({**fields, "committed_at": time.time()}, f)
-    os.replace(path + ".tmp", path)
+from .pipeline import MANIFEST_DIR, _commit
 
 
 def read_manifests(output_dir: str) -> dict[int, dict]:
     """``unit → manifest`` for every committed unit under ``output_dir``."""
-    mdir = _manifest_dir(output_dir)
+    mdir = os.path.join(output_dir, MANIFEST_DIR)
     if not os.path.isdir(mdir):
         return {}
     out = {}
@@ -67,11 +54,6 @@ def read_manifests(output_dir: str) -> dict[int, dict]:
             with open(os.path.join(mdir, name)) as f:
                 out[int(name[len("unit_"):-len(".json")])] = json.load(f)
     return out
-
-
-def completed_buckets(output_dir: str) -> set[int]:
-    return {b for m in read_manifests(output_dir).values()
-            for b in m["buckets"]}
 
 
 @dataclass
@@ -96,7 +78,11 @@ def run_resumable(
     """Process pending buckets in chunks; each chunk = one unit write, then
     its manifest.  ``max_chunks`` exists for tests (simulated
     interruption).  Raises ``ValueError`` when ``output_dir`` holds
-    manifests of another ``n_buckets``."""
+    manifests of another ``n_buckets``, or is a URI: the manifests and
+    the orphan sweep work on the local filesystem only."""
+    if "://" in output_dir:
+        raise ValueError(f"cannot resume {output_dir}: resume manifests "
+                         f"need a local filesystem path")
     manifests = read_manifests(output_dir)
     other = sorted({m["n_buckets"] for m in manifests.values()} - {n_buckets})
     if other:
@@ -120,12 +106,9 @@ def run_resumable(
     chunks = [pending[i:i + chunk_buckets]
               for i in range(0, len(pending), chunk_buckets)]
     for chunk in chunks[:max_chunks]:
-        counters = _commit(
-            extract_pages(pages.where(bucket.isin(chunk)), options,
-                          recognizer_factory=recognizer_factory),
-            f"{data_dir}/unit={chunk[0]}", run_id)
-        write_manifest(output_dir, chunk[0],
-                       {"buckets": chunk, "n_buckets": n_buckets, **counters})
+        counters = _commit(pages.where(bucket.isin(chunk)), output_dir,
+                           chunk[0], run_id, options, recognizer_factory,
+                           buckets=chunk, n_buckets=n_buckets)
         processed.extend(chunk)
         docs_written += counters["docs_in"]
 

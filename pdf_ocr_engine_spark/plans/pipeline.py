@@ -4,16 +4,18 @@ The job DAG (SURVEY.md §7.0), equivalent in role to the reference's
 orchestrating driver ``convertPdfToSearchable`` (``src/lib/ocr/index.ts:27-173``)
 but expressed as DataFrame stages:
 
-    pages ──salted repartition──▶ extract (mapInArrow, narrow)
-          ──_commit──▶ <out>/data  +  observed.json (df.observe counters)
+    pages ──salted repartition──▶ _commit: extract (mapInArrow, narrow)
+          ──▶ <out>/data  +  observed.json (df.observe counters)
           ──read-back──▶ <out>/metrics (per-partition metrics table)
 
     pages ──▶ assemble (extract's mapInArrow document operator, narrow)
           ──▶ searchable PDFs + extract's partition_id / wall_us lineage
 
-``_commit`` is the one observed unit write of all three drivers: batch (one
-unit), resume (``plans/checkpoint.py``, one ``data/unit=<id>`` per bucket
-chunk) and stream (``streaming/extract_stream.py``, one per micro-batch).
+``_commit`` is the one unit commit of all three drivers: it extracts,
+writes and records batch's one unit (``data`` + ``observed.json``),
+resume's (``plans/checkpoint.py``, ``data/unit=<b0>`` + a manifest per
+bucket chunk) and stream's (``streaming/extract_stream.py``, one per
+micro-batch).
 
 Shuffle inventory (what the 100 TB plan pays for):
   1. the explicit salted ``repartition`` — ONE shuffle, deliberately bought to
@@ -29,6 +31,7 @@ from __future__ import annotations
 
 import json
 import os
+import time
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -93,12 +96,27 @@ def partition_metrics(extracted: DataFrame, run_id: str) -> DataFrame:
     )
 
 
-def _commit(df: DataFrame, path: str, run_id: str) -> dict:
-    """The one data write every driver (batch, resume, stream) goes
-    through: overwrite ``path`` with ``df`` as parquet and return the
-    job-level counters, which ride the write action itself via
-    ``df.observe`` (zero extra passes)."""
+#: the resume and stream drivers' per-unit commit records
+MANIFEST_DIR = "_manifests"
+
+
+def _commit(pages: DataFrame, output_dir: str, unit: int | None, run_id: str,
+            options: ExtractOptions | None, recognizer_factory,
+            **record) -> dict:
+    """The one unit commit of every driver: batch (``unit=None``), resume
+    (one unit per bucket chunk) and stream (one per micro-batch).
+
+    Extracts ``pages``, overwrites ``<output_dir>/data`` (batch) or
+    ``<output_dir>/data/unit=<unit>`` with the rows, then writes the
+    unit's record: ``observed.json`` for the batch unit,
+    ``_manifests/unit_<unit>.json`` otherwise, holding ``record``, the
+    write's counters and ``committed_at``.  The record comes last, so it
+    commits the unit.  The counters (returned too) ride the write action
+    via ``df.observe``: zero extra passes.  Object-store outputs get the
+    data but no record."""
     obs = Observation(f"commit-{run_id}")
+    data = f"{output_dir}/data" + ("" if unit is None else f"/unit={unit}")
+    df = extract_pages(pages, options, recognizer_factory=recognizer_factory)
     df.observe(
         obs,
         F.count(F.lit(1)).alias("docs_in"),
@@ -109,9 +127,19 @@ def _commit(df: DataFrame, path: str, run_id: str) -> dict:
         # decoder silent-substitution total — job-level twin of the
         # per-partition `fallbacks` metric (corpus-quality drift signal)
         F.sum("n_fallbacks").alias("fallbacks"),
-    ).write.mode("overwrite").parquet(path)
-    return {"run_id": run_id,
-            **{k: (int(v) if v is not None else 0) for k, v in obs.get.items()}}
+    ).write.mode("overwrite").parquet(data)
+    counters = {"run_id": run_id,
+                **{k: (int(v) if v is not None else 0)
+                   for k, v in obs.get.items()}}
+    if "://" not in output_dir:  # local fs only; object stores keep no record
+        path = os.path.join(output_dir, "observed.json") if unit is None \
+            else os.path.join(output_dir, MANIFEST_DIR, f"unit_{unit}.json")
+        os.makedirs(os.path.dirname(path), exist_ok=True)
+        # temp name + rename: a kill never leaves half a record
+        with open(path + ".tmp", "w") as f:
+            json.dump({**record, **counters, "committed_at": time.time()}, f)
+        os.replace(path + ".tmp", path)
+    return counters
 
 
 def write_extraction(
@@ -126,22 +154,17 @@ def write_extraction(
     recognizer_factory=None,
 ) -> DataFrame:
     """The full DAG, materialized once: salted repartition (when
-    ``num_partitions``) → extract → write ``<output>/data`` with its
-    counters in ``<output>/observed.json`` → derive the metrics table from a
-    **read-back** of the written parquet (lineage columns are in every row),
-    so the expensive extract stage is never recomputed for metrics.  Returns
-    the read-back extracted DataFrame.  ``recognizer_factory`` enables the
-    OCR tier for image-only real-PDF pages (same init-once contract as
-    ``extract_pages``)."""
+    ``num_partitions``) → :func:`_commit` (extract, ``<output>/data``, its
+    counters in ``<output>/observed.json``) → derive the metrics table from
+    a **read-back** of the written parquet (lineage columns are in every
+    row), so the expensive extract stage is never recomputed for metrics.
+    Returns the read-back extracted DataFrame.  ``recognizer_factory``
+    enables the OCR tier for image-only real-PDF pages (same init-once
+    contract as ``extract_pages``)."""
     df = pages
     if num_partitions:
         df = salted_repartition(df, num_partitions, salt_buckets)
-    observed = _commit(extract_pages(df, options,
-                                     recognizer_factory=recognizer_factory),
-                       f"{output_dir}/data", run_id)
-    if "://" not in output_dir:  # local fs only; object stores skip the json
-        with open(os.path.join(output_dir, "observed.json"), "w") as f:
-            json.dump(observed, f)
+    _commit(df, output_dir, None, run_id, options, recognizer_factory)
     written = spark.read.parquet(f"{output_dir}/data")
     partition_metrics(written, run_id).write.mode("overwrite") \
         .parquet(f"{output_dir}/metrics")

@@ -1,17 +1,14 @@
-"""Output sinks — Iceberg table or parquet path, one call.
+"""The pages-table reader behind ``scripts/run_extract.py --input``.
 
-The north_rule's production target is an Iceberg table (atomic commits give
-the checkpoint manifests their commit point for free); this sandbox ships no
-Iceberg runtime jar, so the parquet path is the tested one and the Iceberg
-path is a thin, clearly-gated `writeTo` that activates when the catalog is
-on the classpath (`spark-submit --packages org.apache.iceberg:...` +
-catalog conf).
+One call reads the input wherever it lives:
 
-Target syntax:
+* ``iceberg:db.table`` → ``spark.read.format("iceberg")`` (needs the
+  Iceberg runtime on the classpath, ``spark-submit --packages
+  org.apache.iceberg:...`` + catalog conf; the tests run no catalog)
+* ``warc:<dir>``       → raw Common-Crawl archives via :mod:`.warc`
+* anything else        → a parquet path
 
-* ``iceberg:db.table``  → ``df.writeTo("db.table").append()`` (or
-  ``createOrReplace`` for overwrite)
-* anything else         → treated as a filesystem path, parquet
+Extraction output is written by ``plans.pipeline._commit``, not here.
 """
 
 from __future__ import annotations
@@ -19,26 +16,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 ICEBERG_PREFIX = "iceberg:"
-
-
-def write_output(df: DataFrame, target: str, *, mode: str = "overwrite") -> None:
-    """Write ``df`` to ``target`` (see module docstring for syntax)."""
-    if target.startswith(ICEBERG_PREFIX):
-        table = target[len(ICEBERG_PREFIX):]
-        try:
-            writer = df.writeTo(table)
-            if mode == "overwrite":
-                writer.createOrReplace()
-            else:
-                writer.append()
-        except Exception as exc:  # noqa: BLE001
-            raise RuntimeError(
-                f"Iceberg write to {table!r} failed — is the Iceberg runtime "
-                f"on the classpath and the catalog configured? "
-                f"(--packages org.apache.iceberg:iceberg-spark-runtime-...)"
-            ) from exc
-    else:
-        df.write.mode(mode).parquet(target)
 
 
 def read_pages(spark, source: str) -> DataFrame:

@@ -4,13 +4,14 @@ The batch job satisfies the north_rule's resumability with partition
 manifests (``plans/checkpoint.py``); this module is the *continuous-ingest*
 variant for a landing zone that keeps receiving WARC-derived page files:
 
-    pages files → readStream → foreachBatch: extract → _commit
+    pages files → readStream → foreachBatch: _commit (extract)
                 → <out>/data/unit=<batchId> + _manifests/unit_<batchId>.json
 
 Design notes (Spark-first):
 
-* the extraction operator and the unit write are IDENTICAL to the batch and
-  resume drivers (``extract_pages`` + ``plans.pipeline._commit``);
+* each micro-batch is one unit committed by ``plans.pipeline._commit``,
+  the unit commit of the batch and resume drivers too: the same operator,
+  the same write, the same record writer;
 * exactly-once: see :func:`extract_stream`; ``spark.read.parquet(<out>)``
   reads every unit (``_manifests`` is a hidden path);
 * ``Trigger.AvailableNow`` drains the backlog in bounded micro-batches and
@@ -28,8 +29,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from ..core.extract_doc import ExtractOptions
-from ..operators.extract import extract_pages
-from ..plans.checkpoint import write_manifest
 from ..plans.pipeline import _commit
 from ..sources.schemas import PAGES_SCHEMA
 
@@ -68,16 +67,11 @@ def extract_stream(
     failed batch replays under the same ``batchId``, rewriting its own
     ``<output_dir>/data/unit=<batchId>`` instead of appending a copy.
     """
-    def commit(batch: DataFrame, batch_id: int) -> None:
-        counters = _commit(extract_pages(batch, options,
-                                         recognizer_factory=recognizer_factory),
-                           f"{output_dir}/data/unit={batch_id}", "stream")
-        if "://" not in output_dir:  # local fs only, like observed.json
-            write_manifest(output_dir, batch_id, counters)
-
     writer = (read_pages_stream(spark, input_dir, max_files_per_trigger)
               .writeStream
-              .foreachBatch(commit)
+              .foreachBatch(lambda batch, batch_id: _commit(
+                  batch, output_dir, batch_id, "stream", options,
+                  recognizer_factory))
               .option("checkpointLocation", checkpoint_dir))
     if available_now:
         writer = writer.trigger(availableNow=True)

@@ -1,6 +1,6 @@
 """The extraction path loads no fixture encoder, and no decoder module
-holds one; the codec table loads no codec and is the only module that
-names an image codec.
+holds one; the codec table and the WBOX2 builder load no codec, and the
+table is the only module that names an image codec.
 
 Spark Python workers import every module the extraction path reaches, so
 fixture encoders live in ``pdf_ocr_engine_spark.encoders`` and decoder
@@ -84,6 +84,25 @@ def test_codec_table_loads_no_codec():
     loaded = _loaded(_IMPORT_ONLY, "core.images", "core.pdfreal")
     assert "pdf_ocr_engine_spark.core.images" in loaded  # probe ran
     assert not [m for m in loaded if m.endswith("codec")]
+
+
+_ENCODE_PDF = """
+import json, sys
+from pdf_ocr_engine_spark.encoders.pdf import encode_pdf
+encode_pdf([{"page_no": 1, "words": [("Hi", 10, 10, 30, 22)]}])
+print(json.dumps(sorted(m for m in sys.modules
+                        if m.startswith("pdf_ocr_engine_spark"))))
+"""
+
+
+def test_wbox2_builder_loads_no_codec():
+    # encoders.bilevel and encoders.raster load every codec decoder; only
+    # the pixel-scan builder imports them, when it is called
+    loaded = _loaded(_ENCODE_PDF)
+    assert "pdf_ocr_engine_spark.encoders.pdf" in loaded  # probe ran
+    assert not [m for m in loaded if m.endswith("codec")
+                or m in ("pdf_ocr_engine_spark.encoders.bilevel",
+                         "pdf_ocr_engine_spark.encoders.raster")]
 
 
 #: PDF image-codec filter names (ISO 32000 table 6, abbreviations too)

@@ -143,13 +143,14 @@ class TestFastKernelEquivalence:
     def _both(self, words):
         import numpy as np
 
-        from pdf_ocr_engine_spark.core.layout_fast import page_text_fast
+        from pdf_ocr_engine_spark.core.layout_fast import page_layout_fast
 
         slow = page_text(words)
         texts = [x[0] for x in words]
         coords = np.array([[x[1], x[2], x[3], x[4], 90.0] for x in words],
                           dtype="f8").reshape(len(words), 5)
-        fast, n_words = page_text_fast(texts, coords)
+        fast, n_words, spans = page_layout_fast(texts, coords)
+        assert spans is None
         assert fast == slow
         assert n_words == len(build_copy_friendly_word_sequence(words))
         return fast
@@ -172,8 +173,8 @@ class TestFastKernelEquivalence:
     def test_empty(self):
         import numpy as np
 
-        from pdf_ocr_engine_spark.core.layout_fast import page_text_fast
-        assert page_text_fast([], np.empty((0, 5))) == ("", 0)
+        from pdf_ocr_engine_spark.core.layout_fast import page_layout_fast
+        assert page_layout_fast([], np.empty((0, 5))) == ("", 0, None)
 
     def test_fuzz_equivalence(self):
         from hypothesis import given, settings

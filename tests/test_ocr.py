@@ -374,10 +374,12 @@ class TestPixelRaster:
         import numpy as np
 
         from pdf_ocr_engine_spark.encoders import pdf as pdf_encoders
+        from pdf_ocr_engine_spark.encoders import raster
 
         blob = np.full((40, 100), 255, dtype=np.uint8)
         blob[12:19, 10:18] = 0  # 8px-wide ink run: wider than any glyph
-        monkeypatch.setattr(pdf_encoders, "render_words_gray",
+        # the pixel-scan builder imports the renderer when it is called
+        monkeypatch.setattr(raster, "render_words_gray",
                             lambda w, h, words: blob.tobytes())
         pdf = pdf_encoders.build_pixel_scanned_pdf(
             [{"width": 100, "height": 40, "words": []}])

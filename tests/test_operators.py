@@ -178,6 +178,20 @@ class TestAnn:
 
 
 class TestMultimodal:
+    @pytest.mark.parametrize("length", [8, 9, 10, 11])
+    def test_truncated_fake_header_is_value_error(self, length):
+        from pdf_ocr_engine_spark.operators.multimodal import (
+            decode_frame_pixels,
+            decode_image_pixels,
+            encode_fake_image,
+            encode_fake_video,
+        )
+
+        with pytest.raises(ValueError, match="header truncated"):
+            decode_image_pixels(encode_fake_image(4, 4)[:length])
+        with pytest.raises(ValueError, match="header truncated"):
+            decode_frame_pixels(encode_fake_video(1000)[:length], 0)
+
     def test_header_probe(self, spark):
         from pdf_ocr_engine_spark.operators.multimodal import (
             encode_fake_audio,
@@ -352,13 +366,16 @@ class TestMultimodal:
 
 
 
+def _completed_buckets(out):
+    from pdf_ocr_engine_spark.plans.checkpoint import read_manifests
+
+    return {b for m in read_manifests(out).values() for b in m["buckets"]}
+
+
 class TestCheckpointResume:
     def test_interrupt_resume_equals_oneshot(self, spark, fixture_pages_path,
                                              build_dir):
-        from pdf_ocr_engine_spark.plans.checkpoint import (
-            completed_buckets,
-            run_resumable,
-        )
+        from pdf_ocr_engine_spark.plans.checkpoint import run_resumable
 
         pages = spark.read.parquet(fixture_pages_path)
         out = os.path.join(build_dir, "ckpt_out")
@@ -368,14 +385,14 @@ class TestCheckpointResume:
         r1 = run_resumable(spark, pages, out, n_buckets=16, chunk_buckets=4,
                            max_chunks=2, run_id="r1")
         assert len(r1.processed_buckets) == 8
-        assert len(completed_buckets(out)) == 8
+        assert len(_completed_buckets(out)) == 8
         n_partial = spark.read.parquet(f"{out}/data").count()
 
         # resume: must skip the 8 done buckets and finish the rest
         r2 = run_resumable(spark, pages, out, n_buckets=16, chunk_buckets=4,
                            run_id="r2")
         assert sorted(r2.skipped_buckets) == sorted(r1.processed_buckets)
-        assert len(completed_buckets(out)) == 16
+        assert len(_completed_buckets(out)) == 16
         resumed = spark.read.parquet(f"{out}/data")
         assert resumed.count() == 120 > n_partial
         assert resumed.select("url").distinct().count() == 120
@@ -425,6 +442,21 @@ class TestCheckpointResume:
         assert resumed.count() == 120
         assert resumed.select("url").distinct().count() == 120
 
+    def test_uri_output_is_refused(self, build_dir, tmp_path, monkeypatch):
+        """Manifests and the orphan sweep work on the local filesystem, so
+        a URI output is refused before any Spark work (with no session and
+        no pages, any would raise ``AttributeError``): nothing lands at the
+        URI's path or under the working directory."""
+        from pdf_ocr_engine_spark.plans.checkpoint import run_resumable
+
+        out = os.path.join(build_dir, "ckpt_uri")
+        shutil.rmtree(out, ignore_errors=True)
+        monkeypatch.chdir(tmp_path)
+        with pytest.raises(ValueError, match="local filesystem"):
+            run_resumable(None, None, f"file://{out}", n_buckets=8)
+        assert not os.path.exists(out)
+        assert os.listdir(tmp_path) == []
+
     def test_killed_submit_resumes_to_clean_output(self, spark,
                                                    fixture_pages_path,
                                                    build_dir):
@@ -438,7 +470,6 @@ class TestCheckpointResume:
         import time
 
         from pdf_ocr_engine_spark.plans.checkpoint import (
-            completed_buckets,
             read_manifests,
             run_resumable,
         )
@@ -470,7 +501,7 @@ class TestCheckpointResume:
                 os.killpg(proc.pid, signal.SIGKILL)
             proc.wait()
         committed = read_manifests(out)
-        n_done = len(completed_buckets(out))
+        n_done = len(_completed_buckets(out))
         assert 0 < len(committed) < 4, "kill missed the window between units"
 
         rerun = subprocess.run(cmd, env=env, capture_output=True, text=True,
@@ -478,7 +509,7 @@ class TestCheckpointResume:
         assert rerun.returncode == 0, rerun.stderr[-2000:]
         assert f"processed={64 - n_done} skipped={n_done} " in rerun.stdout
         after = read_manifests(out)
-        assert len(completed_buckets(out)) == 64
+        assert len(_completed_buckets(out)) == 64
         assert all(after[u] == m for u, m in committed.items())
         assert sum(m["docs_in"] for m in after.values()) == 120
 

@@ -4,10 +4,27 @@ invisible-text round-trip, and the Spark operator end-to-end."""
 import pytest
 
 from pdf_ocr_engine_spark.encoders.pdf import encode_pdf
-from pdf_ocr_engine_spark.core.pdfwrite import (
-    build_searchable_pdf,
-    extract_pdf_text,
-)
+from pdf_ocr_engine_spark.core.pdfreal import parse_real_pdf
+from pdf_ocr_engine_spark.core.pdfwrite import build_searchable_pdf
+
+
+def extract_pdf_text(data: bytes) -> list[list[str]]:
+    """The words of each page, read back by the real-PDF parser, after
+    checking that every xref offset points exactly at its object and that
+    each ``Tj`` operator shows exactly one word (the parser drops blank
+    strings and splits on spaces, so it alone would not see either)."""
+    xref_at = int(data[data.rfind(b"startxref"):].split()[1])
+    assert data[xref_at:xref_at + 4] == b"xref", "xref offset wrong"
+    lines = data[xref_at:].split(b"\n")
+    for i in range(1, int(lines[1].split()[1])):
+        off = int(lines[2 + i].split()[0])
+        expect = f"{i} 0 obj".encode()
+        assert data[off:off + len(expect)] == expect, f"object {i} offset wrong"
+    pages = [page["texts"] for page in parse_real_pdf(data)["pages"]]
+    assert data.count(b" Tj") == sum(len(words) for words in pages), \
+        "a Tj operand is not exactly one word"
+    return pages
+
 
 TABLE_SPANS = [("Item", 10, 10, 60, 22), ("Qty", 180, 10, 220, 22),
                ("Apple", 10, 34, 70, 46), ("2", 190, 34, 205, 46)]
